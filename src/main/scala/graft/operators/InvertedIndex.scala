@@ -189,8 +189,10 @@ object InvertedIndex {
     * what "the same token" means; query terms pass through
     * [[canonicalTerm]], the scala mirror. Three codegen string ops at
     * the scan — map-side, no extra pass. */
-  def tokens(text: Column): Column =
-    split(Dedup.canonicalText(text), " ")
+  def tokens(text: Column): Column = splitCanonical(Dedup.canonicalText(text))
+
+  /** [[tokens]]' split step alone, over text already canonical. */
+  private def splitCanonical(canon: Column): Column = split(canon, " ")
 
   /** The query-side mirror of [[tokens]]' canonicalization, applied to
     * each search term (a tiny driver-side constant). */
@@ -202,10 +204,29 @@ object InvertedIndex {
     * CANONICAL token count — the [[tokens]] currency, which equals the
     * whitespace count on already-canonical text) rides along
     * denormalized: constant within the (term, doc) group, so max() is
-    * exact. */
+    * exact.
+    *
+    * Each document is canonicalized ONCE, below the explode, and `dl` is
+    * taken there too. Written as `size(tokens(text))` beside the explode,
+    * the count sits in the Project ABOVE the Generate and re-runs the
+    * whole-document canonicalization (lower, two regexp_replace, trim,
+    * split) for every emitted token — O(tokens²) per document (SCALE.md,
+    * "Persisted inverted index", has the growth table). The consumer
+    * references the canonical text twice (split for `dl`, split for the
+    * explode), so CollapseProject keeps it a single projection. The
+    * generator splits the canonical text itself rather than exploding a
+    * projected token array: for a generator over a bare column the
+    * optimizer infers `size(col) > 0 AND isnotnull(col)` and pushes it
+    * below that projection, canonicalizing every document twice more. A
+    * second split per document is cheap beside the regexps.
+    * InvertedIndexSpec pins the rows against the per-token-rescan form
+    * and the plan: one canonicalization, nothing tokenized above the
+    * Generate. */
   def postings(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(tokens(col("text"))).as("term"),
-        size(tokens(col("text"))).cast("long").as("dl"))
+    docs.select(col("doc_id"), Dedup.canonicalText(col("text")).as("canon"))
+      .select(col("doc_id"), col("canon"),
+        size(splitCanonical(col("canon"))).cast("long").as("dl"))
+      .select(col("doc_id"), explode(splitCanonical(col("canon"))).as("term"), col("dl"))
       .groupBy("term", "doc_id")
       .agg(count(lit(1)).cast("long").as("tf"), max("dl").as("dl"))
 

@@ -16,15 +16,18 @@ package graft.operators
 object ParquetFooter {
 
   /** Total row count of a parquet file, or of every `*.parquet` part
-    * file directly under a directory — read from footers, no Spark job.
-    * Mirrors what `spark.read.parquet(path).count()` returns for the
-    * same path: non-parquet marker files are ignored AND so are
-    * hidden `_`/`.`-prefixed names (Spark's InMemoryFileIndex rule —
-    * a crashed write's `.part-...parquet` temp file must not make the
-    * footer count diverge from the scan the state machines replaced;
-    * round-19 ADVICE). The Hadoop conf comes from the active session
-    * when one exists, so a non-default filesystem configuration reads
-    * the same files the session's scans do. */
+    * file under a directory at any depth (a `partitionBy` layout nests
+    * its part files in `col=value` subdirectories) — read from footers,
+    * no Spark job. Mirrors what `spark.read.parquet(path).count()`
+    * returns for the same path: the listing is recursive like Spark's
+    * InMemoryFileIndex, non-parquet marker files are ignored AND so are
+    * hidden `_`/`.`-prefixed names, files and directories alike, except
+    * `_`-names holding `=` (partition directories) — InMemoryFileIndex's
+    * rule, so a crashed write's `.part-...parquet` temp file must not
+    * make the footer count diverge from the scan the state machines
+    * replaced (round-19 ADVICE). The Hadoop conf comes from the active
+    * session when one exists, so a non-default filesystem configuration
+    * reads the same files the session's scans do. */
   def rowCount(path: String): Long = {
     val conf = org.apache.spark.sql.SparkSession.getActiveSession
       .map(_.sessionState.newHadoopConf())
@@ -32,17 +35,16 @@ object ParquetFooter {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
     def hidden(name: String): Boolean =
-      name.startsWith("_") || name.startsWith(".")
-    val files: Seq[org.apache.hadoop.fs.Path] = {
-      val st = fs.getFileStatus(p)
-      if (st.isDirectory)
-        fs.listStatus(p).toSeq
-          .filter(s => s.isFile && s.getLen > 0 &&
-            s.getPath.getName.endsWith(".parquet") &&
-            !hidden(s.getPath.getName))
-          .map(_.getPath)
-      else Seq(p)
-    }
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    def parts(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+      fs.listStatus(dir).toSeq.filterNot(s => hidden(s.getPath.getName))
+        .flatMap { s =>
+          if (s.isDirectory) parts(s.getPath)
+          else if (s.getLen > 0 && s.getPath.getName.endsWith(".parquet"))
+            Seq(s.getPath)
+          else Nil
+        }
+    val files = if (fs.getFileStatus(p).isDirectory) parts(p) else Seq(p)
     files.map { f =>
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))

@@ -44,22 +44,36 @@ object Tables {
     * given path is metadata determined by the writer, not query state —
     * memoizing it is the same class of per-JVM cache as codegen — and
     * supplying it via `spark.read.schema(...)` skips inference entirely.
-    * Data is still read from the files on every query. The memo key
-    * carries the path's last-modified time (round-19 ADVICE: a path
-    * deleted and rebuilt with a DIFFERENT schema in the same JVM would
-    * otherwise serve the stale memoized schema silently): a rewrite
-    * lands fresh files with a fresh mtime, so the rebuilt path re-infers
-    * — one driver-side stat per load, no Spark job. A failed first read
-    * (path not yet landed) populates nothing and retries. */
+    * Data is still read from the files on every query. Each path keeps
+    * ONE entry, stamped with the path's modification time as its
+    * filesystem reports it (round-19 ADVICE: a path deleted and rebuilt
+    * with a DIFFERENT schema in the same JVM would otherwise serve the
+    * stale memoized schema silently): a rewrite lands fresh files with a
+    * fresh mtime, so the rebuilt path re-infers and replaces the entry —
+    * one driver-side stat per load through the session's Hadoop
+    * FileSystem (so `hdfs://`/`s3a://` paths stat correctly; an object
+    * store that reports no directory mtime degrades to a path-only key),
+    * no Spark job. A failed first read (path not yet landed) populates
+    * nothing and retries. */
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), org.apache.spark.sql.types.StructType]()
+    String, (Long, org.apache.spark.sql.types.StructType)]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     disableNtzInference(spark)
     val path = s"$dir/$name.parquet"
-    val schema = schemaMemo.computeIfAbsent(
-      (path, new java.io.File(path).lastModified()),
-      _ => spark.read.parquet(path).schema)
+    val p = new org.apache.hadoop.fs.Path(path)
+    // a missing path stamps -1, misses the memo, and the read below
+    // raises Spark's own path-not-found error
+    val mtime =
+      try p.getFileSystem(spark.sessionState.newHadoopConf())
+        .getFileStatus(p).getModificationTime
+      catch { case _: java.io.FileNotFoundException => -1L }
+    val schema = Option(schemaMemo.get(path)).filter(_._1 == mtime)
+      .getOrElse {
+        val entry = (mtime, spark.read.parquet(path).schema)
+        schemaMemo.put(path, entry)
+        entry
+      }._2
     normalizeNtz(spark.read.schema(schema).parquet(path))
   }
 

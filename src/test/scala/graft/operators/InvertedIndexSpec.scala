@@ -1447,4 +1447,71 @@ class InvertedIndexSpec extends SparkSpec {
     InvertedIndex.ensure(spark, sfDir)
     assert(InvertedIndex.bucketsOf(spark, InvertedIndex.table(sfDir)) == 16)
   }
+
+  /** The per-token-rescan `postings` definition, kept as the oracle:
+    * `dl` as `size(tokens(text))` beside the explode, which re-tokenizes
+    * the whole document for every emitted token. */
+  private def rescanPostings(docs: org.apache.spark.sql.DataFrame) =
+    docs.select(col("doc_id"), explode(InvertedIndex.tokens(col("text"))).as("term"),
+        size(InvertedIndex.tokens(col("text"))).cast("long").as("dl"))
+      .groupBy("term", "doc_id")
+      .agg(count(lit(1)).cast("long").as("tf"), max("dl").as("dl"))
+
+  test("postings tokenizes once: rows equal the per-token rescan definition " +
+       "on edge-case documents") {
+    val s = spark
+    import s.implicits._
+    val long = (0 until 1000).map(i => s"w${i % 37}").mkString(" ")
+    val docs = Seq[(Long, String)](
+      (1L, ""),                      // empty text
+      (2L, "?!... ,;-- ()"),         // punctuation only
+      (3L, null),                    // null text
+      (4L, "  alpha   beta    gamma  "), // runs of spaces
+      (5L, "Hash HASH hash Join"),   // upper case
+      (6L, "x y x z x"),             // a repeated term (tf)
+      (7L, long)                     // a 1,000-token doc (dl)
+    ).toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("term", "doc_id", "tf", "dl").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .sortBy(r => (r._2, r._1)).toSeq
+    val got = InvertedIndex.postings(docs)
+    val want = rescanPostings(docs)
+    assert(got.schema == want.schema)
+    assert(rows(got) == rows(want))
+    // spot values, so the oracle itself cannot drift unnoticed
+    val byDoc = rows(got).groupBy(_._2)
+    assert(!byDoc.contains(3L), "null text yields no postings")
+    assert(byDoc(5L).map(r => (r._1, r._3)).toSet == Set(("hash", 3L), ("join", 1L)))
+    assert(byDoc(6L).map(r => (r._1, r._3, r._4)).toSet ==
+      Set(("x", 3L, 5L), ("y", 1L, 5L), ("z", 1L, 5L)))
+    assert(byDoc(4L).map(_._1).toSet == Set("alpha", "beta", "gamma"))
+    assert(byDoc(7L).map(_._4).toSet == Set(1000L))
+    assert(byDoc(7L).map(_._3).sum == 1000L)
+  }
+
+  test("postings plans the tokenization below the Generate, once per row") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpReplace, StringSplit}
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+    def has(p: LogicalPlan)(f: PartialFunction[Expression, Boolean]): Boolean =
+      p.expressions.exists(_.exists(f.orElse { case _ => false }))
+    def canonicalizes(p: LogicalPlan) = has(p) { case _: RegExpReplace => true }
+    def tokenizes(p: LogicalPlan) =
+      has(p) { case _: RegExpReplace | _: StringSplit => true }
+    // the plan nodes evaluated per GENERATED row: everything above the Generate
+    def aboveGenerate(p: LogicalPlan): Seq[LogicalPlan] = p match {
+      case _: Generate => Nil
+      case o => o +: o.children.flatMap(aboveGenerate)
+    }
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    val plan = InvertedIndex.postings(docs).queryExecution.optimizedPlan
+    assert(plan.collect { case g: Generate => g }.size == 1, plan)
+    assert(!aboveGenerate(plan).exists(tokenizes),
+      s"no tokenization may be evaluated per generated row:\n$plan")
+    assert(plan.collect { case p if canonicalizes(p) => p }.size == 1,
+      s"each document is canonicalized in exactly one node:\n$plan")
+    // the pin bites: the rescan definition fails it
+    assert(aboveGenerate(rescanPostings(docs).queryExecution.optimizedPlan)
+      .exists(tokenizes))
+  }
 }

@@ -11,8 +11,8 @@ import graft.SparkSpec
   *    full-corpus shuffle at production scan widths;
   *  - [[ParquetFooter.rowCount]] must agree with `df.count()` for both
   *    layouts the fixture state machines read (a single parquet file
-  *    and a Spark-written directory of part files), since the state
-  *    machines' entry decisions now ride on it. */
+  *    and a Spark-written directory of part files, flat or partitioned),
+  *    since the state machines' entry decisions now ride on it. */
 class SpreadSpec extends SparkSpec {
   import spark.implicits._
 
@@ -39,30 +39,56 @@ class SpreadSpec extends SparkSpec {
     assert(Spread.any(wide) eq wide)
   }
 
+  /** The plan-free width of `df`, asserted equal to the physical one. */
+  private def fastEqualsPhysical(df: org.apache.spark.sql.DataFrame): Int = {
+    val physical = df.rdd.getNumPartitions
+    assert(Spread.fileScanWidth(df) == Some(physical))
+    physical
+  }
+
   test("plan-free width probe decides like the physical probe on scan-rooted frames") {
-    val target = spark.sparkContext.defaultParallelism
     // single-file fixture scans (narrow), with and without narrow ops on top
-    val frames = Seq(
-      graft.sources.Tables.documents(spark, sfDir),
-      graft.sources.Tables.documents(spark, sfDir)
-        .select("doc_id", "text").filter($"doc_id" > 10),
-      graft.sources.Tables.lineitem(spark, sfDir))
-    frames.foreach { df =>
-      val fast = Spread.byKey(df, df.columns.head)
-      val physicalNarrow = df.rdd.getNumPartitions * 2 <= target
-      // the fast path must fire the repartition exactly when the
-      // physical probe would have
-      assert((fast ne df) == physicalNarrow)
-    }
-    // a multi-file directory exercises the packing arm
+    fastEqualsPhysical(graft.sources.Tables.documents(spark, sfDir))
+    fastEqualsPhysical(graft.sources.Tables.documents(spark, sfDir)
+      .select("doc_id", "text").filter($"doc_id" > 10))
+    fastEqualsPhysical(graft.sources.Tables.lineitem(spark, sfDir))
+    // a multi-file directory exercises the packing
     val dir = java.nio.file.Files.createTempDirectory("spread-width")
     try {
       spark.range(1000).toDF("doc_id").repartition(5)
         .write.mode("overwrite").parquet(dir.toString)
-      val df = spark.read.parquet(dir.toString)
-      val fast = Spread.byKey(df, "doc_id")
-      assert((fast ne df) == (df.rdd.getNumPartitions * 2 <= target))
+      fastEqualsPhysical(spark.read.parquet(dir.toString))
     } finally graft.streaming.StreamGate.deleteRecursively(dir)
+  }
+
+  test("plan-free width probe sees partition pruning and production-width " +
+       "scans as the physical probe does; Spread leaves a wide scan alone") {
+    val dir = java.nio.file.Files.createTempDirectory("spread-width")
+    try {
+      // a filter on the partition column prunes the listing, a filter on
+      // a data column does not
+      spark.range(1000).toDF("doc_id").withColumn("k", $"doc_id" % 4)
+        .repartition(2).write.mode("overwrite").partitionBy("k").parquet(dir.toString)
+      val all = fastEqualsPhysical(spark.read.parquet(dir.toString))
+      val one = fastEqualsPhysical(spark.read.parquet(dir.toString).filter($"k" === 1))
+      assert(one < all, s"partition pruning must narrow the scan: $one vs $all")
+      fastEqualsPhysical(spark.read.parquet(dir.toString)
+        .filter($"doc_id" > 10 && $"k" < 2))
+    } finally graft.streaming.StreamGate.deleteRecursively(dir)
+    // a production-width scan, emulated by splitting the fixture file into
+    // small byte ranges: the probe must see it wide, and Spread must then
+    // leave it alone (the full-corpus shuffle the guard exists to avoid)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "8k")
+    try {
+      val target = spark.sparkContext.defaultParallelism
+      val wide = graft.sources.Tables.documents(spark, sfDir)
+      val width = fastEqualsPhysical(wide)
+      assert(width * 2 >= target, s"wide case must be wide: $width vs $target")
+      assert(Spread.byKey(wide, "doc_id") eq wide)
+      assert(Spread.any(wide) eq wide)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("ParquetFooter.rowCount matches df.count for file and directory layouts") {
@@ -80,6 +106,15 @@ class SpreadSpec extends SparkSpec {
       spark.read.parquet(file).limit(7)
         .write.mode("append").parquet(dir.toString)
       assert(ParquetFooter.rowCount(dir.toString) == expected + 7)
+      // a partitioned layout nests part files one level down, and a
+      // hidden directory's files are not part of the table
+      val parted = s"$dir/parted"
+      spark.read.parquet(file).withColumn("k", $"doc_id" % 3)
+        .write.mode("overwrite").partitionBy("k").parquet(parted)
+      spark.read.parquet(file).limit(5)
+        .write.mode("overwrite").parquet(s"$parted/_hidden")
+      assert(ParquetFooter.rowCount(parted) == spark.read.parquet(parted).count())
+      assert(ParquetFooter.rowCount(parted) == expected)
     } finally graft.streaming.StreamGate.deleteRecursively(dir)
   }
 }

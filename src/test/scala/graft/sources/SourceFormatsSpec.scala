@@ -82,4 +82,20 @@ class SourceFormatsSpec extends SparkSpec {
     assert("(?i)pushedfilters: \\[[^\\]]*l_shipdate".r.findFirstIn(plan).isDefined,
       s"l_shipdate predicate not pushed to the parquet scan:\n$plan")
   }
+
+  test("schema memo: a missing path raises Spark's error and memoizes " +
+       "nothing; a path rebuilt with another schema re-infers") {
+    val s = spark
+    val dir = Files.createTempDirectory("schema-memo")
+    val path = s"$dir/t.parquet"
+    try {
+      intercept[org.apache.spark.sql.AnalysisException] { Tables.load(s, dir.toString, "t") }
+      s.range(3).toDF("a").write.parquet(path)
+      assert(Tables.load(s, dir.toString, "t").columns.toSeq == Seq("a"))
+      s.range(3).toDF("b").withColumn("c", lit(1)).write.mode("overwrite").parquet(path)
+      val rebuilt = Tables.load(s, dir.toString, "t")
+      assert(rebuilt.columns.toSeq == Seq("b", "c"))
+      assert(rebuilt.count() == 3)
+    } finally graft.streaming.StreamGate.deleteRecursively(dir)
+  }
 }

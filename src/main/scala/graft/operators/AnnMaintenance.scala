@@ -38,10 +38,7 @@ object AnnMaintenance {
                batchId: Long): String = {
     val cur = graft.sources.Tables.embeddings(spark, dir)
     val meta = IvfIndex.metaTable(dir)
-    def committed: Boolean =
-      spark.catalog.tableExists(meta) &&
-        SnapshotMeta.appliedBatch(spark, meta, batchId)
-    if (committed) {
+    if (SnapshotMeta.appliedBatch(spark, meta, batchId)) {
       // the coarse stamp alone cannot prove the CODES side landed: a
       // crash between the coarse commit and the codes partition write
       // leaves a torn partition this replay is the only chance to fix

@@ -32,7 +32,7 @@ object BpeVocab {
   def ensure(spark: SparkSession, dir: String): String = {
     val t = table(dir)
     if (!spark.catalog.tableExists(t)) {
-      IvfIndex.dropOrphanLocation(spark, t)
+      SnapshotMeta.dropOrphanLocation(spark, t)
       val docs = graft.sources.Tables.documents(spark, dir)
       BpeTrain.trainScalable(docs, "text")
         .write.mode("overwrite").saveAsTable(t)
@@ -66,8 +66,6 @@ object BpeVocab {
 
   /** Drop the fixture's vocabulary table (snapshot retirement / test
     * hygiene). */
-  def drop(spark: SparkSession, dir: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${table(dir)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${metaTable(dir)}")
-  }
+  def drop(spark: SparkSession, dir: String): Unit =
+    SnapshotMeta.dropTables(spark, table(dir), metaTable(dir))
 }

@@ -71,35 +71,17 @@ object ComponentIndex {
   private def fingerprint(docs: DataFrame): (Long, Long) =
     SnapshotMeta.fingerprint(docs, "doc_id")
 
-  /** The base build's ledger partition ([[SnapshotMeta.BaseBatchId]]). */
-  val BaseBatchId: Long = SnapshotMeta.BaseBatchId
-
-  /** Forced bucket-count override for the component family
-    * (-Dgraft.index.compBuckets=N, set BEFORE the first build): absent,
-    * the count is sized from bytes at build time — see
-    * [[chooseBuckets]]. The map and the banded store are each one file
-    * per bucket per batch partition. */
-  private def forcedBuckets: Option[Int] = sys.props.get("graft.index.compBuckets")
-    .map { raw =>
-      val n = raw.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"-Dgraft.index.compBuckets must be an integer, got '$raw'"))
-      require(n > 0, s"-Dgraft.index.compBuckets must be positive, got $n " +
-        "(note: the bucket spec is fixed at table creation; changing the " +
-        "property later is ignored for existing tables)")
-      n
-    }
-
-  /** The build-time choice ([[InvertedIndex.bucketCountForBytes]],
-    * component floor 8): forced override, else next-pow-2 of the build
-    * input's scan bytes / 256 MB. Persisted in each table's catalog
-    * bucket spec; map REWRITES (merge/edit overwrite the whole map)
-    * read it back via [[InvertedIndex.bucketsOf]] so the choice
-    * survives maintenance, and [[compact]] re-evaluates the banded
-    * store's count from its actual stored bytes (no co-bucketed partner
-    * table constrains it — unlike the ANN family's cells/codes pair). */
+  /** The build-time choice ([[SnapshotMeta.bucketCountForBytes]],
+    * component floor 8): next-pow-2 of the build input's scan bytes /
+    * 256 MB. The map and the banded store are each one file per bucket
+    * per batch partition. Persisted in each table's catalog bucket spec;
+    * map REWRITES (merge/edit overwrite the whole map) read it back via
+    * [[SnapshotMeta.bucketsOf]] so the choice survives maintenance, and
+    * [[compact]] re-evaluates the banded store's count from its actual
+    * stored bytes (no co-bucketed partner table constrains it — unlike
+    * the ANN family's cells/codes pair). */
   private def chooseBuckets(input: DataFrame): Int =
-    forcedBuckets.getOrElse(InvertedIndex.bucketCountForBytes(
-      InvertedIndex.statsBytes(input), minBuckets = 8))
+    SnapshotMeta.bucketCountForBytes(SnapshotMeta.statsBytes(input), minBuckets = 8)
 
   /** STALENESS check (review finding: `tableExists` cannot detect a
     * regenerated fixture at the same path — the stale index would serve
@@ -192,14 +174,12 @@ object ComponentIndex {
     * warehouse re-attach via the catalog. */
   def ensure(spark: SparkSession, dir: String): String = {
     val t = table(dir)
-    def ledgered(x: String): Boolean =
-      spark.table(x).columns.contains("batch_id")
     val current = spark.catalog.tableExists(t) &&
-      spark.catalog.tableExists(metaTable(dir)) && ledgered(metaTable(dir)) &&
-      (!spark.catalog.tableExists(bandedTable(dir)) || ledgered(bandedTable(dir)))
+      SnapshotMeta.ledgered(spark, metaTable(dir)) &&
+      (!spark.catalog.tableExists(bandedTable(dir)) ||
+        SnapshotMeta.ledgered(spark, bandedTable(dir)))
     if (!current) {
       drop(spark, dir)
-      IvfIndex.dropOrphanLocation(spark, t)
       val docs = graft.sources.Tables.documents(spark, dir)
       CacheScope.withOperatorCaches {
         bandedComponentMap(docs)
@@ -207,7 +187,7 @@ object ComponentIndex {
           .bucketBy(chooseBuckets(docs), "doc_id").sortBy("doc_id")
           .saveAsTable(t)
       }
-      SnapshotMeta.stampBatch(spark, metaTable(dir), BaseBatchId,
+      SnapshotMeta.stampBatch(spark, metaTable(dir), SnapshotMeta.BaseBatchId,
         fingerprint(docs))
     }
     t
@@ -219,7 +199,7 @@ object ComponentIndex {
     * SignatureStoreSpec contract, `requireAllClusterKeysForCoPartition`),
     * and partitioned by `batch_id` so [[merge]]'s store update is an
     * idempotent per-batch partition overwrite (base build =
-    * [[BaseBatchId]]). A legacy snapshot (indexed before the store
+    * [[SnapshotMeta.BaseBatchId]]). A legacy snapshot (indexed before the store
     * existed) pays one signature pass here on its first merge — sound
     * even after earlier merges, because the append contract lands batch
     * files into the dir, so the dir-derived base partition covers
@@ -228,10 +208,10 @@ object ComponentIndex {
     ensure(spark, dir)
     val bt = bandedTable(dir)
     if (!spark.catalog.tableExists(bt)) {
-      IvfIndex.dropOrphanLocation(spark, bt)
+      SnapshotMeta.dropOrphanLocation(spark, bt)
       val docs = graft.sources.Tables.documents(spark, dir)
       bandedSignatures(docs)
-        .withColumn("batch_id", lit(BaseBatchId))
+        .withColumn("batch_id", lit(SnapshotMeta.BaseBatchId))
         .write.partitionBy("batch_id")
         .bucketBy(chooseBuckets(docs), "band", "key", "block")
         .sortBy("band", "key", "block")
@@ -256,19 +236,11 @@ object ComponentIndex {
     * through here: a [[merge]] after an [[edit]] must not resurrect a
     * removed doc through its leftover stored signatures. */
   def bandedFor(spark: SparkSession, dir: String): DataFrame =
-    withoutTombstones(spark, dir,
-      spark.table(ensureBanded(spark, dir))).drop("batch_id")
+    liveBanded(spark, dir, ensureBanded(spark, dir))
 
-  private def withoutTombstones(spark: SparkSession, dir: String,
-                                rows: DataFrame): DataFrame =
-    if (!spark.catalog.tableExists(tombTable(dir))) rows
-    else {
-      val t = broadcast(spark.table(tombTable(dir))
-        .select(col("doc_id").as("t_doc"), col("batch_id").as("t_batch")))
-      rows.join(t,
-        rows("doc_id") === t("t_doc") && rows("batch_id") < t("t_batch"),
-        "left_anti")
-    }
+  private def liveBanded(spark: SparkSession, dir: String, bt: String): DataFrame =
+    SnapshotMeta.withoutTombstones(spark, tombTable(dir), "doc_id",
+      spark.table(bt)).drop("batch_id")
 
   /** INCREMENTAL index maintenance (the crawl-append path): advance the
     * snapshot's component map and signature store to cover the existing
@@ -306,7 +278,7 @@ object ComponentIndex {
     * test in ComponentIndexSpec). */
   def merge(spark: SparkSession, dir: String, batch: DataFrame,
             batchId: Long): String = {
-    require(batchId != BaseBatchId, s"batch_id $BaseBatchId is the base build")
+    SnapshotMeta.requireBatchId(batchId)
     val t = ensure(spark, dir)
     val bt = ensureBanded(spark, dir)
     if (SnapshotMeta.appliedBatch(spark, metaTable(dir), batchId)) return t
@@ -318,9 +290,8 @@ object ComponentIndex {
       // is localCheckpoint-backed (truncated lineage) — so by write time
       // nothing reads the tables being updated
       // the map's persisted count, read BEFORE the overwrite drops it
-      val mapBuckets = InvertedIndex.bucketsOf(spark, t)
-      val newMap = mergedFromBanded(spark.table(t),
-        withoutTombstones(spark, dir, spark.table(bt)).drop("batch_id"), bb)
+      val mapBuckets = SnapshotMeta.bucketsOf(spark, t)
+      val newMap = mergedFromBanded(spark.table(t), liveBanded(spark, dir, bt), bb)
       newMap.write.mode("overwrite")
         .bucketBy(mapBuckets, "doc_id").sortBy("doc_id").saveAsTable(t)
       SnapshotMeta.overwritePartition(spark, bt, batchId, bb)
@@ -342,25 +313,14 @@ object ComponentIndex {
   }
 
   /** [[merge]] with a content-derived batch id — for callers without a
-    * durable external batch identity ([[SnapshotMeta.derivedBatchId]]).
-    * Tombstoned ids in a GENUINELY NEW batch are refused
-    * ([[SnapshotMeta.requireNoTombstonedIds]]): a re-added doc's
-    * signature rows would land below its tombstone and never serve. A
-    * batch that already committed replays as a no-op even when a later
-    * edit tombstoned its ids (the crash-replay contract wins) — so
-    * re-adding previously deleted content byte-identical to its
-    * original batch silently no-ops; re-ingest deleted content through
-    * the durable non-negative-id overload instead. */
-  def merge(spark: SparkSession, dir: String, batch: DataFrame): String = {
-    val id = SnapshotMeta.derivedBatchId(SnapshotMeta.contentFingerprint(batch))
-    // guard only genuinely NEW batches: a replay of an already-committed
-    // content batch whose ids a later edit tombstoned must still no-op
-    // (the documented replay contract) — the inner merge's ledger check
-    // does the no-op
-    if (!SnapshotMeta.appliedBatch(spark, metaTable(dir), id))
-      SnapshotMeta.requireNoTombstonedIds(spark, tombTable(dir), batch, "doc_id")
-    merge(spark, dir, batch, id)
-  }
+    * durable external batch identity ([[SnapshotMeta.withDerivedId]]: a
+    * genuinely new batch naming a tombstoned id is refused; a committed
+    * batch replays as a no-op, so re-adding previously deleted content
+    * byte-identical to its original batch silently no-ops — re-ingest
+    * deleted content through the durable non-negative-id overload). */
+  def merge(spark: SparkSession, dir: String, batch: DataFrame): String =
+    SnapshotMeta.withDerivedId(spark, metaTable(dir), tombTable(dir), "doc_id",
+      batch, "doc_id", Seq("doc_id", "text"))(merge(spark, dir, batch, _))
 
   /** THE edited-map derivation — the incremental recompute under
     * removals/rewrites, one definition shared by [[edit]] and the live
@@ -438,38 +398,27 @@ object ComponentIndex {
     * [[merge]] already pays. */
   def edit(spark: SparkSession, dir: String, removed: DataFrame,
            added: DataFrame, batchId: Long): String = {
-    require(batchId >= 0,
-      "edit/delete need an explicit non-negative batch id: tombstone " +
-        "visibility orders on batch id, and derived ids sit below the " +
-        "base partition")
+    SnapshotMeta.requireEditId(batchId)
     val t = ensure(spark, dir)
     val bt = ensureBanded(spark, dir)
     if (SnapshotMeta.appliedBatch(spark, metaTable(dir), batchId)) return t
     CacheScope.withOperatorCaches {
       val tombs = CacheScope.track(
         removed.select(col("doc_id")).distinct().localCheckpoint(true))
-      val tt = tombTable(dir)
-      if (!spark.catalog.tableExists(tt)) {
-        IvfIndex.dropOrphanLocation(spark, tt)
-        tombs.withColumn("batch_id", lit(batchId))
-          .write.partitionBy("batch_id").saveAsTable(tt)
-      } else SnapshotMeta.overwritePartition(spark, tt, batchId, tombs)
+      SnapshotMeta.overwritePartition(spark, tombTable(dir), batchId, tombs)
       val bb = CacheScope.track(bandedSignatures(added).localCheckpoint(true))
       // eager (components() clusters inside, localCheckpoint-backed), so
       // by write time nothing reads the tables being overwritten
-      val mapBuckets = InvertedIndex.bucketsOf(spark, t)
-      val newMap = editedFromBanded(spark.table(t),
-        withoutTombstones(spark, dir, spark.table(bt)).drop("batch_id"),
+      val mapBuckets = SnapshotMeta.bucketsOf(spark, t)
+      val newMap = editedFromBanded(spark.table(t), liveBanded(spark, dir, bt),
         bb, tombs)
       newMap.write.mode("overwrite")
         .bucketBy(mapBuckets, "doc_id").sortBy("doc_id").saveAsTable(t)
       SnapshotMeta.overwritePartition(spark, bt, batchId, bb)
       spark.catalog.refreshTable(t)
       spark.catalog.refreshTable(bt)
-      val fa = SnapshotMeta.fingerprint(added.select(col("doc_id")), "doc_id")
-      val fr = SnapshotMeta.fingerprint(tombs, "doc_id")
-      SnapshotMeta.stampBatch(spark, metaTable(dir), batchId,
-        (fa._1 - fr._1, fa._2 - fr._2))
+      SnapshotMeta.stampNet(spark, metaTable(dir), batchId,
+        added.select(col("doc_id")), tombs, "doc_id")
     }
     t
   }
@@ -489,40 +438,22 @@ object ComponentIndex {
     * recreate folds recover by wholesale rebuild from the dir, hence the
     * fresh-index precondition. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    require(!snapshotStale(spark, dir),
-      "compact requires a fresh index (ledger == corpus dir): a crash " +
-        "mid-compact recovers by wholesale rebuild from the dir. Run " +
-        "merge or rebuild first.")
-    SnapshotMeta.requireNoDerivedBatches(spark, metaTable(dir))
     val bt = ensureBanded(spark, dir)
-    val fp = SnapshotMeta.summedFingerprint(spark, metaTable(dir))
-    // fold INTO the highest committed batch id (the InvertedIndex rule):
-    // tombstones hide rows strictly BELOW their own id, so rows folded to
-    // the maximum id stay live through every crash-intermediate state
-    // (store folded, tombstones not yet dropped) — folding to the base
-    // partition would let a surviving tombstone hide an edit's rewrites
-    val foldId = spark.table(metaTable(dir))
-      .agg(max("batch_id")).head().getLong(0)
-    // tombstones apply PHYSICALLY at the fold (dead rows dropped), so
-    // the tombstone table retires with the batch partitions
-    // re-evaluate the store's count from its actual stored bytes (the
-    // InvertedIndex.compact rule — the sanctioned recount moment)
-    val nb = forcedBuckets.getOrElse(InvertedIndex.bucketCountForBytes(
-      InvertedIndex.tableFileBytes(spark, bt), minBuckets = 8))
-    val rows = withoutTombstones(spark, dir, spark.table(bt))
-      .drop("batch_id").localCheckpoint(true)
-    rows.withColumn("batch_id", lit(foldId))
-      .write.mode("overwrite").partitionBy("batch_id")
-      .bucketBy(nb, "band", "key", "block")
-      .sortBy("band", "key", "block")
-      .saveAsTable(bt)
-    spark.sql(s"DROP TABLE IF EXISTS ${tombTable(dir)}")
-    IvfIndex.dropOrphanLocation(spark, tombTable(dir))
-    import spark.implicits._
-    Seq((fp._1, fp._2, foldId)).toDF("n_rows", "id_sum", "batch_id")
-      .write.mode("overwrite").partitionBy("batch_id")
-      .saveAsTable(metaTable(dir))
-    spark.catalog.refreshTable(bt)
+    SnapshotMeta.fold(spark, metaTable(dir), tombTable(dir),
+        snapshotStale(spark, dir)) { foldId =>
+      // re-evaluate the store's count from its actual stored bytes (the
+      // InvertedIndex.compact rule — the sanctioned recount moment)
+      val nb = SnapshotMeta.bucketCountForBytes(
+        SnapshotMeta.tableFileBytes(spark, bt), minBuckets = 8)
+      // tombstones apply PHYSICALLY at the fold (dead rows dropped)
+      liveBanded(spark, dir, bt).localCheckpoint(true)
+        .withColumn("batch_id", lit(foldId))
+        .write.mode("overwrite").partitionBy("batch_id")
+        .bucketBy(nb, "band", "key", "block")
+        .sortBy("band", "key", "block")
+        .saveAsTable(bt)
+      spark.catalog.refreshTable(bt)
+    }
   }
 
   /** Drop and re-derive — full re-clustering for a REPLACED corpus
@@ -539,11 +470,7 @@ object ComponentIndex {
   /** Drop the fixture's index tables without rebuilding — retirement of
     * a snapshot (and test hygiene: a temp-fixture build would otherwise
     * orphan its uniquely-named warehouse directory forever). */
-  def drop(spark: SparkSession, dir: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${table(dir)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${bandedTable(dir)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${metaTable(dir)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${tombTable(dir)}")
-    IvfIndex.dropOrphanLocation(spark, tombTable(dir))
-  }
+  def drop(spark: SparkSession, dir: String): Unit =
+    SnapshotMeta.dropTables(spark, table(dir), bandedTable(dir), metaTable(dir),
+      tombTable(dir))
 }

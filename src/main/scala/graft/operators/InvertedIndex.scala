@@ -80,106 +80,27 @@ object InvertedIndex {
 
   /** Index-side file parallelism: every pruned lookup reads ~k/buckets
     * of the postings, and every bucket is one file per table partition.
-    * The count is CHOSEN AT BUILD TIME from measured bytes (round-16
-    * verdict item 5 — a constant was wrong in both directions: the
-    * 256-bucket fixture rerun measured SLOWER because tiny buckets pay
-    * per-file open cost, and 16 buckets at 100 TB would make 100+ GB
-    * bucket files): [[bucketCountForBytes]] applies the round-13 sizing
-    * formula — next power of two of bytes / 256 MB target bucket-file
-    * size, floored at 16 — to the build input's scan bytes
-    * ([[chooseBuckets]]). The choice is PERSISTED in the table's own
-    * catalog bucket spec — the one place it is both recorded and
-    * ENFORCED (every later partition overwrite must and does conform;
-    * a ledger copy could desync from what the table actually has) — and
-    * read back via [[bucketsOf]] wherever the family adds a table or
-    * folds ([[ensurePositions]], [[compact]]). Override with
-    * -Dgraft.index.invBuckets=N BEFORE the first build (the bucket spec
-    * is fixed at table creation; [[compact]] re-evaluates). */
-  private def forcedBuckets: Option[Int] = sys.props.get("graft.index.invBuckets")
-    .map { raw =>
-      val n = raw.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"-Dgraft.index.invBuckets must be an integer, got '$raw'"))
-      require(n > 0, s"-Dgraft.index.invBuckets must be positive, got $n " +
-        "(note: the bucket spec is fixed at table creation; changing the " +
-        "property later is ignored for existing tables)")
-      n
-    }
-
-  /** The sizing formula, pure: bucket count = next power of two of
-    * ceil(bytes / targetBytes), floored at `minBuckets` (capped at 2^20
-    * — a backstop, never a real configuration). Power of two so probe
-    * hashing stays well-distributed under doubling, min 16 so fixture
-    * scale keeps the measured-faster small-count layout. At 100 TB:
-    * ~1 TB of postings → 4096 buckets of ~256 MB each. */
-  private[operators] def bucketCountForBytes(bytes: Long,
-                                             targetBytes: Long = 256L << 20,
-                                             minBuckets: Int = 16): Int = {
-    require(targetBytes > 0 && minBuckets > 0,
-      s"need positive targetBytes/minBuckets, got $targetBytes/$minBuckets")
-    // ceil-div WITHOUT the +target-1 trick: bytes near Long.MaxValue
-    // would wrap negative and silently return the floor for the hugest
-    // possible store (review finding)
-    val b = math.max(0L, bytes)
-    val need = math.max(1L, b / targetBytes + (if (b % targetBytes > 0) 1L else 0L))
-    val pow = java.lang.Long.highestOneBit(need)
-    val np = if (pow == need) need else pow * 2
-    math.max(minBuckets.toLong, math.min(np, 1L << 20)).toInt
-  }
+    * The count is CHOSEN AT BUILD TIME from measured bytes
+    * ([[SnapshotMeta.bucketCountForBytes]], floored at 16, over the build
+    * input's scan bytes — [[chooseBuckets]]), persisted in the table's
+    * catalog bucket spec, and read back via [[SnapshotMeta.bucketsOf]]
+    * wherever the family adds a table or folds ([[ensurePositions]],
+    * [[compact]]). Override with -Dgraft.index.invBuckets=N BEFORE the
+    * first build (the bucket spec is fixed at table creation; [[compact]]
+    * re-evaluates). */
+  private def bucketOverride: Option[Int] =
+    SnapshotMeta.knob("graft.index.invBuckets", _.toIntOption, "an integer")(
+      _ > 0, "positive (the bucket spec is fixed at table creation; " +
+        "changing the property later is ignored for existing tables)")
 
   /** The build-time choice: the forced override, else
-    * [[bucketCountForBytes]] over the build input's optimizer scan bytes
-    * (for a parquet corpus: the file bytes — a same-order proxy for the
-    * postings store's bytes, which cannot be known before writing; the
-    * formula only moves in power-of-two steps, so same-order is
-    * enough). */
+    * [[SnapshotMeta.bucketCountForBytes]] over the build input's
+    * optimizer scan bytes (for a parquet corpus: the file bytes — a
+    * same-order proxy for the postings store's bytes, which cannot be
+    * known before writing; the formula only moves in power-of-two steps,
+    * so same-order is enough). */
   private[operators] def chooseBuckets(docs: DataFrame): Int =
-    forcedBuckets.getOrElse(bucketCountForBytes(statsBytes(docs)))
-
-  /** The optimizer's size estimate, refused when it is the
-    * no-estimate sentinel (`defaultSizeInBytes` = Long.MaxValue, which
-    * a stats-less relation reports): sizing a bucket spec from a
-    * made-up number would persist either the floor or the 2^20 cap
-    * forever — force a count instead. File scans (every production
-    * build input) always carry real file-size stats. NOTE: a
-    * PARTITIONED catalog table without ANALYZE stats also reports the
-    * sentinel (CatalogFileIndex falls back to defaultSizeInBytes) —
-    * compaction sizes from [[tableFileBytes]], never from here. */
-  private[operators] def statsBytes(input: DataFrame): Long = {
-    val sz = input.queryExecution.optimizedPlan.stats.sizeInBytes
-    require(sz < BigInt(Long.MaxValue),
-      "build input has no size estimate (stats sizeInBytes is the " +
-        "Long.MaxValue sentinel) — build from a file-backed relation or " +
-        "force a bucket count via the family's -Dgraft.index.*Buckets " +
-        "property")
-    sz.toLong
-  }
-
-  /** A catalog table's ACTUAL stored bytes, summed from the filesystem
-    * (getContentSummary over the table location) — the compact-time
-    * sizing input. Plan stats are useless here: the family's tables are
-    * partitioned and carry no ANALYZE stats, so their relations report
-    * the Long.MaxValue sentinel (which the pre-guard formula silently
-    * overflowed to the floor — review finding, spec-pinned). One
-    * metadata round-trip, no data read. */
-  private[operators] def tableFileBytes(spark: SparkSession, t: String): Long = {
-    val meta = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    loc.getFileSystem(spark.sessionState.newHadoopConf())
-      .getContentSummary(loc).getLength
-  }
-
-  /** The PERSISTED choice, read back from the table's catalog bucket
-    * spec — [[chooseBuckets]]' durable record. */
-  private[operators] def bucketsOf(spark: SparkSession, t: String): Int =
-    spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$t exists but carries no bucket spec — not a graft-built index table"))
-
-  /** The base build's ledger partition ([[SnapshotMeta.BaseBatchId]]). */
-  val BaseBatchId: Long = SnapshotMeta.BaseBatchId
+    bucketOverride.getOrElse(SnapshotMeta.bucketCountForBytes(SnapshotMeta.statsBytes(docs)))
 
   /** THE tokenization currency of the index family (round-11 verdict
     * item: "Hash" must find "hash"): [[Dedup.canonicalText]] — lower,
@@ -300,53 +221,45 @@ object InvertedIndex {
     * ledger, per-table repair would desync the commit record from the
     * data, so the only sound repairs are "all present" or "re-derive
     * all". Every table carries a `batch_id` partition column (base build
-    * = [[BaseBatchId]]); maintenance writes are per-batch partition
+    * = [[SnapshotMeta.BaseBatchId]]); maintenance writes are per-batch partition
     * overwrites, which is what makes [[append]] safe to re-run after a
     * crash anywhere in its sequence. */
   def ensure(spark: SparkSession, dir: String): String = {
     val t = table(dir)
     val family = Seq(t, statsTable(dir), vocabTable(dir), deletesTable(dir),
       metaTable(dir))
-    // "present" means present IN THE BATCHED-LEDGER SCHEMA: a complete
-    // pre-ledger family (all three tables, no batch_id column) would pass
-    // a bare tableExists check and then fail the first append with an
-    // unresolved-column error instead of triggering the rebuild
-    def current(x: String): Boolean =
-      spark.catalog.tableExists(x) &&
-        spark.table(x).columns.contains("batch_id")
-    if (!family.forall(current)) {
+    // "present" means present IN THE BATCHED-LEDGER SCHEMA
+    // ([[SnapshotMeta.ledgered]])
+    if (!family.forall(SnapshotMeta.ledgered(spark, _))) {
       // tombstones drop with the family: a wholesale rebuild covers the
       // edited corpus, and a leftover tombstone (batch id > the base's
       // -1) would wrongly hide rebuilt rows of a re-added doc
-      (family :+ posTable(dir) :+ tombTable(dir)).foreach { x =>
-        spark.sql(s"DROP TABLE IF EXISTS $x")
-        IvfIndex.dropOrphanLocation(spark, x)
-      }
+      drop(spark, dir)
       val docs = graft.sources.Tables.documents(spark, dir)
       // ONE bytes-sized bucket count for the whole family at this build
       // (chooseBuckets scaladoc); vocab/deletes are vocabulary-sized and
       // would floor at 16 on their own — family-uniform keeps the layout
       // legible and the compact fold consistent
       val nb = chooseBuckets(docs)
-      postings(docs).withColumn("batch_id", lit(BaseBatchId))
+      postings(docs).withColumn("batch_id", lit(SnapshotMeta.BaseBatchId))
         .write.partitionBy("batch_id")
         .bucketBy(nb, "term").sortBy("term", "doc_id")
         .saveAsTable(t)
-      corpusStats(docs).withColumn("batch_id", lit(BaseBatchId))
+      corpusStats(docs).withColumn("batch_id", lit(SnapshotMeta.BaseBatchId))
         .write.partitionBy("batch_id").saveAsTable(statsTable(dir))
       val v = vocab(docs).localCheckpoint(true)
-      v.withColumn("batch_id", lit(BaseBatchId))
+      v.withColumn("batch_id", lit(SnapshotMeta.BaseBatchId))
         .write.partitionBy("batch_id")
         .bucketBy(nb, "term").sortBy("term")
         .saveAsTable(vocabTable(dir))
       // bucketed by VARIANT: the live view groups by (variant, term),
       // which the variant bucketing satisfies shuffle-free, and the
       // batched-fuzzy probe joins on the variant string
-      deletes(v).withColumn("batch_id", lit(BaseBatchId))
+      deletes(v).withColumn("batch_id", lit(SnapshotMeta.BaseBatchId))
         .write.partitionBy("batch_id")
         .bucketBy(nb, "variant").sortBy("variant", "term")
         .saveAsTable(deletesTable(dir))
-      SnapshotMeta.stampBatch(spark, metaTable(dir), BaseBatchId,
+      SnapshotMeta.stampBatch(spark, metaTable(dir), SnapshotMeta.BaseBatchId,
         SnapshotMeta.fingerprint(docs, "doc_id"))
     }
     t
@@ -404,22 +317,14 @@ object InvertedIndex {
     * serving paths read through here (and [[positionsFor]]), so a
     * delete is visible to every query the moment its batch commits. */
   def postingsFor(spark: SparkSession, dir: String): DataFrame =
-    withoutTombstones(spark, dir, spark.table(ensure(spark, dir)))
+    live(spark, dir, spark.table(ensure(spark, dir)))
 
   /** The live positional relation ([[postingsFor]]'s twin). */
   def positionsFor(spark: SparkSession, dir: String): DataFrame =
-    withoutTombstones(spark, dir, spark.table(ensurePositions(spark, dir)))
+    live(spark, dir, spark.table(ensurePositions(spark, dir)))
 
-  private def withoutTombstones(spark: SparkSession, dir: String,
-                                rows: DataFrame): DataFrame =
-    if (!spark.catalog.tableExists(tombTable(dir))) rows
-    else {
-      val t = broadcast(spark.table(tombTable(dir))
-        .select(col("doc_id").as("t_doc"), col("batch_id").as("t_batch")))
-      rows.join(t,
-        rows("doc_id") === t("t_doc") && rows("batch_id") < t("t_batch"),
-        "left_anti")
-    }
+  private def live(spark: SparkSession, dir: String, rows: DataFrame): DataFrame =
+    SnapshotMeta.withoutTombstones(spark, tombTable(dir), "doc_id", rows)
 
   /** Tombstone HYGIENE for the search family's stored tables
     * ([[IvfIndex.hygiene]]'s search twin): one row per store (postings,
@@ -430,19 +335,10 @@ object InvertedIndex {
   def hygiene(spark: SparkSession, dir: String): DataFrame = {
     def row(store: String, t: String): DataFrame =
       SnapshotMeta.hygieneRow(store, spark.table(t),
-        withoutTombstones(spark, dir, spark.table(t)))
+        live(spark, dir, spark.table(t)))
     row("postings", ensure(spark, dir))
       .unionByName(row("positions", ensurePositions(spark, dir)))
   }
-
-  /** See [[SnapshotMeta.derivedBatchId]] — the id space for the no-arg
-    * [[append]] overload (callers without a durable batch identity). */
-  private[operators] def derivedBatchId(fp: (Long, Long)): Long =
-    SnapshotMeta.derivedBatchId(fp)
-
-  /** See [[SnapshotMeta.contentFingerprint]]. */
-  private[operators] def contentFingerprint(batch: DataFrame): (Long, Long) =
-    SnapshotMeta.contentFingerprint(batch)
 
   /** Incremental maintenance for a crawl append (new doc_ids only),
     * CRASH-IDEMPOTENT (round-11 verdict): the batch's postings rows are
@@ -464,7 +360,7 @@ object InvertedIndex {
     * (reference README.md:19-24), applied to index maintenance. */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
              batchId: Long): Unit = {
-    require(batchId != BaseBatchId, s"batch_id $BaseBatchId is the base build")
+    SnapshotMeta.requireBatchId(batchId)
     val t = ensure(spark, dir)
     if (SnapshotMeta.appliedBatch(spark, metaTable(dir), batchId)) return
     SnapshotMeta.overwritePartition(spark, t, batchId, postings(batch))
@@ -483,29 +379,20 @@ object InvertedIndex {
   }
 
   /** [[append]] with a content-derived batch id — for callers without a
-    * durable external batch identity. Derived ids land at `<= -2`,
-    * strictly below every tombstone, so a GENUINELY NEW batch naming a
-    * tombstoned id would leave its rows permanently hidden from
-    * [[postingsFor]]/[[positionsFor]] despite a "successful" append —
-    * refused ([[SnapshotMeta.requireNoTombstonedIds]]); brand-new ids
-    * append fine on an edited family. The committed-batch replay check
-    * runs FIRST, so a batch that already committed replays as a silent
-    * no-op even when a later edit tombstoned its ids (the crash-replay
-    * contract wins over the refusal). Consequence: RE-ADDING previously
-    * deleted content that is byte-identical to the original batch hashes
-    * to the same derived id, reads as applied, and no-ops — the docs
-    * never serve again. Re-ingest deleted content through the durable
-    * non-negative-id overload (a fresh id above the tombstones). */
-  def append(spark: SparkSession, dir: String, batch: DataFrame): Unit = {
-    val id = derivedBatchId(contentFingerprint(batch))
-    // committed-batch check BEFORE the tombstone guard: a replay of an
-    // already-committed content batch whose ids a LATER edit tombstoned
-    // must no-op (the documented replay contract) — the guard vets only
-    // genuinely new batches
-    if (SnapshotMeta.appliedBatch(spark, metaTable(dir), id)) return
-    SnapshotMeta.requireNoTombstonedIds(spark, tombTable(dir), batch, "doc_id")
-    append(spark, dir, batch, id)
-  }
+    * durable external batch identity ([[SnapshotMeta.withDerivedId]]).
+    * Derived ids land at `<= -2`, strictly below every tombstone, so a
+    * GENUINELY NEW batch naming a tombstoned id is refused; brand-new ids
+    * append fine on an edited family. A batch that already committed
+    * replays as a silent no-op even when a later edit tombstoned its ids
+    * (the crash-replay contract wins over the refusal). Consequence:
+    * RE-ADDING previously deleted content that is byte-identical to the
+    * original batch hashes to the same derived id, reads as applied, and
+    * no-ops — the docs never serve again. Re-ingest deleted content
+    * through the durable non-negative-id overload (a fresh id above the
+    * tombstones). */
+  def append(spark: SparkSession, dir: String, batch: DataFrame): Unit =
+    SnapshotMeta.withDerivedId(spark, metaTable(dir), tombTable(dir), "doc_id",
+      batch, "doc_id", Seq("doc_id", "text"))(append(spark, dir, batch, _))
 
   /** Incremental maintenance for an EDITED snapshot — the diff classes
     * that previously forced a full rebuild (removals and rewrites),
@@ -546,19 +433,11 @@ object InvertedIndex {
     * read or rewritten. */
   def edit(spark: SparkSession, dir: String, removed: DataFrame,
            added: DataFrame, batchId: Long): Unit = {
-    require(batchId >= 0,
-      "edit/delete need an explicit non-negative batch id: tombstone " +
-        "visibility orders on batch id, and derived ids sit below the " +
-        "base partition")
+    SnapshotMeta.requireEditId(batchId)
     val t = ensure(spark, dir)
     if (SnapshotMeta.appliedBatch(spark, metaTable(dir), batchId)) return
     val tombs = removed.select(col("doc_id")).distinct()
-    val tt = tombTable(dir)
-    if (!spark.catalog.tableExists(tt)) {
-      IvfIndex.dropOrphanLocation(spark, tt)
-      tombs.withColumn("batch_id", lit(batchId))
-        .write.partitionBy("batch_id").saveAsTable(tt)
-    } else SnapshotMeta.overwritePartition(spark, tt, batchId, tombs)
+    SnapshotMeta.overwritePartition(spark, tombTable(dir), batchId, tombs)
     SnapshotMeta.overwritePartition(spark, t, batchId, postings(added))
     val net = corpusStats(added)
       .crossJoin(corpusStats(removed)
@@ -581,10 +460,8 @@ object InvertedIndex {
     // per-term vocab sums
     SnapshotMeta.overwritePartition(spark, deletesTable(dir), batchId,
       deletes(netVocab))
-    val fa = SnapshotMeta.fingerprint(added.select(col("doc_id")), "doc_id")
-    val fr = SnapshotMeta.fingerprint(tombs, "doc_id")
-    SnapshotMeta.stampBatch(spark, metaTable(dir), batchId,
-      (fa._1 - fr._1, fa._2 - fr._2))
+    SnapshotMeta.stampNet(spark, metaTable(dir), batchId,
+      added.select(col("doc_id")), tombs, "doc_id")
   }
 
   /** Pure removal — [[edit]] with no incoming content. */
@@ -611,13 +488,13 @@ object InvertedIndex {
     ensure(spark, dir)
     val t = posTable(dir)
     if (!spark.catalog.tableExists(t)) {
-      IvfIndex.dropOrphanLocation(spark, t)
+      SnapshotMeta.dropOrphanLocation(spark, t)
       positions(graft.sources.Tables.documents(spark, dir))
-        .withColumn("batch_id", lit(BaseBatchId))
+        .withColumn("batch_id", lit(SnapshotMeta.BaseBatchId))
         .write.partitionBy("batch_id")
         // the family's persisted choice (the postings table's spec), so
         // a positions table added later matches the build-time sizing
-        .bucketBy(bucketsOf(spark, table(dir)), "term").sortBy("term", "doc_id")
+        .bucketBy(SnapshotMeta.bucketsOf(spark, table(dir)), "term").sortBy("term", "doc_id")
         .saveAsTable(t)
     }
     t
@@ -631,7 +508,7 @@ object InvertedIndex {
     * a replay converges on the same state. */
   def appendPositions(spark: SparkSession, dir: String, batch: DataFrame,
                       batchId: Long): Unit = {
-    require(batchId != BaseBatchId, s"batch_id $BaseBatchId is the base build")
+    SnapshotMeta.requireBatchId(batchId)
     val t = ensurePositions(spark, dir)
     SnapshotMeta.overwritePartition(spark, t, batchId, positions(batch))
   }
@@ -640,25 +517,19 @@ object InvertedIndex {
     * 3-arg [[append]]'s slot for the same batch — and the same
     * tombstoned-id refusal, so the torn state where positions land but
     * the paired [[append]] refuses cannot arise). */
-  def appendPositions(spark: SparkSession, dir: String, batch: DataFrame): Unit = {
-    val id = derivedBatchId(contentFingerprint(batch))
+  def appendPositions(spark: SparkSession, dir: String, batch: DataFrame): Unit =
     // positions have no ledger of their own and the write is an
     // idempotent partition overwrite — ALWAYS run it (direct callers may
-    // legally run append() in either order around this); but skip the
-    // tombstone guard once the paired append() committed this id: a
+    // legally run append() in either order around this); the tombstone
+    // guard is skipped once the paired append() committed this id: a
     // replay of a committed batch whose ids a LATER edit tombstoned must
     // re-land identical rows quietly, not throw (round-14 ADVICE)
-    if (!SnapshotMeta.appliedBatch(spark, metaTable(dir), id))
-      SnapshotMeta.requireNoTombstonedIds(spark, tombTable(dir), batch, "doc_id")
-    appendPositions(spark, dir, batch, id)
-  }
+    SnapshotMeta.withDerivedId(spark, metaTable(dir), tombTable(dir), "doc_id",
+      batch, "doc_id", Seq("doc_id", "text"))(appendPositions(spark, dir, batch, _))
 
   def drop(spark: SparkSession, dir: String): Unit =
-    Seq(table(dir), metaTable(dir), statsTable(dir), vocabTable(dir),
-        deletesTable(dir), posTable(dir), tombTable(dir)).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      IvfIndex.dropOrphanLocation(spark, t)
-    }
+    SnapshotMeta.dropTables(spark, table(dir), metaTable(dir), statsTable(dir),
+      vocabTable(dir), deletesTable(dir), posTable(dir), tombTable(dir))
 
   /** COMPACTION — the operational response to per-batch partition
     * accretion (SCALE.md "Sizing the index bucket counts": every
@@ -682,86 +553,62 @@ object InvertedIndex {
     * fresh index (ledger == dir): recovery-by-rebuild then reproduces
     * the identical index. Run it in the maintenance window, like any
     * offline compaction. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    require(!snapshotStale(spark, dir),
-      "compact requires a fresh index (ledger == corpus dir): a crash " +
-        "mid-compact recovers by wholesale rebuild from the dir, which " +
-        "must reproduce the same index. Run append or rebuild first.")
-    SnapshotMeta.requireNoDerivedBatches(spark, metaTable(dir))
-    val fp = SnapshotMeta.summedFingerprint(spark, metaTable(dir))
-    // fold INTO the highest committed batch id, not the base partition:
-    // tombstones hide rows with batch_id strictly BELOW their own, so
-    // rows folded to the maximum id are never hidden — every
-    // crash-intermediate state (one table folded, tombstones still
-    // present) keeps serving correct, and a leftover tombstone after a
-    // torn run is inert (future appends use still-higher ids). Folding
-    // to -1 instead would let a surviving tombstone hide the very
-    // rewrite rows an edit admitted.
-    val foldId = spark.table(metaTable(dir))
-      .agg(max("batch_id")).head().getLong(0)
-    // the bucket spec is re-declared at the rewrites, so compaction
-    // RE-EVALUATES the sizing formula — ONCE, and the single count
-    // applies to every bucketed fold in the family: the build's
-    // family-uniform rule (round-17 ADVICE — a per-table recount could
-    // desync postings from vocab/deletes/positions and reintroduce
-    // shuffles in the term-bucketed joins the uniform count exists to
-    // avoid). Sized from the LARGEST member's stored bytes (now known
-    // exactly, unlike at build time): positions carries per-OCCURRENCE
-    // rows and typically outweighs the per-(term, doc) postings severalfold
-    // (review finding — postings-only sizing would leave positions
-    // bucket files far past the 256 MB target at scale); the uniform
-    // count at the max keeps every member's files at-or-under target,
-    // smaller members just run more, smaller files.
-    val nb = forcedBuckets.getOrElse(bucketCountForBytes(
-      (Seq(table(dir)) ++
-        (if (spark.catalog.tableExists(posTable(dir))) Seq(posTable(dir))
-         else Nil))
-        .map(tableFileBytes(spark, _)).max))
-    def fold(t: String, bucketCols: Seq[String], sortCols: Seq[String],
-             agg: DataFrame => DataFrame = identity,
-             live: Boolean = false): Unit = {
-      // localCheckpoint truncates lineage, so nothing reads `t` when the
-      // overwrite drops it (the ComponentIndex.merge device)
-      val src = if (live) withoutTombstones(spark, dir, spark.table(t))
-                else spark.table(t)
-      val rows = agg(src.drop("batch_id")).localCheckpoint(true)
-      val w = rows.withColumn("batch_id", lit(foldId))
-        .write.mode("overwrite").partitionBy("batch_id")
-      (if (bucketCols.nonEmpty)
-         w.bucketBy(nb, bucketCols.head, bucketCols.tail: _*)
-           .sortBy(sortCols.head, sortCols.tail: _*)
-       else w).saveAsTable(t)
+  def compact(spark: SparkSession, dir: String): Unit =
+    SnapshotMeta.fold(spark, metaTable(dir), tombTable(dir),
+        snapshotStale(spark, dir)) { foldId =>
+      // the bucket spec is re-declared at the rewrites, so compaction
+      // RE-EVALUATES the sizing formula — ONCE, and the single count
+      // applies to every bucketed fold in the family: the build's
+      // family-uniform rule (round-17 ADVICE — a per-table recount could
+      // desync postings from vocab/deletes/positions and reintroduce
+      // shuffles in the term-bucketed joins the uniform count exists to
+      // avoid). Sized from the LARGEST member's stored bytes (now known
+      // exactly, unlike at build time): positions carries per-OCCURRENCE
+      // rows and typically outweighs the per-(term, doc) postings
+      // severalfold; the uniform count at the max keeps every member's
+      // files at-or-under target, smaller members just run more, smaller
+      // files.
+      val nb = bucketOverride.getOrElse(SnapshotMeta.bucketCountForBytes(
+        (Seq(table(dir)) ++
+          (if (spark.catalog.tableExists(posTable(dir))) Seq(posTable(dir))
+           else Nil))
+          .map(SnapshotMeta.tableFileBytes(spark, _)).max))
+      def fold(t: String, bucketCols: Seq[String], sortCols: Seq[String],
+               agg: DataFrame => DataFrame = identity,
+               applyTombs: Boolean = false): Unit = {
+        // localCheckpoint truncates lineage, so nothing reads `t` when the
+        // overwrite drops it (the ComponentIndex.merge device)
+        val src = if (applyTombs) live(spark, dir, spark.table(t))
+                  else spark.table(t)
+        val rows = agg(src.drop("batch_id")).localCheckpoint(true)
+        val w = rows.withColumn("batch_id", lit(foldId))
+          .write.mode("overwrite").partitionBy("batch_id")
+        (if (bucketCols.nonEmpty)
+           w.bucketBy(nb, bucketCols.head, bucketCols.tail: _*)
+             .sortBy(sortCols.head, sortCols.tail: _*)
+         else w).saveAsTable(t)
+      }
+      // tombstones apply PHYSICALLY at the fold (dead rows dropped), so
+      // the tombstone table retires with the batch partitions
+      fold(table(dir), Seq("term"), Seq("term", "doc_id"), applyTombs = true)
+      // stats re-aggregate to ONE row (the additive sum readers take;
+      // edit batches' net rows fold into the same exact total)
+      fold(statsTable(dir), Seq.empty, Seq.empty,
+        _.agg(coalesce(sum("n"), lit(0L)).as("n"),
+          coalesce(sum("dltot"), lit(0L)).as("dltot")))
+      // vocab folds to the live per-term sums (net rows telescope; dead
+      // terms drop) — exactly what vocabFor computes at read time
+      fold(vocabTable(dir), Seq("term"), Seq("term"),
+        _.groupBy("term").agg(sum("df").as("df")).filter(col("df") > 0))
+      // deletes fold to the live per-(variant, term) sums — the same
+      // telescoping as vocab, one more narrow projection
+      fold(deletesTable(dir), Seq("variant"), Seq("variant", "term"),
+        _.groupBy("variant", "term").agg(sum("df").as("df"))
+          .filter(col("df") > 0))
+      if (spark.catalog.tableExists(posTable(dir)))
+        fold(posTable(dir), Seq("term"), Seq("term", "doc_id"), applyTombs = true)
+      spark.catalog.refreshTable(table(dir))
     }
-    // tombstones apply PHYSICALLY at the fold (dead rows dropped), so
-    // the tombstone table retires with the batch partitions
-    fold(table(dir), Seq("term"), Seq("term", "doc_id"), live = true)
-    // stats re-aggregate to ONE row (the additive sum readers take;
-    // edit batches' net rows fold into the same exact total)
-    fold(statsTable(dir), Seq.empty, Seq.empty,
-      _.agg(coalesce(sum("n"), lit(0L)).as("n"),
-        coalesce(sum("dltot"), lit(0L)).as("dltot")))
-    // vocab folds to the live per-term sums (net rows telescope; dead
-    // terms drop) — exactly what vocabFor computes at read time
-    fold(vocabTable(dir), Seq("term"), Seq("term"),
-      _.groupBy("term").agg(sum("df").as("df")).filter(col("df") > 0))
-    // deletes fold to the live per-(variant, term) sums — the same
-    // telescoping as vocab, one more narrow projection
-    fold(deletesTable(dir), Seq("variant"), Seq("variant", "term"),
-      _.groupBy("variant", "term").agg(sum("df").as("df"))
-        .filter(col("df") > 0))
-    if (spark.catalog.tableExists(posTable(dir)))
-      fold(posTable(dir), Seq("term"), Seq("term", "doc_id"), live = true)
-    spark.sql(s"DROP TABLE IF EXISTS ${tombTable(dir)}")
-    IvfIndex.dropOrphanLocation(spark, tombTable(dir))
-    // ledger last: one stamp at the fold partition carrying the summed
-    // fingerprint — the dir still fingerprints to the same sum, so
-    // freshness is preserved
-    import spark.implicits._
-    Seq((fp._1, fp._2, foldId)).toDF("n_rows", "id_sum", "batch_id")
-      .write.mode("overwrite").partitionBy("batch_id")
-      .saveAsTable(metaTable(dir))
-    spark.catalog.refreshTable(table(dir))
-  }
 
   /** Top-k documents per query term by the exact tf-idf proxy, served
     * from the pruned postings scan: the IN filter on the bucket column

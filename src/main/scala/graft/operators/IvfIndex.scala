@@ -35,31 +35,12 @@ object IvfIndex {
   private[operators] def tableStem(dir: String): String =
     "ivf_index_" + dir.replaceAll("[^A-Za-z0-9]", "_")
 
-  /** The in-memory catalog forgets tables across JVMs but their warehouse
-    * directories remain — saveAsTable then fails with
-    * LOCATION_ALREADY_EXISTS. An orphaned location (no catalog entry) is
-    * stale by definition: remove it so the build can proceed. Shared by
-    * every persisted-index builder in this family. */
-  private[operators] def dropOrphanLocation(spark: SparkSession, table: String): Unit =
-    if (!spark.catalog.tableExists(table)) {
-      val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      val loc = new java.io.File(wh, table.toLowerCase)
-      if (loc.exists()) rm(loc)
-    }
-
   /** Drop the fixture's index tables without rebuilding — snapshot
-    * retirement, and test hygiene for temp fixtures (the
-    * ComponentIndex.drop convention). */
+    * retirement, and test hygiene for temp fixtures. */
   def drop(spark: SparkSession, dir: String): Unit = {
     val stem = tableStem(dir)
-    spark.sql(s"DROP TABLE IF EXISTS ${stem}_cells")
-    spark.sql(s"DROP TABLE IF EXISTS ${stem}_centroids")
-    spark.sql(s"DROP TABLE IF EXISTS ${stem}_meta")
-    spark.sql(s"DROP TABLE IF EXISTS ${stem}_tomb")
+    SnapshotMeta.dropTables(spark, s"${stem}_cells", s"${stem}_centroids",
+      metaTable(dir), tombTable(dir))
   }
 
   /** The batched maintenance ledger ([[SnapshotMeta]]'s contract) for the
@@ -67,26 +48,9 @@ object IvfIndex {
   private[operators] def metaTable(dir: String): String =
     tableStem(dir) + "_meta"
 
-  /** The base build's ledger partition ([[SnapshotMeta.BaseBatchId]]). */
-  val BaseBatchId: Long = SnapshotMeta.BaseBatchId
-
-  /** Forced bucket-count override for the ANN family
-    * (-Dgraft.index.ivfBuckets=N, set BEFORE the first build): absent,
-    * the count is sized from bytes at build time — see
-    * [[chooseBuckets]]. */
-  private def forcedBuckets: Option[Int] = sys.props.get("graft.index.ivfBuckets")
-    .map { raw =>
-      val n = raw.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"-Dgraft.index.ivfBuckets must be an integer, got '$raw'"))
-      require(n > 0, s"-Dgraft.index.ivfBuckets must be positive, got $n " +
-        "(note: the bucket spec is fixed at table creation; changing the " +
-        "property later is ignored for existing tables)")
-      n
-    }
-
-  /** The build-time choice ([[InvertedIndex]]'s bytes formula, ANN
-    * floor 8): the forced override, else next-pow-2 of the embeddings
-    * scan bytes / 256 MB. Chosen ONCE per family at the cells build and
+  /** The build-time choice ([[SnapshotMeta.bucketCountForBytes]], ANN
+    * floor 8): next-pow-2 of the embeddings scan bytes / 256 MB. Chosen
+    * ONCE per family at the cells build and
     * persisted in the cells table's catalog bucket spec; every later
     * rewrite — codes build, either compact fold — reads it back via
     * [[familyBuckets]], because cells and PQ codes must stay
@@ -95,14 +59,13 @@ object IvfIndex {
     * recount moment for this family is therefore the REBUILD, not
     * compact — the one divergence from the InvertedIndex rule,
     * documented here. */
-  private[operators] def chooseBuckets(input: org.apache.spark.sql.DataFrame): Int =
-    forcedBuckets.getOrElse(InvertedIndex.bucketCountForBytes(
-      InvertedIndex.statsBytes(input), minBuckets = 8))
+  private[operators] def chooseBuckets(input: DataFrame): Int =
+    SnapshotMeta.bucketCountForBytes(SnapshotMeta.statsBytes(input), minBuckets = 8)
 
   /** The family's persisted choice — the cells table's catalog bucket
     * spec (built by [[ensureIndex]]); codes and folds conform to it. */
   private[operators] def familyBuckets(spark: SparkSession, dir: String): Int =
-    InvertedIndex.bucketsOf(spark, s"${tableStem(dir)}_cells")
+    SnapshotMeta.bucketsOf(spark, s"${tableStem(dir)}_cells")
 
   /** Build the index tables for the fixture unless already present;
     * returns the trained centroid matrix (from the persisted centroid
@@ -113,29 +76,21 @@ object IvfIndex {
     val cellsT = s"${stem}_cells"
     val centsT = s"${stem}_centroids"
     val metaT = metaTable(dir)
-    // "present" means present IN THE BATCHED-LEDGER SCHEMA (the
-    // InvertedIndex.ensure rule): a complete pre-ledger family — cells
-    // without a batch_id column, no ledger — would pass a bare
-    // tableExists check and then fail the first append instead of
-    // triggering the rebuild. The family is one unit: partial presence
-    // is rebuilt WHOLESALE (per-table repair would desync the commit
-    // record from the data). The PQ tables are left alone — their
+    // "present" means present IN THE BATCHED-LEDGER SCHEMA
+    // ([[SnapshotMeta.ledgered]]). The family is one unit: partial
+    // presence is rebuilt WHOLESALE (per-table repair would desync the
+    // commit record from the data). The PQ tables are left alone — their
     // content derives from the cells table, and PqIndex.ensure's parity
     // signature self-heals them against the rebuilt cells.
-    def ledgered(x: String): Boolean =
-      spark.catalog.tableExists(x) &&
-        spark.table(x).columns.contains("batch_id")
-    if (!(ledgered(cellsT) && spark.catalog.tableExists(centsT) &&
-          ledgered(metaT))) {
-      Seq(cellsT, centsT, metaT, tombTable(dir)).foreach { x =>
-        spark.sql(s"DROP TABLE IF EXISTS $x")
-        dropOrphanLocation(spark, x)
-      }
+    if (!(SnapshotMeta.ledgered(spark, cellsT) &&
+          spark.catalog.tableExists(centsT) &&
+          SnapshotMeta.ledgered(spark, metaT))) {
+      drop(spark, dir)
       val e = graft.sources.Tables.embeddings(spark, dir)
       val cents = KMeans.trainForFixture(e, dir)
       e.select(col("vec_id"), col("embedding"),
           SimilarityIVF.cell(col("embedding"), cents).as("cell"))
-        .withColumn("batch_id", lit(BaseBatchId))
+        .withColumn("batch_id", lit(SnapshotMeta.BaseBatchId))
         .write.partitionBy("batch_id")
         .bucketBy(chooseBuckets(e), "cell").sortBy("cell")
         .saveAsTable(cellsT)
@@ -145,7 +100,7 @@ object IvfIndex {
         .write.mode("overwrite").saveAsTable(centsT)
       // COMMIT POINT of the base build: stamp last, so a crash mid-build
       // leaves no ledger and the next ensureIndex rebuilds wholesale
-      SnapshotMeta.stampBatch(spark, metaT, BaseBatchId,
+      SnapshotMeta.stampBatch(spark, metaT, SnapshotMeta.BaseBatchId,
         SnapshotMeta.fingerprint(e, "vec_id"))
     }
     (cellsT, loadCentroids(spark, centsT))
@@ -178,7 +133,7 @@ object IvfIndex {
     * kill-between-writes test in IvfIndexSpec. */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
              batchId: Long, idCol: String, vecCol: String): Unit = {
-    require(batchId != BaseBatchId, s"batch_id $BaseBatchId is the base build")
+    SnapshotMeta.requireBatchId(batchId)
     val (cellsT, cents) = ensureIndex(spark, dir)
     if (SnapshotMeta.appliedBatch(spark, metaTable(dir), batchId)) return
     // overwritePartition writes through the BATCH frame's session (under
@@ -193,28 +148,17 @@ object IvfIndex {
 
   /** [[append]] with a content-derived batch id — for callers without a
     * durable external batch identity (foreachBatch callers should pass
-    * their batchId instead). The id keys on (id, vector) content
-    * ([[SnapshotMeta.contentFingerprintCols]]), so replaying the same
-    * batch reuses the same ledger slot. Tombstoned ids in a GENUINELY
-    * NEW batch are refused — their rows would land below the tombstone
-    * and never serve ([[SnapshotMeta.requireNoTombstonedIds]]);
-    * brand-new ids are safe. A committed batch replays as a no-op even
-    * when a later edit tombstoned its ids, so re-adding previously
-    * deleted (id, vector) content identical to its original batch
-    * silently no-ops — re-ingest deleted vectors through the durable
-    * non-negative-id overload. */
+    * their batchId instead). The id keys on (id, vector) content, so
+    * replaying the same batch reuses the same ledger slot
+    * ([[SnapshotMeta.withDerivedId]]: tombstoned ids in a genuinely new
+    * batch are refused; a committed batch replays as a no-op, so
+    * re-adding deleted (id, vector) content identical to its original
+    * batch silently no-ops — re-ingest deleted vectors through the
+    * durable non-negative-id overload). */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
-             idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val id = SnapshotMeta.derivedBatchId(
-      SnapshotMeta.contentFingerprintCols(batch, Seq(idCol, vecCol)))
-    // guard only genuinely NEW batches: a replay of an already-committed
-    // content batch whose ids a later edit tombstoned must still no-op
-    // via the inner ledger check (the documented replay contract)
-    if (!SnapshotMeta.appliedBatch(spark, metaTable(dir), id))
-      SnapshotMeta.requireNoTombstonedIds(spark, tombTable(dir),
-        batch.select(col(idCol).as("vec_id")), "vec_id")
-    append(spark, dir, batch, id, idCol, vecCol)
-  }
+             idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    SnapshotMeta.withDerivedId(spark, metaTable(dir), tombTable(dir), "vec_id",
+      batch, idCol, Seq(idCol, vecCol))(append(spark, dir, batch, _, idCol, vecCol))
 
   /** Staleness check vs the CURRENT fixture content (explicit, on the
     * pipeline's snapshot-promotion cadence — the ComponentIndex rule):
@@ -231,28 +175,19 @@ object IvfIndex {
   private[operators] def tombTable(dir: String): String =
     tableStem(dir) + "_tomb"
 
-  /** Apply tombstone visibility to index rows carrying (vec_id,
-    * batch_id): a row is dead iff some tombstone with a STRICTLY higher
-    * batch id names its vec_id — the [[InvertedIndex]] rule, so a
-    * re-added vector's newer rows stay live. The tombstone side is
-    * O(removed) bare ids, broadcast. */
-  private[operators] def liveRows(spark: SparkSession, dir: String,
-                                  rows: DataFrame): DataFrame =
-    if (!spark.catalog.tableExists(tombTable(dir))) rows
-    else {
-      val t = broadcast(spark.table(tombTable(dir))
-        .select(col("vec_id").as("t_vec"), col("batch_id").as("t_batch")))
-      rows.join(t,
-        rows("vec_id") === t("t_vec") && rows("batch_id") < t("t_batch"),
-        "left_anti")
-    }
+  /** Index rows carrying (vec_id, batch_id) minus tombstoned vectors
+    * ([[SnapshotMeta.withoutTombstones]]) — shared by the cells and codes
+    * serving paths. */
+  private[operators] def live(spark: SparkSession, dir: String,
+                              rows: DataFrame): DataFrame =
+    SnapshotMeta.withoutTombstones(spark, tombTable(dir), "vec_id", rows)
 
   /** The LIVE cells relation — the serving view every reader outside the
     * maintenance internals must use ([[InvertedIndex.postingsFor]]'s ANN
     * twin): stored rows minus tombstoned vectors. */
   def cellsFor(spark: SparkSession, dir: String): DataFrame = {
     val (cellsT, _) = ensureIndex(spark, dir)
-    liveRows(spark, dir, spark.table(cellsT))
+    live(spark, dir, spark.table(cellsT))
   }
 
   /** Tombstone HYGIENE for the ANN family's stored tables — one row per
@@ -269,16 +204,14 @@ object IvfIndex {
     val (cellsT, _) = ensureIndex(spark, dir)
     def row(store: String, t: String): DataFrame =
       SnapshotMeta.hygieneRow(store, spark.table(t),
-        liveRows(spark, dir, spark.table(t)))
+        live(spark, dir, spark.table(t)))
     val codesT = PqIndex.codesTable(dir)
     // a pre-ledger codes table (no batch_id column) cannot apply the
     // visibility rule — skip its row rather than crash; PqIndex.ensure
     // heals that layout on its next serving call, after which the row
     // appears
-    val withCodes = spark.catalog.tableExists(codesT) &&
-      spark.table(codesT).columns.contains("batch_id")
     val base = row("ivf_cells", cellsT)
-    if (withCodes) base.unionByName(row("pq_codes", codesT)) else base
+    if (SnapshotMeta.ledgered(spark, codesT)) base.unionByName(row("pq_codes", codesT)) else base
   }
 
   /** Removals and re-embeddings at CHURN cost ([[InvertedIndex.edit]]'s
@@ -300,27 +233,16 @@ object IvfIndex {
   def edit(spark: SparkSession, dir: String, removed: DataFrame,
            added: DataFrame, batchId: Long,
            idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    require(batchId >= 0,
-      "edit/delete need an explicit non-negative batch id: tombstone " +
-        "visibility orders on batch id, and derived ids sit below the " +
-        "base partition")
+    SnapshotMeta.requireEditId(batchId)
     val (cellsT, cents) = ensureIndex(spark, dir)
     if (SnapshotMeta.appliedBatch(spark, metaTable(dir), batchId)) return
     val tombs = removed.select(col(idCol).as("vec_id")).distinct()
-    val tt = tombTable(dir)
-    if (!spark.catalog.tableExists(tt)) {
-      dropOrphanLocation(spark, tt)
-      tombs.withColumn("batch_id", lit(batchId))
-        .write.partitionBy("batch_id").saveAsTable(tt)
-    } else SnapshotMeta.overwritePartition(spark, tt, batchId, tombs)
+    SnapshotMeta.overwritePartition(spark, tombTable(dir), batchId, tombs)
     SnapshotMeta.overwritePartition(spark, cellsT, batchId,
       added.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"),
         SimilarityIVF.cell(col(vecCol), cents).as("cell")))
-    val fa = SnapshotMeta.fingerprint(
-      added.select(col(idCol).as("vec_id")), "vec_id")
-    val fr = SnapshotMeta.fingerprint(tombs, "vec_id")
-    SnapshotMeta.stampBatch(spark, metaTable(dir), batchId,
-      (fa._1 - fr._1, fa._2 - fr._2))
+    SnapshotMeta.stampNet(spark, metaTable(dir), batchId,
+      added.select(col(idCol).as("vec_id")), tombs, "vec_id")
   }
 
   /** Pure removal — [[edit]] with an empty add side (schema-only: the
@@ -362,31 +284,20 @@ object IvfIndex {
     * reconstructible once the cells rows are gone). The fresh-index
     * precondition still guarantees no vector is lost. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    require(!snapshotStale(spark, dir),
-      "compact requires a fresh index (ledger == embeddings dir): a " +
-        "crash mid-compact recovers by rebuild from the dir. Run append " +
-        "or rebuild first.")
-    SnapshotMeta.requireNoDerivedBatches(spark, metaTable(dir))
     val (cellsT, _) = ensureIndex(spark, dir)
-    val fp = SnapshotMeta.summedFingerprint(spark, metaTable(dir))
-    val foldId = spark.table(metaTable(dir))
-      .agg(max("batch_id")).head().getLong(0)
-    // the family's persisted count, read BEFORE the fold drops the
-    // table — co-bucketing with the codes table must survive the fold
-    val nb = familyBuckets(spark, dir)
-    val rows = liveRows(spark, dir, spark.table(cellsT))
-      .drop("batch_id").localCheckpoint(true)
-    rows.withColumn("batch_id", lit(foldId))
-      .write.mode("overwrite").partitionBy("batch_id")
-      .bucketBy(nb, "cell").sortBy("cell")
-      .saveAsTable(cellsT)
-    spark.sql(s"DROP TABLE IF EXISTS ${tombTable(dir)}")
-    dropOrphanLocation(spark, tombTable(dir))
-    import spark.implicits._
-    Seq((fp._1, fp._2, foldId)).toDF("n_rows", "id_sum", "batch_id")
-      .write.mode("overwrite").partitionBy("batch_id")
-      .saveAsTable(metaTable(dir))
-    spark.catalog.refreshTable(cellsT)
+    SnapshotMeta.fold(spark, metaTable(dir), tombTable(dir),
+        snapshotStale(spark, dir)) { foldId =>
+      // the family's persisted count, read BEFORE the fold drops the
+      // table — co-bucketing with the codes table must survive the fold
+      val nb = familyBuckets(spark, dir)
+      val rows = live(spark, dir, spark.table(cellsT))
+        .drop("batch_id").localCheckpoint(true)
+      rows.withColumn("batch_id", lit(foldId))
+        .write.mode("overwrite").partitionBy("batch_id")
+        .bucketBy(nb, "cell").sortBy("cell")
+        .saveAsTable(cellsT)
+      spark.catalog.refreshTable(cellsT)
+    }
   }
 
   /** K x Dim model state from the centroid table — the only thing probe
@@ -411,7 +322,7 @@ object IvfIndex {
       .select(col(idColQ).as("query_id"), col(vecCol).as("q_vec"),
               explode(SimilarityIVF.probeCells(col(vecCol), cents,
                 SimilarityIVF.nProbeServed)).as("cell")))
-    val c = liveRows(spark, dir, spark.table(cellsT)).filter(candidatePred)
+    val c = live(spark, dir, spark.table(cellsT)).filter(candidatePred)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"),
               col("cell"))
     SimilarityIVF.rankProbed(q, c, k)

@@ -296,17 +296,30 @@ object Multimodal {
     * the AIFF/AU readers before WAVE, so a WAV-only corpus paid 1-2
     * `UnsupportedAudioFileException` constructions (stack-trace capture
     * and all) PER CLIP in the recognition loop. The hint changes no
-    * result: the JDK container readers recognize disjoint magic bytes
-    * (RIFF vs FORM vs .snd), so at most one provider accepts a given
-    * stream and "first to recognize" is independent of trial order. */
+    * result only while every provider is one of the JDK's container
+    * readers: they recognize disjoint magic bytes (RIFF vs FORM vs
+    * .snd), so at most one accepts a given stream and "first to
+    * recognize" is independent of trial order. A third-party provider
+    * may overlap them, so with one present the hint is not used
+    * ([[hintOrderSafe]]). */
   @volatile private var audioReaderHint = 0
+
+  /** True when hint-first trial order cannot change which provider
+    * decodes a stream: every provider is a JDK `com.sun.media.sound`
+    * reader. */
+  private[operators] def hintOrderSafe(
+      readers: Seq[javax.sound.sampled.spi.AudioFileReader]): Boolean =
+    readers.forall(_.getClass.getName.startsWith("com.sun.media.sound."))
+
+  private lazy val useReaderHint = hintOrderSafe(audioReaders)
 
   /** `AudioSystem.getAudioInputStream` semantics — first provider that
     * recognizes the container wins — over the pre-resolved provider list
-    * (no registry lock), hint-first (see [[audioReaderHint]]). */
+    * (no registry lock): hint-first (see [[audioReaderHint]]) when
+    * [[hintOrderSafe]], registry order otherwise. */
   private def openAudio(bytes: Array[Byte]): javax.sound.sampled.AudioInputStream = {
     val rs = audioReaders
-    val hint = audioReaderHint
+    val hint = if (useReaderHint) audioReaderHint else 0
     var i = -1 // -1 = the hinted attempt, then 0..n-1 skipping the hint
     while (i < rs.length) {
       val idx = if (i < 0) hint else i
@@ -314,7 +327,7 @@ object Multimodal {
         val r = rs(idx)
         try {
           val ais = r.getAudioInputStream(new java.io.ByteArrayInputStream(bytes))
-          audioReaderHint = idx
+          if (useReaderHint) audioReaderHint = idx
           return ais
         } catch { case _: javax.sound.sampled.UnsupportedAudioFileException => () }
       }

@@ -64,10 +64,8 @@ object PqIndex {
     // (PqIndex, IvfIndex) compact pair, and the coarse compact would
     // refuse the same derived-id ledger after the codes were already
     // rewritten
-    SnapshotMeta.requireNoDerivedBatches(spark, IvfIndex.metaTable(dir))
-    val foldId = spark.table(IvfIndex.metaTable(dir))
-      .agg(max("batch_id")).head().getLong(0)
-    val rows = IvfIndex.liveRows(spark, dir, spark.table(codesT))
+    val foldId = SnapshotMeta.foldId(spark, IvfIndex.metaTable(dir))
+    val rows = IvfIndex.live(spark, dir, spark.table(codesT))
       .drop("batch_id").localCheckpoint(true)
     rows.withColumn("batch_id", lit(foldId))
       .write.mode("overwrite").partitionBy("batch_id")
@@ -80,10 +78,12 @@ object PqIndex {
   /** Drop the fixture's code tables ([[IvfIndex.drop]]'s twin — callers
     * retiring the whole family run both). */
   def drop(spark: SparkSession, dir: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${codesTable(dir)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${IvfIndex.tableStem(dir)}_pq_codebook")
+    SnapshotMeta.dropTables(spark, codesTable(dir), codebookTable(dir))
     synced.remove(dir)
   }
+
+  private def codebookTable(dir: String): String =
+    IvfIndex.tableStem(dir) + "_pq_codebook"
 
   /** Build (or load) the code + codebook tables for the fixture; returns
     * (codesTable, cellsTable, coarse centroids, codebook). If the tables
@@ -95,18 +95,11 @@ object PqIndex {
   def ensure(spark: SparkSession, dir: String): Ensured = {
     val (cellsT, cents) = IvfIndex.ensureIndex(spark, dir)
     val codesT = codesTable(dir)
-    val cbT = s"${IvfIndex.tableStem(dir)}_pq_codebook"
+    val cbT = codebookTable(dir)
     // codes must be present IN THE LEDGERED LAYOUT (batch_id partition
-    // column, mirroring the cells table) — a pre-ledger codes table
-    // would fail the first partition-overwrite append, so rebuild it
-    def ledgered(x: String): Boolean =
-      spark.catalog.tableExists(x) &&
-        spark.table(x).columns.contains("batch_id")
-    if (!ledgered(codesT) || !spark.catalog.tableExists(cbT)) {
-      Seq(codesT, cbT).foreach { x =>
-        spark.sql(s"DROP TABLE IF EXISTS $x")
-        IvfIndex.dropOrphanLocation(spark, x)
-      }
+    // column, mirroring the cells table), or be rebuilt
+    if (!SnapshotMeta.ledgered(spark, codesT) || !spark.catalog.tableExists(cbT)) {
+      drop(spark, dir)
       val e = graft.sources.Tables.embeddings(spark, dir)
       val cb = Pq.trainResidualForFixture(e, dir)
       writeCodes(spark, cellsT, codesT, cents, cb)
@@ -146,15 +139,28 @@ object PqIndex {
                          cents: Array[Array[Double]],
                          cb: Array[Array[Array[Double]]]): Unit =
     spark.table(cellsT)
-      .select(col("vec_id"), col("cell"),
-        PqExpressions.pq_encode(
-          graft.functions.expressions.VectorExpressions
-            .centroid_residual(col("embedding"), col("cell"), cents),
-          cb).as("codes"), col("batch_id"))
+      .select(col("vec_id"), col("cell"), codes(cents, cb), col("batch_id"))
       .write.mode("overwrite")
       .partitionBy("batch_id")
-      .bucketBy(InvertedIndex.bucketsOf(spark, cellsT), "cell").sortBy("cell")
+      .bucketBy(SnapshotMeta.bucketsOf(spark, cellsT), "cell").sortBy("cell")
       .saveAsTable(codesT)
+
+  /** The PQ code of an (`embedding`, `cell`) row's coarse residual. */
+  private def codes(cents: Array[Array[Double]],
+                    cb: Array[Array[Array[Double]]]): Column =
+    PqExpressions.pq_encode(
+      graft.functions.expressions.VectorExpressions
+        .centroid_residual(col("embedding"), col("cell"), cents),
+      cb).as("codes")
+
+  /** Per-batch parity: the codes partition's row count differs from the
+    * cells partition's (both scans prune to one partition). */
+  private def torn(spark: SparkSession, codesT: String, cellsT: String,
+                   batchId: Long): Boolean = {
+    def partCount(t: String): Long =
+      spark.table(t).filter(col("batch_id") === batchId).count()
+    partCount(codesT) != partCount(cellsT)
+  }
 
   private def loadCodebook(spark: SparkSession, cbT: String): Array[Array[Array[Double]]] = {
     val rows = spark.table(cbT).collect()
@@ -179,18 +185,12 @@ object PqIndex {
     * codebook). Returns true when a repair ran. */
   def repairBatch(spark: SparkSession, dir: String, batchId: Long): Boolean = {
     val (codesT, cellsT, cents, cb) = ensure(spark, dir)
-    def partCount(t: String): Long =
-      spark.table(t).filter(col("batch_id") === batchId).count()
-    val torn = partCount(codesT) != partCount(cellsT)
-    if (torn)
+    val repair = torn(spark, codesT, cellsT, batchId)
+    if (repair)
       SnapshotMeta.overwritePartition(spark, codesT, batchId,
         spark.table(cellsT).filter(col("batch_id") === batchId)
-          .select(col("vec_id"), col("cell"),
-            PqExpressions.pq_encode(
-              graft.functions.expressions.VectorExpressions
-                .centroid_residual(col("embedding"), col("cell"), cents),
-              cb).as("codes")))
-    torn
+          .select(col("vec_id"), col("cell"), codes(cents, cb)))
+    repair
   }
 
   /** Incremental ingest, paired with [[IvfIndex.append]]: the batch is
@@ -215,45 +215,40 @@ object PqIndex {
     * backstop for batches ingested via [[IvfIndex.append]] directly
     * (spec-pinned by the kill-between-writes test in PqIndexSpec). */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
-             batchId: Long, idCol: String, vecCol: String): Unit = {
+             batchId: Long, idCol: String, vecCol: String): Unit =
+    withCodes(spark, dir, batchId, batch, idCol, vecCol)(
+      IvfIndex.append(spark, dir, batch, batchId, idCol, vecCol))
+
+  /** The codes half of [[append]]/[[edit]]: run the coarse write, then
+    * land `rows`' codes in the batch's partition unless the coarse ledger
+    * had the batch committed before AND the partition is not [[torn]]. */
+  private def withCodes(spark: SparkSession, dir: String, batchId: Long,
+                        rows: DataFrame, idCol: String, vecCol: String)(
+                        coarse: => Unit): Unit = {
     val (codesT, cellsT, cents, cb) = ensure(spark, dir)
     val committed =
       SnapshotMeta.appliedBatch(spark, IvfIndex.metaTable(dir), batchId)
-    IvfIndex.append(spark, dir, batch, batchId, idCol, vecCol)
-    def partCount(t: String): Long =
-      spark.table(t).filter(col("batch_id") === batchId).count()
-    if (!committed || partCount(codesT) != partCount(cellsT))
-      SnapshotMeta.overwritePartition(spark, codesT, batchId, batch
+    coarse
+    if (!committed || torn(spark, codesT, cellsT, batchId))
+      SnapshotMeta.overwritePartition(spark, codesT, batchId, rows
         .select(col(idCol).as("vec_id"),
-          SimilarityIVF.cell(col(vecCol), cents).as("cell"), col(vecCol).as("v"))
-        .select(col("vec_id"), col("cell"),
-          PqExpressions.pq_encode(
-            graft.functions.expressions.VectorExpressions
-              .centroid_residual(col("v"), col("cell"), cents),
-            cb).as("codes")))
+          SimilarityIVF.cell(col(vecCol), cents).as("cell"),
+          col(vecCol).as("embedding"))
+        .select(col("vec_id"), col("cell"), codes(cents, cb)))
   }
 
   /** [[append]] with a content-derived batch id (the [[IvfIndex.append]]
     * convention — foreachBatch callers should pass their batchId). The
     * SAME derivation as the coarse index's, so both tables share one
-    * ledger slot per batch. Tombstoned ids in a genuinely NEW batch are
-    * refused, like the coarse overload's guard (the tombstone table is
-    * shared); a committed batch replays as a no-op even when later
-    * tombstoned — re-adding deleted content identical to its original
-    * batch needs the durable non-negative-id overload. */
+    * ledger slot per batch, and the same tombstoned-id refusal (the
+    * tombstone table is shared). A committed batch's replay still
+    * reaches the inner append, which no-ops the coarse side and repairs
+    * a torn codes partition via the parity check. */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
-             idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val id = SnapshotMeta.derivedBatchId(
-      SnapshotMeta.contentFingerprintCols(batch, Seq(idCol, vecCol)))
-    // guard only genuinely NEW batches: a committed batch's replay must
-    // still reach the inner append (which no-ops the coarse side and
-    // repairs a torn codes partition via the parity check) even when a
-    // later edit tombstoned its ids — the documented replay contract
-    if (!SnapshotMeta.appliedBatch(spark, IvfIndex.metaTable(dir), id))
-      SnapshotMeta.requireNoTombstonedIds(spark, IvfIndex.tombTable(dir),
-        batch.select(col(idCol).as("vec_id")), "vec_id")
-    append(spark, dir, batch, id, idCol, vecCol)
-  }
+             idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    SnapshotMeta.withDerivedId(spark, IvfIndex.metaTable(dir),
+      IvfIndex.tombTable(dir), "vec_id", batch, idCol, Seq(idCol, vecCol))(
+      append(spark, dir, batch, _, idCol, vecCol))
 
   /** Removals and re-embeddings for the WHOLE PQ family, paired with
     * [[IvfIndex.edit]] the way [[append]] pairs with the coarse append:
@@ -266,23 +261,9 @@ object PqIndex {
     * partition, the session parity signature is the backstop. */
   def edit(spark: SparkSession, dir: String, removed: DataFrame,
            added: DataFrame, batchId: Long,
-           idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val (codesT, cellsT, cents, cb) = ensure(spark, dir)
-    val committed =
-      SnapshotMeta.appliedBatch(spark, IvfIndex.metaTable(dir), batchId)
-    IvfIndex.edit(spark, dir, removed, added, batchId, idCol, vecCol)
-    def partCount(t: String): Long =
-      spark.table(t).filter(col("batch_id") === batchId).count()
-    if (!committed || partCount(codesT) != partCount(cellsT))
-      SnapshotMeta.overwritePartition(spark, codesT, batchId, added
-        .select(col(idCol).as("vec_id"),
-          SimilarityIVF.cell(col(vecCol), cents).as("cell"), col(vecCol).as("v"))
-        .select(col("vec_id"), col("cell"),
-          PqExpressions.pq_encode(
-            graft.functions.expressions.VectorExpressions
-              .centroid_residual(col("v"), col("cell"), cents),
-            cb).as("codes")))
-  }
+           idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    withCodes(spark, dir, batchId, added, idCol, vecCol)(
+      IvfIndex.edit(spark, dir, removed, added, batchId, idCol, vecCol))
 
   /** Pure removal — [[edit]] with an empty add side. */
   def delete(spark: SparkSession, dir: String, removed: DataFrame,
@@ -312,7 +293,7 @@ object PqIndex {
                 SimilarityIVF.nProbeServed)).as("pc"))
       .select(col("query_id"), col("lut"),
               col("pc.cell").as("cell"), col("pc.cdot").as("cdot")))
-    val c = IvfIndex.liveRows(spark, dir0, spark.table(codesT))
+    val c = IvfIndex.live(spark, dir0, spark.table(codesT))
       .filter(candidatePred)
       .select(col("vec_id").as("neighbor_id"), col("cell"), col("codes"))
     Pq.topKTail(c.join(q, Seq("cell"))
@@ -332,7 +313,7 @@ object PqIndex {
     val shortlist = probeFrom(ix, dir, spark, queries, r, idColQ, vecCol,
       candidatePred)
     Pq.exactRerank(queries,
-      IvfIndex.liveRows(spark, dir, spark.table(ix._2))
+      IvfIndex.live(spark, dir, spark.table(ix._2))
         .filter(candidatePred), shortlist, k,
       idColQ, "vec_id", vecCol, "embedding")
   }

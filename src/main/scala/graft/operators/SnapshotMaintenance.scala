@@ -100,11 +100,8 @@ object SnapshotMaintenance {
     // the component commit must fall through to the action paths, where
     // the already-committed family's ops self-no-op and the torn
     // family's apply (convergence, not desync)
-    def done(meta: String): Boolean =
-      spark.catalog.tableExists(meta) &&
-        SnapshotMeta.appliedBatch(spark, meta, batchId)
-    val invDone = done(InvertedIndex.metaTable(dir))
-    val compDone = done(ComponentIndex.metaTable(dir))
+    val invDone = SnapshotMeta.appliedBatch(spark, InvertedIndex.metaTable(dir), batchId)
+    val compDone = SnapshotMeta.appliedBatch(spark, ComponentIndex.metaTable(dir), batchId)
     if (invDone && compDone) return "no_change"
     // the incremental actions assume the family's state IS `prev`: a
     // family that neither covers it nor has this batch committed past it
@@ -164,13 +161,9 @@ object SnapshotMaintenance {
     * one index-IO-only fold every N days instead of accreting partitions
     * forever. The default 32 keeps per-table file counts in the
     * hundreds at fixture-scale bucket counts. */
-  private[operators] def compactAfter: Int = {
-    val raw = sys.props.getOrElse("graft.index.compactAfter", "32")
-    val n = raw.toIntOption.getOrElse(throw new IllegalArgumentException(
-      s"-Dgraft.index.compactAfter must be an integer, got '$raw'"))
-    require(n >= 0, s"-Dgraft.index.compactAfter must be >= 0, got $n")
-    n
-  }
+  private[operators] def compactAfter: Int =
+    SnapshotMeta.knob("graft.index.compactAfter", _.toIntOption, "an integer")(
+      _ >= 0, ">= 0").getOrElse(32)
 
   /** The SECOND compaction trigger, from the hygiene signal:
     * `-Dgraft.index.compactDeadShare` (a fraction in [0, 1]; 0 disables
@@ -183,14 +176,9 @@ object SnapshotMaintenance {
     * view. The two triggers complement: stamp count bounds file
     * accretion (partition/file explosion), dead share bounds the
     * tombstone serving tax (dead bytes scanned + anti-join width). */
-  private[operators] def compactDeadShare: Double = {
-    val raw = sys.props.getOrElse("graft.index.compactDeadShare", "0")
-    val v = raw.toDoubleOption.getOrElse(throw new IllegalArgumentException(
-      s"-Dgraft.index.compactDeadShare must be a number, got '$raw'"))
-    require(v >= 0.0 && v <= 1.0,
-      s"-Dgraft.index.compactDeadShare must be in [0, 1], got $v")
-    v
-  }
+  private[operators] def compactDeadShare: Double =
+    SnapshotMeta.knob("graft.index.compactDeadShare", _.toDoubleOption, "a number")(
+      v => v >= 0.0 && v <= 1.0, "in [0, 1]").getOrElse(0.0)
 
   /** True when the dead-share trigger fires for a family's (ledger,
     * tombstone) pair. Both inputs are tiny tables. */

@@ -20,9 +20,10 @@ import graft.model.Pageview
   *    window end, allowed lateness 0 (`README.md:19-21,66`).
   *
   * Spark mapping: each skewed source is its own stream with its own
-  * `withWatermark`; `unionByName` + the DEFAULT
+  * `withWatermark`; `unionByName` under
   * `spark.sql.streaming.multipleWatermarkPolicy=min` gives exactly the
-  * min-of-inputs fixpoint, at micro-batch granularity instead of Flink's
+  * min-of-inputs fixpoint (checked when the pipeline is built — the
+  * semantics must not rest on a session default that `max` overrides), at micro-batch granularity instead of Flink's
   * in-band watermark records. Append output mode emits each window once and
   * evicts its state — the EventTimeTrigger + FoldingState eviction pair.
   *
@@ -33,12 +34,27 @@ import graft.model.Pageview
   */
 object WatermarkPipeline {
 
+  private val WatermarkPolicyKey = "spark.sql.streaming.multipleWatermarkPolicy"
+
+  /** Fail fast unless the streams' session combines input watermarks by
+    * MIN: under `max` the fastest input would fire the overlap day's
+    * windows before the slow input's rows arrive, and those rows would be
+    * dropped as late — the opposite of the reference's semantics. */
+  private def requireMinWatermarkPolicy(streams: Seq[Dataset[_]]): Unit =
+    streams.headOption.foreach { ds =>
+      val policy = ds.sparkSession.conf.get(WatermarkPolicyKey, "min")
+      require(policy.equalsIgnoreCase("min"),
+        s"$WatermarkPolicyKey is '$policy': the min-of-inputs watermark " +
+          "needs 'min'")
+    }
+
   /** Union N independently-watermarked pageview streams and count per url
     * per tumbling window. `delay` = 0 seconds reproduces the reference's
     * `lastTimestamp - 1` (effectively zero-lateness) watermark. */
   def windowedCounts(streams: Seq[Dataset[Pageview]],
                      width: String = "1 hour",
                      delay: String = "0 seconds"): DataFrame = {
+    requireMinWatermarkPolicy(streams)
     val watermarked = streams.map(_.withWatermark("ts", delay))
     val unioned = watermarked.reduce(_ unionByName _)
     unioned
@@ -70,6 +86,7 @@ object WatermarkPipeline {
   def sessionCounts(streams: Seq[Dataset[Pageview]],
                     gap: String = "10 minutes",
                     delay: String = "0 seconds"): DataFrame = {
+    requireMinWatermarkPolicy(streams)
     val watermarked = streams.map(_.withWatermark("ts", delay))
     watermarked.reduce(_ unionByName _)
       .groupBy(session_window(col("ts"), gap), col("url"))

@@ -530,7 +530,7 @@ class ComponentIndexSpec extends SparkSpec {
           ComponentIndex.bandedFor(s, dir), bb,
           none.select(col("doc_id")))
         newMap.write.mode("overwrite")
-          .bucketBy(InvertedIndex.bucketsOf(s, ComponentIndex.table(dir)), "doc_id")
+          .bucketBy(SnapshotMeta.bucketsOf(s, ComponentIndex.table(dir)), "doc_id")
           .sortBy("doc_id")
           .saveAsTable(ComponentIndex.table(dir))
         SnapshotMeta.overwritePartition(s, ComponentIndex.bandedTable(dir),
@@ -703,6 +703,57 @@ class ComponentIndexSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(after.contains((20L, 1L)),
         s"post-compaction merge lost the folded signatures: $after")
+    } finally {
+      ComponentIndex.drop(s, dir)
+      rm(new java.io.File(dir))
+    }
+  }
+
+  test("a fixture regenerated at the same path is served from a rebuilt index, not the stale one") {
+    // the serving queries check the ledger against the dir before they
+    // read the stored family: a regenerated dir at the same path (which
+    // tableExists cannot see) must not serve the previous corpus' map
+    val s = spark
+    import s.implicits._
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete()
+    }
+    val dir = java.nio.file.Files.createTempDirectory("compidx-regen").toString
+    def words(tag: String) = (1 to 30).map(i => s"$tag$i").mkString(" ")
+    def land(docs: Seq[(Long, String)]): Unit =
+      docs.map { case (id, t) => (id, words(t), "en", "s0", 200) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      CacheScope.withOperatorCaches {
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      }
+    def query(name: String) =
+      pairs(graft.SparkEntry.queries(name)(s, dir))
+    def fullMap() = pairs(ComponentIndex.bandedComponentMap(
+      graft.sources.Tables.documents(s, dir)))
+    try {
+      land(Seq(1L -> "alpha", 2L -> "alpha", 3L -> "beta"))
+      ComponentIndex.ensureBanded(s, dir)
+      assert(pairs(ComponentIndex.componentsFor(s, dir)) == Set((1L, 1L), (2L, 1L)))
+
+      // regenerated corpus: other ids, other clusters, same path and
+      // warehouse. The merged replay reads only the stored signatures.
+      land(Seq(10L -> "gamma", 11L -> "beta", 12L -> "beta",
+        13L -> "delta", 14L -> "delta", 15L -> "gamma"))
+      assert(ComponentIndex.snapshotStale(s, dir))
+      val regenerated = fullMap()
+      assert(regenerated.map(_._1) == Set(10L, 11L, 12L, 13L, 14L, 15L))
+      assert(query("q_corpus_dedup_merged") == regenerated)
+      assert(pairs(ComponentIndex.componentsFor(s, dir)) == regenerated)
+
+      // regenerated again: the indexed split serves the new map too
+      land(Seq(20L -> "alpha", 21L -> "epsilon", 22L -> "epsilon"))
+      assert(ComponentIndex.snapshotStale(s, dir))
+      assert(query("q_split_leakage_safe_indexed") == query("q_split_leakage_safe"))
+      assert(pairs(ComponentIndex.componentsFor(s, dir)) == fullMap())
+      assert(!ComponentIndex.snapshotStale(s, dir))
     } finally {
       ComponentIndex.drop(s, dir)
       rm(new java.io.File(dir))

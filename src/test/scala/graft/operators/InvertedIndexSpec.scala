@@ -313,14 +313,14 @@ class InvertedIndexSpec extends SparkSpec {
     val a = Seq((1L, "alpha beta"), (2L, "gamma")).toDF("doc_id", "text")
     val b = Seq((1L, "alpha DIFFERENT"), (2L, "gamma")).toDF("doc_id", "text")
     def fp(df: org.apache.spark.sql.DataFrame) =
-      InvertedIndex.contentFingerprint(df)
-    val ia = InvertedIndex.derivedBatchId(fp(a))
-    val ib = InvertedIndex.derivedBatchId(fp(b))
-    assert(ia < InvertedIndex.BaseBatchId && ib < InvertedIndex.BaseBatchId,
+      SnapshotMeta.contentFingerprint(df)
+    val ia = SnapshotMeta.derivedBatchId(fp(a))
+    val ib = SnapshotMeta.derivedBatchId(fp(b))
+    assert(ia < SnapshotMeta.BaseBatchId && ib < SnapshotMeta.BaseBatchId,
       "derived ids must be reserved strictly below the base batch id")
     assert(ia != ib,
       "same doc_ids with different text must take different ledger slots")
-    assert(ia == InvertedIndex.derivedBatchId(fp(a)),
+    assert(ia == SnapshotMeta.derivedBatchId(fp(a)),
       "the same content must reuse its slot (idempotence key)")
   }
 
@@ -840,7 +840,7 @@ class InvertedIndexSpec extends SparkSpec {
         .drop("batch_id").localCheckpoint(true)
       rows.withColumn("batch_id", lit(foldId))
         .write.mode("overwrite").partitionBy("batch_id")
-        .bucketBy(InvertedIndex.bucketsOf(s, t), "term").sortBy("term", "doc_id")
+        .bucketBy(SnapshotMeta.bucketsOf(s, t), "term").sortBy("term", "doc_id")
         .saveAsTable(t)
       s.catalog.refreshTable(t)
       // the torn state still serves every answer exactly: folded rows
@@ -1414,7 +1414,7 @@ class InvertedIndexSpec extends SparkSpec {
 
   test("bucket sizing: the bytes formula floors at 16 and grows in powers of two; " +
        "a small build persists the floor, a large build input picks more") {
-    import InvertedIndex.bucketCountForBytes
+    import SnapshotMeta.bucketCountForBytes
     // the formula itself (round-16 verdict item 5): 256 MB target files,
     // min 16, next power of two
     assert(bucketCountForBytes(0L) == 16)
@@ -1434,7 +1434,7 @@ class InvertedIndexSpec extends SparkSpec {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType))))
-    intercept[IllegalArgumentException] { InvertedIndex.statsBytes(statsless) }
+    intercept[IllegalArgumentException] { SnapshotMeta.statsBytes(statsless) }
     // a synthetic LARGE build input picks more than the floor — range's
     // plan stats are exact (8 bytes/row) with nothing materialized, so
     // this is the real chooseBuckets path at 8 GB of scan bytes
@@ -1445,7 +1445,7 @@ class InvertedIndexSpec extends SparkSpec {
     // table's catalog bucket spec (the choice's durable record, read
     // back by ensurePositions/compact)
     InvertedIndex.ensure(spark, sfDir)
-    assert(InvertedIndex.bucketsOf(spark, InvertedIndex.table(sfDir)) == 16)
+    assert(SnapshotMeta.bucketsOf(spark, InvertedIndex.table(sfDir)) == 16)
   }
 
   /** The per-token-rescan `postings` definition, kept as the oracle:

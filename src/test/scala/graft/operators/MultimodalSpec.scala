@@ -166,4 +166,25 @@ class MultimodalSpec extends SparkSpec {
     assert(schema("n_bytes").dataType.typeName == "long")
     assert(schema("mime").dataType.typeName == "string")
   }
+
+  test("hint-first audio reader order is used only over the JDK's own readers") {
+    import scala.jdk.CollectionConverters._
+    import javax.sound.sampled.{AudioFileFormat, AudioInputStream}
+    val jdk = java.util.ServiceLoader
+      .load(classOf[javax.sound.sampled.spi.AudioFileReader]).asScala.toSeq
+    assert(jdk.nonEmpty && Multimodal.hintOrderSafe(jdk),
+      s"this JVM's registered readers: ${jdk.map(_.getClass.getName)}")
+    // a third-party provider may recognize the same bytes as a JDK reader
+    val foreign = new javax.sound.sampled.spi.AudioFileReader {
+      private def no = throw new javax.sound.sampled.UnsupportedAudioFileException()
+      def getAudioFileFormat(s: java.io.InputStream): AudioFileFormat = no
+      def getAudioFileFormat(u: java.net.URL): AudioFileFormat = no
+      def getAudioFileFormat(f: java.io.File): AudioFileFormat = no
+      def getAudioInputStream(s: java.io.InputStream): AudioInputStream = no
+      def getAudioInputStream(u: java.net.URL): AudioInputStream = no
+      def getAudioInputStream(f: java.io.File): AudioInputStream = no
+    }
+    assert(!Multimodal.hintOrderSafe(jdk :+ foreign))
+    assert(!Multimodal.hintOrderSafe(Seq(foreign)))
+  }
 }

@@ -700,7 +700,7 @@ class SnapshotMaintenanceSpec extends SparkSpec {
     // batches: the guard must say so, not NPE on a null min
     val meta = "graft_test_empty_ledger_meta"
     s.sql(s"DROP TABLE IF EXISTS $meta")
-    IvfIndex.dropOrphanLocation(s, meta)
+    SnapshotMeta.dropOrphanLocation(s, meta)
     try {
       Seq.empty[(Long, Long, Long)].toDF("n_rows", "id_sum", "batch_id")
         .write.partitionBy("batch_id").saveAsTable(meta)
@@ -708,7 +708,7 @@ class SnapshotMaintenanceSpec extends SparkSpec {
       SnapshotMeta.requireNoDerivedBatches(s, meta) // must not throw
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $meta")
-      IvfIndex.dropOrphanLocation(s, meta)
+      SnapshotMeta.dropOrphanLocation(s, meta)
     }
   }
 }

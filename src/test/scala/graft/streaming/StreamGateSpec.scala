@@ -293,7 +293,7 @@ class StreamGateSpec extends SparkSpec {
     // APPEND verb): two ingest slices through one checkpoint ⇒ the
     // append ledger carries the base stamp plus batch 0 AND batch 1
     assert(graft.operators.IndexTestAccess.invLedgerBatchIds(spark, fix)
-      == Seq(graft.operators.InvertedIndex.BaseBatchId, 0L, 1L),
+      == Seq(graft.operators.SnapshotMeta.BaseBatchId, 0L, 1L),
       "the ingest ledger must carry the base stamp plus batches 0 and 1")
   }
 
@@ -338,7 +338,7 @@ class StreamGateSpec extends SparkSpec {
     // 0's tombstones after batch 1 applied (cross-batch visibility),
     // which the answer-parity assertions above then hash down to the
     // edited-corpus replay
-    val base = graft.operators.InvertedIndex.BaseBatchId
+    val base = graft.operators.SnapshotMeta.BaseBatchId
     assert(graft.operators.IndexTestAccess.invLedgerBatchIds(spark, fix)
       == Seq(base, 0L, 1L),
       "the CDC ledger must carry the base stamp plus batch 0 AND batch 1")
@@ -380,7 +380,7 @@ class StreamGateSpec extends SparkSpec {
       "the streamed edit must change the served ranking")
     // MIXED-VERB ledger: base stamp, ingest batch 0, edit batch 1 —
     // one checkpoint, one ledger, two verbs
-    val base = graft.operators.InvertedIndex.BaseBatchId
+    val base = graft.operators.SnapshotMeta.BaseBatchId
     assert(graft.operators.IndexTestAccess.invLedgerBatchIds(spark, fix)
       == Seq(base, 0L, 1L),
       "the mixed ledger must carry the base stamp, the append batch 0, " +

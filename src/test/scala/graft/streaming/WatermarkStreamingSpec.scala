@@ -120,4 +120,26 @@ class WatermarkStreamingSpec extends SparkSpec {
         s"overlap window must carry both partitions' events: $rows")
     } finally q.stop()
   }
+
+  test("the pipeline refuses a session whose multiple-watermark policy is max") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val key = "spark.sql.streaming.multipleWatermarkPolicy"
+    val saved = s.conf.getOption(key)
+    s.conf.set(key, "max")
+    try {
+      val streams = Seq(MemoryStream[Pageview].toDS(), MemoryStream[Pageview].toDS())
+      val ex = intercept[IllegalArgumentException](
+        WatermarkPipeline.windowedCounts(streams))
+      assert(ex.getMessage.contains("'max'"), ex.getMessage)
+      intercept[IllegalArgumentException](WatermarkPipeline.sessionCounts(streams))
+    } finally saved match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
+    }
+    // restored: the same construction succeeds again
+    WatermarkPipeline.windowedCounts(
+      Seq(MemoryStream[Pageview].toDS(), MemoryStream[Pageview].toDS()))
+  }
 }

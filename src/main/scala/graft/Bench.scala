@@ -142,8 +142,8 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = GraftSession.sfDir
+    val cpus = GraftSession.cores.toString
     // min-of-N: this host shows random multi-second CPU-steal spikes (the
     // same query measured 0.6s and 28s back-to-back); round 2 showed
     // min-of-2 still admits them, so default 3 (env-tunable).
@@ -154,33 +154,8 @@ object Bench {
       require(n >= 1, s"SPARK_GRAFT_RUNS must be >= 1, got $n")
       n
     }
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // see Verify: keeps bucket pruning alive on the positional index
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm up executor threads, codegen compiler, and the parquet footer
-    // cache once so per-query timings measure the queries, not JVM startup
-    // (the first query otherwise absorbs ~3-4 s of session warmup). The
-    // shingle/hash warmup runs the MinHash pipeline once at sf0.001: the
-    // interpreted higher-order-function evaluators JIT lazily and the first
-    // query to touch them otherwise absorbs ~7s of compilation (measured) —
-    // that's JVM state, not plan cost.
-    spark.range(1 << 20).selectExpr("sum(id)").collect()
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    try graft.operators.MinHashLSH
-      .candidatePairs(graft.sources.Tables.documents(spark, "/root/testdata/sf0.001"),
-        "doc_id", "text", "lang")
-      .write.mode("overwrite").format("noop").save()
-    catch { case _: Throwable => () }
-    spark.catalog.clearCache()
-    graft.operators.CacheScope.releaseAll()
+    val spark = GraftSession.local(GraftSession.cores)
+    GraftSession.warmup(spark)
     // Optional name filter (regex, dev iteration only — the driver runs
     // the full suite).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)

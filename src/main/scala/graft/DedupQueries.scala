@@ -975,7 +975,7 @@ object DedupQueries {
     // drifting from the exact all-pairs oracle (round-2 ADVICE). The
     // guard lives in the spec, not here: an eager aggregate in the query
     // builder would run inside Bench's timed region and launch jobs from
-    // plan-only consumers like PlanAudit.
+    // plan-only consumers like PlanDump.
     "q_dedup_embedding" -> ((s, dir) =>
       Dedup.embeddingNearDups(Tables.embeddings(s, dir),
           "vec_id", "embedding", "label", threshold = 0.3)

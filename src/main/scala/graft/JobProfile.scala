@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd, SparkListenerStageCompleted}
 
 /** Dev profiling harness: runs ONE query N times under the bench's exact
@@ -12,22 +11,8 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val runs = if (args.length > 1) args(1).toInt else 2
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_PAR_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_ADVISORY", "67108864b"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val dir = GraftSession.sfDir
+    val spark = GraftSession.local(GraftSession.cores)
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     @volatile var log = List.empty[String]
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -44,9 +29,7 @@ object JobProfile {
           f"taskTime=${i.taskMetrics.executorRunTime}%6d ms  ${i.name.take(60)}"
       }
     })
-    // bench-identical warmup
-    spark.range(1 << 20).selectExpr("sum(id)").collect()
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    GraftSession.warmup(spark)
     (1 to runs).foreach { r =>
       spark.catalog.clearCache()
       graft.operators.CacheScope.releaseAll()

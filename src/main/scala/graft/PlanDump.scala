@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Writes `.explain("formatted")` output for named queries to files —
   * the before/after plan evidence the optimization rounds commit under
@@ -8,29 +7,19 @@ import org.apache.spark.sql.SparkSession
   * Run: sbt "runMain graft.PlanDump <outDir> <suffix> <query>[,<query>...]"
   * e.g. sbt "runMain graft.PlanDump plans/r19 before q_multimodal_video"
   *
-  * Uses the bench's session shape (local[$SPARK_GRAFT_CPUS], shuffle
-  * partitions = cpus, AQE on) so the captured initial plans match what
-  * the bench executes. Explain is plan-only — no job runs — except for
-  * eagerly-constructed operators (fixture builders, the ngram-Jaccard
-  * histogram probe), which pay their construction action like any other
-  * consumer.
+  * Uses the bench's session ([[GraftSession.local]]) so the captured
+  * initial plans match what the bench executes. Explain is plan-only —
+  * no job runs — except for eagerly-constructed operators (fixture
+  * builders, the ngram-Jaccard histogram probe), which pay their
+  * construction action like any other consumer.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length == 3,
       "usage: PlanDump <outDir> <suffix> <query>[,<query>...]")
     val Array(outDir, suffix, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val dir = GraftSession.sfDir
+    val spark = GraftSession.local(GraftSession.cores)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>

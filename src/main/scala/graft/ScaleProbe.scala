@@ -25,7 +25,10 @@ import graft.operators.{ConnectedComponents, Dedup, MinHashLSH}
   *
   * Usage: `runMain graft.ScaleProbe 1 10 100` (multipliers of sf0.1;
   * SPARK_GRAFT_PROBE_RUNS per-query runs, default 2;
-  * SPARK_GRAFT_PROBE_ONLY regex filters the query list).
+  * SPARK_GRAFT_PROBE_ONLY regex filters the query list;
+  * SPARK_GRAFT_PROBE_NGRAM_CAP, _METRICS and _NOPAIRS are described
+  * where `main` reads them). The session is the bench's
+  * ([[GraftSession.local]] on SPARK_GRAFT_CPUS threads).
   */
 object ScaleProbe {
 
@@ -163,49 +166,6 @@ object ScaleProbe {
       }.write.mode("overwrite").parquet(s"$dir/events.parquet")
   }
 
-  /** Ten fixed tokens prepended to ~30% of documents — every such doc
-    * shares 3 identical 8-token spans, the span-hash join's hot-key case
-    * SCALE.md predicted but had not measured. */
-  val Boiler = "terms of service apply all rights reserved contact site admin"
-
-  /** Mode 1 ("moderate"): the 10-token boiler prefixed to ~30% of
-    * normal-length docs — measured NOT to reach the AQE skew threshold
-    * (the hot span is ~0.6% of span rows; every doc contributes ~48
-    * spans, so no single key can dominate a partition). Mode 2
-    * ("hot-span"): SHORT docs (9-20 tokens, ~5 spans each) with an
-    * exactly-8-token boiler opening 50% of them — ONE span hash carries
-    * ~10% of all span rows, the single-dominant-key shape where the
-    * skew split has something to split. */
-  private def ensureBoilerplateData(spark: SparkSession, mult: Int,
-                                    mode: Int): String = {
-    val dir = s"/tmp/graft_scale/bp${mode}_x$mult"
-    import spark.implicits._
-    val boiler8 = Boiler.split(" ").take(8).mkString(" ")
-    if (!new java.io.File(s"$dir/documents.parquet/_SUCCESS").exists()) {
-      spark.range(BaseDocs * mult).map { id =>
-        val t =
-          if (mode >= 2) {
-            val len = 1 + (mix(id, 0) % 12).toInt // 1-12 fresh tokens
-            val fresh = Array.tabulate(len)(i =>
-              Vocab((mix(id, i + 1) % Vocab.length).toInt)).mkString(" ")
-            if (mix(id, 4242) % 10 < 5) s"$boiler8 $fresh" else fresh
-          } else {
-            val base = textFor(id)
-            if (mix(id, 4242) % 10 < 3) s"$Boiler $base" else base
-          }
-        // mode 3 (round-11, verdict item 6): mode 2's hot-span corpus
-        // under a DELIBERATELY SKEWED language mix (95% one language —
-        // the 100 TB reality the flat generator understates), so every
-        // lang-blocked shuffle in the family gets a hot block on top of
-        // the hot span hash
-        val lang =
-          if (mode == 3 && mix(id, 777) % 100 < 95) "en" else langFor(id)
-        Doc(id, t, lang, s"src${id % 5}", t.length)
-      }.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    }
-    dir
-  }
-
   /** The data-dependent family (names resolve via SparkEntry.queries so
     * the probe measures EXACTLY the declared plans). n-gram Jaccard is
     * dense-vocab quadratic by construction — keep it in the default list
@@ -276,850 +236,9 @@ object ScaleProbe {
     val mults = if (args.isEmpty) Seq(1, 10) else args.map(_.toInt).toSeq
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "2").toInt
     val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY").map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same JIT/codegen warmup as Bench: the first HOF-touching query
-    // otherwise absorbs ~7 s of lazy compilation
-    try MinHashLSH.candidatePairs(
-        graft.sources.Tables.documents(spark, "/root/testdata/sf0.001"),
-        "doc_id", "text", "lang")
-      .write.mode("overwrite").format("noop").save()
-    catch { case _: Throwable => () }
-    spark.catalog.clearCache(); graft.operators.CacheScope.releaseAll()
+    val spark = GraftSession.local(GraftSession.cores)
+    GraftSession.warmup(spark)
 
-    val bpMode = sys.env.get("SPARK_GRAFT_PROBE_BP").map(_.toInt).getOrElse(0)
-    if (bpMode > 0) {
-      boilerplateProbe(spark, mults, runs, bpMode)
-      spark.stop()
-      return
-    }
-    // BPE-training probe (round-10, verdict item 2's rounds-vs-merges
-    // row): SPARK_GRAFT_PROBE_BPE=<merges> times BOTH trainers at that
-    // vocabulary size on each probe corpus, splitting the dictionary-
-    // local trainer into its one Spark job (dictionary aggregate +
-    // bounded collect) and the driver-local merge loop. The distributed
-    // trainer is capped (env SPARK_GRAFT_PROBE_BPE_DIST_MAX, default
-    // 100 merges) because one-job-per-merge past that is precisely the
-    // scale defect the twin exists to remove — the probe row records
-    // jobs-per-merge, not minutes of scheduler queueing.
-    sys.env.get("SPARK_GRAFT_PROBE_BPE").map(_.toInt).foreach { merges =>
-      val distMax = sys.env.getOrElse("SPARK_GRAFT_PROBE_BPE_DIST_MAX", "100").toInt
-      mults.foreach { mult =>
-        val dir = ensureData(spark, mult)
-        val docs = graft.sources.Tables.documents(spark, dir)
-        val t0 = System.nanoTime()
-        val dict = graft.operators.BpeTrain.collectDictionary(docs, "text")
-        val tDict = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val learned = graft.operators.BpeTrain.trainOnDict(dict, merges)
-        val tLoop = (System.nanoTime() - t1) / 1e9
-        val distMerges = math.min(merges, distMax)
-        val t2 = System.nanoTime()
-        graft.operators.BpeTrain.train(docs, "text", distMerges)
-          .write.mode("overwrite").format("noop").save()
-        val tDist = (System.nanoTime() - t2) / 1e9
-        spark.catalog.clearCache(); graft.operators.CacheScope.releaseAll()
-        println(s"""{"probe":"bpe_train","mult":$mult,"n_docs":${BaseDocs * mult},"merges":$merges,"dict_entries":${dict.length},"learned":${learned.length},"t_dict_job":$tDict,"t_driver_loop":$tLoop,"dist_merges":$distMerges,"t_distributed":$tDist}""")
-      }
-      // The generator's 31-word vocabulary exhausts its merge supply at
-      // ~125 rules, so the corpus rows above cannot exercise a REAL
-      // vocabulary depth. This one can: a synthetic Heaps'-law-sized
-      // dictionary (SPARK_GRAFT_PROBE_BPE_SYNTH entries of 2-12 mixed
-      // chars, zipf-ish frequencies, hash-deterministic) through the
-      // same driver loop at the full requested merge count — the
-      // operating point a web-scale tokenizer trains at.
-      sys.env.get("SPARK_GRAFT_PROBE_BPE_SYNTH").map(_.toInt).foreach { n =>
-        val synth: Seq[(String, Long)] = (0 until n).map { i =>
-          val len = 2 + (mix(i, 5001) % 11).toInt
-          val w = new String(Array.tabulate(len)(j =>
-            ('a' + (mix(i, 6000 + j) % 26).toInt).toChar))
-          (w + i, (1000000L / (i + 1)) + 1L) // suffix forces distinctness
-        }
-        val t0 = System.nanoTime()
-        val learned = graft.operators.BpeTrain.trainOnDict(synth, merges)
-        val t = (System.nanoTime() - t0) / 1e9
-        println(s"""{"probe":"bpe_train_synth","dict_entries":$n,"merges":$merges,"learned":${learned.length},"t_driver_loop":$t}""")
-      }
-      spark.stop()
-      return
-    }
-    // Incremental-merge probe (round-11, verdict item 1's A/B row):
-    // SPARK_GRAFT_PROBE_MERGE=<pct> splits each probe corpus into a
-    // (100-pct)% base and a pct% "crawl append" batch (highest ids — the
-    // append contract), builds the persisted index over the base, then
-    // times ComponentIndex.merge(batch) against the full live
-    // re-clustering over base ∪ batch (what rebuild pays), and verifies
-    // the merged stored map equals the rebuild DISTRIBUTED (anti-join
-    // both ways — never collecting a probe-scale map to the driver).
-    sys.env.get("SPARK_GRAFT_PROBE_MERGE").map(_.toInt).foreach { pct =>
-      mults.foreach { mult =>
-        val dir = ensureData(spark, mult)
-        val docs = graft.sources.Tables.documents(spark, dir)
-        val n = BaseDocs * mult
-        val cut = n - n * pct / 100
-        val baseDir = s"/tmp/graft_probe/merge_base_${mult}_$pct"
-        docs.filter(col("doc_id") < cut)
-          .write.mode("overwrite").parquet(s"$baseDir/documents.parquet")
-        val batch = docs.filter(col("doc_id") >= cut)
-        graft.operators.ComponentIndex.drop(spark, baseDir)
-        val t0 = System.nanoTime()
-        graft.operators.ComponentIndex.ensure(spark, baseDir)
-        graft.operators.ComponentIndex.ensureBanded(spark, baseDir)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        graft.operators.ComponentIndex.merge(spark, baseDir, batch)
-        val tMerge = (System.nanoTime() - t1) / 1e9
-        val t2 = System.nanoTime()
-        val full = graft.operators.CacheScope.withOperatorCaches {
-          val m = graft.operators.ComponentIndex.bandedComponentMap(docs)
-            .localCheckpoint(true)
-          m.write.mode("overwrite").format("noop").save()
-          m
-        }
-        val tRebuild = (System.nanoTime() - t2) / 1e9
-        val stored = spark.table(
-          graft.operators.ComponentIndex.ensure(spark, baseDir))
-        val diff =
-          stored.join(full, Seq("doc_id", "component_id"), "left_anti").count() +
-          full.join(stored, Seq("doc_id", "component_id"), "left_anti").count()
-        val rows = stored.count()
-        spark.catalog.clearCache(); graft.operators.CacheScope.releaseAll()
-        graft.operators.ComponentIndex.drop(spark, baseDir)
-        println(s"""{"probe":"component_merge","mult":$mult,"n_docs":$n,"batch_pct":$pct,"map_rows":$rows,"mismatches":$diff,"t_base_build":$tBuild,"t_merge":$tMerge,"t_rebuild":$tRebuild}""")
-      }
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_PROBE_ANN_MAINT=<pct> (round-13): the ANN family's
-    // maintenance economics, measured like the component-merge probe.
-    // Each probe fixture's embeddings split into a (100-pct)% base
-    // (lowest ids) and a pct% "crawl append" batch; the persisted
-    // IVF+PQ index builds over the base (training included), then the
-    // batch arrives through the LEDGERED append path (cells partition
-    // overwrite + codes partition overwrite + commit stamp) and is
-    // timed against the one-pass full-corpus re-assignment a rebuild's
-    // assignment stage pays (training excluded — centroids are frozen
-    // across both paths, which is what makes append == rebuild exact).
-    // The maintained cells are verified against the rebuilt assignment
-    // DISTRIBUTED (anti-join both ways, nothing collected).
-    sys.env.get("SPARK_GRAFT_PROBE_ANN_MAINT").map(_.toInt).foreach { pct =>
-      mults.foreach { mult =>
-        val dir = ensureData(spark, mult)
-        val e = graft.sources.Tables.embeddings(spark, dir)
-        val n = BaseVecs * mult
-        val cut = n - n * pct / 100
-        val baseDir = s"/tmp/graft_probe/annmaint_${mult}_$pct"
-        e.filter(col("vec_id") < cut)
-          .write.mode("overwrite").parquet(s"$baseDir/embeddings.parquet")
-        val batch = e.filter(col("vec_id") >= cut)
-        graft.operators.IvfIndex.drop(spark, baseDir)
-        graft.operators.PqIndex.drop(spark, baseDir)
-        val t0 = System.nanoTime()
-        val (codesT, cellsT, cents, _) =
-          graft.operators.PqIndex.ensure(spark, baseDir)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        graft.operators.PqIndex.append(spark, baseDir, batch)
-        val tAppend = (System.nanoTime() - t1) / 1e9
-        val t2 = System.nanoTime()
-        val full = e.select(col("vec_id"),
-            graft.operators.SimilarityIVF.cell(col("embedding"), cents)
-              .as("cell"))
-          .localCheckpoint(true)
-        full.write.mode("overwrite").format("noop").save()
-        val tAssignAll = (System.nanoTime() - t2) / 1e9
-        val stored = spark.table(cellsT).select("vec_id", "cell")
-        val diff =
-          stored.join(full, Seq("vec_id", "cell"), "left_anti").count() +
-          full.join(stored, Seq("vec_id", "cell"), "left_anti").count()
-        val codesRows = spark.table(codesT).count()
-        val cellsRows = stored.count()
-        spark.catalog.clearCache(); graft.operators.CacheScope.releaseAll()
-        graft.operators.IvfIndex.drop(spark, baseDir)
-        graft.operators.PqIndex.drop(spark, baseDir)
-        println(s"""{"probe":"ann_maint","mult":$mult,"n_vecs":$n,"batch_pct":$pct,"cells_rows":$cellsRows,"codes_rows":$codesRows,"mismatches":$diff,"t_base_build":$tBuild,"t_append":$tAppend,"t_assign_all":$tAssignAll}""")
-      }
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_PROBE_ANN_DEL=<pct> (round-13): the ANN removal
-    // path's economics. Full IVF+PQ build over each probe corpus, then
-    // pct% of the vectors are removed through PqIndex.delete (one
-    // shared tombstone partition + commit stamp — O(removed) writes)
-    // and timed against the one-pass re-assignment of the SURVIVING
-    // corpus a rebuild's assignment stage pays (frozen centroids). The
-    // live cells view is verified against that filtered assignment
-    // distributed, anti-join both ways; a probe is timed before and
-    // after the delete to expose the broadcast-anti-join serving tax.
-    sys.env.get("SPARK_GRAFT_PROBE_ANN_DEL").map(_.toInt).foreach { pct =>
-      mults.foreach { mult =>
-        val dir = ensureData(spark, mult)
-        val e = graft.sources.Tables.embeddings(spark, dir)
-        val n = BaseVecs * mult
-        val baseDir = s"/tmp/graft_probe/anndel_${mult}_$pct"
-        e.write.mode("overwrite").parquet(s"$baseDir/embeddings.parquet")
-        graft.operators.IvfIndex.drop(spark, baseDir)
-        graft.operators.PqIndex.drop(spark, baseDir)
-        val t0 = System.nanoTime()
-        val (_, cellsT, cents, _) =
-          graft.operators.PqIndex.ensure(spark, baseDir)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val isGone = pmod(col("vec_id"), lit(100L)) < pct
-        def timeProbe(): Double = {
-          val q = e.filter(col("vec_id") < 10)
-          val t = System.nanoTime()
-          graft.operators.IvfIndex.probe(spark, baseDir, q, k = 5,
-              candidatePred = col("vec_id") >= 10)
-            .write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t) / 1e9
-        }
-        val tProbeBefore = timeProbe()
-        val t1 = System.nanoTime()
-        graft.operators.PqIndex.delete(spark, baseDir,
-          e.filter(isGone).select("vec_id"), batchId = 1L)
-        val tDelete = (System.nanoTime() - t1) / 1e9
-        val tProbeAfter = timeProbe()
-        val t2 = System.nanoTime()
-        val surv = e.filter(!isGone).select(col("vec_id"),
-            graft.operators.SimilarityIVF.cell(col("embedding"), cents)
-              .as("cell"))
-          .localCheckpoint(true)
-        surv.write.mode("overwrite").format("noop").save()
-        val tAssignSurvivors = (System.nanoTime() - t2) / 1e9
-        val live = graft.operators.IvfIndex.cellsFor(spark, baseDir)
-          .select("vec_id", "cell")
-        val diff =
-          live.join(surv, Seq("vec_id", "cell"), "left_anti").count() +
-          surv.join(live, Seq("vec_id", "cell"), "left_anti").count()
-        val nTomb = e.filter(isGone).count()
-        spark.catalog.clearCache(); graft.operators.CacheScope.releaseAll()
-        graft.operators.IvfIndex.drop(spark, baseDir)
-        graft.operators.PqIndex.drop(spark, baseDir)
-        println(s"""{"probe":"ann_del","mult":$mult,"n_vecs":$n,"del_pct":$pct,"n_tombstoned":$nTomb,"mismatches":$diff,"t_base_build":$tBuild,"t_delete":$tDelete,"t_assign_survivors":$tAssignSurvivors,"t_probe_before":$tProbeBefore,"t_probe_after":$tProbeAfter}""")
-      }
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_PROBE_NPROBE=1 (round-14, verdict item 6): the served
-    // probe-width dial's recall/cost trade. One persisted IVF+PQ build
-    // per probe corpus (training included, timed once), then the SAME
-    // 10-query probe set runs at nprobe in {1,2,4,8} against the stored
-    // index — both serving paths: the exact-within-cells IVF probe and
-    // the stored-code ADC probe. Each width records wall time and
-    // recall@5 vs the exact brute-force top-5 (computed once per
-    // corpus). Candidate volume is linear in nprobe, so the row shows
-    // what a deployment buys per probed cell; the dial is a session
-    // property — it never reindexes.
-    sys.env.get("SPARK_GRAFT_PROBE_NPROBE").foreach { _ =>
-      val savedNp = sys.props.get("graft.ivf.nprobe")
-      try {
-        mults.foreach { mult =>
-          val dir = ensureData(spark, mult)
-          val e = graft.sources.Tables.embeddings(spark, dir)
-          val n = BaseVecs * mult
-          val baseDir = s"/tmp/graft_probe/nprobe_$mult"
-          e.write.mode("overwrite").parquet(s"$baseDir/embeddings.parquet")
-          graft.operators.IvfIndex.drop(spark, baseDir)
-          graft.operators.PqIndex.drop(spark, baseDir)
-          val t0 = System.nanoTime()
-          graft.operators.PqIndex.ensure(spark, baseDir)
-          val tBuild = (System.nanoTime() - t0) / 1e9
-          val q = e.filter(col("vec_id") < 10)
-          val exact = graft.operators.Similarity
-            .topK(q, e.filter(col("vec_id") >= 10), k = 5)
-            .select("query_id", "neighbor_id").localCheckpoint(true)
-          val denom = exact.count().toDouble
-          for (np <- Seq(1, 2, 4, 8)) {
-            sys.props("graft.ivf.nprobe") = np.toString
-            def served(df: org.apache.spark.sql.DataFrame): (Double, Long) = {
-              val t = System.nanoTime()
-              val out = df.select("query_id", "neighbor_id")
-                .localCheckpoint(true)
-              val dt = (System.nanoTime() - t) / 1e9
-              val hits = exact
-                .join(out, Seq("query_id", "neighbor_id"), "left_semi")
-                .count()
-              (dt, hits)
-            }
-            val (tIvf, hitsIvf) = served(graft.operators.IvfIndex
-              .probe(spark, baseDir, q, k = 5,
-                candidatePred = col("vec_id") >= 10))
-            // the PQ side measures the FULL serving funnel (stored-code
-            // ADC shortlist -> exact rerank to 5) with the rerank width
-            // SCALED with the probe width (r = 50*nprobe): raw ADC top-5
-            // is quantization-noise-bound at this cell occupancy
-            // (measured flat ~0.02 at every width), and a FIXED r stays
-            // flat too (~0.10 at r=50) — the shortlist must widen with
-            // the candidate pool for the funnel to convert probed cells
-            // into recall. That coupling is the deployment rule the row
-            // documents.
-            val r = 50 * np
-            val (tFun, hitsFun) = served(graft.operators.PqIndex
-              .probeRerank(spark, baseDir, q, k = 5, r = r,
-                candidatePred = col("vec_id") >= 10))
-            println(s"""{"probe":"nprobe","mult":$mult,"n_vecs":$n,"nprobe":$np,"recall_ivf":${hitsIvf / denom},"t_probe_ivf":$tIvf,"rerank_r":$r,"recall_funnel":${hitsFun / denom},"t_probe_funnel":$tFun,"t_base_build":$tBuild}""")
-          }
-          spark.catalog.clearCache(); graft.operators.CacheScope.releaseAll()
-          graft.operators.IvfIndex.drop(spark, baseDir)
-          graft.operators.PqIndex.drop(spark, baseDir)
-        }
-      } finally {
-        savedNp match {
-          case Some(v) => sys.props("graft.ivf.nprobe") = v
-          case None => sys.props.remove("graft.ivf.nprobe")
-        }
-      }
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_PROBE_COMPACT=<nBatches> (round-13): what the
-    // compactAfter housekeeping buys. Build the inverted index over
-    // each probe corpus, land nBatches 1%-sized ledgered appends (each
-    // adds one file per bucket per table and one tombstoned edit every
-    // 4th batch, the realistic mixed diet), then measure BM25+phrase
-    // serving latency at 1 partition (fresh build), at nBatches+1
-    // partitions (the accreted state auto-compaction bounds), the fold
-    // cost itself, and the post-fold latency (min of 3 runs each).
-    sys.env.get("SPARK_GRAFT_PROBE_COMPACT").map(_.toInt).foreach { nb =>
-      import graft.operators.InvertedIndex
-      mults.foreach { mult =>
-        val dir = ensureData(spark, mult)
-        val docs = graft.sources.Tables.documents(spark, dir)
-        val n = BaseDocs * mult
-        val baseDir = s"/tmp/graft_probe/compact_${mult}_$nb"
-        docs.write.mode("overwrite").parquet(s"$baseDir/documents.parquet")
-        InvertedIndex.drop(spark, baseDir)
-        val t0 = System.nanoTime()
-        InvertedIndex.ensurePositions(spark, baseDir)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        def lat(): Double = (1 to 3).map { _ =>
-          val t = System.nanoTime()
-          InvertedIndex.searchBm25(spark, baseDir,
-              Seq("join", "hash", "scan"), k = 10)
-            .write.mode("overwrite").format("noop").save()
-          InvertedIndex.searchPhrase(spark, baseDir,
-              Seq("hash", "join"), k = 10)
-            .write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t) / 1e9
-        }.min
-        val latFresh = lat()
-        val per = math.max(1L, n / 100)
-        val t1 = System.nanoTime()
-        (1 to nb).foreach { b =>
-          val lo = n + (b - 1) * per
-          val batch = spark.range(lo, lo + per)
-            .selectExpr("id AS doc_id",
-              "concat('join hash scan doc ', CAST(id AS STRING)) AS text")
-          InvertedIndex.appendPositions(spark, baseDir, batch, b.toLong)
-          if (b % 4 == 0)
-            InvertedIndex.edit(spark, baseDir,
-              spark.range(lo - per, lo - per + per / 10)
-                .selectExpr("id AS doc_id",
-                  "concat('join hash scan doc ', CAST(id AS STRING)) AS text"),
-              batch, b.toLong)
-          else
-            InvertedIndex.append(spark, baseDir, batch, b.toLong)
-        }
-        val tAppends = (System.nanoTime() - t1) / 1e9
-        val latAccreted = lat()
-        // compact requires freshness: land the corpus the ledger covers
-        // (base ∪ appended, minus the tombstoned ids — exactly the live
-        // postings' id set) into the dir first
-        val live = InvertedIndex.postingsFor(spark, baseDir)
-        val covered = docs.select("doc_id", "text")
-          .unionByName(spark.range(n, n + nb * per)
-            .selectExpr("id AS doc_id",
-              "concat('join hash scan doc ', CAST(id AS STRING)) AS text"))
-          .join(live.select("doc_id").distinct(), Seq("doc_id"), "left_semi")
-          .localCheckpoint(true)
-        covered.write.mode("overwrite").parquet(s"$baseDir/documents.parquet")
-        val t3 = System.nanoTime()
-        InvertedIndex.compact(spark, baseDir)
-        val tCompact = (System.nanoTime() - t3) / 1e9
-        val latFolded = lat()
-        spark.catalog.clearCache(); graft.operators.CacheScope.releaseAll()
-        InvertedIndex.drop(spark, baseDir)
-        println(s"""{"probe":"compact","mult":$mult,"n_docs":$n,"n_batches":$nb,"t_base_build":$tBuild,"t_appends_total":$tAppends,"t_compact":$tCompact,"lat_fresh":$latFresh,"lat_accreted":$latAccreted,"lat_folded":$latFolded}""")
-      }
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_PROBE_COMP_EDIT=<pct> (round-13): the component-map
-    // edit path's economics. Full base build (map + banded store); an
-    // edit batch removes pct/2% of docs and rewrites pct/2% (text
-    // doubled) through ComponentIndex.edit — tombstoned store +
-    // affected-component-only recompute — timed against the full live
-    // re-clustering over the edited corpus (what rebuild pays, the
-    // component_merge probe device); the stored map is verified against
-    // that rebuild DISTRIBUTED (anti-join both ways).
-    sys.env.get("SPARK_GRAFT_PROBE_COMP_EDIT").map(_.toInt).foreach { pct =>
-      import graft.operators.ComponentIndex
-      mults.foreach { mult =>
-        val dir = ensureData(spark, mult)
-        val docs = graft.sources.Tables.documents(spark, dir)
-        val n = BaseDocs * mult
-        val slot = pmod(col("doc_id"), lit(100L))
-        val isRemoved = slot < pct / 2
-        val isRewritten = slot >= pct / 2 && slot < pct
-        val baseDir = s"/tmp/graft_probe/comp_edit_${mult}_$pct"
-        docs.write.mode("overwrite").parquet(s"$baseDir/documents.parquet")
-        ComponentIndex.drop(spark, baseDir)
-        val t0 = System.nanoTime()
-        ComponentIndex.ensure(spark, baseDir)
-        ComponentIndex.ensureBanded(spark, baseDir)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val added = docs.filter(isRewritten)
-          .withColumn("text", concat(col("text"), lit(" "), col("text")))
-        val removed = docs.filter(isRemoved || isRewritten)
-        val t1 = System.nanoTime()
-        ComponentIndex.edit(spark, baseDir, removed, added, 1L)
-        val tEdit = (System.nanoTime() - t1) / 1e9
-        val edited = docs.filter(!isRemoved).withColumn("text",
-          when(isRewritten, concat(col("text"), lit(" "), col("text")))
-            .otherwise(col("text"))).localCheckpoint(true)
-        val t2 = System.nanoTime()
-        val full = graft.operators.CacheScope.withOperatorCaches {
-          val m = ComponentIndex.bandedComponentMap(edited)
-            .localCheckpoint(true)
-          m.write.mode("overwrite").format("noop").save()
-          m
-        }
-        val tRecluster = (System.nanoTime() - t2) / 1e9
-        val stored = spark.table(ComponentIndex.ensure(spark, baseDir))
-        val diff =
-          stored.join(full, Seq("doc_id", "component_id"), "left_anti").count() +
-          full.join(stored, Seq("doc_id", "component_id"), "left_anti").count()
-        val rows = stored.count()
-        val nTomb = removed.select("doc_id").distinct().count()
-        spark.catalog.clearCache(); graft.operators.CacheScope.releaseAll()
-        ComponentIndex.drop(spark, baseDir)
-        println(s"""{"probe":"component_edit","mult":$mult,"n_docs":$n,"edit_pct":$pct,"n_tombstoned":$nTomb,"map_rows":$rows,"mismatches":$diff,"t_base_build":$tBuild,"t_edit":$tEdit,"t_recluster":$tRecluster}""")
-      }
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_PROBE_EDIT=<pct> (round-13): the tombstone edit
-    // path's economics. Each probe corpus gets a full base build of the
-    // inverted + positional index; an edit batch then removes pct/2% of
-    // docs and rewrites pct/2% (text doubled) through
-    // InvertedIndex.edit — tombstone partition + net stats row + new
-    // postings partition, no resident partition read or rewritten —
-    // timed against the derivation a wholesale rebuild pays (postings +
-    // positions + stats over the edited corpus, noop-written: the
-    // component-merge probe device, measuring computation not disk).
-    // The LIVE postings (tombstone anti-join applied) are verified
-    // against a fresh derivation over the edited corpus DISTRIBUTED
-    // (anti-join both ways); a post-edit BM25 lookup and the compaction
-    // fold are timed as well.
-    sys.env.get("SPARK_GRAFT_PROBE_EDIT").map(_.toInt).foreach { pct =>
-      import graft.operators.InvertedIndex
-      mults.foreach { mult =>
-        val dir = ensureData(spark, mult)
-        val docs = graft.sources.Tables.documents(spark, dir)
-        val n = BaseDocs * mult
-        val slot = pmod(col("doc_id"), lit(100L))
-        val isRemoved = slot < pct / 2
-        val isRewritten = slot >= pct / 2 && slot < pct
-        val baseDir = s"/tmp/graft_probe/edit_${mult}_$pct"
-        docs.write.mode("overwrite").parquet(s"$baseDir/documents.parquet")
-        InvertedIndex.drop(spark, baseDir)
-        val t0 = System.nanoTime()
-        InvertedIndex.ensure(spark, baseDir)
-        InvertedIndex.ensurePositions(spark, baseDir)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val added = docs.filter(isRewritten)
-          .withColumn("text", concat(col("text"), lit(" "), col("text")))
-        val removed = docs.filter(isRemoved || isRewritten)
-        val t1 = System.nanoTime()
-        InvertedIndex.appendPositions(spark, baseDir, added, 1L)
-        InvertedIndex.edit(spark, baseDir, removed, added, 1L)
-        val tEdit = (System.nanoTime() - t1) / 1e9
-        val edited = docs.filter(!isRemoved).withColumn("text",
-          when(isRewritten, concat(col("text"), lit(" "), col("text")))
-            .otherwise(col("text"))).localCheckpoint(true)
-        val t2 = System.nanoTime()
-        val freshP = InvertedIndex.postings(edited).localCheckpoint(true)
-        freshP.write.mode("overwrite").format("noop").save()
-        InvertedIndex.positions(edited)
-          .write.mode("overwrite").format("noop").save()
-        InvertedIndex.corpusStats(edited)
-          .write.mode("overwrite").format("noop").save()
-        val tRebuild = (System.nanoTime() - t2) / 1e9
-        val live = InvertedIndex.postingsFor(spark, baseDir)
-          .select("term", "doc_id", "tf")
-        val fp = freshP.select("term", "doc_id", "tf")
-        val diff =
-          live.join(fp, Seq("term", "doc_id", "tf"), "left_anti").count() +
-          fp.join(live, Seq("term", "doc_id", "tf"), "left_anti").count()
-        val t3 = System.nanoTime()
-        InvertedIndex.searchBm25(spark, baseDir,
-          Seq("join", "hash", "scan"), k = 10).collect()
-        val tSearch = (System.nanoTime() - t3) / 1e9
-        // land the edited corpus (the caller's snapshot-promotion step)
-        // so compact's freshness precondition holds
-        edited.write.mode("overwrite").parquet(s"$baseDir/documents.parquet")
-        val t4 = System.nanoTime()
-        InvertedIndex.compact(spark, baseDir)
-        val tCompact = (System.nanoTime() - t4) / 1e9
-        val nTomb = removed.select("doc_id").distinct().count()
-        spark.catalog.clearCache(); graft.operators.CacheScope.releaseAll()
-        InvertedIndex.drop(spark, baseDir)
-        println(s"""{"probe":"index_edit","mult":$mult,"n_docs":$n,"edit_pct":$pct,"n_tombstoned":$nTomb,"mismatches":$diff,"t_base_build":$tBuild,"t_edit":$tEdit,"t_rebuild_derive":$tRebuild,"t_search_post_edit":$tSearch,"t_compact":$tCompact}""")
-      }
-      spark.stop()
-      return
-    }
-    // Hard-negative mining recall probe (round-11, verdict item 5): the
-    // contrastive-mining scale path gets the same measured-guardrail
-    // treatment as dedup — at each probe scale, recall@5 of the
-    // LSH-bucketed mining (q_sim_hard_negatives_ann's plan) against the
-    // exact brute-force mining, plus the label-mismatched candidate
-    // volume the buckets admit vs the full-scan pair count they avoid.
-    // Isotropic vectors are the worst case for LSH (no cluster structure
-    // to exploit), so these recalls are conservative floors.
-    sys.env.get("SPARK_GRAFT_PROBE_HARDNEG").foreach { _ =>
-      import graft.operators.{Similarity, SimilarityLSH}
-      mults.foreach { mult =>
-        val dir = ensureData(spark, mult)
-        val e = graft.sources.Tables.embeddings(spark, dir)
-        val anchors = e.filter(col("vec_id") < 10)
-        val cands = e.filter(col("vec_id") >= 10)
-        val mismatch = col("c_label") =!= col("q_label")
-        val t0 = System.nanoTime()
-        val brute = Similarity.topK(anchors, cands, k = 5,
-            carryQ = Seq("label"), carryC = Seq("label"), pairFilter = mismatch)
-          .select("query_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val tBrute = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val ann = SimilarityLSH.annTopK(anchors, cands, k = 5,
-            carryQ = Seq("label"), carryC = Seq("label"), pairFilter = mismatch)
-          .select("query_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val tAnn = (System.nanoTime() - t1) / 1e9
-        val recall = (ann intersect brute).size.toDouble / brute.size
-        // bucket-admitted label-mismatched candidate pairs (distinct) vs
-        // the full-scan pair count the buckets avoid
-        val qb = anchors.select(col("vec_id").as("query_id"),
-          col("label").as("q_label"),
-          explode(SimilarityLSH.tableBuckets(col("embedding"))).as("tb"))
-        val cb = cands.select(col("vec_id").as("neighbor_id"),
-          col("label").as("c_label"),
-          explode(SimilarityLSH.tableBuckets(col("embedding"))).as("tb"))
-        val nCand = cb.join(qb, Seq("tb")).filter(mismatch)
-          .select("query_id", "neighbor_id").distinct().count()
-        val nFull = anchors.count() * cands.count()
-        spark.catalog.clearCache(); graft.operators.CacheScope.releaseAll()
-        println(s"""{"probe":"hardneg_recall","mult":$mult,"n_vecs":${BaseVecs * mult},"recall_at_5":$recall,"ann_pairs":${ann.size},"brute_pairs":${brute.size},"candidate_pairs":$nCand,"full_scan_pairs":$nFull,"t_brute":$tBrute,"t_ann":$tAnn}""")
-      }
-      spark.stop()
-      return
-    }
-    // Inverted-index search probe (round-11): served lookup vs the live
-    // corpus-scan replay at each scale, plus the index's relative size.
-    // The lookup's cost grows with the probed terms' postings (linear in
-    // corpus for common terms) but never pays the full-vocabulary explode
-    // + aggregate the live form does — the gap is the index economics.
-    // SPARK_GRAFT_PROBE_EXPAND (round-15, r14 verdict item 7): the
-    // fuzzy/prefix EXPANSION cost A/B — the round-14 plan (per-term df
-    // aggregate over the LIVE POSTINGS store, input corpus-shaped) vs
-    // the round-15 plan (the persisted `_vocab` companion, input
-    // vocabulary-shaped) — plus the served fuzzy query end-to-end and
-    // the SymSpell batch's amortization vs the per-query loop. The
-    // postings:vocab row ratio IS the input-size argument; the timing
-    // ratio is its measured consequence at each multiple.
-    // Round 16 adds the `_deletes` A/B: the batched-fuzzy CANDIDATE
-    // derivation re-exploding the vocabulary's variants inline per call
-    // (the round-15 plan) vs reading the persisted `_deletes` store
-    // (the round-16 plan) — the store converts a per-call
-    // vocabulary-sized explode+join into a pruned bucketed read.
-    sys.env.get("SPARK_GRAFT_PROBE_EXPAND").foreach { _ =>
-      import graft.operators.InvertedIndex
-      val typos = Seq("scann", "joinn", "hashh", "windoww",
-        "grou", "filtr", "tabl", "quer")
-      mults.foreach { mult =>
-        val dir = ensureData(spark, mult)
-        InvertedIndex.drop(spark, dir)
-        val t = InvertedIndex.ensure(spark, dir)
-        val postRows = spark.table(t).count()
-        val vocabRows = InvertedIndex.vocabFor(spark, dir).count()
-        def time(f: => Unit): Double = (1 to runs).map { _ =>
-          val s0 = System.nanoTime(); f; (System.nanoTime() - s0) / 1e9
-        }.min
-        val q = "scann"
-        // round-14 plan: expansion df-aggregates the live postings store
-        val tExpandPostings = time {
-          InvertedIndex.postingsFor(spark, dir)
-            .groupBy("term").agg(count(lit(1)).as("df_"))
-            .filter(abs(length(col("term")) - lit(q.length)) <= 1 &&
-              levenshtein(col("term"), lit(q)) <= 1)
-            .orderBy(col("df_").desc, col("term").asc)
-            .limit(16).collect()
-        }
-        // round-15 plan: expansion reads the persisted vocabulary
-        val tExpandVocab = time {
-          InvertedIndex.vocabFor(spark, dir)
-            .filter(abs(length(col("term")) - lit(q.length)) <= 1 &&
-              levenshtein(col("term"), lit(q)) <= 1)
-            .orderBy(col("df_").desc, col("term").asc)
-            .limit(16).collect()
-        }
-        val tServeFuzzy = time {
-          InvertedIndex.searchFuzzy(spark, dir, q, k = 10)
-            .write.mode("overwrite").format("noop").save()
-        }
-        // batch amortization: 8 typo queries, loop vs SymSpell join
-        val tLoop8 = time {
-          typos.foreach { qt =>
-            InvertedIndex.searchFuzzy(spark, dir, qt, k = 10)
-              .write.mode("overwrite").format("noop").save()
-          }
-        }
-        val tBatch8 = time {
-          InvertedIndex.searchFuzzyBatch(spark, dir, typos, k = 10)
-            .write.mode("overwrite").format("noop").save()
-        }
-        // candidate-derivation A/B: inline vocabulary explode (r15) vs
-        // the persisted _deletes store (r16) — identical verified output
-        val deleteRows = InvertedIndex.deletesFor(spark, dir).count()
-        import spark.implicits._
-        val qsN = typos.toDF("qterm")
-          .select(col("qterm"),
-            explode(InvertedIndex.deletionVariants(col("qterm"), 1))
-              .as("variant"))
-          .distinct()
-        val lens = typos.map(_.length)
-        val tCandInline = time {
-          InvertedIndex.vocabFor(spark, dir)
-            .select(col("term"), col("df_"),
-              explode(InvertedIndex.deletionVariants(col("term"), 1))
-                .as("variant"))
-            .filter(length(col("term"))
-              .between(lens.min - 1, lens.max + 1))
-            .join(broadcast(qsN), Seq("variant"))
-            .select("qterm", "term", "df_").distinct()
-            .filter(levenshtein(col("term"), col("qterm")) <= 1)
-            .collect()
-        }
-        val tCandStore = time {
-          InvertedIndex.fuzzyCandidates(spark, dir, typos, 1).collect()
-        }
-        InvertedIndex.drop(spark, dir)
-        spark.catalog.clearCache(); graft.operators.CacheScope.releaseAll()
-        println(s"""{"probe":"fuzzy_expand","mult":$mult,"n_docs":${BaseDocs * mult},"post_rows":$postRows,"vocab_rows":$vocabRows,"delete_rows":$deleteRows,"t_expand_postings":$tExpandPostings,"t_expand_vocab":$tExpandVocab,"t_cand_inline":$tCandInline,"t_cand_store":$tCandStore,"t_serve_fuzzy":$tServeFuzzy,"t_loop8":$tLoop8,"t_batch8":$tBatch8}""")
-      }
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_PROBE_DELETES (round 16): the `_deletes` store A/B on
-    // a VOCABULARY-SCALING corpus. The shared probe corpus holds its
-    // 31-term vocabulary constant by design (that isolates the
-    // postings-vs-vocab input-size argument), which makes it blind to
-    // the axis the _deletes store exists for: the per-call cost of the
-    // batched-fuzzy CANDIDATE derivation as the vocabulary grows. Here
-    // the vocabulary is ~2000 x mult unique terms (6-token docs drawn
-    // uniformly), and the A/B compares (a) the round-15 inline plan —
-    // explode every vocab term's variants per call, full-vocab join —
-    // against (b) the round-16 store read — a literal-IN bucket-pruned
-    // probe of the persisted (variant, term, df) table, whose cost is
-    // O(query), independent of vocabulary size.
-    sys.env.get("SPARK_GRAFT_PROBE_DELETES").foreach { _ =>
-      // optional production-sized bucket count for THIS probe's builds
-      // (must land in sys.props before the InvertedIndex object loads —
-      // Buckets is fixed at first touch; a fresh probe JVM guarantees
-      // that ordering)
-      sys.env.get("SPARK_GRAFT_PROBE_BUCKETS")
-        .foreach(b => sys.props("graft.index.invBuckets") = b)
-      import graft.operators.InvertedIndex
-      import spark.implicits._
-      mults.foreach { mult =>
-        val v = 2000 * mult
-        val dir = s"/tmp/graft_scale_deletes/x$mult"
-        if (!new java.io.File(s"$dir/documents.parquet/_SUCCESS").exists()) {
-          spark.range(BaseDocs * mult).map { id =>
-            val t = (1 to 6)
-              .map(j => s"w${mix(id, 7000 + j) % v}").mkString(" ")
-            Doc(id, t, langFor(id), s"src${id % 5}", t.length)
-          }.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-        }
-        InvertedIndex.drop(spark, dir)
-        InvertedIndex.ensure(spark, dir)
-        val vocabRows = InvertedIndex.vocabFor(spark, dir).count()
-        val deleteRows = InvertedIndex.deletesFor(spark, dir).count()
-        def time(f: => Unit): Double = (1 to runs).map { _ =>
-          val s0 = System.nanoTime(); f; (System.nanoTime() - s0) / 1e9
-        }.min
-        // 8 d=1 typos of REAL vocabulary terms (trailing insert)
-        val typos = (1 to 8).map(j => s"w${mix(j.toLong, 77) % v}x")
-        val qsN = typos.toDF("qterm")
-          .select(col("qterm"),
-            explode(InvertedIndex.deletionVariants(col("qterm"), 1))
-              .as("variant"))
-          .distinct()
-        val lens = typos.map(_.length)
-        val tCandInline = time {
-          InvertedIndex.vocabFor(spark, dir)
-            .select(col("term"), col("df_"),
-              explode(InvertedIndex.deletionVariants(col("term"), 1))
-                .as("variant"))
-            .filter(length(col("term"))
-              .between(lens.min - 1, lens.max + 1))
-            .join(broadcast(qsN), Seq("variant"))
-            .select("qterm", "term", "df_").distinct()
-            .filter(levenshtein(col("term"), col("qterm")) <= 1)
-            .collect()
-        }
-        val tCandStore = time {
-          InvertedIndex.fuzzyCandidates(spark, dir, typos, 1).collect()
-        }
-        val tBatch8 = time {
-          InvertedIndex.searchFuzzyBatch(spark, dir, typos, k = 10)
-            .write.mode("overwrite").format("noop").save()
-        }
-        InvertedIndex.drop(spark, dir)
-        spark.catalog.clearCache(); graft.operators.CacheScope.releaseAll()
-        println(s"""{"probe":"fuzzy_deletes","mult":$mult,"n_docs":${BaseDocs * mult},"vocab_rows":$vocabRows,"delete_rows":$deleteRows,"t_cand_inline":$tCandInline,"t_cand_store":$tCandStore,"t_batch8":$tBatch8}""")
-      }
-      spark.stop()
-      return
-    }
-    sys.env.get("SPARK_GRAFT_PROBE_SEARCH").foreach { _ =>
-      import graft.operators.InvertedIndex
-      val terms = Seq("join", "hash", "scan", "window")
-      mults.foreach { mult =>
-        val dir = ensureData(spark, mult)
-        InvertedIndex.drop(spark, dir)
-        val t0 = System.nanoTime()
-        val t = InvertedIndex.ensure(spark, dir)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val postRows = spark.table(t).count()
-        def time(f: => Unit): Double = (1 to runs).map { _ =>
-          val s0 = System.nanoTime(); f; (System.nanoTime() - s0) / 1e9
-        }.min
-        val tServe = time {
-          InvertedIndex.search(spark, dir, terms, k = 10)
-            .write.mode("overwrite").format("noop").save()
-        }
-        val docs = graft.sources.Tables.documents(spark, dir)
-        val tLive = time {
-          // the index-free form: full explode + per-(term, doc) aggregate
-          // feeding the SAME shared rank tail as search — the A/B times
-          // the identical computation on both sides by construction
-          InvertedIndex.rankedFromPostings(
-              InvertedIndex.postings(docs).filter(col("term").isin(terms: _*)),
-              docs.agg(count(lit(1)).as("n")), k = 10)
-            .write.mode("overwrite").format("noop").save()
-        }
-        // BM25 A/B on the SAME build: served = pruned postings (dl rides
-        // in the rows) + the 1-row stats table; live = full explode +
-        // corpus stats aggregate, same shared scoring tail
-        val tServeBm25 = time {
-          InvertedIndex.searchBm25(spark, dir, terms, k = 10)
-            .write.mode("overwrite").format("noop").save()
-        }
-        val tLiveBm25 = time {
-          InvertedIndex.bm25FromPostings(
-              InvertedIndex.postings(docs).filter(col("term").isin(terms: _*)),
-              InvertedIndex.corpusStats(docs), k = 10)
-            .write.mode("overwrite").format("noop").save()
-        }
-        // phrase A/B: positional build on top of the same dir, then the
-        // pruned-bucket serve vs the full zip-positions replay
-        val p0 = System.nanoTime()
-        InvertedIndex.ensurePositions(spark, dir)
-        val tBuildPos = (System.nanoTime() - p0) / 1e9
-        val phrase = Seq("hash", "join")
-        val tServePhrase = time {
-          InvertedIndex.searchPhrase(spark, dir, phrase, k = 10)
-            .write.mode("overwrite").format("noop").save()
-        }
-        val tLivePhrase = time {
-          InvertedIndex.phraseFromPositions(
-              InvertedIndex.positions(docs).filter(col("term").isin(phrase: _*)),
-              phrase, k = 10)
-            .write.mode("overwrite").format("noop").save()
-        }
-        InvertedIndex.drop(spark, dir)
-        spark.catalog.clearCache(); graft.operators.CacheScope.releaseAll()
-        println(s"""{"probe":"inv_search","mult":$mult,"n_docs":${BaseDocs * mult},"post_rows":$postRows,"t_build":$tBuild,"t_serve":$tServe,"t_live":$tLive,"t_serve_bm25":$tServeBm25,"t_live_bm25":$tLiveBm25,"t_build_pos":$tBuildPos,"t_serve_phrase":$tServePhrase,"t_live_phrase":$tLivePhrase}""")
-      }
-      spark.stop()
-      return
-    }
-    // Bloom-decontamination probe (round-11): the exact rule's cost is the
-    // gram explode of EVERY training doc; the bloom rule explodes only
-    // flagged docs. The shared generator's 31-word vocabulary makes random
-    // gram collisions dominate (~60% of docs "contaminated" — a density no
-    // real corpus has), so this probe builds its own corpus at web-scale
-    // gram sparsity (~200k-word vocabulary: chance overlap ~0) with
-    // PLANTED contamination — 2% of training docs embed a 12-token run
-    // copied verbatim from an eval doc — the percent-level operating point
-    // production decontamination actually runs at. Rows record the
-    // structural reduction (gram rows exploded) and construct+exec wall
-    // clock of both declared plans.
-    sys.env.get("SPARK_GRAFT_PROBE_DECON").foreach { _ =>
-      import graft.functions.expressions.GramBloom
-      mults.foreach { mult =>
-        val dir = s"/tmp/graft_scale/decon_x$mult"
-        if (!new java.io.File(s"$dir/documents.parquet/_SUCCESS").exists()) {
-          import spark.implicits._
-          spark.range(BaseDocs * mult).map { id =>
-            def tok(src: Long, i: Int) = "t" + mix(src, 1000 + i) % 200000
-            val len = 40 + (mix(id, 0) % 41).toInt
-            val fresh = Array.tabulate(len)(i => tok(id, i))
-            val t =
-              if (id >= 10 && id % 50 == 7) {
-                // 12 consecutive tokens of eval doc (id%10), offset 5 —
-                // inside every eval doc (len >= 40)
-                val run = Array.tabulate(12)(j => tok(id % 10, 5 + j))
-                (fresh.take(len / 2) ++ run ++ fresh.drop(len / 2)).mkString(" ")
-              } else fresh.mkString(" ")
-            Doc(id, t, langFor(id), s"src${id % 5}", t.length)
-          }.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-        }
-        val docs = graft.sources.Tables.documents(spark, dir)
-        // the query's exact prefilter: hash-currency bloom at per-key
-        // fpp=1e-4 (doc-level ~1%), probed codegen-side by containsAny
-        import graft.functions.expressions.SpanHash
-        val train = docs.filter(col("doc_id") >= 10)
-          .select(col("doc_id"), split(col("text"), " ").as("toks"))
-          .select(col("doc_id"),
-            SpanHash.span_hashes(col("toks"), 3).as("hs"))
-        val gramRowsTotal = train
-          .agg(sum(size(col("hs")))).head().getLong(0)
-        val evalHashes = docs.filter(col("doc_id") < 10)
-          .select(split(col("text"), " ").as("toks"))
-          .select(explode(array_distinct(
-            SpanHash.span_hashes(col("toks"), 3))).as("h")).distinct()
-        val (bits, m, k) = GramBloom.buildLong(evalHashes, "h", fpp = 1e-4)
-        val flagged = train.filter(
-          GramBloom.bloom_contains_any(bits, m, k)(col("hs")))
-        val Array(nFlagged, gramRowsFlagged) = flagged
-          .agg(count(lit(1)), sum(size(col("hs")))).head()
-          .toSeq.map(_.asInstanceOf[Long]).toArray
-        val nTrain = train.count()
-        def time(name: String): Double = (1 to runs).map { _ =>
-          spark.catalog.clearCache(); graft.operators.CacheScope.releaseAll()
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, dir)
-            .write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }.min
-        val tExact = time("q_decontaminate")
-        val tBloom = time("q_decontaminate_bloom")
-        println(s"""{"probe":"decontam_bloom","mult":$mult,"n_docs":${BaseDocs * mult},"n_train":$nTrain,"n_flagged":$nFlagged,"gram_rows_total":$gramRowsTotal,"gram_rows_flagged":$gramRowsFlagged,"t_exact":$tExact,"t_bloom":$tBloom}""")
-      }
-      spark.stop()
-      return
-    }
     // Guardrail-probe knob: run q_dedup_ngram_jaccard with a non-default
     // posting cap. With the default knobs the operator's candidate-volume
     // budget picks the regime itself (sf fixtures: pure exact; the dense
@@ -1235,142 +354,5 @@ object ScaleProbe {
       println(s"""{"probe":"scale","mult":$mult,"n_docs":${BaseDocs * mult},"n_vecs":${BaseVecs * mult},"queries":$qjson,"construct":$cjson,"cc_rounds":$rjson,"pairs_minhash":$pairsMinhash,"pairs_minhash_global":$pairsGlobal,"pairs_minhash_r4":$pairsR4,"pairs_ngram":$pairsNgram}""")
     }
     spark.stop()
-  }
-
-  /** The boilerplate-skew probe (round-4 verdict item 7): a corpus where
-    * ~30% of documents share one 10-token boilerplate prefix makes the
-    * span-frequency join's probe side massively hot on 3 span hashes —
-    * the AQE-skew case SCALE.md predicted for q_dedup_substring. The skew
-    * thresholds are scaled down to the probe's data size (the
-    * AqeSkewJoinSpec discipline: at 100 TB the 256 MB defaults play the
-    * identical role untouched) and the probe asserts from the FINAL
-    * adaptive plan whether the skew split actually fired. */
-  private def boilerplateProbe(spark: SparkSession, mults: Seq[Int], runs: Int,
-                               mode: Int): Unit = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    // thresholds scaled to COMPRESSED shuffle sizes: AQE's skew decision
-    // reads MapOutputStatistics, and the hot partition's near-identical
-    // rows (one repeated hash) compress far better than the high-entropy
-    // median — measured: a partition carrying 7% of all span rows stayed
-    // under the 256 KB threshold at x30
-    // a skewed reduce partition can only be split at MAP-OUTPUT
-    // granularity: the probe's whole corpus is one small parquet file
-    // (1-2 mappers), which leaves AQE nothing to split however hot the
-    // key — shrink maxPartitionBytes so the scan fans out to dozens of
-    // mappers, the role thousands of input splits play at 100 TB
-    val confs = Map(
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16384",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8192",
-      "spark.sql.files.maxPartitionBytes" -> "131072",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      mults.foreach { mult =>
-        val dir = ensureBoilerplateData(spark, mult, mode)
-        // "wide" is the naive-plan twin the declared operators refuse to
-        // be: the full document text carried THROUGH the span-frequency
-        // join, so each hot-span row is doc-length wide and the hot
-        // reduce partition dominates at the BYTE level AQE's skew
-        // detector reads. The declared plans ship only (doc_id, i, h)
-        // rows through that join — the design choice this contrast
-        // measures.
-        val w = graft.operators.Dedup.DefaultSpanWidth
-        def wideOcc(s: SparkSession, d: String) =
-          graft.sources.Tables.documents(s, d)
-            .select(col("doc_id"), col("text"), split(col("text"), " ").as("toks"))
-            .select(col("doc_id"), col("text"),
-              explode(when(size(col("toks")) >= w,
-                transform(sequence(lit(0), size(col("toks")) - w),
-                  i => graft.functions.PortableHash.hash60(
-                    array_join(slice(col("toks"), i + 1, lit(w)), " "))))
-                .otherwise(array().cast("array<long>"))).as("h"))
-        def spanFreq(s: SparkSession, d: String) =
-          graft.operators.Dedup.spanRows(
-              graft.sources.Tables.documents(s, d), "doc_id", "text", w)
-            .select(graft.functions.PortableHash.hash60(col("span")).as("h"))
-            .groupBy("h").agg(count(lit(1)).as("nd"))
-        val wide: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-          (s, d) =>
-            wideOcc(s, d).join(spanFreq(s, d).filter(col("nd") >= 2), "h")
-              .groupBy("doc_id")
-              .agg(count(lit(1)).as("n_dup_occ"), max(length(col("text"))).as("len"))
-        // the A/B control: the SAME wide join but with the frequency
-        // relation MATERIALIZED first, so both join children are bare
-        // shuffle reads — the only shape OptimizeSkewedJoin's pattern
-        // (Sort + optional AQEShuffleRead over ShuffleQueryStage, both
-        // sides) accepts. The inline-aggregate form above is structurally
-        // ineligible however skewed the bytes get.
-        val wideMat: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-          (s, d) => {
-            val fp = s"$d/span_freq.parquet"
-            if (!new java.io.File(s"$fp/_SUCCESS").exists())
-              spanFreq(s, d).write.mode("overwrite").parquet(fp)
-            wideOcc(s, d)
-              .join(s.read.parquet(fp).filter(col("nd") >= 2), "h")
-              .groupBy("doc_id")
-              .agg(count(lit(1)).as("n_dup_occ"), max(length(col("text"))).as("len"))
-          }
-        val probes: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-          Seq("q_dedup_substring" -> SparkEntry.queries("q_dedup_substring"),
-              "q_dedup_substring_removal" -> SparkEntry.queries("q_dedup_substring_removal"),
-              "wide_span_join" -> wide,
-              "wide_span_join_mat" -> wideMat)
-        probes.foreach { case (name, fn) =>
-          var skew = false
-          var sawAqe = false
-          var skewSplits = 0L
-          var spillBytes = 0L
-          val times = (1 to runs).map { _ =>
-            val df = fn(spark, dir)
-            val qe = df.queryExecution
-            val t0 = System.nanoTime()
-            // execute the plan without materializing corpus-sized output
-            // on the driver (noop write would re-plan and hide the QE)
-            qe.toRdd.foreach(_ => ())
-            val dt = (System.nanoTime() - t0) / 1e9
-            val rendered = qe.executedPlan.collect {
-              case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-            }.mkString("\n")
-            skew ||= rendered.contains("skew=true")
-            sawAqe ||= rendered.contains("AQEShuffleRead")
-            // the round-11 invariant pin: how many skewed partitions AQE
-            // actually SPLIT, and whether anything spilled — walked from
-            // the executed plan's metrics (recursing through stage
-            // boundaries like the Family metrics mode)
-            def captureSkewAndSpill(): Unit = {
-              import org.apache.spark.sql.execution.SparkPlan
-              import org.apache.spark.sql.execution.adaptive.QueryStageExec
-              def walk(p: SparkPlan): Unit = p.foreach {
-                case q: QueryStageExec => walk(q.plan)
-                case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-                case node =>
-                  node.metrics.foreach { case (key, m) =>
-                    val k = key.toLowerCase
-                    // AQEShuffleRead: numSkewedSplits renders as "number
-                    // of skewed partition splits"
-                    if (k.contains("skew") && k.contains("split") && m.value > 0)
-                      skewSplits += m.value
-                    if (k.contains("spill") && m.value > 0)
-                      spillBytes += m.value
-                  }
-              }
-              walk(qe.executedPlan)
-            }
-            captureSkewAndSpill()
-            if (sys.env.contains("SPARK_GRAFT_PROBE_BP_DEBUG"))
-              System.err.println(s"[bp-debug] $name final plan:\n$rendered")
-            spark.catalog.clearCache(); graft.operators.CacheScope.releaseAll()
-            dt
-          }
-          println(s"""{"probe":"boilerplate","mode":$mode,"mult":$mult,"query":"$name","n_docs":${BaseDocs * mult},"t_min":${times.min},"skew_join_fired":$skew,"saw_aqe_read":$sawAqe,"skew_splits":$skewSplits,"spill_bytes":$spillBytes}""")
-        }
-      }
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 }

@@ -33,11 +33,15 @@ object TextQueries {
     * relation through the deterministic portable-hash sampler and report
     * (key, n_total, n_kept, rate). Both mixing strategies and both
     * DuckDB oracles mirror this one sampler — the 1e6 fixed-point rate
-    * resolution and the floor/cast live here exactly once. */
+    * resolution and the floor/cast live here exactly once. The rate
+    * relation has one row per key and carries no broadcast hint: Catalyst
+    * broadcasts it when its size estimate is small, and otherwise AQE
+    * converts the join once the #keys-row stage has run
+    * (HintIsolationSpec pins the hint-free plan). */
   private def hashMixKept(docs: DataFrame, key: String, rates: DataFrame): DataFrame = {
     val h = pmod(graft.functions.PortableHash.hash60(
       col("doc_id").cast("string")), lit(1000000L))
-    docs.join(broadcast(rates), key)
+    docs.join(rates, key)
       .groupBy(key)
       .agg(max(col("n_total")).as("n_total"),
            sum(when(h < floor(col("rate") * 1000000.0).cast("long"), 1L)
@@ -301,16 +305,15 @@ object TextQueries {
     // its dominant crawls): per-source keep rate = min(1, uniform share /
     // actual share), applied as a deterministic portable-hash sample so
     // the mixture is reproducible across engines and runs. Two passes:
-    // one #sources-row aggregate (broadcast by CONTRACT — source is a
-    // bounded metadata column, the embeddingNearDups block rule), then
-    // one scan with the rate join. Output: per-source totals, kept
-    // counts, and the rate applied.
+    // one #sources-row aggregate, then one scan with the rate join (see
+    // hashMixKept). Output: per-source totals, kept counts, and the rate
+    // applied.
     "q_mix_sources" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val counts = docs.groupBy("source").agg(count(lit(1)).as("n_total"))
       val scalars = counts.agg(sum(col("n_total")).as("grand"),
                                count(lit(1)).as("n_sources"))
-      val rates = counts.crossJoin(broadcast(scalars))
+      val rates = counts.crossJoin(scalars)
         .withColumn("rate", least(lit(1.0),
           (col("grand").cast("double") / col("n_sources")) / col("n_total")))
       hashMixKept(docs, "source", rates)
@@ -328,13 +331,13 @@ object TextQueries {
     // skewed (en ~3.4x fr) while its sources are uniform — the oracle
     // must observe real downsampling (the redact lesson). Engine-exact:
     // two IEEE sqrts in a fixed order, rate applied through the same
-    // portable-hash sampler; same broadcast-by-contract rate relation
-    // and plan shape as q_mix_sources.
+    // portable-hash sampler; same rate relation and plan shape as
+    // q_mix_sources.
     "q_mix_temperature" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val counts = docs.groupBy("lang").agg(count(lit(1)).as("n_total"))
       val minN = counts.agg(min(col("n_total")).as("n_min"))
-      val rates = counts.crossJoin(broadcast(minN))
+      val rates = counts.crossJoin(minN)
         .withColumn("rate",
           sqrt(col("n_min").cast("double")) / sqrt(col("n_total").cast("double")))
       hashMixKept(docs, "lang", rates)

@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep bucketed index reads on the bucketed path: the planner's
-      // DisableUnnecessaryBucketedScan heuristic otherwise drops the
-      // bucketed scan on lookups whose joins are not on the bucket column
-      // (the phrase/NEAR positional path), losing bucket PRUNING — the
-      // index's whole point at scale (InvertedIndexSpec pins the plan)
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores)
     new java.io.File(outDir).mkdirs()
     // Oracle-validity guard (round-3 ADVICE): q_dedup_embedding's exact
     // all-pairs DuckDB oracle is only equivalent to the Spark query while

@@ -145,8 +145,8 @@ object Dedup {
     // carries a CONTRACT: blockCol must be low-cardinality (a label /
     // language / source bucket — the only keys blocking makes sense for);
     // #blocks ~ #docs would make this an unbounded broadcast AND make
-    // every block size 1 (nothing to dedup). Audited in PlanAudit's
-    // hint-isolation pass alongside the eval-gram set.
+    // every block size 1 (nothing to dedup). Pinned by HintIsolationSpec
+    // alongside the eval-gram set.
     val sizes = base.groupBy("block").agg(count(lit(1)).as("_bs"))
     val sized = base.join(broadcast(sizes), "block")
     val small = sized.filter(col("_bs") <= maxBlockSize)

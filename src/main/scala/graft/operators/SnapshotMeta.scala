@@ -439,8 +439,7 @@ object SnapshotMeta {
     val sz = input.queryExecution.optimizedPlan.stats.sizeInBytes
     require(sz < BigInt(Long.MaxValue),
       "build input has no size estimate (stats sizeInBytes is the " +
-        "Long.MaxValue sentinel) — build from a file-backed relation " +
-        "(the inverted index also takes -Dgraft.index.invBuckets)")
+        "Long.MaxValue sentinel) — build from a file-backed relation")
     sz.toLong
   }
 

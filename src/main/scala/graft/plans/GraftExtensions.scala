@@ -12,7 +12,8 @@ import graft.functions.expressions.{BpeCountExpression, BpeEncodeExpression, Dot
   *   SELECT dot_product(a.embedding, b.embedding) ...
   *   SELECT top_k(score, id, 10) ... GROUP BY query_id
   *
-  * Wire-up: `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * Wire-up: `withExtensions(new GraftExtensions)` on the session builder
+  * (as [[graft.GraftSession.local]] does) or
   * `spark.sql.extensions=graft.plans.GraftExtensions` — the standard
   * SparkSessionExtensions injection point (SURVEY.md §7: custom code path
   * (c)).

@@ -45,19 +45,6 @@ object StreamGate {
 
   private val runSeq = new AtomicLong(0)
 
-  /** Dev tracing (SPARK_GRAFT_GATE_TRACE=1): stderr timing of the gate's
-    * driver-side phases — start/await/stop/cleanup — the §1.1 empirical
-    * decomposition for the time JobProfile's job log cannot see. */
-  private val trace = sys.env.contains("SPARK_GRAFT_GATE_TRACE")
-  private def traced[T](label: String)(body: => T): T =
-    if (!trace) body
-    else {
-      val t0 = System.nanoTime()
-      try body
-      finally System.err.println(
-        f"[gate] $label ${(System.nanoTime() - t0) / 1e6}%.1f ms")
-    }
-
   /** Stage `dir`'s events fixture (a single parquet FILE) as a
     * single-file DIRECTORY — file streams list directories. One
     * [[Staging]] generation per source (size, mtime); a pure byte copy,
@@ -152,8 +139,7 @@ object StreamGate {
     (gen.resolve("half-a.parquet"), gen.resolve("half-b.parquet"))
   }
 
-  /** State-partition count for gate runs (override:
-    * SPARK_GRAFT_STREAM_STATE_PARTS). Streaming state partitioning is
+  /** State-partition count for gate runs. Streaming state partitioning is
     * fixed at CHECKPOINT CREATION from `spark.sql.shuffle.partitions` —
     * an upfront sizing decision in Spark, not a runtime one — and must
     * be sized to STATE volume, not input volume: the gate queries hold
@@ -177,11 +163,7 @@ object StreamGate {
     * same formula applies with bigger numerators: partitions = state
     * bytes / target partition size, decided before the first checkpoint
     * write. */
-  private def statePartitions: Int = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTS", "4")
-    raw.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_STREAM_STATE_PARTS must be a positive integer, got '$raw'"))
-  }
+  private val StatePartitions = 4
 
   /** Root for the gate's SINGLE-USE scratch trees (checkpoints, resume
     * source/output dirs) — override: SPARK_GRAFT_STREAM_SCRATCH. These
@@ -209,54 +191,20 @@ object StreamGate {
   private def scratchDir(prefix: String): java.nio.file.Path =
     Files.createTempDirectory(scratchRoot, prefix)
 
-  /** State-store provider for gate runs (override:
-    * SPARK_GRAFT_STREAM_STATE_PROVIDER = hdfs | rocksdb | a fully
-    * qualified provider class). Default hdfs (Spark's
-    * HDFSBackedStateStoreProvider): the gate queries hold a few thousand
-    * small (key, window) entries for 2-4 micro-batches, where the
-    * in-memory-map provider's load+commit is measured faster than
-    * RocksDB's native-store open/compact cycle (A/B'd this round — see
-    * OPTIMIZATION_r20.md; RocksDB is the right answer when per-partition
-    * state outgrows executor memory, which is a 100 TB sizing decision
-    * this env var exists to make without a code change). */
-  private def stateProviderClass: Option[String] =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PROVIDER").map {
-      case "hdfs" =>
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-      case "rocksdb" =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      case fqcn => fqcn
-    }
-
-  /** Extra scoped gate confs (dev A/B + deployment tuning):
-    * SPARK_GRAFT_STREAM_CONF="key=value;key=value". Applied around query
-    * start like the partition/provider knobs. */
-  private def extraGateConfs: Seq[(String, String)] =
-    sys.env.get("SPARK_GRAFT_STREAM_CONF").toSeq.flatMap(_.split(';'))
-      .map(_.trim).filter(_.nonEmpty).map { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"SPARK_GRAFT_STREAM_CONF entry '$kv' is not key=value")
-        (kv.substring(0, i), kv.substring(i + 1))
-      }
-
-  /** Apply the gate's scoped session confs (state partitions + optional
-    * provider override + extra knobs), run `start`, restore the previous
-    * values. The confs are read once at query start, so restoring
+  /** Set the gate's state-partition count, run `start`, restore the
+    * previous value. The conf is read once at query start, so restoring
     * immediately after `start()` returns is sound — gate queries run one
-    * at a time. */
+    * at a time. Other state-store settings (say
+    * `spark.sql.streaming.stateStore.providerClass`) are the session's. */
   private def withGateConfs[T](spark: SparkSession)(start: => T): T = {
-    val sets: Seq[(String, String)] =
-      Seq("spark.sql.shuffle.partitions" -> statePartitions.toString) ++
-        stateProviderClass.map(
-          "spark.sql.streaming.stateStore.providerClass" -> _) ++
-        extraGateConfs
-    val prev = sets.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val k = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.getOption(k)
     try {
-      sets.foreach { case (k, v) => spark.conf.set(k, v) }
+      spark.conf.set(k, StatePartitions.toString)
       start
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    } finally prev match {
+      case Some(v) => spark.conf.set(k, v)
+      case None => spark.conf.unset(k)
     }
   }
 
@@ -286,23 +234,21 @@ object StreamGate {
     val name = s"graft_stream_gate_${runSeq.incrementAndGet()}"
     liveSinkTables.add(name)
     val ckpt = scratchDir("graft-gate-ckpt").toString
-    // scoped state-partition sizing (see statePartitions): the conf is
+    // scoped state-partition sizing (see StatePartitions): the conf is
     // read once at query start; gate queries run one at a time, so the
     // session value is restored immediately after. Results are
     // partition-count-invariant (hash aggregation / join semantics).
-    val q = traced("start") {
-      withGateConfs(spark) {
-        out.writeStream
-          .trigger(Trigger.AvailableNow())
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-      }
+    val q = withGateConfs(spark) {
+      out.writeStream
+        .trigger(Trigger.AvailableNow())
+        .outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .start()
     }
-    try traced("await")(require(q.awaitTermination(600000L),
-      s"bounded stream $name must self-stop under AvailableNow"))
+    try require(q.awaitTermination(600000L),
+      s"bounded stream $name must self-stop under AvailableNow")
     finally {
       // the checkpoint is single-use by design (fresh per call — the gate
       // never resumes) and the memory sink holds the output in driver
@@ -311,8 +257,8 @@ object StreamGate {
       // × runs × attempts) accumulates dozens of checkpoint trees in /tmp.
       // Nested finally: a throwing q.stop() (stopTimeout, teardown error)
       // must not skip the deletion (review finding).
-      try traced("stop")(q.stop())
-      finally traced("cleanup")(deleteRecursively(Paths.get(ckpt)))
+      try q.stop()
+      finally deleteRecursively(Paths.get(ckpt))
     }
     spark.table(name)
   }

@@ -88,14 +88,7 @@ object WatermarkDemo {
 
   def main(args: Array[String]): Unit = {
     val step = args.headOption.map(_.toLong).getOrElse(60000L)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-watermark-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(4)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
 

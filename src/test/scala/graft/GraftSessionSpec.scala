@@ -1,0 +1,47 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+/** The one session policy ([[GraftSession]]): its environment parsing,
+  * the settings every main and spec inherit from it, and that no main
+  * builds a session of its own again. */
+class GraftSessionSpec extends SparkSpec {
+
+  test("SPARK_GRAFT_CPUS accepts a positive integer and refuses anything else") {
+    assert(GraftSession.parseCores(Some("8")) == 8)
+    assert(GraftSession.parseCores(None) == Runtime.getRuntime.availableProcessors())
+    Seq("0", "x", "-3").foreach { raw =>
+      val e = intercept[IllegalArgumentException](GraftSession.parseCores(Some(raw)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+      assert(e.getMessage.contains(s"'$raw'"), e.getMessage)
+    }
+  }
+
+  test("local sets UTC, bucketed scans kept, the min watermark policy and GraftExtensions") {
+    val s = GraftSession.local(4)
+    assert(s eq spark, "SparkSpec's session is GraftSession.local(4)")
+    assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled") == "false")
+    assert(s.conf.get("spark.sql.streaming.multipleWatermarkPolicy") == "min")
+    assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(s.sparkContext.master == "local[4]")
+    assert(s.catalog.functionExists("dot_product"),
+      "GraftExtensions' SQL functions are registered")
+  }
+
+  test("SparkSession.builder appears under src/main/scala only in GraftSession.scala") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root (cwd ${Paths.get("").toAbsolutePath})")
+    val hits = scala.util.Using.resource(Files.walk(root)) { paths =>
+      paths.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala"))
+        .filter(p => Files.readString(p).contains("SparkSession.builder"))
+        .map(p => root.relativize(p).toString)
+        .toList
+    }
+    assert(hits == List("graft/GraftSession.scala"))
+  }
+}

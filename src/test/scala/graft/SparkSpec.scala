@@ -11,20 +11,7 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // match Verify/Bench: keep bucketed index reads on the bucketed path
-      // so bucket pruning (SelectedBucketsCount) survives on lookups whose
-      // joins are not on the bucket column (phrase/NEAR positional scans)
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The bench's session policy on 4 threads, so specs see the session
+    * the mains run. */
+  lazy val session: SparkSession = GraftSession.local(4)
 }

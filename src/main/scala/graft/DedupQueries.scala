@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{CacheScope, ConnectedComponents, Dedup, KMeans, MinHashLSH, SimHash, Similarity, SimilarityIVF, SimilarityLSH, TimeSeries}
+import graft.operators.{CacheScope, ComponentIndex, ConnectedComponents, Dedup, InvertedIndex, IvfIndex, KMeans, MinHashLSH, PqIndex, SimHash, Similarity, SimilarityIVF, SimilarityLSH, TimeSeries}
 import graft.functions.PortableHash
 import graft.sources.Tables
 
@@ -12,21 +12,16 @@ import graft.sources.Tables
   */
 object DedupQueries {
 
-  /** The code signature every memoized /tmp INDEX fixture keys on
-    * (round-17 verdict item 1): the compiled bytes of the entire index-
-    * maintenance path — the persisted families, the ledger, the shared
-    * tokenization, and this object (the fixture state machines
-    * themselves). Previously these fixtures keyed on the SOURCE
-    * fixture's identity alone, so a store built by a PRIOR round's
-    * correct code kept serving after a maintenance-path edit and the
-    * driver's hash gate never re-exercised append/edit through the new
-    * code — a regression would hash-check stale-but-correct content
-    * until /tmp was wiped by hand. With the signature in the key, any
-    * change to these classes yields a fresh fixture dir (fresh catalog
-    * tables too — table names derive from the dir), and the next
-    * Verify/bench run rebuilds the store THROUGH the changed code.
-    * See [[graft.operators.CodeSig]] for why a bytecode hash beats a
-    * hand-bumped constant. */
+  /** The code signature every index fixture generation keys on: the
+    * compiled bytes of the entire index-maintenance path — the persisted
+    * families, the ledger, the shared tokenization, this object (the
+    * fixture histories themselves) and, signing the signer, CodeSig and
+    * [[Fixtures]]: a bug fix in the hashing or publishing code re-keys the
+    * fixtures built under the buggy version. Any change to these classes
+    * addresses a fresh generation (fresh catalog tables too — table names
+    * derive from the dir), and the next Verify/bench run rebuilds the
+    * store THROUGH the changed code. See [[graft.operators.CodeSig]] for
+    * why a bytecode hash beats a hand-bumped constant. */
   private[graft] val indexSignedClasses: Seq[Class[_]] = Seq(
     graft.operators.InvertedIndex.getClass,
     graft.operators.SnapshotMeta.getClass,
@@ -40,342 +35,194 @@ object DedupQueries {
     graft.operators.Pq.getClass,
     graft.operators.Dedup.getClass,
     graft.streaming.StreamGate.getClass,
-    // SIGN THE SIGNER (round-18 verdict item 5): a bug fix in the
-    // hashing or staging code must re-key the fixtures built under the
-    // buggy version — otherwise a CodeSig/Staging defect could keep a
-    // wrongly-keyed (or wrongly-staged) fixture serving forever.
     graft.operators.CodeSig.getClass,
-    graft.streaming.Staging.getClass,
+    Fixtures.getClass,
     DedupQueries.getClass)
 
   private[graft] lazy val indexCodeSig: String =
     graft.operators.CodeSig.of(indexSignedClasses: _*)
 
-  /** Fixture dir for (family `name`, source `dir`), version-keyed:
-    * `/tmp/graft_<name>_v<codeSig>_<hash64(dir)>` — 64-bit dir hash
-    * (round-17 verdict item 6; the old 32-bit keys could collide two
-    * fixture dirs and silently thrash). Also RETIRES stale siblings of
-    * the same (family, source) built under other code signatures:
-    * unlike the tiny staged-events generations, an index fixture
-    * registers catalog tables in the shared warehouse, so leftovers
-    * accrue real weight — each retired sibling's families are dropped
-    * and its dir deleted, best-effort (errors never fail a query), and
-    * ONLY once the sibling has been quiet for 2+ hours (review finding:
-    * a co-tenant JVM on a different commit — dev sbt test beside the
-    * driver bench — may still be SERVING from its own sig's fixture;
-    * retiring it mid-query would fail that JVM's measurement and the
-    * two JVMs would thrash rebuild/retire. A dir untouched for 2+ hours
-    * predates any live gate/bench pass — those build their fixtures at
-    * session start and finish well inside the window — while old-round
-    * garbage ages past it and gets collected on the next call). */
-  private[graft] def indexFixtureKey(s: SparkSession, name: String,
-                                     dir: String): String = {
-    val dirHash = graft.operators.CodeSig.hash64Hex(dir)
-    val fix = s"/tmp/graft_${name}_v${indexCodeSig}_$dirHash"
-    // touch the resolved fixture's mtime so the 2h idle window below
-    // tracks LAST USE, not build time (round-18 ADVICE: serving reads
-    // never bump a dir's mtime — the index tables live in the warehouse
-    // — so a co-tenant JVM whose session outlives 2h could have its
-    // live fixture retired mid-query by a JVM on a different signature)
-    try {
-      val p = java.nio.file.Paths.get(fix)
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis()))
-    } catch { case scala.util.control.NonFatal(_) => () }
-    try {
-      import scala.jdk.CollectionConverters._
-      val prefix = s"graft_${name}_v"
-      val suffix = s"_$dirHash"
-      val cutoff = System.currentTimeMillis() - 2L * 3600 * 1000
-      scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get("/tmp")))(
-        _.iterator().asScala
-          .filter { p =>
-            val n = p.getFileName.toString
-            n.startsWith(prefix) && n.endsWith(suffix) &&
-              p.toString != fix &&
-              (try java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff
-               catch { case scala.util.control.NonFatal(_) => false })
-          }.toList)
-        .foreach { stale =>
-          try {
-            val sd = stale.toString
-            graft.operators.InvertedIndex.drop(s, sd)
-            graft.operators.ComponentIndex.drop(s, sd)
-            graft.operators.IvfIndex.drop(s, sd)
-            graft.operators.PqIndex.drop(s, sd)
-            graft.operators.KMeans.clearModel(sd)
-            graft.operators.Pq.clearModel(sd)
-            graft.streaming.StreamGate.deleteRecursively(stale)
-          } catch { case scala.util.control.NonFatal(_) => () }
-        }
-    } catch { case scala.util.control.NonFatal(_) => () }
-    fix
-  }
-
-  /** The MAINTAINED-index fixture behind q_search_*_maintained: a /tmp
-    * twin of `dir`'s documents whose index history is base build over
-    * 90% of the corpus (doc_id % 10 != 7) + the remaining slice applied
-    * through the LEDGERED append path (postings, stats, positions) —
-    * then the batch files landed into the fixture dir so the staleness
-    * handshake closes. Append == rebuild is exact for this index family
-    * (spec-pinned), so consumers serve the identical answers as a
-    * full-corpus base build and the DuckDB oracles stay the full-corpus
-    * SQL. Construction is IDEMPOTENT at every entry state: a same-JVM
-    * re-run no-ops (tables current, dir complete); a fresh JVM over the
-    * completed fixture rebuilds the base from the full dir and skips the
-    * append (snapshotStale false); a run that crashed between landing
-    * and appending re-enters through the ledger's appliedBatch no-op.
-    * Positions append runs BEFORE the postings append because the
-    * postings ledger stamp is the batch's single commit record — a crash
-    * between the two leaves the batch uncommitted, so the re-run
-    * replays both. */
-  private def maintainedSearchDir(s: SparkSession, dir: String): String = {
-    import graft.operators.InvertedIndex
-    val fix = indexFixtureKey(s, "maint_search", dir)
-    val docsPath = s"$fix/documents.parquet"
-    val docs = Tables.documents(s, dir)
-    val isBatch = pmod(col("doc_id"), lit(10L)) === 7L
-    ingestFixtureCorpus(s, fix, docsPath, docs, isBatch,
-      s"$dir/documents.parquet")
-    if (InvertedIndex.snapshotStale(s, fix)) {
-      val batch = Tables.documents(s, fix).filter(isBatch)
-      InvertedIndex.appendPositions(s, fix, batch)
-      InvertedIndex.append(s, fix, batch)
-    }
-    fix
-  }
-
-  /** Shared corpus state machine of the two APPEND-history fixtures
-    * ([[maintainedSearchDir]], [[streamIngestSearchDir]]): land the base
-    * slice, build the base index over it, then land the batch slice so
-    * the staleness handshake opens for the append. The round-17 ADVICE
-    * repair arm: the batch slice lands via mode("append"), so a torn or
-    * doubled append leaves the fixture corpus at a count that is neither
-    * base-only nor full — an unrecognized state no prior branch ever
-    * repaired (the gate then hash-mismatched persistently until /tmp was
-    * cleaned by hand). Such a fixture is now discarded wholesale (drop
-    * the index family, rewrite the base corpus from the ORIGINAL dir)
-    * before re-entering the normal path. */
-  private[graft] def ingestFixtureCorpus(s: SparkSession, fix: String,
-                                  docsPath: String,
-                                  docs: org.apache.spark.sql.DataFrame,
-                                  isBatch: org.apache.spark.sql.Column,
-                                  srcDocsPath: String): Unit = {
-    import graft.operators.InvertedIndex
-    // row counts from parquet footers (driver-side, ~1 ms) — the same
-    // values df.count() computes, without one Spark scheduler round-trip
-    // per check inside the bench's timed region (ParquetFooter scaladoc)
-    val total = graft.operators.ParquetFooter.rowCount(srcDocsPath)
-    def landBase(): Unit =
-      docs.filter(!isBatch).write.mode("overwrite").parquet(docsPath)
-    if (!new java.io.File(docsPath).exists()) landBase()
-    else {
-      val n = graft.operators.ParquetFooter.rowCount(docsPath)
-      // short-circuit the steady state (review finding): the completed
-      // fixture (n == total) pays no extra filtered count — these
-      // builders run inside the bench's timed region
-      if (n != total && n != docs.filter(!isBatch).count()) {
-        // unrecognized: torn/double append — rebuild wholesale
+  /** The [[Fixtures]] generation of index fixture `family` over `dir`'s
+    * `tables`, its corpus written by `build(scratch)`. A retired
+    * generation takes every persisted family and fixture-memoized model
+    * keyed on its path with it. */
+  private[graft] def indexFixture(s: SparkSession, family: String, dir: String,
+                                  tables: Seq[String] = Seq("documents"),
+                                  root: String = GraftSession.fixtureRoot)
+                                 (build: String => Unit): String =
+    Fixtures.generation(s, family, tables.map(t => s"$dir/$t.parquet"),
+      indexCodeSig, root, onRetire = { fix =>
         InvertedIndex.drop(s, fix)
-        landBase()
-      }
+        ComponentIndex.drop(s, fix)
+        IvfIndex.drop(s, fix)
+        PqIndex.drop(s, fix)
+        KMeans.clearModel(fix)
+        graft.operators.Pq.clearModel(fix)
+      })(build)
+
+  /** Where [[indexFixture]] puts `family`'s generation over `dir`. */
+  private[graft] def indexFixturePath(s: SparkSession, family: String,
+                                      dir: String): String =
+    Fixtures.generationPath(s, family, Seq(s"$dir/documents.parquet"), indexCodeSig)
+
+  // the fixture histories' doc-id classes: the held-out append slice, and
+  // the edit's removed and rewritten (text doubled) documents — disjoint
+  // (≡ 7 mod 10 vs ≡ 3 / 11 mod 20)
+  private def isBatch = pmod(col("doc_id"), lit(10L)) === 7L
+  private def isRemoved = pmod(col("doc_id"), lit(20L)) === 3L
+  private def isRewritten = pmod(col("doc_id"), lit(20L)) === 11L
+  private def doubled = concat(col("text"), lit(" "), col("text"))
+
+  /** The edit classes as CDC events (doc_id, op, text): `delete` for the
+    * removed docs, `upsert` with the doubled text for the rewritten. */
+  private def cdcEvents(docs: DataFrame): DataFrame =
+    docs.filter(isRemoved).select(col("doc_id"), lit("delete").as("op"),
+        lit(null).cast("string").as("text"))
+      .unionByName(docs.filter(isRewritten)
+        .select(col("doc_id"), lit("upsert").as("op"), doubled.as("text")))
+
+  /** The APPEND history (maintained, stream-ingest): the generation
+    * publishes the base slice (doc_id % 10 != 7) as the corpus and the base
+    * index is built over it; then the batch slice joins the corpus by one
+    * rename, and while the ledger lags the corpus, `apply(fix, batch)`
+    * brings the batch in through the append verb. The corpus is therefore
+    * base or base ∪ batch, never torn or doubled. A crash anywhere re-enters
+    * through the ledger (committed batches no-op); a fresh JVM over the
+    * completed corpus builds its index over base ∪ batch and has nothing to
+    * apply — the same answers, append == rebuild being exact for this
+    * family (spec-pinned), so consumers answer the full-corpus oracles. */
+  private def appendFixture(s: SparkSession, family: String, dir: String,
+                            root: String = GraftSession.fixtureRoot)
+                           (apply: (String, DataFrame) => Unit): String = {
+    val docs = Tables.documents(s, dir)
+    val fix = indexFixture(s, family, dir, root = root) { g =>
+      Fixtures.publishFile(docs.filter(!isBatch), s"$g/documents.parquet", "base.parquet")
     }
     InvertedIndex.ensure(s, fix)
     InvertedIndex.ensurePositions(s, fix)
-    if (graft.operators.ParquetFooter.rowCount(docsPath) < total)
-      docs.filter(isBatch).write.mode("append").parquet(docsPath)
-  }
-
-  /** The STREAM-INGESTED index fixture behind q_stream_index_ingest:
-    * the [[maintainedSearchDir]] corpus history — base build over 90% of
-    * the corpus (doc_id % 10 != 7), the remaining slice applied through
-    * the ledgered append path — but with the slice arriving THROUGH a
-    * real Structured Streaming ingest: a bounded `Trigger.AvailableNow`
-    * file stream whose `foreachBatch` routes the micro-batch into the
-    * index family (positions first, then the commit-owning append, both
-    * keyed on the stream's own batchId — the production ingest→serve
-    * loop StreamingIndexMaintenanceSpec pins, now under the hash gate;
-    * round-16 verdict item 2). Append == rebuild is exact for this
-    * family, so serving from the maintained store answers exactly the
-    * full-corpus SQL — q_search_corpus's oracle, unchanged.
-    *
-    * Round 18: the slice arrives as TWO sub-slices (doc_id % 20 == 7
-    * vs == 17) through TWO AvailableNow executions over ONE shared
-    * checkpoint — the [[streamCdcSearchDir]] shape applied to the
-    * APPEND verb, so two DISTINCT stream batchIds (0, then 1 after the
-    * restart) flow through the append ledger in one gate query:
-    * batch-ordering across a restart is hash-checked for BOTH
-    * maintenance verbs. Oracle unchanged (appends commute and sum to
-    * the full corpus).
-    *
-    * Idempotent at every entry state, inheriting the ledger's replay
-    * discipline: a completed fixture re-reads fresh and skips the stream
-    * entirely; a fresh JVM over the completed fixture rebuilds the base
-    * from the full dir (snapshotStale false → no stream); a crash
-    * anywhere mid-stream leaves some batch uncommitted (stamp is last),
-    * so the re-entry re-runs BOTH slices under a FRESH checkpoint —
-    * committed slices no-op via the ledger, uncommitted ones apply. */
-  private[graft] def streamIngestSearchDir(s: SparkSession, dir: String,
-      family: String = "stream_ingest"): String = {
-    import graft.operators.InvertedIndex
-    import graft.streaming.StreamGate
-    val fix = indexFixtureKey(s, family, dir)
-    val docsPath = s"$fix/documents.parquet"
-    val docs = Tables.documents(s, dir)
-    val isBatch = pmod(col("doc_id"), lit(10L)) === 7L
-    ingestFixtureCorpus(s, fix, docsPath, docs, isBatch,
-      s"$dir/documents.parquet")
-    if (InvertedIndex.snapshotStale(s, fix)) {
-      val srcDir = java.nio.file.Files.createTempDirectory("graft-ingest-src")
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-ingest-ckpt")
-      try {
-        val sliceA = pmod(col("doc_id"), lit(20L)) === 7L
-        // TRIPWIRE (the CDC discipline): a regenerated id space that
-        // empties a sub-slice would silently degenerate this back to
-        // single-batch ingest
-        val nA = docs.filter(isBatch && sliceA).count()
-        val nB = docs.filter(isBatch && !sliceA).count()
-        require(nA > 0 && nB > 0,
-          s"streamIngestSearchDir($dir): an ingest slice is empty " +
-            s"(a=$nA b=$nB) — the multi-batch path would silently stop " +
-            "being exercised")
-        def runSlice(slice: org.apache.spark.sql.Column, name: String): Unit = {
-          graft.streaming.Staging.writeSingleFile(
-            docs.filter(isBatch && slice), srcDir, name)
-          val q = s.readStream.schema(docs.schema).parquet(srcDir.toString)
-            .writeStream
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, id: Long) =>
-              if (!b.isEmpty) {
-                InvertedIndex.appendPositions(s, fix, b, id)
-                InvertedIndex.append(s, fix, b, id)
-              }
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .start()
-          try require(q.awaitTermination(600000L),
-            "bounded index-ingest stream must self-stop under AvailableNow")
-          finally q.stop()
-        }
-        runSlice(sliceA, "ingest-a.parquet")  // batch 0
-        runSlice(!sliceA, "ingest-b.parquet") // batch 1, resuming the checkpoint
-      } finally {
-        StreamGate.deleteRecursively(ckpt)
-        StreamGate.deleteRecursively(srcDir)
-      }
-    }
+    Fixtures.publishFile(docs.filter(isBatch), s"$fix/documents.parquet", "batch.parquet")
+    if (InvertedIndex.snapshotStale(s, fix))
+      apply(fix, Tables.documents(s, fix).filter(isBatch))
     fix
   }
 
-  /** The EDITED-index fixture behind q_search_*_edited: a /tmp twin
-    * whose index history is a base build over the FULL corpus followed
-    * by one [[graft.operators.InvertedIndex.edit]] batch — doc_id % 20
-    * == 3 removed, doc_id % 20 == 11 rewritten with its text doubled —
-    * so the correctness gate exercises serving THROUGH TOMBSTONES (the
-    * postingsFor/positionsFor anti-join, the net stats row), the diff
-    * classes appends cannot produce. Every input derives from the
-    * ORIGINAL dir's documents (never from the fixture's own files), so
-    * each step is idempotent under replay. State machine on
-    * (fixture doc count, snapshotStale):
-    *   - (full, fresh)  → base just built; apply the edit (positions
-    *     first, edit last — the commit-owner ordering), then land the
-    *     edited corpus into the fixture dir to close the handshake
-    *   - (full, stale)  → the edit committed but the crash hit before
-    *     the corpus landed; just land it (edit's ledger makes a
-    *     mid-edit crash re-enter the previous arm instead: the stamp is
-    *     last, so an uncommitted edit leaves the ledger == base == dir,
-    *     i.e. NOT stale, and the re-run replays the edit idempotently)
-    *   - (edited, fresh) → complete, or a fresh JVM rebuilt the base
-    *     over the edited corpus — identical answers either way
-    *     (edit == rebuild, spec-pinned)
-    *   - anything else  → unrecognized; wholesale rebuild from scratch
-    * The oracle replays the SAME BM25/phrase SQL with `documents`
-    * shadowed by an edited-corpus CTE — one scoring definition, two
-    * corpus histories. */
-  /** The DELETED-index fixture ([[maintainedSearchDir]]'s ANN twin): a
-    * copy of the fixture embeddings whose persisted IVF index absorbed a
-    * TOMBSTONE batch — vec_id % 20 == 3 removed via
-    * [[graft.operators.IvfIndex.delete]]. The embeddings parquet stays
-    * FULL, so a fresh session rebuilds with the SAME
-    * full-corpus-trained centroids (what the oracle's unrolled-Lloyd's
-    * CTEs train on) and re-applies the delete, which self-no-ops once
-    * its batch is committed. */
-  private def deletedAnnDir(s: SparkSession, dir: String): String = {
-    val fix = indexFixtureKey(s, "del_ann", dir)
-    val path = s"$fix/embeddings.parquet"
-    def idSig(df: org.apache.spark.sql.DataFrame) = {
-      val r = df.agg(count(lit(1)), coalesce(sum("vec_id"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
+  /** The EDIT history (edited, stream-CDC, stream-mixed): the generation
+    * publishes the pre-edit corpus (`dir`'s documents where `base` holds),
+    * which never changes. Each JVM builds the base index over it, and
+    * `apply(fix)` runs the history's maintenance batches through the ledger
+    * until batch 1, the last, has committed (a crash re-enters through the
+    * ledger: committed batches no-op). The index then serves the post-edit
+    * corpus through its tombstones in every JVM — the layout the hygiene
+    * query measures — while the corpus stays pre-edit. Only the edited
+    * fixture's corpus is read by a consumer (searchFiltered's facet), and
+    * it answers as the edited corpus would: the edit changes only `text`,
+    * and a removed doc has no live postings. */
+  private def editFixture(s: SparkSession, family: String, dir: String,
+                          base: org.apache.spark.sql.Column = lit(true))
+                         (apply: String => Unit): String = {
+    val fix = indexFixture(s, family, dir) { g =>
+      Fixtures.publishFile(Tables.documents(s, dir).filter(base),
+        s"$g/documents.parquet", "base.parquet")
     }
-    // a fixture left by an EARLIER testdata generation would silently
-    // diverge from the oracle's embeddings — verify identity by id
-    // signature and rebuild the whole family on mismatch
-    val stale = new java.io.File(path).exists() &&
-      idSig(Tables.embeddings(s, fix)) != idSig(Tables.embeddings(s, dir))
-    if (stale || !new java.io.File(path).exists()) {
-      graft.operators.IvfIndex.drop(s, fix)
-      graft.operators.PqIndex.drop(s, fix)
-      if (stale) { // fixture-memoized models trained on the old content
-        graft.operators.KMeans.clearModel(fix)
-        graft.operators.Pq.clearModel(fix)
+    InvertedIndex.ensure(s, fix)
+    InvertedIndex.ensurePositions(s, fix)
+    if (!InvertedIndex.committed(s, fix, 1L)) apply(fix)
+    fix
+  }
+
+  /** Push `slices` through ONE bounded file stream: one AvailableNow
+    * execution per slice over a shared checkpoint — batch 0, then batch 1
+    * after the restart — routing each micro-batch to `onBatch` with the
+    * stream's own batch id. Source and checkpoint are one single-use tree.
+    * TRIPWIRE: an empty slice (a regenerated id space) would silently
+    * degenerate the history to a single batch, so it fails the build. */
+  private def streamSlices(s: SparkSession, what: String, slices: Seq[DataFrame])
+                          (onBatch: (DataFrame, Long) => Unit): Unit = {
+    val counts = slices.map(_.count())
+    require(counts.forall(_ > 0), s"$what: a stream slice is empty " +
+      s"(${counts.mkString(", ")}) — the multi-batch path would silently " +
+      "stop being exercised")
+    Fixtures.scratch(s, "index-stream") { t =>
+      slices.zipWithIndex.foreach { case (slice, i) =>
+        Fixtures.publishFile(slice, s"$t/src", s"slice-$i.parquet")
+        val q = s.readStream.schema(slices.head.schema).parquet(s"$t/src")
+          .writeStream
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .foreachBatch { (b: DataFrame, id: Long) =>
+            if (!b.isEmpty) onBatch(b, id)
+          }
+          .option("checkpointLocation", s"$t/ckpt")
+          .start()
+        try require(q.awaitTermination(600000L),
+          s"$what: the bounded stream must self-stop under AvailableNow")
+        finally q.stop()
       }
-      Tables.embeddings(s, dir).write.mode("overwrite").parquet(path)
     }
-    graft.operators.IvfIndex.delete(s, fix,
+  }
+
+  /** The MAINTAINED-index fixture behind q_search_*_maintained: the
+    * append history with the batch applied directly (positions first —
+    * the postings ledger stamp is the batch's single commit record, so a
+    * crash between the two replays both). */
+  private[graft] def maintainedSearchDir(s: SparkSession, dir: String,
+      root: String = GraftSession.fixtureRoot): String =
+    appendFixture(s, "maint_search", dir, root) { (fix, batch) =>
+      InvertedIndex.appendPositions(s, fix, batch)
+      InvertedIndex.append(s, fix, batch)
+    }
+
+  /** The STREAM-INGESTED index fixture behind q_stream_index_ingest: the
+    * append history with the batch slice arriving THROUGH a real
+    * Structured Streaming ingest, as two sub-slices (doc_id % 20 == 7 vs
+    * == 17) through two AvailableNow executions over one checkpoint, each
+    * routed by `foreachBatch` into the index (positions first, then the
+    * commit-owning append, keyed on the stream's batch id) — so batch ids
+    * 0 and 1 flow through the append ledger across a restart under the
+    * hash gate. Oracle: q_search_corpus's, unchanged (appends commute and
+    * sum to the full corpus). */
+  private[graft] def streamIngestSearchDir(s: SparkSession, dir: String,
+      family: String = "stream_ingest"): String =
+    appendFixture(s, family, dir) { (fix, batch) =>
+      val sliceA = pmod(col("doc_id"), lit(20L)) === 7L
+      streamSlices(s, s"streamIngestSearchDir($dir)",
+          Seq(batch.filter(sliceA), batch.filter(!sliceA))) { (b, id) =>
+        InvertedIndex.appendPositions(s, fix, b, id)
+        InvertedIndex.append(s, fix, b, id)
+      }
+    }
+
+  /** The EDITED-index fixture behind q_search_*_edited and
+    * q_search_index_hygiene: the edit history over the full corpus with
+    * one [[graft.operators.InvertedIndex.edit]] batch — doc_id % 20 == 3
+    * removed, % 20 == 11 rewritten with its text doubled — so the gate
+    * exercises serving THROUGH TOMBSTONES (the postingsFor/positionsFor
+    * anti-join, the net stats row), the diff classes appends cannot
+    * produce. The oracles replay the same SQL with `documents` shadowed
+    * by an edited-corpus CTE — one scoring definition, two corpus
+    * histories. */
+  private def editedSearchDir(s: SparkSession, dir: String): String =
+    editFixture(s, "edit_search", dir) { fix =>
+      val docs = Tables.documents(s, dir)
+      val added = docs.filter(isRewritten).withColumn("text", doubled)
+      InvertedIndex.appendPositions(s, fix, added, 1L)
+      InvertedIndex.edit(s, fix, docs.filter(isRemoved || isRewritten), added, 1L)
+    }
+
+  /** The DELETED-index fixture ([[maintainedSearchDir]]'s ANN twin): a
+    * copy of the embeddings whose persisted IVF index absorbed a
+    * TOMBSTONE batch — vec_id % 20 == 3 removed via
+    * [[graft.operators.IvfIndex.delete]]. The embeddings stay FULL, so
+    * every session builds with the SAME full-corpus-trained centroids
+    * (what the oracle's unrolled-Lloyd's CTEs train on) and re-applies the
+    * delete, which self-no-ops once its batch is committed. */
+  private def deletedAnnDir(s: SparkSession, dir: String): String = {
+    val fix = indexFixture(s, "del_ann", dir, Seq("embeddings")) { g =>
+      Fixtures.copy(s, s"$dir/embeddings.parquet", s"$g/embeddings.parquet")
+    }
+    IvfIndex.delete(s, fix,
       Tables.embeddings(s, fix)
         .filter(pmod(col("vec_id"), lit(20L)) === 3L).select("vec_id"),
       batchId = 1L)
-    fix
-  }
-
-  /** [[editedSearchDir]] with a FORCED tombstoned layout. Serving
-    * answers are layout-invariant across that fixture's legal histories
-    * (edit == rebuild-over-edited, spec-pinned), but HYGIENE measures
-    * the physical layout itself — a fixture that a fresh JVM rebuilt
-    * over the edited corpus carries no tombstones and reports zero dead
-    * rows, a different (equally true) answer. So the hygiene query gets
-    * its own fixture that is valid ONLY in the complete tombstoned
-    * state (edited corpus landed, handshake fresh, both stores showing
-    * dead rows); anything else — first use, crash debris, a wrong-
-    * history rebuild — is discarded and rebuilt from the original dir
-    * with the canonical history: base build, edit batch 1, edited
-    * corpus landed. Idempotent and convergent under replay at any
-    * crash point. */
-  private def hygieneSearchDir(s: SparkSession, dir: String): String = {
-    import graft.operators.InvertedIndex
-    val fix = indexFixtureKey(s, "hyg_search", dir)
-    val docsPath = s"$fix/documents.parquet"
-    val docs = Tables.documents(s, dir)
-    val isRemoved = pmod(col("doc_id"), lit(20L)) === 3L
-    val isRewritten = pmod(col("doc_id"), lit(20L)) === 11L
-    def editedCorpus = docs.filter(!isRemoved).withColumn("text",
-      when(isRewritten, concat(col("text"), lit(" "), col("text")))
-        .otherwise(col("text")))
-    def valid: Boolean =
-      new java.io.File(docsPath).exists() &&
-        // fixture-side row count from footers (pure count, no Spark job —
-        // the ParquetFooter discipline); the edited-corpus expectation is
-        // a filtered count over the source and stays a Spark job
-        graft.operators.ParquetFooter.rowCount(docsPath) ==
-          editedCorpus.count() &&
-        !InvertedIndex.snapshotStale(s, fix) &&
-        InvertedIndex.hygiene(s, fix)
-          .filter(col("tombstoned_rows") > 0).count() == 2
-    if (!valid) {
-      InvertedIndex.drop(s, fix)
-      docs.write.mode("overwrite").parquet(docsPath)
-      InvertedIndex.ensure(s, fix)
-      InvertedIndex.ensurePositions(s, fix)
-      val added = docs.filter(isRewritten)
-        .withColumn("text", concat(col("text"), lit(" "), col("text")))
-      InvertedIndex.appendPositions(s, fix, added, 1L)
-      InvertedIndex.edit(s, fix, docs.filter(isRemoved || isRewritten),
-        added, 1L)
-      editedCorpus.write.mode("overwrite").parquet(docsPath)
-    }
     fix
   }
 
@@ -402,297 +249,67 @@ object DedupQueries {
       .withColumn("rank", row_number().over(w).cast("long"))
   }
 
-  private def editedSearchDir(s: SparkSession, dir: String): String = {
-    import graft.operators.InvertedIndex
-    val fix = indexFixtureKey(s, "edit_search", dir)
-    val docsPath = s"$fix/documents.parquet"
-    val docs = Tables.documents(s, dir)
-    val isRemoved = pmod(col("doc_id"), lit(20L)) === 3L
-    val isRewritten = pmod(col("doc_id"), lit(20L)) === 11L
-    def editedCorpus = docs.filter(!isRemoved).withColumn("text",
-      when(isRewritten, concat(col("text"), lit(" "), col("text")))
-        .otherwise(col("text")))
-    def applyEdit(): Unit = {
-      val added = docs.filter(isRewritten)
-        .withColumn("text", concat(col("text"), lit(" "), col("text")))
-      InvertedIndex.appendPositions(s, fix, added, 1L)
-      InvertedIndex.edit(s, fix, docs.filter(isRemoved || isRewritten),
-        added, 1L)
-      editedCorpus.write.mode("overwrite").parquet(docsPath)
-    }
-    if (!new java.io.File(docsPath).exists())
-      docs.write.mode("overwrite").parquet(docsPath)
-    InvertedIndex.ensure(s, fix)
-    InvertedIndex.ensurePositions(s, fix)
-    // footer counts, not Spark jobs — see ParquetFooter
-    val full = graft.operators.ParquetFooter.rowCount(docsPath) ==
-      graft.operators.ParquetFooter.rowCount(s"$dir/documents.parquet")
-    val stale = InvertedIndex.snapshotStale(s, fix)
-    if (full && !stale) applyEdit()
-    else if (full && stale)
-      editedCorpus.write.mode("overwrite").parquet(docsPath)
-    else if (stale) { // unrecognized state: rebuild from scratch
-      InvertedIndex.drop(s, fix)
-      docs.write.mode("overwrite").parquet(docsPath)
-      InvertedIndex.ensure(s, fix)
-      InvertedIndex.ensurePositions(s, fix)
-      applyEdit()
-    }
-    fix
-  }
-
   /** The stream-CDC index fixture behind q_stream_index_cdc —
-    * [[streamIngestSearchDir]]'s EDIT-class twin, completing the
-    * streamed maintenance story under the gate: the base build covers
-    * the FULL corpus, then the CDC events (op = delete for doc_id % 20
-    * == 3; op = upsert with the text doubled for doc_id % 20 == 11 —
-    * exactly [[editedSearchDir]]'s edit, so the oracle is
-    * q_search_corpus_edited's, unchanged) arrive as TWO slices
-    * (doc_id % 40 split) through TWO bounded AvailableNow executions
-    * over ONE shared checkpoint — a restart between slices, the
-    * [[graft.streaming.StreamGate.runBoundedResume]] shape (round-17
-    * verdict item 4: two DISTINCT batchIds, 0 then 1, flow through
-    * [[graft.operators.InvertedIndex.edit]]'s ledger in one gate query,
-    * hash-checking batch ordering and cross-batch tombstone visibility
-    * across a restart — run 2 reopens run 1's checkpoint and its edit
-    * must serve through run 1's tombstones). The outgoing content each
-    * edit compensates with is read from the ORIGINAL dir's documents
-    * semi-joined to that batch's event ids (the maintenance job owns
-    * its corpus; CDC events carry ops + new content only). Session
-    * discipline, the [[streamIngestSearchDir]] pattern: the batch
-    * frames carry the micro-batch CLONE session (writes resolve through
-    * it inside overwritePartition), while the OUTER session is what the
-    * index calls receive — overwritePartition then refreshes the
-    * caller's relation cache too, the StreamingIndexMaintenanceSpec
-    * cross-session-staleness lesson.
-    *
-    * Idempotent state machine, SIMPLER than [[editedSearchDir]]'s
-    * because stream replay subsumes the crashed-mid-edit arms: while
-    * the fixture corpus is still FULL, (re)run the whole two-slice
-    * stream under a FRESH checkpoint — each slice's ledger stamp makes
-    * a replayed committed batch a no-op and an uncommitted one applies
-    * (this covers fresh base, crash between the two runs, and crash
-    * before the corpus landed) — then land the edited corpus;
-    * edited+fresh → done, or a fresh-JVM rebuild over the edited
-    * corpus, identical answers either way; anything else → wholesale
-    * rebuild. */
+    * [[streamIngestSearchDir]]'s EDIT-class twin: the edit history over
+    * the full corpus with [[editedSearchDir]]'s edit arriving as CDC
+    * events in TWO slices (doc_id % 40 split, each carrying both op
+    * classes) through two AvailableNow executions over one checkpoint, so
+    * batch ids 0 and 1 flow through [[graft.operators.InvertedIndex.edit]]'s
+    * ledger across a restart and run 2's edit serves through run 1's
+    * tombstones. Oracle: q_search_corpus_edited's, unchanged. The outgoing
+    * content each edit compensates with is read from the ORIGINAL dir's
+    * documents semi-joined to that batch's event ids (CDC events carry ops
+    * and new content only). Session discipline: the batch frames carry
+    * the micro-batch CLONE session, while the OUTER session is what the
+    * index calls receive — overwritePartition then refreshes the caller's
+    * relation cache too (the StreamingIndexMaintenanceSpec lesson). */
   private[graft] def streamCdcSearchDir(s: SparkSession, dir: String,
-      family: String = "stream_cdc"): String = {
-    import graft.operators.InvertedIndex
-    import graft.streaming.StreamGate
-    val fix = indexFixtureKey(s, family, dir)
-    val docsPath = s"$fix/documents.parquet"
-    val docs = Tables.documents(s, dir)
-    val isRemoved = pmod(col("doc_id"), lit(20L)) === 3L
-    val isRewritten = pmod(col("doc_id"), lit(20L)) === 11L
-    def editedCorpus = docs.filter(!isRemoved).withColumn("text",
-      when(isRewritten, concat(col("text"), lit(" "), col("text")))
-        .otherwise(col("text")))
-    def applyEditViaStream(): Unit = {
-      val srcDir = java.nio.file.Files.createTempDirectory("graft-cdc-src")
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-cdc-ckpt")
-      try {
-        val events = docs.filter(isRemoved)
-          .select(col("doc_id"), lit("delete").as("op"), lit(null).cast("string").as("text"))
-          .unionByName(docs.filter(isRewritten)
-            .select(col("doc_id"), lit("upsert").as("op"),
-              concat(col("text"), lit(" "), col("text")).as("text")))
-        // two slices, each carrying BOTH op classes (doc_id % 40 puts
-        // delete ids 3/23 and upsert ids 11/31 on opposite sides), so
-        // each batch exercises tombstones AND rewrites
-        val sliceA = pmod(col("doc_id"), lit(40L)) < 20L
-        // TRIPWIRE (the stagedEventsHalves discipline): a regenerated
-        // fixture whose id space no longer populates both slices would
-        // silently degenerate this back to single-batch CDC
-        val nA = events.filter(sliceA).count()
-        val nB = events.filter(!sliceA).count()
-        require(nA > 0 && nB > 0,
-          s"streamCdcSearchDir($dir): a CDC slice is empty (a=$nA b=$nB) — " +
-            "the multi-batch path would silently stop being exercised")
-        def runSlice(slice: org.apache.spark.sql.Column, name: String): Unit = {
-          graft.streaming.Staging.writeSingleFile(
-            events.filter(slice), srcDir, name)
-          val q = s.readStream.schema(events.schema).parquet(srcDir.toString)
-            .writeStream
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, id: Long) =>
-              if (!b.isEmpty) {
-                // batch-session frames, outer-session index calls — see
-                // the scaladoc's session-discipline note
-                val removed = Tables.documents(b.sparkSession, dir)
-                  .join(b.select("doc_id"), Seq("doc_id"), "left_semi")
-                val added = b.filter(col("op") === "upsert")
-                  .select("doc_id", "text")
-                InvertedIndex.appendPositions(s, fix, added, id)
-                InvertedIndex.edit(s, fix, removed, added, id)
-              }
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .start()
-          try require(q.awaitTermination(600000L),
-            "bounded CDC stream must self-stop under AvailableNow")
-          finally q.stop()
-        }
-        runSlice(sliceA, "cdc-a.parquet")  // batch 0
-        runSlice(!sliceA, "cdc-b.parquet") // batch 1, resuming the checkpoint
-      } finally {
-        StreamGate.deleteRecursively(ckpt)
-        StreamGate.deleteRecursively(srcDir)
+      family: String = "stream_cdc"): String =
+    editFixture(s, family, dir) { fix =>
+      val events = cdcEvents(Tables.documents(s, dir))
+      val sliceA = pmod(col("doc_id"), lit(40L)) < 20L
+      streamSlices(s, s"streamCdcSearchDir($dir)",
+          Seq(events.filter(sliceA), events.filter(!sliceA))) { (b, id) =>
+        val removed = Tables.documents(b.sparkSession, dir)
+          .join(b.select("doc_id"), Seq("doc_id"), "left_semi")
+        val added = b.filter(col("op") === "upsert").select("doc_id", "text")
+        InvertedIndex.appendPositions(s, fix, added, id)
+        InvertedIndex.edit(s, fix, removed, added, id)
       }
-      editedCorpus.write.mode("overwrite").parquet(docsPath)
     }
-    if (!new java.io.File(docsPath).exists())
-      docs.write.mode("overwrite").parquet(docsPath)
-    InvertedIndex.ensure(s, fix)
-    InvertedIndex.ensurePositions(s, fix)
-    // footer counts, not Spark jobs — see ParquetFooter
-    val full = graft.operators.ParquetFooter.rowCount(docsPath) ==
-      graft.operators.ParquetFooter.rowCount(s"$dir/documents.parquet")
-    val stale = InvertedIndex.snapshotStale(s, fix)
-    // full → (re)run the stream regardless of staleness: the per-slice
-    // ledger stamps make committed batches no-ops, so one arm covers
-    // fresh-base, crashed-between-slices, AND corpus-not-yet-landed
-    // (the old full+stale "just land the corpus" arm was only correct
-    // for a single-batch edit — with two slices it would have landed
-    // the edited corpus over a HALF-applied index)
-    if (full) applyEditViaStream()
-    else if (stale) { // unrecognized state: rebuild from scratch
-      InvertedIndex.drop(s, fix)
-      docs.write.mode("overwrite").parquet(docsPath)
-      InvertedIndex.ensure(s, fix)
-      InvertedIndex.ensurePositions(s, fix)
-      applyEditViaStream()
-    }
-    fix
-  }
 
   /** The MIXED-VERB streamed maintenance fixture behind
-    * q_stream_index_mixed (round-18 verdict item 2): the two maintenance
-    * verbs INTERLEAVED through ONE checkpoint and ONE ledger — the
-    * ordering a production crawl-ingest-then-correct pipeline exercises,
-    * which [[streamIngestSearchDir]] (append only) and
-    * [[streamCdcSearchDir]] (edit only) each leave unpinned. History:
-    * base build over 90% of the corpus (doc_id % 10 != 7); batch 0 =
-    * the held-out slice arriving as `op = insert` events through the
-    * APPEND verb; restart over the same checkpoint; batch 1 = the CDC
-    * events (op = delete for doc_id % 20 == 3, op = upsert with the
-    * text doubled for % 20 == 11 — [[editedSearchDir]]'s edit classes,
-    * disjoint from the appended slice: insert ids are ≡ 7 mod 10, the
-    * edit ids ≡ 3 or 11 mod 20) through the EDIT verb. One unified
-    * event schema (doc_id, op, text) carries both verbs; foreachBatch
-    * routes on the batch's op mix — a batch with no mutation events
-    * takes the append path (ledgered [[graft.operators.InvertedIndex.append]]),
-    * one with deletes/upserts compensates from the ORIGINAL dir's
-    * documents and takes [[graft.operators.InvertedIndex.edit]]. The
-    * final corpus (full ∖ removed, rewritten doubled) is exactly
-    * [[streamCdcSearchDir]]'s, and append == rebuild is exact for this
-    * family, so the oracle is q_search_corpus_edited's edited-corpus
-    * replay, unchanged.
-    *
-    * Idempotent state machine on the fixture corpus count:
-    *   - base-count → (re)run the whole two-batch stream under a fresh
-    *     checkpoint (the per-batch ledger stamps make committed batches
-    *     no-ops, covering fresh-base, mid-stream crash, and
-    *     crash-before-the-corpus-landed alike), then land the edited
-    *     corpus;
-    *   - edited-count + fresh ledger → complete, or a fresh JVM rebuilt
-    *     the base over the edited corpus — identical answers either way
-    *     (append == rebuild and edit == rebuild, both spec-pinned);
-    *   - anything else → unrecognized; wholesale rebuild. */
+    * q_stream_index_mixed: the two maintenance verbs INTERLEAVED through
+    * one checkpoint and one ledger — the crawl-ingest-then-correct
+    * ordering. The edit history over the base slice (doc_id % 10 != 7):
+    * batch 0 = the held-out slice as `op = insert` events through the
+    * APPEND verb; restart; batch 1 = [[cdcEvents]] through the EDIT verb.
+    * `foreachBatch` routes on the batch's op mix (no mutations → append;
+    * any delete/upsert → edit, compensating from the original dir). The
+    * final corpus is [[streamCdcSearchDir]]'s, so the oracle is
+    * q_search_corpus_edited's, unchanged. */
   private[graft] def streamMixedSearchDir(s: SparkSession, dir: String,
-      family: String = "stream_mixed"): String = {
-    import graft.operators.InvertedIndex
-    import graft.streaming.StreamGate
-    val fix = indexFixtureKey(s, family, dir)
-    val docsPath = s"$fix/documents.parquet"
-    val docs = Tables.documents(s, dir)
-    val isBatch = pmod(col("doc_id"), lit(10L)) === 7L
-    val isRemoved = pmod(col("doc_id"), lit(20L)) === 3L
-    val isRewritten = pmod(col("doc_id"), lit(20L)) === 11L
-    def editedCorpus = docs.filter(!isRemoved).withColumn("text",
-      when(isRewritten, concat(col("text"), lit(" "), col("text")))
-        .otherwise(col("text")))
-    def runStream(): Unit = {
-      val srcDir = java.nio.file.Files.createTempDirectory("graft-mixed-src")
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-mixed-ckpt")
-      try {
-        val inserts = docs.filter(isBatch)
-          .select(col("doc_id"), lit("insert").as("op"), col("text"))
-        val edits = docs.filter(isRemoved)
-          .select(col("doc_id"), lit("delete").as("op"),
-            lit(null).cast("string").as("text"))
-          .unionByName(docs.filter(isRewritten)
-            .select(col("doc_id"), lit("upsert").as("op"),
-              concat(col("text"), lit(" "), col("text")).as("text")))
-        // TRIPWIRE (the stagedEventsHalves discipline): a regenerated id
-        // space that empties either slice would silently degenerate this
-        // back to a single-verb stream
-        val nI = inserts.count()
-        val nE = edits.count()
-        require(nI > 0 && nE > 0,
-          s"streamMixedSearchDir($dir): a verb slice is empty " +
-            s"(inserts=$nI edits=$nE) — the mixed-verb path would " +
-            "silently stop being exercised")
-        def runSlice(events: DataFrame, name: String): Unit = {
-          graft.streaming.Staging.writeSingleFile(events, srcDir, name)
-          val q = s.readStream.schema(inserts.schema).parquet(srcDir.toString)
-            .writeStream
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, id: Long) =>
-              if (!b.isEmpty) {
-                // route on the batch's op mix: no mutations → the APPEND
-                // verb; any delete/upsert → the EDIT verb, compensating
-                // from the original dir (session discipline as in the
-                // CDC fixture: batch-session frames, outer-session calls)
-                val mutations = b.filter(col("op") =!= "insert")
-                if (mutations.isEmpty) {
-                  val added = b.select("doc_id", "text")
-                  InvertedIndex.appendPositions(s, fix, added, id)
-                  InvertedIndex.append(s, fix, added, id)
-                } else {
-                  val removed = Tables.documents(b.sparkSession, dir)
-                    .join(mutations.select("doc_id"), Seq("doc_id"), "left_semi")
-                  val added = b.filter(col("op") === "upsert")
-                    .select("doc_id", "text")
-                  InvertedIndex.appendPositions(s, fix, added, id)
-                  InvertedIndex.edit(s, fix, removed, added, id)
-                }
-              }
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .start()
-          try require(q.awaitTermination(600000L),
-            "bounded mixed-verb stream must self-stop under AvailableNow")
-          finally q.stop()
+      family: String = "stream_mixed"): String =
+    editFixture(s, family, dir, base = !isBatch) { fix =>
+      val docs = Tables.documents(s, dir)
+      val inserts = docs.filter(isBatch)
+        .select(col("doc_id"), lit("insert").as("op"), col("text"))
+      streamSlices(s, s"streamMixedSearchDir($dir)",
+          Seq(inserts, cdcEvents(docs))) { (b, id) =>
+        val mutations = b.filter(col("op") =!= "insert")
+        if (mutations.isEmpty) {
+          val added = b.select("doc_id", "text")
+          InvertedIndex.appendPositions(s, fix, added, id)
+          InvertedIndex.append(s, fix, added, id)
+        } else {
+          val removed = Tables.documents(b.sparkSession, dir)
+            .join(mutations.select("doc_id"), Seq("doc_id"), "left_semi")
+          val added = b.filter(col("op") === "upsert").select("doc_id", "text")
+          InvertedIndex.appendPositions(s, fix, added, id)
+          InvertedIndex.edit(s, fix, removed, added, id)
         }
-        runSlice(inserts, "mixed-ingest.parquet") // batch 0: APPEND verb
-        runSlice(edits, "mixed-cdc.parquet") // batch 1: EDIT verb, resumed ckpt
-      } finally {
-        StreamGate.deleteRecursively(ckpt)
-        StreamGate.deleteRecursively(srcDir)
       }
-      editedCorpus.write.mode("overwrite").parquet(docsPath)
     }
-    def landBase(): Unit =
-      docs.filter(!isBatch).write.mode("overwrite").parquet(docsPath)
-    if (!new java.io.File(docsPath).exists()) landBase()
-    InvertedIndex.ensure(s, fix)
-    InvertedIndex.ensurePositions(s, fix)
-    // fixture count from footers (no job); the filtered slice counts
-    // below are content checks and stay Spark jobs
-    val n = graft.operators.ParquetFooter.rowCount(docsPath)
-    val baseCount = docs.filter(!isBatch).count()
-    if (n == baseCount) runStream()
-    else if (n == editedCorpus.count() && !InvertedIndex.snapshotStale(s, fix)) ()
-    else { // unrecognized state: rebuild from scratch
-      InvertedIndex.drop(s, fix)
-      landBase()
-      InvertedIndex.ensure(s, fix)
-      InvertedIndex.ensurePositions(s, fix)
-      runStream()
-    }
-    fix
-  }
 
   /** Per-JVM memo of the promotion fixture's action string — the
     * declared q_snapshot_promote must report what promote() ACTUALLY
@@ -705,9 +322,11 @@ object DedupQueries {
     * above any testdata id, so the appended twins never collide. */
   private val PromoteAppendOffset = 100000000L
 
-  /** The PROMOTION fixture behind q_snapshot_promote: a /tmp twin
-    * holding BOTH corpus tables whose canonical per-JVM history is a
-    * MULTI-BATCH promotion sequence (round-15 verdict item 6) —
+  /** The PROMOTION fixture behind q_snapshot_promote. Its generation is a
+    * per-JVM WORKSPACE, the one index fixture whose corpus is rewritten in
+    * place: the declared action strings must come from real promotions,
+    * so each JVM discards any prior state and runs the canonical
+    * MULTI-BATCH promotion sequence —
     *
     *   0. full `documents`/`embeddings` landed, every persisted family
     *      built over them (inverted index + positions + component map;
@@ -722,13 +341,11 @@ object DedupQueries {
     *      interacting with batch 1's tombstone classes) — must return
     *      "docs=appended ann=appended".
     *
-    * Any prior state is DISCARDED first: the declared action strings
-    * must come from real promotions, not replayed no-ops. Returns
-    * (fixture dir, the two actions composed per family:
+    * Returns (fixture dir, the two actions composed per family:
     * "docs=edited+appended ann=edited+appended"). */
   private def promoteFixture(s: SparkSession, dir: String): (String, String) = {
     import graft.operators._
-    val fix = indexFixtureKey(s, "promote", dir)
+    val fix = indexFixture(s, "promote", dir, Seq("documents", "embeddings"))(_ => ())
     val action = promoteActions.computeIfAbsent(fix, _ => {
       val docs = Tables.documents(s, dir)
       val emb = Tables.embeddings(s, dir)
@@ -743,11 +360,8 @@ object DedupQueries {
       InvertedIndex.ensurePositions(s, fix)
       ComponentIndex.rebuild(s, fix)
       PqIndex.ensure(s, fix)
-      val isRemoved = pmod(col("doc_id"), lit(20L)) === 3L
-      val isRewritten = pmod(col("doc_id"), lit(20L)) === 11L
-      docs.filter(!isRemoved).withColumn("text",
-          when(isRewritten, concat(col("text"), lit(" "), col("text")))
-            .otherwise(col("text")))
+      docs.filter(!isRemoved)
+        .withColumn("text", when(isRewritten, doubled).otherwise(col("text")))
         .write.mode("overwrite").parquet(s"$fix/documents.parquet")
       emb.filter(pmod(col("vec_id"), lit(20L)) =!= 3L)
         .write.mode("overwrite").parquet(s"$fix/embeddings.parquet")
@@ -1645,10 +1259,8 @@ object DedupQueries {
     // (doubling text changes no doc's distinct-term set, so the edit
     // batch re-adds exactly the rewritten docs' counts), positional rows
     // are per-doc token counts (the doubled text re-adds 2x).
-    "q_search_index_hygiene" -> ((s, dir) => {
-      val fix = hygieneSearchDir(s, dir)
-      graft.operators.InvertedIndex.hygiene(s, fix)
-    }),
+    "q_search_index_hygiene" -> ((s, dir) =>
+      graft.operators.InvertedIndex.hygiene(s, editedSearchDir(s, dir))),
 
     // CORPUS SEARCH from the persisted inverted index (round 11): top-10
     // documents per query term by the integer-exact tf-idf proxy
@@ -1977,7 +1589,8 @@ object DedupQueries {
         Seq("join", "hash"), Seq("scan"), k = 10)),
 
     // the facet reads the FIXTURE dir's documents (maintained = the full
-    // landed corpus; edited = the landed edited corpus), so eligibility
+    // landed corpus; edited = the pre-edit corpus, whose removed docs have
+    // no live postings and whose rewrites keep their lang), so eligibility
     // itself is maintenance-consistent with what the index serves
     "q_search_filtered_maintained" -> ((s, dir) =>
       graft.operators.InvertedIndex.searchFiltered(s, maintainedSearchDir(s, dir),

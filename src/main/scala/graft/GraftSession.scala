@@ -10,7 +10,10 @@ import org.apache.spark.sql.SparkSession
   * Environment, read once and validated:
   *  - `SPARK_GRAFT_CPUS`: worker threads (`local[n]`, shuffle
   *    partitions = n); default the JVM's available processors;
-  *  - `SPARK_GRAFT_SF_DIR`: the fixture directory queries read.
+  *  - `SPARK_GRAFT_SF_DIR`: the fixture directory queries read;
+  *  - `SPARK_GRAFT_FIXTURE_ROOT`: the path URI under which [[Fixtures]]
+  *    keeps derived fixtures and single-use streaming trees; default
+  *    `java.io.tmpdir`.
   */
 object GraftSession {
 
@@ -28,6 +31,9 @@ object GraftSession {
 
   lazy val sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  lazy val fixtureRoot: String =
+    sys.env.getOrElse("SPARK_GRAFT_FIXTURE_ROOT", sys.props("java.io.tmpdir"))
 
   /** The bench session on `cores` local threads. */
   def local(cores: Int): SparkSession = {

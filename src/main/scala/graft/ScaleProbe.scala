@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{ConnectedComponents, Dedup, MinHashLSH}
 
 /** Self-serve scaling probe: generate corpus tables at a MULTIPLE of the
-  * sf0.1 size (into /tmp — never touching the driver's testdata), run the
+  * sf0.1 size (under the fixture root — never touching the testdata), run the
   * data-dependent dedup/similarity/clustering family, and report wall
   * times plus the GROWTH DIAGNOSTICS the 100 TB story actually rests on:
   * candidate-pair counts (the quadratic risk of every LSH/join family)
@@ -95,76 +95,60 @@ object ScaleProbe {
     else if (r < 86) "es" else "de"
   }
 
-  private def ensureData(spark: SparkSession, mult: Int): String = {
-    val dir = s"/tmp/graft_scale/x$mult"
-    import spark.implicits._
-    // _SUCCESS, not the directory: a run killed mid-write leaves a partial
-    // directory, and timing against a fraction of the intended rows would
-    // silently corrupt the measured exponents (review finding)
-    if (!new java.io.File(s"$dir/documents.parquet/_SUCCESS").exists()) {
-      spark.range(BaseDocs * mult).map { id =>
+  /** Every generated table at `mult` x the sf0.1 row counts, as ONE
+    * [[Fixtures]] generation per (multiplier, generator code): written in
+    * scratch and published by one rename, so a run killed mid-write
+    * publishes nothing — timing against a fraction of the intended rows
+    * would silently corrupt the measured exponents. Relational
+    * distribution choices mirror how real data scales: per-key group
+    * sizes stay CONSTANT (orders/customer ~10, lines/order ~4,
+    * events/user ~67 — more customers and users, not longer histories),
+    * so the probe measures how the plans absorb more groups, which is the
+    * 100 TB question; date/time ranges stay fixed (the sf* fixtures'
+    * 1995-2001 orders, 30-day events). */
+  private def ensureData(spark: SparkSession, mult: Int): String =
+    Fixtures.generation(spark, s"scale_x$mult", Nil,
+      graft.operators.CodeSig.of(ScaleProbe.getClass)) { dir =>
+      import spark.implicits._
+      def write(name: String, df: org.apache.spark.sql.Dataset[_]): Unit =
+        df.write.parquet(s"$dir/$name.parquet")
+      val nCust = BaseCust * mult
+      val nSupp = BaseSupp * mult
+      val nUsers = BaseUsers * mult
+      def ts(micros: Long) = new java.sql.Timestamp(micros / 1000) // input: micros→ms
+      write("documents", spark.range(BaseDocs * mult).map { id =>
         val t = textFor(id)
         Doc(id, t, langFor(id), s"src${id % 5}", t.length)
-      }.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    }
-    if (!new java.io.File(s"$dir/embeddings.parquet/_SUCCESS").exists()) {
-      spark.range(BaseVecs * mult).map { id =>
+      })
+      write("embeddings", spark.range(BaseVecs * mult).map { id =>
         Emb(id,
           Array.tabulate(64)(d => ((mix(id, 100 + d) % 2001) - 1000) / 1000.0f),
           (mix(id, 999) % 10).toInt)
-      }.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    }
-    dir
-  }
-
-  /** Relational tables at `mult` x the sf0.1 row counts. Distribution
-    * choices mirror how real data scales: per-key group sizes stay
-    * CONSTANT (orders/customer ~10, lines/order ~4, events/user ~67 —
-    * more customers and users, not longer histories), so the probe
-    * measures how the plans absorb more groups, which is the 100 TB
-    * question; date/time ranges stay fixed (the sf* fixtures' 1995-2001
-    * orders, 30-day events). */
-  private def ensureRelData(spark: SparkSession, dir: String, mult: Int): Unit = {
-    import spark.implicits._
-    val nCust = BaseCust * mult
-    val nSupp = BaseSupp * mult
-    val nUsers = BaseUsers * mult
-    def ts(micros: Long) = new java.sql.Timestamp(micros / 1000) // input: micros→ms
-    if (!new java.io.File(s"$dir/customer.parquet/_SUCCESS").exists())
-      spark.range(nCust).map(id => Cust(id, (mix(id, 11) % 25).toInt))
-        .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    if (!new java.io.File(s"$dir/supplier.parquet/_SUCCESS").exists())
-      spark.range(nSupp).map(id => Supp(id, (mix(id, 13) % 25).toInt))
-        .write.mode("overwrite").parquet(s"$dir/supplier.parquet")
-    if (!new java.io.File(s"$dir/orders.parquet/_SUCCESS").exists())
-      spark.range(BaseOrders * mult).map { id =>
+      })
+      write("customer", spark.range(nCust).map(id => Cust(id, (mix(id, 11) % 25).toInt)))
+      write("supplier", spark.range(nSupp).map(id => Supp(id, (mix(id, 13) % 25).toInt)))
+      write("orders", spark.range(BaseOrders * mult).map { id =>
         // 1995-01-01 + [0, ~6.57y) — matches the fixture's date span, so
         // q_tpch_local_supplier's 1996-1998 filter keeps ~30% as it does there
         val date = 788918400000000L + mix(id, 17) % 207360000000000L
         Ord(id, mix(id, 19) % nCust, if (mix(id, 23) % 2 == 0) "F" else "O",
             (mix(id, 29) % 10000000L) / 100.0, ts(date))
-      }.write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    if (!new java.io.File(s"$dir/lineitem.parquet/_SUCCESS").exists())
-      spark.range(BaseLines * mult).map { id =>
+      })
+      write("lineitem", spark.range(BaseLines * mult).map { id =>
         Line(mix(id, 31) % (BaseOrders * mult), mix(id, 37) % nSupp,
              (mix(id, 41) % 1000000L) / 100.0, (mix(id, 43) % 11) / 100.0)
-      }.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    if (!new java.io.File(s"$dir/nation.parquet/_SUCCESS").exists())
-      (0 until 25).map(n => Nat(n, s"NATION_$n", n % 5)).toDS()
-        .write.mode("overwrite").parquet(s"$dir/nation.parquet")
-    if (!new java.io.File(s"$dir/region.parquet/_SUCCESS").exists())
-      Seq("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST").zipWithIndex
-        .map { case (r, i) => Reg(i, r) }.toDS()
-        .write.mode("overwrite").parquet(s"$dir/region.parquet")
-    if (!new java.io.File(s"$dir/events.parquet/_SUCCESS").exists())
-      spark.range(BaseEvents * mult).map { id =>
+      })
+      write("nation", (0 until 25).map(n => Nat(n, s"NATION_$n", n % 5)).toDS())
+      write("region", Seq("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
+        .zipWithIndex.map { case (r, i) => Reg(i, r) }.toDS())
+      write("events", spark.range(BaseEvents * mult).map { id =>
         // 30-day window, ~67 events/user; value in [0, 100)
         val t = 1704067200000000L + mix(id, 47) % 2592000000000L
         Ev(id, mix(id, 53) % nUsers, ts(t),
            if (mix(id, 59) % 3 == 0) "view" else "click",
            (mix(id, 61) % 10000L) / 100.0)
-      }.write.mode("overwrite").parquet(s"$dir/events.parquet")
-  }
+      })
+    }
 
   /** The data-dependent family (names resolve via SparkEntry.queries so
     * the probe measures EXACTLY the declared plans). n-gram Jaccard is
@@ -228,10 +212,6 @@ object ScaleProbe {
     // over the high-cardinality group id, probed for its exec tail
     "q_dedup_keep_best")
 
-  /** Names that read the relational/event tables (trigger their generation). */
-  private val RelNames = Set(
-    "q_tpch_local_supplier", "q_window_rank_orders", "q_sessionize")
-
   def main(args: Array[String]): Unit = {
     val mults = if (args.isEmpty) Seq(1, 10) else args.map(_.toInt).toSeq
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "2").toInt
@@ -253,7 +233,6 @@ object ScaleProbe {
     mults.foreach { mult =>
       val dir = ensureData(spark, mult)
       val names = Family.filter(n => only.forall(_.findFirstIn(n).isDefined))
-      if (names.exists(RelNames)) ensureRelData(spark, dir, mult)
       val timed = names.map { name =>
         val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
           if (name == "q_dedup_ngram_jaccard" && ngramCap.isDefined)

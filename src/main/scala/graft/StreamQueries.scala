@@ -34,7 +34,7 @@ object StreamQueries {
   /** The events fixture as a bounded file stream (schema + event-time
     * normalization shared with the batch surface via Tables). */
   private def streamedEvents(s: SparkSession, dir: String): DataFrame =
-    Tables.streamEvents(s, dir, StreamGate.stagedEventsDir(dir))
+    Tables.streamEvents(s, dir, StreamGate.stagedEventsDir(s, dir))
 
   private def evenUsers = pmod(col("user_id"), lit(2L)) === 0L
 
@@ -43,7 +43,8 @@ object StreamQueries {
     // THE reference pipeline, streaming, two-input: the events stream
     // split into two independently-watermarked inputs (the reference's
     // skewed two-partition shape, Main.scala:13-16), unioned under the
-    // default min-of-inputs policy (O3b), counted per event_type per 1h
+    // min-of-inputs policy (O3b) — pinned by GraftSession and refused
+    // otherwise by runBounded's watermark guard — counted per event_type per 1h
     // tumbling window (O4-O7), emitted fire-once in append mode (O8).
     // The slower input's max ts gates every window — the README's thesis.
     "q_stream_window_hourly" -> ((s, dir) => {

@@ -462,6 +462,10 @@ object InvertedIndex {
              batchId: Long): Unit =
     edit(spark, dir, removed, removed.limit(0), batchId)
 
+  /** Whether maintenance batch `batchId` has committed at `dir`. */
+  def committed(spark: SparkSession, dir: String, batchId: Long): Boolean =
+    SnapshotMeta.appliedBatch(spark, metaTable(dir), batchId)
+
   /** Staleness check vs the CURRENT fixture content (explicit, on the
     * pipeline's snapshot-promotion cadence — the ComponentIndex rule):
     * the ledger's SUMMED per-batch fingerprints vs the dir's. After

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -45,28 +44,29 @@ object StreamGate {
 
   private val runSeq = new AtomicLong(0)
 
-  /** Stage `dir`'s events fixture (a single parquet FILE) as a
-    * single-file DIRECTORY — file streams list directories. One
-    * [[Staging]] generation per source (size, mtime); a pure byte copy,
-    * so the signature carries no code component. */
-  def stagedEventsDir(dir: String): String = {
-    val src = Paths.get(s"$dir/events.parquet")
-    Staging.ensureGeneration(Staging.root("events", dir),
-      Staging.srcSig(src)) { scratch =>
-      Files.copy(src, scratch.resolve("part-0.parquet"),
-        StandardCopyOption.COPY_ATTRIBUTES)
-      ()
-    }.toString
-  }
-
-  /** The [[graft.operators.CodeSig]] component of the TRANSFORMING
-    * stagers' signatures: the seeding/split logic lives here and the
-    * event-time normalization in Tables — an edit to either must
-    * re-stage (the round-17 verdict item-1 discipline, applied to the
-    * stream fixtures). */
+  /** The [[graft.operators.CodeSig]] of the stagers: the seeding/split
+    * logic lives here, the event-time normalization in Tables, and the
+    * publication in [[graft.Fixtures]] — an edit to any of them re-stages
+    * instead of serving an earlier transform. */
   private def stagerCodeSig: String =
     graft.operators.CodeSig.of(StreamGate.getClass,
-      graft.sources.Tables.getClass)
+      graft.sources.Tables.getClass, graft.Fixtures.getClass)
+
+  /** One [[graft.Fixtures]] generation per (stager, source events file,
+    * stager code), returned as its directory. */
+  private def staged(spark: SparkSession, family: String, dir: String,
+                     root: String)(build: String => Unit): String =
+    graft.Fixtures.generation(spark, family, Seq(s"$dir/events.parquet"),
+      stagerCodeSig, root)(build)
+
+  /** Stage `dir`'s events fixture (a single parquet FILE) as a
+    * single-file DIRECTORY — file streams list directories. A pure byte
+    * copy. */
+  def stagedEventsDir(spark: SparkSession, dir: String,
+                      root: String = graft.GraftSession.fixtureRoot): String =
+    staged(spark, "events", dir, root) { g =>
+      graft.Fixtures.copy(spark, s"$dir/events.parquet", s"$g/part-0.parquet")
+    }
 
   /** Stage a DUPLICATE-SEEDED twin of `dir`'s events fixture: every
     * `event_id % 10 == 3` row appears TWICE (bit-identical copies — so
@@ -75,22 +75,19 @@ object StreamGate {
     * streams THIS dir so its oracle — a plain projection of the unique
     * `events` rows — actually distinguishes `dropDuplicatesWithinWatermark`
     * from pass-through: a silent no-op would emit the seeded duplicates
-    * and hash-mismatch (round-16 verdict item 1; previously the fixture's
-    * unique event_ids made dedup and pass-through indistinguishable).
-    * Duplicates land in the same micro-batch, where the drop is
-    * unconditional (eviction applies the PREVIOUS batch's watermark, so
-    * no in-batch state expires) — deterministic on any host. One
-    * [[Staging]] generation per (source size+mtime, stager code). */
-  def stagedEventsDupDir(spark: SparkSession, dir: String): String = {
+    * and hash-mismatch. Duplicates land in the same micro-batch, where the
+    * drop is unconditional (eviction applies the PREVIOUS batch's
+    * watermark, so no in-batch state expires) — deterministic on any
+    * host. */
+  def stagedEventsDupDir(spark: SparkSession, dir: String,
+                         root: String = graft.GraftSession.fixtureRoot): String = {
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    val src = Paths.get(s"$dir/events.parquet")
-    Staging.ensureGeneration(Staging.root("events_dups", dir),
-      Staging.srcSig(src) + ":" + stagerCodeSig) { scratch =>
+    staged(spark, "events_dups", dir, root) { g =>
       val ev = graft.sources.Tables.events(spark, dir)
-      val seeded = ev.unionByName(
-        ev.filter(pmod(col("event_id"), lit(10L)) === 3L))
-      Staging.writeSingleFile(seeded, scratch, "part-0.parquet")
-    }.toString
+      graft.Fixtures.publishFile(
+        ev.unionByName(ev.filter(pmod(col("event_id"), lit(10L)) === 3L)),
+        g, "part-0.parquet")
+    }
   }
 
   /** Stage `dir`'s events fixture as TWO single-file halves split on a
@@ -101,42 +98,34 @@ object StreamGate {
     * (the watermark only ever trails data not yet processed), and the
     * hour alignment means no window straddles the split — the fired set
     * equals the single-batch run's, which is what lets the resume query
-    * share its single-batch twin's oracle. One [[Staging]] generation
-    * per (source size+mtime, stager code): BOTH halves publish under one
-    * atomic directory rename, closing the round-17 ADVICE window where
-    * two separate file swaps let a co-tenant JVM read a new-a/old-b
-    * mixed-generation pair mid-restage. */
-  def stagedEventsHalves(spark: SparkSession, dir: String)
-    : (java.nio.file.Path, java.nio.file.Path) = {
+    * share its single-batch twin's oracle. Both halves publish under one
+    * generation rename, so no reader can pair halves of two generations. */
+  def stagedEventsHalves(spark: SparkSession, dir: String,
+                         root: String = graft.GraftSession.fixtureRoot)
+    : (String, String) = {
     import org.apache.spark.sql.functions.{col, date_trunc, max, min, timestamp_millis}
-    val src = Paths.get(s"$dir/events.parquet")
-    val gen = Staging.ensureGeneration(Staging.root("events_2b", dir),
-      Staging.srcSig(src) + ":" + stagerCodeSig) { scratch =>
+    val gen = staged(spark, "events_2b", dir, root) { g =>
       val ev = graft.sources.Tables.events(spark, dir)
       val r = ev.agg(min("ts").cast("long").as("lo"),
         max("ts").cast("long").as("hi")).head()
       val midExpr = date_trunc("hour",
         timestamp_millis(org.apache.spark.sql.functions.lit(
           (r.getLong(0) + r.getLong(1)) / 2 * 1000L)))
-      Staging.writeSingleFile(ev.filter(col("ts") < midExpr),
-        scratch, "half-a.parquet")
-      Staging.writeSingleFile(ev.filter(col("ts") >= midExpr),
-        scratch, "half-b.parquet")
-      // TRIPWIRE, not a silent degrade (review finding): a fixture whose
-      // event-time range spans < ~2 hours makes the hour-truncated
-      // midpoint land at-or-before the first event, one half goes empty,
-      // and the "resume" run degenerates to a single batch while its
-      // oracle stays green — fail the gate loudly instead (the throw
-      // discards the scratch; nothing is published). Every current
-      // fixture spans days; this guards a regenerated one.
-      def n(name: String): Long =
-        spark.read.parquet(scratch.resolve(name).toString).count()
+      graft.Fixtures.publishFile(ev.filter(col("ts") < midExpr), g, "half-a.parquet")
+      graft.Fixtures.publishFile(ev.filter(col("ts") >= midExpr), g, "half-b.parquet")
+      // TRIPWIRE, not a silent degrade: a fixture whose event-time range
+      // spans < ~2 hours makes the hour-truncated midpoint land at-or-
+      // before the first event, one half goes empty, and the "resume" run
+      // degenerates to a single batch while its oracle stays green — fail
+      // the gate loudly instead (the throw publishes nothing). Every
+      // current fixture spans days; this guards a regenerated one.
+      def n(name: String): Long = spark.read.parquet(s"$g/$name").count()
       require(n("half-a.parquet") > 0 && n("half-b.parquet") > 0,
         s"stagedEventsHalves($dir): a half is empty (event-time range too " +
           "narrow for an hour-aligned split) — the resume query would " +
           "silently stop exercising the restart path")
     }
-    (gen.resolve("half-a.parquet"), gen.resolve("half-b.parquet"))
+    (s"$gen/half-a.parquet", s"$gen/half-b.parquet")
   }
 
   /** State-partition count for gate runs. Streaming state partitioning is
@@ -164,32 +153,6 @@ object StreamGate {
     * bytes / target partition size, decided before the first checkpoint
     * write. */
   private val StatePartitions = 4
-
-  /** Root for the gate's SINGLE-USE scratch trees (checkpoints, resume
-    * source/output dirs) — override: SPARK_GRAFT_STREAM_SCRATCH. These
-    * trees live for exactly one bounded run and are deleted in the same
-    * call (see [[runBounded]]/[[runBoundedResume]]), so they are shuffle-
-    * scratch-class state, not durable checkpoints: node-local fast
-    * storage is the right home (guide §5/§6 — the state store commits a
-    * delta file per partition per micro-batch into this tree, and the
-    * offset/commit WALs land here too). Default: `java.io.tmpdir` — a
-    * tmpfs root (/dev/shm) was A/B'd this round and measured NEUTRAL on
-    * the stateful gate queries (4 alternated JobProfile sets, mins
-    * 2.93-3.19 s both ways: the page cache already absorbs these
-    * unsynced small writes), so the default stays the least surprising
-    * location and the knob exists for hosts where local disk is actually
-    * slow, or for a deployment that wants the durable-FS semantics. */
-  private[streaming] lazy val scratchRoot: java.nio.file.Path = {
-    val p = sys.env.get("SPARK_GRAFT_STREAM_SCRATCH")
-      .map(Paths.get(_))
-      .getOrElse(Paths.get(sys.props("java.io.tmpdir")))
-    require(Files.isDirectory(p) && Files.isWritable(p),
-      s"stream scratch root $p must be a writable directory")
-    p
-  }
-
-  private def scratchDir(prefix: String): java.nio.file.Path =
-    Files.createTempDirectory(scratchRoot, prefix)
 
   /** Set the gate's state-partition count, run `start`, restore the
     * previous value. The conf is read once at query start, so restoring
@@ -223,6 +186,7 @@ object StreamGate {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   def runBounded(spark: SparkSession, out: DataFrame): DataFrame = {
+    WatermarkPipeline.requireMinWatermarkPolicy(out)
     // Gate hygiene: memory-sink tables from EARLIER bounded runs are
     // dead weight by the time a new run starts (every gate consumer —
     // Verify's parquet dump, Bench's noop save, the specs' collects —
@@ -233,32 +197,26 @@ object StreamGate {
     liveSinkTables.clear()
     val name = s"graft_stream_gate_${runSeq.incrementAndGet()}"
     liveSinkTables.add(name)
-    val ckpt = scratchDir("graft-gate-ckpt").toString
-    // scoped state-partition sizing (see StatePartitions): the conf is
-    // read once at query start; gate queries run one at a time, so the
-    // session value is restored immediately after. Results are
-    // partition-count-invariant (hash aggregation / join semantics).
-    val q = withGateConfs(spark) {
-      out.writeStream
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-    }
-    try require(q.awaitTermination(600000L),
-      s"bounded stream $name must self-stop under AvailableNow")
-    finally {
-      // the checkpoint is single-use by design (fresh per call — the gate
-      // never resumes) and the memory sink holds the output in driver
-      // memory, so the state-store/offset dirs are dead weight the moment
-      // the query stops: delete them, or a bench pass (streaming queries
-      // × runs × attempts) accumulates dozens of checkpoint trees in /tmp.
-      // Nested finally: a throwing q.stop() (stopTimeout, teardown error)
-      // must not skip the deletion (review finding).
-      try q.stop()
-      finally deleteRecursively(Paths.get(ckpt))
+    // the checkpoint is single-use by design (fresh per call — the gate
+    // never resumes) and the memory sink holds the output in memory, so
+    // the checkpoint tree is deleted once the query stops
+    graft.Fixtures.scratch(spark, "gate-ckpt") { ckpt =>
+      // scoped state-partition sizing (see StatePartitions): the conf is
+      // read once at query start; gate queries run one at a time, so the
+      // session value is restored immediately after. Results are
+      // partition-count-invariant (hash aggregation / join semantics).
+      val q = withGateConfs(spark) {
+        out.writeStream
+          .trigger(Trigger.AvailableNow())
+          .outputMode("append")
+          .format("memory")
+          .queryName(name)
+          .option("checkpointLocation", ckpt)
+          .start()
+      }
+      try require(q.awaitTermination(600000L),
+        s"bounded stream $name must self-stop under AvailableNow")
+      finally q.stop()
     }
     spark.table(name)
   }
@@ -274,29 +232,30 @@ object StreamGate {
     * whose rows live only in run 1's state), and must land exactly the
     * single-batch run's total output — the oracle is the single-batch
     * twin's, unchanged. The sink must be parquet: a memory sink cannot
-    * survive the restart. The checkpoint and the per-call source dir are
-    * single-use and deleted; the (aggregated, small) output parquet is
-    * what the returned frame reads, so it stays. */
+    * survive the restart. Source, checkpoint and output are single-use
+    * trees, deleted on return: the output is aggregated
+    * (windows × keys, the bound the memory sink relies on), so it is
+    * collected into an in-memory frame first. */
   def runBoundedResume(spark: SparkSession, dir: String,
                        build: String => DataFrame): DataFrame = {
     val (a, b) = stagedEventsHalves(spark, dir)
-    val srcDir = scratchDir("graft-gate-resume-src")
-    val ckpt = scratchDir("graft-gate-resume-ckpt")
-    val outDir = scratchDir("graft-gate-resume-out")
-    val schema = build(srcDir.toString).schema
-    try {
-      def step(f: java.nio.file.Path, name: String): Unit = {
-        Files.copy(f, srcDir.resolve(name),
-          StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.COPY_ATTRIBUTES)
+    // the source tree exists before the stream is defined (a file source
+    // refuses a missing path)
+    graft.Fixtures.scratch(spark, "gate-resume-src") { srcDir =>
+    graft.Fixtures.scratch(spark, "gate-resume") { t =>
+      val (ckpt, outDir) = (s"$t/ckpt", s"$t/out")
+      val schema = WatermarkPipeline.requireMinWatermarkPolicy(build(srcDir)).schema
+      def step(f: String, name: String): Unit = {
+        graft.Fixtures.copy(spark, f, s"$srcDir/$name")
         // same scoped gate confs as runBounded; run 2 reuses the
         // partitioning fixed at the checkpoint's creation either way
         val q = withGateConfs(spark) {
-          build(srcDir.toString).writeStream
+          build(srcDir).writeStream
             .trigger(Trigger.AvailableNow())
             .outputMode("append")
             .format("parquet")
-            .option("checkpointLocation", ckpt.toString)
-            .option("path", outDir.toString)
+            .option("checkpointLocation", ckpt)
+            .option("path", outDir)
             .start()
         }
         try require(q.awaitTermination(600000L),
@@ -305,33 +264,11 @@ object StreamGate {
       }
       step(a, "a.parquet")
       step(b, "b.parquet")
-      // LOCALIZE the output — it is aggregated (windows × keys, the same
-      // bound the memory sink relies on), so collect it and return an
-      // in-memory frame: the out dir can then be deleted in the finally
-      // below with the checkpoint, instead of accruing one tree per call
-      // (runs × attempts per bench pass — review finding)
-      val rows = spark.read.schema(schema).parquet(outDir.toString)
-        .collect().toSeq
+      val rows = spark.read.schema(schema).parquet(outDir).collect().toSeq
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows, math.max(1, rows.size / 5000 + 1)),
         schema)
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(srcDir)
-      deleteRecursively(outDir)
+    }
     }
   }
-
-  /** Best-effort recursive delete for the gate's single-use temp trees —
-    * cleanup must never fail a measurement, so any non-fatal error is
-    * swallowed (NOT just IOException: Files.list iteration surfaces a
-    * concurrent deletion as UncheckedIOException — review finding). */
-  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
-    try {
-      if (Files.isDirectory(p))
-        scala.util.Using.resource(Files.list(p))(
-          _.forEach((c: java.nio.file.Path) => deleteRecursively(c)))
-      Files.deleteIfExists(p)
-      ()
-    } catch { case scala.util.control.NonFatal(_) => () }
 }

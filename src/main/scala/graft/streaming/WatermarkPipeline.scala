@@ -23,7 +23,8 @@ import graft.model.Pageview
   * `withWatermark`; `unionByName` under
   * `spark.sql.streaming.multipleWatermarkPolicy=min` gives exactly the
   * min-of-inputs fixpoint (checked when the pipeline is built — the
-  * semantics must not rest on a session default that `max` overrides), at micro-batch granularity instead of Flink's
+  * semantics must not rest on a session default that `max` overrides),
+  * at micro-batch granularity instead of Flink's
   * in-band watermark records. Append output mode emits each window once and
   * evicts its state — the EventTimeTrigger + FoldingState eviction pair.
   *
@@ -36,17 +37,26 @@ object WatermarkPipeline {
 
   private val WatermarkPolicyKey = "spark.sql.streaming.multipleWatermarkPolicy"
 
-  /** Fail fast unless the streams' session combines input watermarks by
-    * MIN: under `max` the fastest input would fire the overlap day's
-    * windows before the slow input's rows arrive, and those rows would be
-    * dropped as late — the opposite of the reference's semantics. */
-  private def requireMinWatermarkPolicy(streams: Seq[Dataset[_]]): Unit =
-    streams.headOption.foreach { ds =>
-      val policy = ds.sparkSession.conf.get(WatermarkPolicyKey, "min")
+  /** The one multi-watermark policy guard: fail fast when `df`'s plan
+    * combines two or more event-time watermarks and its session does not
+    * combine them by MIN — under `max` the fastest input would fire the
+    * overlap day's windows before the slow input's rows arrive, and those
+    * rows would be dropped as late, the opposite of the reference's
+    * semantics. Every pipeline here and every gate run
+    * ([[StreamGate.runBounded]], [[StreamGate.runBoundedResume]]) passes
+    * its plan through it. Returns `df`. */
+  private[graft] def requireMinWatermarkPolicy(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+    val watermarks = df.queryExecution.logical.collect {
+      case w: EventTimeWatermark => w }.size
+    if (watermarks >= 2) {
+      val policy = df.sparkSession.conf.get(WatermarkPolicyKey, "min")
       require(policy.equalsIgnoreCase("min"),
         s"$WatermarkPolicyKey is '$policy': the min-of-inputs watermark " +
           "needs 'min'")
     }
+    df
+  }
 
   /** Union N independently-watermarked pageview streams and count per url
     * per tumbling window. `delay` = 0 seconds reproduces the reference's
@@ -54,16 +64,14 @@ object WatermarkPipeline {
   def windowedCounts(streams: Seq[Dataset[Pageview]],
                      width: String = "1 hour",
                      delay: String = "0 seconds"): DataFrame = {
-    requireMinWatermarkPolicy(streams)
     val watermarked = streams.map(_.withWatermark("ts", delay))
-    val unioned = watermarked.reduce(_ unionByName _)
-    unioned
+    requireMinWatermarkPolicy(watermarked.reduce(_ unionByName _)
       .groupBy(window(col("ts"), width), col("url"))
       .agg(count(lit(1)).as("cnt"))
       .select(
         col("window.start").as("window_start"),
         col("window.end").as("window_end"),
-        col("url"), col("cnt"))
+        col("url"), col("cnt")))
   }
 
   /** Batch replay of the same pipeline — must produce the same rows as the
@@ -86,15 +94,14 @@ object WatermarkPipeline {
   def sessionCounts(streams: Seq[Dataset[Pageview]],
                     gap: String = "10 minutes",
                     delay: String = "0 seconds"): DataFrame = {
-    requireMinWatermarkPolicy(streams)
     val watermarked = streams.map(_.withWatermark("ts", delay))
-    watermarked.reduce(_ unionByName _)
+    requireMinWatermarkPolicy(watermarked.reduce(_ unionByName _)
       .groupBy(session_window(col("ts"), gap), col("url"))
       .agg(count(lit(1)).as("cnt"))
       .select(
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
-        col("url"), col("cnt"))
+        col("url"), col("cnt")))
   }
 
   /** Batch replay of [[sessionCounts]] — the same `session_window`
@@ -123,13 +130,13 @@ object WatermarkPipeline {
                     slide: String = "30 minutes",
                     delay: String = "0 seconds"): DataFrame = {
     val watermarked = streams.map(_.withWatermark("ts", delay))
-    watermarked.reduce(_ unionByName _)
+    requireMinWatermarkPolicy(watermarked.reduce(_ unionByName _)
       .groupBy(window(col("ts"), width, slide), col("url"))
       .agg(count(lit(1)).as("cnt"))
       .select(
         col("window.start").as("window_start"),
         col("window.end").as("window_end"),
-        col("url"), col("cnt"))
+        col("url"), col("cnt")))
   }
 
   /** Batch replay of [[slidingCounts]] — the same sliding-window
@@ -167,12 +174,12 @@ object WatermarkPipeline {
     val v = views.withWatermark("ts", delay)
       .select(col("url").as("v_url"), col("ts").as("v_ts"),
               col("eventId").as("view_id"))
-    p.join(v,
+    requireMinWatermarkPolicy(p.join(v,
       col("url") === col("v_url") &&
         col("v_ts") <= col("p_ts") &&
         col("v_ts") >= col("p_ts") - expr(s"INTERVAL $lookbackSec seconds"))
       .select(col("probe_id"), col("view_id"), col("url"),
-              col("p_ts"), col("v_ts"))
+              col("p_ts"), col("v_ts")))
   }
 
   /** Batch replay of [[intervalJoined]] — same predicate, no watermarks;

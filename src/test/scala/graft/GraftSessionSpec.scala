@@ -44,4 +44,20 @@ class GraftSessionSpec extends SparkSpec {
     }
     assert(hits == List("graft/GraftSession.scala"))
   }
+
+  test("no /tmp literal in main code; fixture code reaches files only through the Hadoop FileSystem") {
+    val root = Paths.get("src/main/scala")
+    val sources = scala.util.Using.resource(Files.walk(root)) { paths =>
+      paths.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => root.relativize(p).toString -> Files.readString(p)).toList
+    }
+    val tmp = sources.collect { case (f, text) if text.contains("\"/tmp") => f }
+    assert(tmp.isEmpty, s"a \"/tmp literal hard-codes the local filesystem: $tmp")
+    val fixtureCode = Set("graft/DedupQueries.scala", "graft/streaming/StreamGate.scala",
+      "graft/ScaleProbe.scala", "graft/Fixtures.scala")
+    assert(fixtureCode.subsetOf(sources.map(_._1).toSet))
+    val local = sources.collect { case (f, text) if fixtureCode(f) &&
+      (text.contains("java.io.File") || text.contains("java.nio.file")) => f }
+    assert(local.isEmpty, s"fixture code must go through org.apache.hadoop.fs: $local")
+  }
 }

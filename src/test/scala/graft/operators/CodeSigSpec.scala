@@ -1,18 +1,15 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
-import graft.SparkSpec
-import graft.streaming.Staging
+import graft.{Fixtures, SparkSpec}
 
-/** The fixture VERSION-KEYING contract (round-17 verdict item 1): a
-  * memoized /tmp fixture built under one code signature must never be
-  * consulted under another — any change to the maintenance-path classes
-  * yields a new signature, hence a new fixture key, hence a rebuild
-  * through the changed code (previously the driver's hash gate could
-  * keep serving stores built by a prior round's code). Plus the shared
-  * [[Staging]] generation discipline (verdict item 6): sig-addressed
-  * immutable generations, one atomic publish, crash-safe. */
+/** The fixture VERSION-KEYING contract: a derived fixture built under one
+  * code signature must never be consulted under another — any change to
+  * the maintenance-path classes yields a new signature, hence a new
+  * generation, hence a rebuild through the changed code. Plus the
+  * [[Fixtures]] generation discipline: sig-addressed immutable
+  * generations, one atomic publish, crash-safe, and one retirement rule. */
 class CodeSigSpec extends SparkSpec {
 
   test("CodeSig: stable within a JVM, distinct across class sets") {
@@ -93,148 +90,153 @@ class CodeSigSpec extends SparkSpec {
     assert(h1 == CodeSig.hash64Hex("/root/testdata/sf0.001"))
   }
 
-  test("the signed set covers the signer itself (CodeSig + Staging)") {
-    // round-18 verdict item 5: indexCodeSig covered the 13 maintenance
-    // classes but not CodeSig or Staging — a bug fix in the hashing or
-    // staging code would NOT have re-keyed fixtures built under the
-    // buggy version. The signed set must include both, closing the
-    // self-reference gap.
+  test("the signed set covers the signer itself (CodeSig + Fixtures)") {
+    // a bug fix in the hashing or publishing code must re-key the fixtures
+    // built under the buggy version, so both sign the index fixtures
     val signed = graft.DedupQueries.indexSignedClasses.toSet
     assert(signed.contains(CodeSig.getClass),
       "a CodeSig change must re-key every fixture it addresses")
-    assert(signed.contains(Staging.getClass),
-      "a Staging change must re-key the fixtures staged through it")
+    assert(signed.contains(Fixtures.getClass),
+      "a Fixtures change must re-key the fixtures published through it")
     // and the composite signature really is CodeSig.of over that list
     assert(graft.DedupQueries.indexCodeSig
       == CodeSig.of(graft.DedupQueries.indexSignedClasses: _*))
   }
 
-  test("indexFixtureKey touches the resolved fixture's mtime — idleness tracks last USE") {
-    // round-18 ADVICE (medium): the 2h sibling-retirement window keyed
-    // on mtime, which serving never advanced — 'quiet for 2h' meant
-    // 'built 2h ago', so a long-lived co-tenant JVM could have its live
-    // fixture retired mid-query. Every indexFixtureKey call now touches
-    // the resolved dir.
-    val fix = java.nio.file.Paths.get(
-      graft.DedupQueries.indexFixtureKey(spark, "touchspec", sfDir))
-    Files.createDirectories(fix)
-    try {
-      val old = System.currentTimeMillis() - 3L * 3600 * 1000
-      Files.setLastModifiedTime(fix,
-        java.nio.file.attribute.FileTime.fromMillis(old))
-      graft.DedupQueries.indexFixtureKey(spark, "touchspec", sfDir)
-      val after = Files.getLastModifiedTime(fix).toMillis
-      assert(after > old + 3600 * 1000L,
-        s"resolving the fixture key must refresh the dir mtime (got $after)")
-    } finally graft.streaming.StreamGate.deleteRecursively(fix)
+  /** A fresh local fixture root, deleted after `body`. */
+  private def withRoot[T](body: String => T): T = {
+    val root = Files.createTempDirectory("graft-fixtures-spec").toString
+    try body(root) finally Fixtures.delete(spark, root)
   }
 
-  test("indexFixtureKey embeds the code signature — a signature change IS a rebuild") {
-    val key = graft.DedupQueries.indexFixtureKey(spark, "sigspec", sfDir)
-    val sig = graft.DedupQueries.indexCodeSig
-    assert(key == s"/tmp/graft_sigspec_v${sig}_${CodeSig.hash64Hex(sfDir)}")
-    // the fixture state machines key EVERYTHING on this dir (parquet,
-    // catalog table names via SnapshotMeta.indexStem, model memos), so a
-    // different signature — i.e. any recompile of the signed classes —
-    // addresses a fixture that does not exist yet and rebuilds through
-    // the current code. Demonstrate with a counterfactual sibling:
-    val other = s"/tmp/graft_sigspec_v${"0" * 16}_${CodeSig.hash64Hex(sfDir)}"
-    assert(other != key && !Files.exists(Paths.get(other)))
-  }
+  private def lineageNames(lineage: String): Set[String] =
+    Fixtures.fs(spark, lineage)
+      .listStatus(new org.apache.hadoop.fs.Path(lineage))
+      .map(_.getPath.getName).toSet
 
-  test("indexFixtureKey retires stale siblings built under other signatures") {
-    val dirHash = CodeSig.hash64Hex(sfDir)
-    val stale = Paths.get(s"/tmp/graft_sigspec_v${"dead" * 4}_$dirHash")
-    val fresh = Paths.get(s"/tmp/graft_sigspec_v${"beef" * 4}_$dirHash")
-    Files.createDirectories(stale)
-    Files.createDirectories(fresh)
-    Files.write(stale.resolve("marker"), Array[Byte](1))
-    // age the stale sibling past the 2h idle cutoff; `fresh` keeps its
-    // just-created mtime — a live co-tenant's fixture must SURVIVE
-    Files.setLastModifiedTime(stale,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 3L * 3600 * 1000))
-    try {
-      val key = graft.DedupQueries.indexFixtureKey(spark, "sigspec", sfDir)
-      assert(!Files.exists(stale),
-        "an idle sibling fixture under a different code signature must be retired")
-      assert(Files.exists(fresh),
-        "a recently-active sibling (a live co-tenant JVM's fixture) must survive")
-      assert(key != stale.toString && key != fresh.toString)
-    } finally graft.streaming.StreamGate.deleteRecursively(fresh)
-  }
-
-  test("ingestFixtureCorpus repairs a torn/double batch append (round-17 ADVICE)") {
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    val s = spark
-    val docs = graft.sources.Tables.documents(s, sfDir)
-    val isBatch = pmod(col("doc_id"), lit(10L)) === 7L
-    val total = docs.count()
-    val fix = "/tmp/graft_repairspec_" + CodeSig.hash64Hex(sfDir)
-    val docsPath = s"$fix/documents.parquet"
-    try {
-      InvertedIndex.drop(s, fix)
-      graft.streaming.StreamGate.deleteRecursively(Paths.get(fix))
-      // normal flow: base landed, base index built, batch slice landed
-      graft.DedupQueries.ingestFixtureCorpus(s, fix, docsPath, docs, isBatch,
-        s"$sfDir/documents.parquet")
-      assert(graft.sources.Tables.documents(s, fix).count() == total)
-      // CORRUPT: double-land the batch slice (the torn/duplicated append
-      // a crash mid-write could leave) — count now exceeds the corpus
-      docs.filter(isBatch).write.mode("append").parquet(docsPath)
-      assert(graft.sources.Tables.documents(s, fix).count() > total)
-      // re-entry detects the unrecognized count, rebuilds wholesale from
-      // the ORIGINAL dir, and converges back to the full corpus — the
-      // state no prior branch ever repaired
-      graft.DedupQueries.ingestFixtureCorpus(s, fix, docsPath, docs, isBatch,
-        s"$sfDir/documents.parquet")
-      assert(graft.sources.Tables.documents(s, fix).count() == total)
-      // and the index family over it is consistent: appending the batch
-      // slice through the ledger closes the staleness handshake
-      val batch = graft.sources.Tables.documents(s, fix).filter(isBatch)
-      InvertedIndex.appendPositions(s, fix, batch)
-      InvertedIndex.append(s, fix, batch)
-      assert(!InvertedIndex.snapshotStale(s, fix))
-    } finally {
-      InvertedIndex.drop(s, fix)
-      graft.streaming.StreamGate.deleteRecursively(Paths.get(fix))
+  test("a signature change addresses a new generation") {
+    withRoot { root =>
+      val src = s"$root/src.bin"
+      Files.write(java.nio.file.Paths.get(src), Array[Byte](1, 2, 3))
+      def path(code: String) =
+        Fixtures.generationPath(spark, "sigspec", Seq(src), code, root)
+      val g1 = Fixtures.generation(spark, "sigspec", Seq(src), "a", root)(_ => ())
+      assert(g1 == path("a") && g1.endsWith("-a"))
+      // a code change: a different, not-yet-built generation
+      assert(path("b") != g1 && !Fixtures.fs(spark, root)
+        .exists(new org.apache.hadoop.fs.Path(path("b"))))
+      // a source change (new length and mtime): a different generation too
+      Files.write(java.nio.file.Paths.get(src), Array[Byte](1, 2, 3, 4))
+      assert(path("a") != g1)
+      // the index fixtures key on the index code signature
+      assert(graft.DedupQueries.indexFixturePath(spark, "sigspec", sfDir)
+        .endsWith("-" + graft.DedupQueries.indexCodeSig))
     }
   }
 
-  test("Staging.ensureGeneration: sig-addressed, memoized, atomic, crash-safe") {
-    val root = Files.createTempDirectory("graft-staging-spec")
-    try {
+  test("a live JVM's generation survives retirement; an idle one is retired") {
+    withRoot { root =>
+      val lineage = s"$root/graft-fixtures/retire-0"
+      val fs = Fixtures.fs(spark, root)
+      def mk(name: String) = fs.mkdirs(new org.apache.hadoop.fs.Path(lineage, name))
+      // a live co-tenant: this test JVM's parent (sbt) holds a lease
+      val parent = ProcessHandle.current().parent().get()
+      val parentStart = parent.info().startInstant().get().toEpochMilli
+      val host = java.net.InetAddress.getLocalHost.getHostName
+      val liveTag = Fixtures.jvmTag(parent.pid(), parentStart, host)
+      // a dead JVM: a lease whose pid now names a process started at another time
+      val deadTag = Fixtures.jvmTag(parent.pid(), parentStart - 1000, host)
+      Seq("keep", "live", "idle", "unleased", s"live.lease.$liveTag",
+        s"idle.lease.$deadTag", s".idle.1.$deadTag").foreach(mk)
+      val retired = scala.collection.mutable.Buffer.empty[String]
+      Fixtures.sweep(spark, lineage, "keep", g => retired += g)
+      assert(lineageNames(lineage) == Set("keep", "live", s"live.lease.$liveTag"),
+        s"got ${lineageNames(lineage)}")
+      assert(retired.map(new org.apache.hadoop.fs.Path(_).getName).toSet ==
+        Set("idle", "unleased"))
+    }
+  }
+
+  test("a build that throws after writing a slice publishes nothing") {
+    withRoot { root =>
+      val docs = graft.sources.Tables.documents(spark, sfDir)
+      def gen(fail: Boolean) =
+        Fixtures.generation(spark, "tornspec", Nil, "v1", root) { g =>
+          Fixtures.publishFile(docs, s"$g/documents.parquet", "base.parquet")
+          if (fail) throw new RuntimeException("killed mid-build")
+        }
+      intercept[RuntimeException](gen(fail = true))
+      val lineage = new org.apache.hadoop.fs.Path(
+        Fixtures.generationPath(spark, "tornspec", Nil, "v1", root)).getParent.toString
+      assert(lineageNames(lineage).forall(_.contains(".lease.")),
+        s"a failed build must leave no generation and no scratch: ${lineageNames(lineage)}")
+      // the next call builds the whole corpus: never a torn or doubled slice
+      val g = gen(fail = false)
+      assert(graft.sources.Tables.documents(spark, g).count() == docs.count())
+    }
+  }
+
+  test("two concurrent builds of one generation return the published one") {
+    withRoot { root =>
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val inside = new java.util.concurrent.CountDownLatch(2)
+      def build(payload: String) = Future {
+        Fixtures.generation(spark, "racespec", Nil, "v1", root) { g =>
+          val out = Fixtures.fs(spark, g).create(new org.apache.hadoop.fs.Path(g, "payload"))
+          try out.write(payload.getBytes) finally out.close()
+          inside.countDown()
+          // both builds are in flight before either publishes
+          assert(inside.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        }
+      }
+      val (a, b) = (build("A"), build("B"))
+      val ga = Await.result(a, scala.concurrent.duration.Duration(120, "s"))
+      val gb = Await.result(b, scala.concurrent.duration.Duration(120, "s"))
+      assert(ga == gb)
+      val in = Fixtures.fs(spark, ga).open(new org.apache.hadoop.fs.Path(ga, "payload"))
+      val payload = try new String(in.readAllBytes()) finally in.close()
+      assert(payload == "A" || payload == "B")
+      val lineage = new org.apache.hadoop.fs.Path(ga).getParent.toString
+      assert(lineageNames(lineage).filterNot(_.contains(".lease.")) ==
+        Set(new org.apache.hadoop.fs.Path(ga).getName),
+        s"one generation, no scratch left: ${lineageNames(lineage)}")
+    }
+  }
+
+  test("Fixtures.generation: sig-addressed, memoized, atomic, crash-safe") {
+    withRoot { root =>
       var builds = 0
       def build(sig: String) =
-        Staging.ensureGeneration(root, sig) { scratch =>
+        Fixtures.generation(spark, "stagespec", Nil, sig, root) { scratch =>
           builds += 1
-          Files.write(scratch.resolve("payload"), sig.getBytes)
-          ()
+          val out = Fixtures.fs(spark, scratch)
+            .create(new org.apache.hadoop.fs.Path(scratch, "payload"))
+          try out.write(sig.getBytes) finally out.close()
         }
+      def payload(g: String) = {
+        val in = Fixtures.fs(spark, g).open(new org.apache.hadoop.fs.Path(g, "payload"))
+        try new String(in.readAllBytes()) finally in.close()
+      }
       val g1 = build("v1")
-      assert(Files.exists(g1.resolve("payload")) && builds == 1)
+      assert(payload(g1) == "v1" && builds == 1)
       assert(build("v1") == g1 && builds == 1) // memoized: no rebuild
       val g2 = build("v2") // new sig → new generation, old one intact
       assert(g2 != g1 && builds == 2)
-      assert(new String(Files.readAllBytes(g1.resolve("payload"))) == "v1")
-      assert(new String(Files.readAllBytes(g2.resolve("payload"))) == "v2")
+      assert(payload(g1) == "v1")
+      assert(payload(g2) == "v2")
       // a throwing build publishes NOTHING (the scratch is discarded) —
       // the next call builds cleanly
       intercept[RuntimeException] {
-        Staging.ensureGeneration(root, "v3") { _ =>
+        Fixtures.generation(spark, "stagespec", Nil, "v3", root) { _ =>
           throw new RuntimeException("torn build")
         }
       }
-      val names = scala.util.Using.resource(Files.list(root)) { st =>
-        val it = st.iterator()
-        val b = scala.collection.mutable.Buffer.empty[String]
-        while (it.hasNext) b += it.next().getFileName.toString
-        b.toList
-      }
-      assert(names.count(_.startsWith("gen-")) == 2,
-        s"torn build must not publish a generation: $names")
+      val lineage = new org.apache.hadoop.fs.Path(g1).getParent.toString
+      val gens = lineageNames(lineage).filterNot(n => n.startsWith(".") || n.contains(".lease."))
+      assert(gens.size == 2, s"torn build must not publish a generation: $gens")
       val g3 = build("v3")
-      assert(Files.exists(g3.resolve("payload")) && builds == 3)
-    } finally graft.streaming.StreamGate.deleteRecursively(root)
+      assert(payload(g3) == "v3" && builds == 3)
+    }
   }
 }

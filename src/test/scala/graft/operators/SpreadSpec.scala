@@ -58,7 +58,7 @@ class SpreadSpec extends SparkSpec {
       spark.range(1000).toDF("doc_id").repartition(5)
         .write.mode("overwrite").parquet(dir.toString)
       fastEqualsPhysical(spark.read.parquet(dir.toString))
-    } finally graft.streaming.StreamGate.deleteRecursively(dir)
+    } finally graft.Fixtures.delete(spark, dir.toString)
   }
 
   test("plan-free width probe sees partition pruning and production-width " +
@@ -74,7 +74,7 @@ class SpreadSpec extends SparkSpec {
       assert(one < all, s"partition pruning must narrow the scan: $one vs $all")
       fastEqualsPhysical(spark.read.parquet(dir.toString)
         .filter($"doc_id" > 10 && $"k" < 2))
-    } finally graft.streaming.StreamGate.deleteRecursively(dir)
+    } finally graft.Fixtures.delete(spark, dir.toString)
     // a production-width scan, emulated by splitting the fixture file into
     // small byte ranges: the probe must see it wide, and Spread must then
     // leave it alone (the full-corpus shuffle the guard exists to avoid)
@@ -115,6 +115,6 @@ class SpreadSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$parted/_hidden")
       assert(ParquetFooter.rowCount(parted) == spark.read.parquet(parted).count())
       assert(ParquetFooter.rowCount(parted) == expected)
-    } finally graft.streaming.StreamGate.deleteRecursively(dir)
+    } finally graft.Fixtures.delete(spark, dir.toString)
   }
 }

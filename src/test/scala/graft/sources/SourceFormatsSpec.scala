@@ -96,6 +96,6 @@ class SourceFormatsSpec extends SparkSpec {
       val rebuilt = Tables.load(s, dir.toString, "t")
       assert(rebuilt.columns.toSeq == Seq("b", "c"))
       assert(rebuilt.count() == 3)
-    } finally graft.streaming.StreamGate.deleteRecursively(dir)
+    } finally graft.Fixtures.delete(spark, dir.toString)
   }
 }

@@ -269,9 +269,9 @@ class StreamGateSpec extends SparkSpec {
     // same-commit co-tenant JVM is mid-serve on (same code signature ⇒
     // same fixture path) — so the spec rebuilds its own family and
     // leaves the declared query's fixture alone
-    val fix = graft.DedupQueries.indexFixtureKey(spark, "stream_ingest_spec", sfDir)
+    val fix = graft.DedupQueries.indexFixturePath(spark, "stream_ingest_spec", sfDir)
     graft.operators.InvertedIndex.drop(spark, fix)
-    StreamGate.deleteRecursively(java.nio.file.Paths.get(fix))
+    graft.Fixtures.delete(spark, fix)
     val served = graft.DedupQueries.streamIngestSearchDir(
       spark, sfDir, "stream_ingest_spec")
     assert(served == fix)
@@ -298,18 +298,16 @@ class StreamGateSpec extends SparkSpec {
   }
 
   test("q_stream_index_cdc: streamed deletes/rewrites serve the edited-corpus answer through tombstones") {
-    // Force the CANONICAL history in THIS JVM: a fresh JVM over a
-    // completed fixture legally rebuilds the base over the edited corpus
-    // (identical answers, no stream — catalog tables are per-JVM), but
-    // this test pins the STREAMED two-batch structure, so it starts from
-    // scratch: base over the full corpus, then both CDC slices through
-    // one checkpoint — under a TEST-PRIVATE family (round-18 ADVICE: the
-    // shared fixture may be mid-serve in a same-commit co-tenant JVM;
-    // dropping it here was the co-tenancy failure class the 2h
-    // retirement window exists to prevent)
-    val fix = graft.DedupQueries.indexFixtureKey(spark, "stream_cdc_spec", sfDir)
+    // Force the CANONICAL history from scratch: this test pins the
+    // STREAMED two-batch structure, so it drops whatever an earlier
+    // caller in this JVM built and starts over: base over the full
+    // corpus, then both CDC slices through one checkpoint — under a
+    // TEST-PRIVATE family (round-18 ADVICE: the
+    // shared fixture may be mid-serve in a same-commit co-tenant JVM,
+    // which its lease protects from retirement but not from this drop)
+    val fix = graft.DedupQueries.indexFixturePath(spark, "stream_cdc_spec", sfDir)
     graft.operators.InvertedIndex.drop(spark, fix)
-    StreamGate.deleteRecursively(java.nio.file.Paths.get(fix))
+    graft.Fixtures.delete(spark, fix)
     val served = graft.DedupQueries.streamCdcSearchDir(
       spark, sfDir, "stream_cdc_spec")
     assert(served == fix)
@@ -353,9 +351,9 @@ class StreamGateSpec extends SparkSpec {
     // slice, a restart resumes the checkpoint, batch 1 applies the CDC
     // edit, and serving reads the appended docs THROUGH batch 1's
     // tombstones. Canonical history forced under a TEST-PRIVATE family.
-    val fix = graft.DedupQueries.indexFixtureKey(spark, "stream_mixed_spec", sfDir)
+    val fix = graft.DedupQueries.indexFixturePath(spark, "stream_mixed_spec", sfDir)
     graft.operators.InvertedIndex.drop(spark, fix)
-    StreamGate.deleteRecursively(java.nio.file.Paths.get(fix))
+    graft.Fixtures.delete(spark, fix)
     val served = graft.DedupQueries.streamMixedSearchDir(
       spark, sfDir, "stream_mixed_spec")
     assert(served == fix)
@@ -452,7 +450,7 @@ class StreamGateSpec extends SparkSpec {
     } finally {
       q.stop()
       s.catalog.dropTempView("boundary_out")
-      StreamGate.deleteRecursively(java.nio.file.Paths.get(ckpt))
+      graft.Fixtures.delete(s, ckpt)
     }
   }
 
@@ -481,7 +479,7 @@ class StreamGateSpec extends SparkSpec {
       }
     }
 
-    val src = Tables.streamEvents(spark, sfDir, StreamGate.stagedEventsDir(sfDir))
+    val src = Tables.streamEvents(spark, sfDir, StreamGate.stagedEventsDir(spark, sfDir))
     val p = src.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("p_ts"))
       .withWatermark("p_ts", "0 seconds")

@@ -134,6 +134,22 @@ class WatermarkStreamingSpec extends SparkSpec {
         WatermarkPipeline.windowedCounts(streams))
       assert(ex.getMessage.contains("'max'"), ex.getMessage)
       intercept[IllegalArgumentException](WatermarkPipeline.sessionCounts(streams))
+      intercept[IllegalArgumentException](WatermarkPipeline.slidingCounts(streams))
+      intercept[IllegalArgumentException](
+        WatermarkPipeline.intervalJoined(streams(0), streams(1)))
+      // the gate queries that union or join two watermarked inputs are
+      // refused by the gate runs before any stream starts
+      Seq("q_stream_window_hourly", "q_stream_join_hourly").foreach { q =>
+        val e = intercept[IllegalArgumentException](
+          graft.StreamQueries.queries(q)(s, sfDir))
+        assert(e.getMessage.contains("'max'"), s"$q: ${e.getMessage}")
+      }
+      intercept[IllegalArgumentException](
+        StreamGate.runBoundedResume(s, sfDir, src => {
+          val ev = graft.sources.Tables.streamEvents(s, sfDir, src)
+          ev.withWatermark("ts", "0 seconds")
+            .unionByName(ev.withWatermark("ts", "0 seconds"))
+        }))
     } finally saved match {
       case Some(v) => s.conf.set(key, v)
       case None => s.conf.unset(key)

@@ -229,10 +229,11 @@ object ComponentIndex {
     * doc sits in a LATER batch — strict `<`, so an [[edit]]'s own
     * rewrite rows stay live; the [[InvertedIndex.postingsFor]] rule),
     * with the ledger's `batch_id` partition column projected away. The
-    * tombstone side is churn-sized and broadcast — a broadcast
-    * anti-join preserves the store scan's bucketed distribution, so
-    * join consumers still co-partition — and with no tombstone table
-    * the read is the bare scan. Every maintenance derivation reads
+    * tombstone side is churn-sized and applied as a filter
+    * ([[SnapshotMeta.withoutTombstones]]), which preserves the store
+    * scan's bucketed distribution, so join consumers still
+    * co-partition — and with no tombstone table the read is the bare
+    * scan. Every maintenance derivation reads
     * through here: a [[merge]] after an [[edit]] must not resurrect a
     * removed doc through its leftover stored signatures. */
   def bandedFor(spark: SparkSession, dir: String): DataFrame =

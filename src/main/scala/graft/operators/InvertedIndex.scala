@@ -261,11 +261,21 @@ object InvertedIndex {
   /** The live BM25 constants — (n, dltot) summed over the per-batch
     * stats rows (additive over disjoint doc sets; [[edit]] batches
     * contribute NET rows, added minus removed, so the sum stays the live
-    * corpus), as a 1-row frame. O(#batches) rows, never a corpus scan. */
-  def statsFor(spark: SparkSession, dir: String): DataFrame =
-    spark.table(statsTable(dir))
-      .agg(coalesce(sum("n"), lit(0L)).as("n"),
-        coalesce(sum("dltot"), lit(0L)).as("dltot"))
+    * corpus), as a 1-row local frame. The O(#batches) rows are read once
+    * per set of stats files ([[SnapshotMeta.memoRows]]) and summed on the
+    * driver, never a corpus scan. */
+  def statsFor(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    Seq(liveStats(spark, dir)).toDF("n", "dltot")
+  }
+
+  /** [[statsFor]]'s (n, dltot), which the serving paths enter into the
+    * plan as literals ([[Consts]]): no cross join, no job. The sums use
+    * exact arithmetic, as the ANSI `sum` they replace. */
+  private def liveStats(spark: SparkSession, dir: String): (Long, Long) =
+    SnapshotMeta.memoRows(spark, statsTable(dir)).foldLeft((0L, 0L)) { (a, r) =>
+      (Math.addExact(a._1, r.getAs[Long]("n")), Math.addExact(a._2, r.getAs[Long]("dltot")))
+    }
 
   /** The LIVE vocabulary — (term, df) with df the number of live
     * documents containing the term: the per-batch `_vocab` rows summed
@@ -305,8 +315,10 @@ object InvertedIndex {
   /** The LIVE postings relation — stored rows minus tombstoned docs:
     * a row dies when some tombstone for its doc sits in a LATER batch
     * (strict `<`, so an [[edit]] that rewrites a doc re-admits the
-    * rewrite's own rows). The tombstone side is ~churn-sized and
-    * broadcast; with no tombstone table the read is the bare scan. All
+    * rewrite's own rows). The tombstone side is ~churn-sized, read once
+    * per set of tombstone files and applied as a job-free filter
+    * ([[SnapshotMeta.withoutTombstones]]); with no tombstone table the
+    * read is the bare scan. All
     * serving paths read through here (and [[positionsFor]]), so a
     * delete is visible to every query the moment its batch commits. */
   def postingsFor(spark: SparkSession, dir: String): DataFrame =
@@ -316,6 +328,8 @@ object InvertedIndex {
   def positionsFor(spark: SparkSession, dir: String): DataFrame =
     live(spark, dir, spark.table(ensurePositions(spark, dir)))
 
+  /** Stored rows minus tombstoned docs — [[postingsFor]]'s rule over any
+    * of the family's (doc_id, batch_id) tables. */
   private def live(spark: SparkSession, dir: String, rows: DataFrame): DataFrame =
     SnapshotMeta.withoutTombstones(spark, tombTable(dir), "doc_id", rows)
 
@@ -398,7 +412,7 @@ object InvertedIndex {
     * discipline):
     *
     *   1. tombstones → partition overwrite: the removed ids. Serving
-    *      reads ([[postingsFor]]/[[positionsFor]]) anti-join them with
+    *      reads ([[postingsFor]]/[[positionsFor]]) drop rows with
     *      `row.batch_id < tombstone.batch_id`, so every OLDER row of a
     *      tombstoned doc dies while this batch's own rewrite rows live
     *   2. postings → partition overwrite with `postings(added)`
@@ -484,7 +498,7 @@ object InvertedIndex {
   def ensurePositions(spark: SparkSession, dir: String): String = {
     ensure(spark, dir)
     val t = posTable(dir)
-    if (!spark.catalog.tableExists(t)) {
+    if (!SnapshotMeta.exists(spark, t)) {
       SnapshotMeta.dropOrphanLocation(spark, t)
       positions(graft.sources.Tables.documents(spark, dir))
         .withColumn("batch_id", lit(SnapshotMeta.BaseBatchId))
@@ -613,16 +627,33 @@ object InvertedIndex {
     * those rows; ranking windows over tiny per-term groups. N comes from
     * the ledger-backed [[statsFor]] — O(#batches) rows, never a
     * query-time corpus scan, and always in step with the stored postings
-    * (a live corpus count could diverge after an append). The 1-row N
-    * aggregate cross-joins as a scalar (the whitelisted pattern). */
+    * (a live corpus count could diverge after an append) — entered into
+    * the plan as a literal. */
   def search(spark: SparkSession, dir: String, terms: Seq[String],
              k: Int = 10): DataFrame = {
     val canon = terms.map(canonicalTerm).filter(_.nonEmpty)
     require(canon.nonEmpty, "search needs at least one non-empty term")
-    rankedFromPostings(
+    tfidfRanked(
       postingsFor(spark, dir).filter(col("term").isin(canon: _*)),
-      statsFor(spark, dir).select("n"),
-      k)
+      Consts.live(spark, dir), k)
+  }
+
+  /** The corpus constants as a scoring tail reads them: the `n`/`dltot`
+    * columns of a 1-row stats frame cross-joined beside the hits (the
+    * index-free replay's form), or the live [[statsFor]] values as plan
+    * literals (the served form: no cross join, no broadcast job). Both
+    * forms feed the same expression trees ([[tfidfScore]],
+    * [[bm25Score]]); every input is an integer-valued double either way,
+    * so they score bit-identically. */
+  private final case class Consts(beside: DataFrame => DataFrame, n: Column,
+                                  dltot: Column)
+  private object Consts {
+    def of(stats: DataFrame): Consts =
+      Consts(_.crossJoin(stats), col("n"), col("dltot"))
+    def live(spark: SparkSession, dir: String): Consts = {
+      val (n, dltot) = liveStats(spark, dir)
+      Consts(identity, lit(n), lit(dltot))
+    }
   }
 
   /** THE scoring/ranking tail — one definition shared by [[search]] and
@@ -630,14 +661,18 @@ object InvertedIndex {
     * computation on both sides by construction): per-term df from the
     * given postings rows, score = tf × floor(N·2^20/df), top-k per term
     * with doc_id ties. `nDocs` is a 1-row (n BIGINT) scalar frame. */
-  def rankedFromPostings(post: DataFrame, nDocs: DataFrame, k: Int): DataFrame = {
+  def rankedFromPostings(post: DataFrame, nDocs: DataFrame, k: Int): DataFrame =
+    tfidfRanked(post, Consts.of(nDocs), k)
+
+  private def tfidfScore(c: Consts): Column =
+    col("tf") * floor((c.n.cast("double") * 1048576.0) / col("df_")).cast("long")
+
+  private def tfidfRanked(post: DataFrame, c: Consts, k: Int): DataFrame = {
     val dfq = post.groupBy("term").agg(count(lit(1)).as("df_"))
     val w = Window.partitionBy("term")
       .orderBy(col("score").desc, col("doc_id").asc)
-    post.join(dfq, "term").crossJoin(nDocs)
-      .withColumn("score",
-        col("tf") * floor((col("n").cast("double") * 1048576.0) / col("df_"))
-          .cast("long"))
+    c.beside(post.join(dfq, "term"))
+      .withColumn("score", tfidfScore(c))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("term", "doc_id", "tf", "score", "rank")
@@ -647,7 +682,8 @@ object InvertedIndex {
     * BM25, served from the pruned postings scan: dl rides in the hit
     * rows (no corpus join), N and total token count come from
     * [[statsFor]] — the per-batch `_stats` rows summed, O(#batches), no
-    * corpus scan — per-term df from exactly the pruned rows. The doc-level top-k is an orderBy+limit —
+    * corpus scan, entered as plan literals — per-term df from exactly
+    * the pruned rows. The doc-level top-k is an orderBy+limit —
     * TakeOrderedAndProject, the distributed per-partition-heap top-k —
     * NOT a single-partition rank window; the rank column is attached
     * after the limit, over ≤ k rows. */
@@ -655,9 +691,9 @@ object InvertedIndex {
                  k: Int = 10): DataFrame = {
     val canon = terms.map(canonicalTerm).filter(_.nonEmpty)
     require(canon.nonEmpty, "searchBm25 needs at least one non-empty term")
-    bm25FromPostings(
+    bm25Ranked(
       postingsFor(spark, dir).filter(col("term").isin(canon: _*)),
-      statsFor(spark, dir), k)
+      Consts.live(spark, dir), k)
   }
 
   /** Top-k documents for a PREFIX query (`pre*`), served from the
@@ -858,9 +894,9 @@ object InvertedIndex {
     else {
       val allTerms = exp.map(_._2).distinct
       val mapping = broadcast(exp.toDF("qterm", "term"))
-      bm25PerQueryFromPostings(
+      bm25PerQueryRanked(
         postingsFor(spark, dir).filter(col("term").isin(allTerms: _*)),
-        mapping, statsFor(spark, dir), k)
+        mapping, Consts.live(spark, dir), k)
     }
   }
 
@@ -872,17 +908,16 @@ object InvertedIndex {
     * multiply with the batch size, which is exactly when the batch
     * path is chosen. */
   def bm25PerQueryFromPostings(post: DataFrame, mapping: DataFrame,
-                               stats: DataFrame, k: Int): DataFrame = {
+                               stats: DataFrame, k: Int): DataFrame =
+    bm25PerQueryRanked(post, mapping, Consts.of(stats), k)
+
+  private def bm25PerQueryRanked(post: DataFrame, mapping: DataFrame,
+                                 c: Consts, k: Int): DataFrame = {
     val dfq = post.groupBy("term").agg(count(lit(1)).as("df_"))
-    val num = (lit(2.0) * col("n") - lit(2.0) * col("df_") + lit(1.0)) *
-      (lit(22.0) * col("tf") * col("dltot"))
-    val den = (lit(2.0) * col("df_") + lit(1.0)) *
-      (lit(10.0) * col("tf") * col("dltot") + lit(3.0) * col("dltot") +
-        lit(9.0) * col("dl") * col("n"))
     val w = Window.partitionBy("qterm")
       .orderBy(col("score").desc, col("doc_id").asc)
-    post.join(dfq, "term").join(mapping, Seq("term")).crossJoin(stats)
-      .withColumn("s", floor(lit(1048576.0) * num / den).cast("long"))
+    c.beside(post.join(dfq, "term").join(mapping, Seq("term")))
+      .withColumn("s", bm25Score(c))
       .groupBy("qterm", "doc_id")
       .agg(count(lit(1)).cast("long").as("n_terms"), sum("s").as("score"))
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -904,15 +939,25 @@ object InvertedIndex {
     * every input is an integer-valued double, ×,/ are IEEE
     * exactly-rounded, so the floor is bit-portable. Doc score = sum of
     * per-term longs (sum-of-floors, not floor-of-sum — exact in int64). */
-  def bm25FromPostings(post: DataFrame, stats: DataFrame, k: Int): DataFrame = {
-    val dfq = post.groupBy("term").agg(count(lit(1)).as("df_"))
-    val num = (lit(2.0) * col("n") - lit(2.0) * col("df_") + lit(1.0)) *
-      (lit(22.0) * col("tf") * col("dltot"))
+  def bm25FromPostings(post: DataFrame, stats: DataFrame, k: Int): DataFrame =
+    bm25Ranked(post, Consts.of(stats), k)
+
+  /** The per-(term, doc) BM25 score over the hit rows' `tf`, `dl`, `df_`
+    * and the corpus constants — the one expression tree every BM25 tail
+    * evaluates. */
+  private def bm25Score(c: Consts): Column = {
+    val num = (lit(2.0) * c.n - lit(2.0) * col("df_") + lit(1.0)) *
+      (lit(22.0) * col("tf") * c.dltot)
     val den = (lit(2.0) * col("df_") + lit(1.0)) *
-      (lit(10.0) * col("tf") * col("dltot") + lit(3.0) * col("dltot") +
-        lit(9.0) * col("dl") * col("n"))
-    val ranked = post.join(dfq, "term").crossJoin(stats)
-      .withColumn("s", floor(lit(1048576.0) * num / den).cast("long"))
+      (lit(10.0) * col("tf") * c.dltot + lit(3.0) * c.dltot +
+        lit(9.0) * col("dl") * c.n)
+    floor(lit(1048576.0) * num / den).cast("long")
+  }
+
+  private def bm25Ranked(post: DataFrame, c: Consts, k: Int): DataFrame = {
+    val dfq = post.groupBy("term").agg(count(lit(1)).as("df_"))
+    val ranked = c.beside(post.join(dfq, "term"))
+      .withColumn("s", bm25Score(c))
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("long").as("n_terms"), sum("s").as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
@@ -971,10 +1016,10 @@ object InvertedIndex {
     require(canon.nonEmpty, "searchFiltered needs at least one query term")
     val eligible = graft.sources.Tables.documents(spark, dir)
       .filter(facet).select("doc_id")
-    bm25FromPostings(
+    bm25Ranked(
       postingsFor(spark, dir).filter(col("term").isin(canon: _*))
         .join(eligible, Seq("doc_id"), "left_semi"),
-      statsFor(spark, dir), k)
+      Consts.live(spark, dir), k)
   }
 
   /** Top-k BM25 over `terms` EXCLUDING documents that contain any of
@@ -997,10 +1042,10 @@ object InvertedIndex {
     val post = postingsFor(spark, dir)
     val banned = broadcast(
       post.filter(col("term").isin(canonNot: _*)).select("doc_id").distinct())
-    bm25FromPostings(
+    bm25Ranked(
       post.filter(col("term").isin(canon: _*))
         .join(banned, Seq("doc_id"), "left_anti"),
-      statsFor(spark, dir), k)
+      Consts.live(spark, dir), k)
   }
 
   /** Top-k documents containing an exact PHRASE (consecutive tokens),

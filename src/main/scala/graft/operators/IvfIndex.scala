@@ -195,7 +195,7 @@ object IvfIndex {
     * counts plus the dead fraction. THE compaction-scheduling signal in
     * production, complementing the fixed ledger-count trigger
     * ([[SnapshotMaintenance.compactAfter]]): dead_frac is the serving
-    * tax tombstones levy (dead bytes scanned + anti-join width) that a
+    * tax tombstones levy (dead bytes scanned + filter width) that a
     * fold reclaims — a scheduler folds on EITHER signal, stamp count or
     * dead share. Includes the codes store when the PQ family is present
     * (its parity with the cells row is itself a health check). Counts
@@ -221,7 +221,7 @@ object IvfIndex {
     * are assigned to the FROZEN centroids and land as a normal batch
     * partition. Cost is O(batch) writes — the resident corpus is never
     * read, moved, or re-assigned; the serving-side price is one
-    * broadcast anti-join against O(removed) bare ids until [[compact]]
+    * filter against O(removed) bare ids until [[compact]]
     * applies the tombstones physically. Scoring is per-row, so a
     * tombstoned candidate's absence is EXACT: probes equal the same
     * probes over an index built without those vectors (frozen

@@ -255,7 +255,7 @@ object PqIndex {
     * tombstones + the adds' cells partition land through the coarse
     * edit (one ledger, one commit point), then the adds' CODES land in
     * the codes table's matching partition. The shared tombstone list
-    * covers both tables — probes anti-join it until compaction — so no
+    * covers both tables — probes filter on it until compaction — so no
     * second removal structure exists to desync. Crash windows repair
     * exactly as [[append]]'s: per-batch parity re-lands a torn codes
     * partition, the session parity signature is the backstop. */

@@ -175,7 +175,7 @@ object SnapshotMaintenance {
     * are the MONITORING view; this is the cheap per-batch SCHEDULING
     * view. The two triggers complement: stamp count bounds file
     * accretion (partition/file explosion), dead share bounds the
-    * tombstone serving tax (dead bytes scanned + anti-join width). */
+    * tombstone serving tax (dead bytes scanned + filter width). */
   private[operators] def compactDeadShare: Double =
     SnapshotMeta.knob("graft.index.compactDeadShare", _.toDoubleOption, "a number")(
       v => v >= 0.0 && v <= 1.0, "in [0, 1]").getOrElse(0.0)

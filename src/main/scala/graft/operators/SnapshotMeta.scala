@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The batch-commit lifecycle of the persisted-index families
@@ -53,7 +53,7 @@ object SnapshotMeta {
     * stale) or the stamp differs from `current`. */
   def stale(spark: SparkSession, metaTable: String,
             current: (Long, Long)): Boolean =
-    if (!spark.catalog.tableExists(metaTable)) true
+    if (!exists(spark, metaTable)) true
     else {
       val r = spark.table(metaTable).head()
       (r.getLong(0), r.getLong(1)) != current
@@ -171,7 +171,7 @@ object SnapshotMeta {
     * last batch). The equality filter prunes to one ledger partition. */
   def appliedBatch(spark: SparkSession, metaTable: String,
                    batchId: Long): Boolean =
-    spark.catalog.tableExists(metaTable) &&
+    exists(spark, metaTable) &&
       !spark.table(metaTable).filter(col("batch_id") === batchId).isEmpty
 
   /** The ledger's summed fingerprint — equals the fingerprint of the
@@ -185,10 +185,18 @@ object SnapshotMeta {
   }
 
   /** True when `t` exists IN THE BATCHED-LEDGER SCHEMA: a pre-ledger
-    * table (no `batch_id` column) would pass a bare tableExists check and
-    * then fail the first partition overwrite, so callers rebuild it. */
+    * table (no `batch_id` column) would pass a bare existence check and
+    * then fail the first partition overwrite, so callers rebuild it. Read
+    * from the session catalog's metadata alone: every search request's
+    * `ensure` asks this of five tables, and analysing each table would
+    * cost milliseconds apiece. */
   def ledgered(spark: SparkSession, t: String): Boolean =
-    spark.catalog.tableExists(t) && spark.table(t).columns.contains("batch_id")
+    exists(spark, t) && tableMeta(spark, t).schema.fieldNames.contains("batch_id")
+
+  /** Whether table `t` exists, from the session catalog's metadata (no
+    * analysis, no file listing). */
+  def exists(spark: SparkSession, t: String): Boolean =
+    spark.sessionState.catalog.tableExists(ident(spark, t))
 
   /** The ledger's minimum batch id, None on an EMPTY ledger (manually
     * truncated debris) — min over zero rows is SQL null, and a bare
@@ -227,7 +235,7 @@ object SnapshotMeta {
     * the fold and dies on the same ledger). */
   private[operators] def hasDerivedBatches(spark: SparkSession,
                                            metaTable: String): Boolean =
-    spark.catalog.tableExists(metaTable) &&
+    exists(spark, metaTable) &&
       minBatchId(spark, metaTable).exists(_ < BaseBatchId)
 
   /** Guard for content-derived-id APPENDS on a family that has absorbed
@@ -240,7 +248,7 @@ object SnapshotMeta {
   private[operators] def requireNoTombstonedIds(spark: SparkSession,
                                                 tomb: String, batch: DataFrame,
                                                 idCol: String): Unit = {
-    if (!spark.catalog.tableExists(tomb)) return
+    if (!exists(spark, tomb)) return
     val hidden = batch.select(col(idCol))
       .join(broadcast(spark.table(tomb).select(col(idCol))),
         Seq(idCol), "left_semi")
@@ -302,17 +310,16 @@ object SnapshotMeta {
     * FileSystem of the table's default path, so a non-local warehouse
     * is cleaned the same way. */
   def dropOrphanLocation(spark: SparkSession, table: String): Unit =
-    if (!spark.catalog.tableExists(table)) {
-      val cat = spark.sessionState.catalog
-      val loc = new org.apache.hadoop.fs.Path(cat.defaultTablePath(
-        spark.sessionState.sqlParser.parseTableIdentifier(table)))
+    if (!exists(spark, table)) {
+      val loc = new org.apache.hadoop.fs.Path(
+        spark.sessionState.catalog.defaultTablePath(ident(spark, table)))
       loc.getFileSystem(spark.sessionState.newHadoopConf()).delete(loc, true)
     }
 
   /** [[stale]] against the batched ledger's summed fingerprint. */
   def staleBatched(spark: SparkSession, metaTable: String,
                    current: (Long, Long)): Boolean =
-    !spark.catalog.tableExists(metaTable) ||
+    !exists(spark, metaTable) ||
       summedFingerprint(spark, metaTable) != current
 
   /** Shared builder for the families' hygiene rows ([[graft.operators
@@ -338,20 +345,54 @@ object SnapshotMeta {
   /** Apply tombstone visibility to rows carrying (`idCol`, batch_id): a
     * row is dead iff some tombstone with a STRICTLY higher batch id names
     * its id, so an edit's own rewrite rows (and a re-added id's newer
-    * rows) stay live. The tombstone side is O(removed) bare ids,
-    * broadcast — a broadcast anti-join keeps the store scan's bucketed
-    * distribution — and with no tombstone table the read is the bare
-    * scan. */
+    * rows) stay live. The tombstone side is O(removed) bare ids, read
+    * once per set of tombstone files ([[memoRows]]) and applied as a
+    * plain filter, one disjunct per tombstone batch `b`:
+    * `batch_id < b AND id IN (ids of b)`. Spark plans each IN over more
+    * than a handful of ids as a hash `InSet`, so the read launches no
+    * job of its own and keeps the store scan's bucketed distribution.
+    * With no tombstone table the read is the bare scan. */
   def withoutTombstones(spark: SparkSession, tombTable: String, idCol: String,
                         rows: DataFrame): DataFrame =
-    if (!spark.catalog.tableExists(tombTable)) rows
+    if (!exists(spark, tombTable)) rows
     else {
-      val t = broadcast(spark.table(tombTable)
-        .select(col(idCol).as("t_id"), col("batch_id").as("t_batch")))
-      rows.join(t,
-        rows(idCol) === t("t_id") && rows("batch_id") < t("t_batch"),
-        "left_anti")
+      val dead = memoRows(spark, tombTable)
+        .groupBy(_.getAs[Long]("batch_id"))
+        .toSeq.sortBy(_._1)
+        .map { case (b, ts) =>
+          col("batch_id") < b && col(idCol).isin(ts.map(_.getAs[Any](idCol)).distinct: _*)
+        }
+        .reduceOption(_ || _)
+      // a null id is never tombstoned: coalesce the unknown verdict to
+      // live
+      dead.fold(rows)(d => rows.filter(!coalesce(d, lit(false))))
     }
+
+  /** Driver-side copies of small ledger-side tables (a family's
+    * `_stats` rows, its tombstones), one entry per table name, each
+    * keyed on the exact data files a query of the table would read now
+    * (`Dataset.inputFiles`). Spark names every written file with a
+    * per-write UUID, so every writer changes the key without an
+    * invalidation hook: a batch append or edit, a compact fold, a drop
+    * and rebuild, a write from another session. */
+  private val memo =
+    new java.util.concurrent.ConcurrentHashMap[String, (Set[String], Array[Row])]()
+
+  /** The collected rows of table `t`, read again only when its data
+    * files changed since the last read. Thread-safe: concurrent readers
+    * of a changed table may each collect it, and each returns the rows of
+    * the files it listed. */
+  private[operators] def memoRows(spark: SparkSession, t: String): Array[Row] = {
+    val df = spark.table(t)
+    val key = df.inputFiles.toSet
+    val hit = memo.get(t)
+    if (hit != null && hit._1 == key) hit._2
+    else {
+      val rows = df.collect()
+      memo.put(t, (key, rows))
+      rows
+    }
+  }
 
   /** Idempotently (re)write exactly the `batch_id = batchId` partition of
     * `table` with `df`'s rows, creating the (unbucketed) table when it is
@@ -366,7 +407,7 @@ object SnapshotMeta {
     * ComponentIndex.merge cross-session lesson). */
   private[operators] def overwritePartition(spark: SparkSession, table: String,
                                             batchId: Long, df: DataFrame): Unit = {
-    if (!spark.catalog.tableExists(table)) {
+    if (!exists(spark, table)) {
       dropOrphanLocation(spark, table)
       df.withColumn("batch_id", lit(batchId))
         .write.partitionBy("batch_id").saveAsTable(table)
@@ -462,6 +503,8 @@ object SnapshotMeta {
         s"$t exists but carries no bucket spec — not a graft-built index table"))
 
   private def tableMeta(spark: SparkSession, t: String) =
-    spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
+    spark.sessionState.catalog.getTableMetadata(ident(spark, t))
+
+  private def ident(spark: SparkSession, t: String) =
+    spark.sessionState.sqlParser.parseTableIdentifier(t)
 }

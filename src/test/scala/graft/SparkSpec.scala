@@ -8,6 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** Run `body` over a fresh directory tree under the fixture root, deleted
+    * when `body` returns ([[Fixtures.scratch]]): the home of a test's
+    * checkpoints, stream sources and sink outputs. */
+  def withScratch[T](prefix: String)(body: String => T): T =
+    Fixtures.scratch(spark, prefix)(body)
 }
 
 object SparkSpec {

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -24,29 +23,31 @@ class AvailableNowSpec extends SparkSpec {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
 
-    val ckpt = Files.createTempDirectory("graft-an-ckpt").toString
-    val outPath = Files.createTempDirectory("graft-an-out").toString
-    val ms = MemoryStream[Pageview]
+    withScratch("graft-an") { root =>
+      val ckpt = s"$root/ckpt"
+      val outPath = s"$root/out"
+      val ms = MemoryStream[Pageview]
 
-    def runOnce(): Unit = {
-      val q = ms.toDS().writeStream
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .option("checkpointLocation", ckpt)
-        .option("path", outPath)
-        .start()
-      assert(q.awaitTermination(60000), "AvailableNow query must self-stop")
+      def runOnce(): Unit = {
+        val q = ms.toDS().writeStream
+          .trigger(Trigger.AvailableNow())
+          .format("parquet")
+          .option("checkpointLocation", ckpt)
+          .option("path", outPath)
+          .start()
+        assert(q.awaitTermination(60000), "AvailableNow query must self-stop")
+      }
+
+      ms.addData(pv("u/0", 1), pv("u/1", 2))
+      runOnce()
+      assert(s.read.parquet(outPath).count() == 2)
+
+      ms.addData(pv("u/2", 3))
+      runOnce()
+      val rows = s.read.parquet(outPath).select("eventId").collect()
+        .map(_.getString(0)).sorted.toSeq
+      // exactly once across invocations: 3 rows total, none duplicated
+      assert(rows == Seq("e1-u/0", "e2-u/1", "e3-u/2"), s"got $rows")
     }
-
-    ms.addData(pv("u/0", 1), pv("u/1", 2))
-    runOnce()
-    assert(s.read.parquet(outPath).count() == 2)
-
-    ms.addData(pv("u/2", 3))
-    runOnce()
-    val rows = s.read.parquet(outPath).select("eventId").collect()
-      .map(_.getString(0)).sorted.toSeq
-    // exactly once across invocations: 3 rows total, none duplicated
-    assert(rows == Seq("e1-u/0", "e2-u/1", "e3-u/2"), s"got $rows")
   }
 }

@@ -46,29 +46,30 @@ class SinkModesSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("febatch").toString
-    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val m = MemoryStream[Pageview]
-    val q = m.toDS()
-      .groupBy(col("url")).agg(count(lit(1)).as("cnt"))
-      .writeStream.outputMode("complete")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        seen.synchronized { seen += batchId }
-        // idempotent pattern: overwrite a deterministic per-batch location
-        batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
-    try {
-      m.addData(Pageview("a", ts("2016-02-01T00:00:00Z"), "1"),
-                Pageview("a", ts("2016-02-01T00:01:00Z"), "2"))
-      q.processAllAvailable()
-      m.addData(Pageview("b", ts("2016-02-01T00:02:00Z"), "3"))
-      q.processAllAvailable()
-      assert(seen.nonEmpty && seen.toSeq == seen.toSeq.sorted, s"ordered batch ids: $seen")
-      val last = s.read.parquet(s"$outDir/batch=${seen.max}")
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-      assert(last == Set(("a", 2L), ("b", 1L)),
-        s"final complete-mode snapshot: $last")
-    } finally q.stop()
+    withScratch("febatch") { outDir =>
+      val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val m = MemoryStream[Pageview]
+      val q = m.toDS()
+        .groupBy(col("url")).agg(count(lit(1)).as("cnt"))
+        .writeStream.outputMode("complete")
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+          seen.synchronized { seen += batchId }
+          // idempotent pattern: overwrite a deterministic per-batch location
+          batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+        }
+        .start()
+      try {
+        m.addData(Pageview("a", ts("2016-02-01T00:00:00Z"), "1"),
+                  Pageview("a", ts("2016-02-01T00:01:00Z"), "2"))
+        q.processAllAvailable()
+        m.addData(Pageview("b", ts("2016-02-01T00:02:00Z"), "3"))
+        q.processAllAvailable()
+        assert(seen.nonEmpty && seen.toSeq == seen.toSeq.sorted, s"ordered batch ids: $seen")
+        val last = s.read.parquet(s"$outDir/batch=${seen.max}")
+          .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+        assert(last == Set(("a", 2L), ("b", 1L)),
+          s"final complete-mode snapshot: $last")
+      } finally q.stop()
+    }
   }
 }

@@ -161,14 +161,14 @@ object DedupQueries {
   }
 
   /** The MAINTAINED-index fixture behind q_search_*_maintained: the
-    * append history with the batch applied directly (positions first —
-    * the postings ledger stamp is the batch's single commit record, so a
-    * crash between the two replays both). */
+    * append history with the batch applied directly as batch 1 (positions
+    * first — the postings ledger stamp is the batch's single commit
+    * record, so a crash between the two replays both). */
   private[graft] def maintainedSearchDir(s: SparkSession, dir: String,
       root: String = GraftSession.fixtureRoot): String =
     appendFixture(s, "maint_search", dir, root) { (fix, batch) =>
-      InvertedIndex.appendPositions(s, fix, batch)
-      InvertedIndex.append(s, fix, batch)
+      InvertedIndex.appendPositions(s, fix, batch, 1L)
+      InvertedIndex.append(s, fix, batch, 1L)
     }
 
   /** The STREAM-INGESTED index fixture behind q_stream_index_ingest: the

@@ -27,15 +27,13 @@ import org.apache.spark.sql.functions._
   */
 object AnnMaintenance {
 
-  private def content(e: DataFrame): DataFrame =
-    e.select(col("vec_id"), col("embedding").cast("string").as("content"))
-
   /** Classify `cur` (the dir's embeddings) against `prev` and apply the
     * cheapest sound maintenance to the whole ANN family. Returns
     * "no_change" / "appended" / "edited" / "rebuilt", with "+compacted"
     * appended when the post-commit housekeeping folded the family. */
   def maintain(spark: SparkSession, dir: String, prev: DataFrame,
                batchId: Long): String = {
+    SnapshotMeta.requireBatchId(batchId)
     val cur = graft.sources.Tables.embeddings(spark, dir)
     val meta = IvfIndex.metaTable(dir)
     if (SnapshotMeta.appliedBatch(spark, meta, batchId)) {
@@ -70,27 +68,16 @@ object AnnMaintenance {
       SnapshotMeta.stampBatch(spark, meta, batchId, (0L, 0L))
       return "rebuilt"
     }
-    val d = SnapshotDiff.diff(content(prev), content(cur),
-      idCol = "vec_id", contentCol = "content")
-      .withColumnRenamed("doc_id", "vec_id")
-    val classes = d.select("status").distinct()
-      .collect().map(_.getString(0)).toSet
-    val act =
-      if (classes.isEmpty) return "no_change"
-      else if (classes == Set("added")) {
-        val batch = cur.join(d.select("vec_id"), Seq("vec_id"), "left_semi")
-        PqIndex.append(spark, dir, batch, batchId, "vec_id", "embedding")
+    val act = SnapshotDiff.delta(prev, cur, "vec_id",
+        col("embedding").cast("string")) match {
+      case None => return "no_change"
+      case Some(d) if d.appendOnly =>
+        PqIndex.append(spark, dir, d.added, batchId)
         "appended"
-      } else {
-        val outIds = d.filter(col("status").isin("removed", "changed"))
-          .select("vec_id")
-        val inIds = d.filter(col("status").isin("added", "changed"))
-          .select("vec_id")
-        PqIndex.edit(spark, dir,
-          prev.join(outIds, Seq("vec_id"), "left_semi"),
-          cur.join(inIds, Seq("vec_id"), "left_semi"), batchId)
+      case Some(d) =>
+        PqIndex.edit(spark, dir, d.removed, d.added, batchId)
         "edited"
-      }
+    }
     val fold =
       SnapshotMaintenance.foldDue(spark, meta, IvfIndex.tombTable(dir))
     if (fold) {

@@ -36,7 +36,7 @@ object BpeVocab {
       val docs = graft.sources.Tables.documents(spark, dir)
       BpeTrain.trainScalable(docs, "text")
         .write.mode("overwrite").saveAsTable(t)
-      SnapshotMeta.stamp(spark, metaTable(dir),
+      SnapshotMeta.stampBatch(spark, metaTable(dir), SnapshotMeta.BaseBatchId,
         SnapshotMeta.fingerprint(docs, "doc_id"))
     }
     t
@@ -49,7 +49,7 @@ object BpeVocab {
     * (vocabulary training has no sound incremental path: one new
     * pre-token can reorder every later merge's argmax). */
   def snapshotStale(spark: SparkSession, dir: String): Boolean =
-    SnapshotMeta.stale(spark, metaTable(dir),
+    SnapshotMeta.staleBatched(spark, metaTable(dir),
       SnapshotMeta.fingerprint(
         graft.sources.Tables.documents(spark, dir), "doc_id"))
 

@@ -313,16 +313,6 @@ object ComponentIndex {
     t
   }
 
-  /** [[merge]] with a content-derived batch id — for callers without a
-    * durable external batch identity ([[SnapshotMeta.withDerivedId]]: a
-    * genuinely new batch naming a tombstoned id is refused; a committed
-    * batch replays as a no-op, so re-adding previously deleted content
-    * byte-identical to its original batch silently no-ops — re-ingest
-    * deleted content through the durable non-negative-id overload). */
-  def merge(spark: SparkSession, dir: String, batch: DataFrame): String =
-    SnapshotMeta.withDerivedId(spark, metaTable(dir), tombTable(dir), "doc_id",
-      batch, "doc_id", Seq("doc_id", "text"))(merge(spark, dir, batch, _))
-
   /** THE edited-map derivation — the incremental recompute under
     * removals/rewrites, one definition shared by [[edit]] and the live
     * declared replay (q_corpus_dedup_edited). Components are transitive,
@@ -389,17 +379,16 @@ object ComponentIndex {
     *   4. ledger stamp with the NET fingerprint (added − removed) — the
     *      COMMIT POINT; the summed ledger still equals the edited dir
     *
-    * `batchId` must be explicit, non-negative, and greater than every
-    * batch id previously applied at this dir (tombstone visibility
-    * orders on batch id — content-derived ids sit below the base
-    * partition and cannot order an edit). At 100 TB the cost is
+    * `batchId` must be greater than every batch id previously applied
+    * at this dir (tombstone visibility orders on batch id, so an older
+    * id could not hide newer rows). At 100 TB the cost is
     * O(churn + affected-component members): tombstones are id-rows, no
     * resident store partition is read beyond the affected semi-join,
     * and the map rewrite is the same cluster-members-only relation
     * [[merge]] already pays. */
   def edit(spark: SparkSession, dir: String, removed: DataFrame,
            added: DataFrame, batchId: Long): String = {
-    SnapshotMeta.requireEditId(batchId)
+    SnapshotMeta.requireBatchId(batchId)
     val t = ensure(spark, dir)
     val bt = ensureBanded(spark, dir)
     if (SnapshotMeta.appliedBatch(spark, metaTable(dir), batchId)) return t

@@ -385,22 +385,6 @@ object InvertedIndex {
       SnapshotMeta.fingerprint(batch.select(col("doc_id")).distinct(), "doc_id"))
   }
 
-  /** [[append]] with a content-derived batch id — for callers without a
-    * durable external batch identity ([[SnapshotMeta.withDerivedId]]).
-    * Derived ids land at `<= -2`, strictly below every tombstone, so a
-    * GENUINELY NEW batch naming a tombstoned id is refused; brand-new ids
-    * append fine on an edited family. A batch that already committed
-    * replays as a silent no-op even when a later edit tombstoned its ids
-    * (the crash-replay contract wins over the refusal). Consequence:
-    * RE-ADDING previously deleted content that is byte-identical to the
-    * original batch hashes to the same derived id, reads as applied, and
-    * no-ops — the docs never serve again. Re-ingest deleted content
-    * through the durable non-negative-id overload (a fresh id above the
-    * tombstones). */
-  def append(spark: SparkSession, dir: String, batch: DataFrame): Unit =
-    SnapshotMeta.withDerivedId(spark, metaTable(dir), tombTable(dir), "doc_id",
-      batch, "doc_id", Seq("doc_id", "text"))(append(spark, dir, batch, _))
-
   /** Incremental maintenance for an EDITED snapshot — the diff classes
     * that previously forced a full rebuild (removals and rewrites),
     * handled at churn cost. `removed` is the outgoing content — the
@@ -427,10 +411,9 @@ object InvertedIndex {
     * postings rows (token-less text), and independent of the current
     * tombstone state, which is what makes a torn run replay clean.
     *
-    * Contracts: `batchId` must be explicit, non-negative, and greater
-    * than every batch id previously applied at this dir (tombstone
-    * visibility orders on batch id — content-derived ids sit below the
-    * base partition and cannot order an edit); `removed` rows must be
+    * Contracts: `batchId` must be greater than every batch id
+    * previously applied at this dir (tombstone visibility orders on
+    * batch id, so an older id could not hide newer rows); `removed` rows must be
     * live index content (double-deleting a doc breaks the stats
     * compensation); `added` ids must be new or among `removed`. Old
     * positions die through the same tombstones — callers maintaining
@@ -440,7 +423,7 @@ object InvertedIndex {
     * read or rewritten. */
   def edit(spark: SparkSession, dir: String, removed: DataFrame,
            added: DataFrame, batchId: Long): Unit = {
-    SnapshotMeta.requireEditId(batchId)
+    SnapshotMeta.requireBatchId(batchId)
     val t = ensure(spark, dir)
     if (SnapshotMeta.appliedBatch(spark, metaTable(dir), batchId)) return
     val tombs = removed.select(col("doc_id")).distinct()
@@ -523,20 +506,6 @@ object InvertedIndex {
     val t = ensurePositions(spark, dir)
     SnapshotMeta.overwritePartition(spark, t, batchId, positions(batch))
   }
-
-  /** [[appendPositions]] with the content-derived batch id (matches the
-    * 3-arg [[append]]'s slot for the same batch — and the same
-    * tombstoned-id refusal, so the torn state where positions land but
-    * the paired [[append]] refuses cannot arise). */
-  def appendPositions(spark: SparkSession, dir: String, batch: DataFrame): Unit =
-    // positions have no ledger of their own and the write is an
-    // idempotent partition overwrite — ALWAYS run it (direct callers may
-    // legally run append() in either order around this); the tombstone
-    // guard is skipped once the paired append() committed this id: a
-    // replay of a committed batch whose ids a LATER edit tombstoned must
-    // re-land identical rows quietly, not throw (round-14 ADVICE)
-    SnapshotMeta.withDerivedId(spark, metaTable(dir), tombTable(dir), "doc_id",
-      batch, "doc_id", Seq("doc_id", "text"))(appendPositions(spark, dir, batch, _))
 
   def drop(spark: SparkSession, dir: String): Unit =
     SnapshotMeta.dropTables(spark, table(dir), metaTable(dir), statsTable(dir),

@@ -33,7 +33,7 @@ object IvfIndex {
   /** Shared with [[PqIndex]]: the PQ code tables live in the same
     * per-fixture family, so the stems must stay bit-identical. */
   private[operators] def tableStem(dir: String): String =
-    "ivf_index_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    SnapshotMeta.indexStem("ivf_index_", dir)
 
   /** Drop the fixture's index tables without rebuilding — snapshot
     * retirement, and test hygiene for temp fixtures. */
@@ -130,9 +130,12 @@ object IvfIndex {
     * before the stamp leaves no commit record and the re-run REPLACES the
     * partial partition instead of double-appending beside it (the defect
     * the pre-ledger blind `mode("append")` had) — spec-pinned by the
-    * kill-between-writes test in IvfIndexSpec. */
+    * kill-between-writes test in IvfIndexSpec. `batchId` is the caller's
+    * durable, non-negative id (foreachBatch's batchId, or its own
+    * counter); `idCol`/`vecCol` name the batch's id and vector columns. */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
-             batchId: Long, idCol: String, vecCol: String): Unit = {
+             batchId: Long, idCol: String = "vec_id",
+             vecCol: String = "embedding"): Unit = {
     SnapshotMeta.requireBatchId(batchId)
     val (cellsT, cents) = ensureIndex(spark, dir)
     if (SnapshotMeta.appliedBatch(spark, metaTable(dir), batchId)) return
@@ -145,20 +148,6 @@ object IvfIndex {
     SnapshotMeta.stampBatch(spark, metaTable(dir), batchId,
       SnapshotMeta.fingerprint(batch.select(col(idCol)), idCol))
   }
-
-  /** [[append]] with a content-derived batch id — for callers without a
-    * durable external batch identity (foreachBatch callers should pass
-    * their batchId instead). The id keys on (id, vector) content, so
-    * replaying the same batch reuses the same ledger slot
-    * ([[SnapshotMeta.withDerivedId]]: tombstoned ids in a genuinely new
-    * batch are refused; a committed batch replays as a no-op, so
-    * re-adding deleted (id, vector) content identical to its original
-    * batch silently no-ops — re-ingest deleted vectors through the
-    * durable non-negative-id overload). */
-  def append(spark: SparkSession, dir: String, batch: DataFrame,
-             idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    SnapshotMeta.withDerivedId(spark, metaTable(dir), tombTable(dir), "vec_id",
-      batch, idCol, Seq(idCol, vecCol))(append(spark, dir, batch, _, idCol, vecCol))
 
   /** Staleness check vs the CURRENT fixture content (explicit, on the
     * pipeline's snapshot-promotion cadence — the ComponentIndex rule):
@@ -228,12 +217,13 @@ object IvfIndex {
     * centroids), spec-pinned. Crash-idempotent under the batched
     * ledger: tombstones, then the adds partition, then the commit
     * stamp; every pre-stamp state replays convergently and a committed
-    * batch no-ops. Requires a DURABLE non-negative id — tombstone
-    * visibility orders on batch id ([[InvertedIndex.edit]]'s rule). */
+    * batch no-ops. `batchId` must exceed every id applied before it —
+    * tombstone visibility orders on batch id ([[InvertedIndex.edit]]'s
+    * rule). */
   def edit(spark: SparkSession, dir: String, removed: DataFrame,
            added: DataFrame, batchId: Long,
            idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    SnapshotMeta.requireEditId(batchId)
+    SnapshotMeta.requireBatchId(batchId)
     val (cellsT, cents) = ensureIndex(spark, dir)
     if (SnapshotMeta.appliedBatch(spark, metaTable(dir), batchId)) return
     val tombs = removed.select(col(idCol).as("vec_id")).distinct()

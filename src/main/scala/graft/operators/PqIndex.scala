@@ -60,10 +60,6 @@ object PqIndex {
     * cells table. */
   def compact(spark: SparkSession, dir: String): Unit = {
     val (codesT, _, _, _) = ensure(spark, dir)
-    // fail fast BEFORE the codes fold: this runs first in the
-    // (PqIndex, IvfIndex) compact pair, and the coarse compact would
-    // refuse the same derived-id ledger after the codes were already
-    // rewritten
     val foldId = SnapshotMeta.foldId(spark, IvfIndex.metaTable(dir))
     val rows = IvfIndex.live(spark, dir, spark.table(codesT))
       .drop("batch_id").localCheckpoint(true)
@@ -213,9 +209,12 @@ object PqIndex {
     * check; a fully committed batch replays as a no-op. The
     * session-level parity-signature self-heal in [[ensure]] remains the
     * backstop for batches ingested via [[IvfIndex.append]] directly
-    * (spec-pinned by the kill-between-writes test in PqIndexSpec). */
+    * (spec-pinned by the kill-between-writes test in PqIndexSpec).
+    * `batchId` is the caller's durable, non-negative id, as for
+    * [[IvfIndex.append]]. */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
-             batchId: Long, idCol: String, vecCol: String): Unit =
+             batchId: Long, idCol: String = "vec_id",
+             vecCol: String = "embedding"): Unit =
     withCodes(spark, dir, batchId, batch, idCol, vecCol)(
       IvfIndex.append(spark, dir, batch, batchId, idCol, vecCol))
 
@@ -236,19 +235,6 @@ object PqIndex {
           col(vecCol).as("embedding"))
         .select(col("vec_id"), col("cell"), codes(cents, cb)))
   }
-
-  /** [[append]] with a content-derived batch id (the [[IvfIndex.append]]
-    * convention — foreachBatch callers should pass their batchId). The
-    * SAME derivation as the coarse index's, so both tables share one
-    * ledger slot per batch, and the same tombstoned-id refusal (the
-    * tombstone table is shared). A committed batch's replay still
-    * reaches the inner append, which no-ops the coarse side and repairs
-    * a torn codes partition via the parity check. */
-  def append(spark: SparkSession, dir: String, batch: DataFrame,
-             idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    SnapshotMeta.withDerivedId(spark, IvfIndex.metaTable(dir),
-      IvfIndex.tombTable(dir), "vec_id", batch, idCol, Seq(idCol, vecCol))(
-      append(spark, dir, batch, _, idCol, vecCol))
 
   /** Removals and re-embeddings for the WHOLE PQ family, paired with
     * [[IvfIndex.edit]] the way [[append]] pairs with the coarse append:

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.PortableHash
@@ -44,5 +44,29 @@ object SnapshotDiff {
           .when(not(col("h_prev") <=> col("h_cur")), lit("changed")))
       .filter(col("status").isNotNull)
       .select("doc_id", "status")
+  }
+
+  /** A non-empty delta as maintenance batches: `removed` holds the
+    * previous snapshot's rows that leave (removed or changed ids),
+    * `added` the current snapshot's rows that arrive (added or changed
+    * ids), both with their full columns. `appendOnly` when every class is
+    * `added` — the case the append verbs cover. */
+  final case class Delta(removed: DataFrame, added: DataFrame, appendOnly: Boolean)
+
+  /** [[diff]] of `prev` and `cur` keyed on `idCol`, comparing `content`,
+    * split into a [[Delta]]; None when nothing changed. The per-class
+    * check is one tiny aggregate over the delta (~churn rows). */
+  def delta(prev: DataFrame, cur: DataFrame, idCol: String,
+            content: Column): Option[Delta] = {
+    def keyed(df: DataFrame) = df.select(col(idCol), content.as("content"))
+    val d = diff(keyed(prev), keyed(cur), idCol, "content")
+    val classes = d.select("status").distinct()
+      .collect().map(_.getString(0)).toSet
+    def rows(side: DataFrame, statuses: String*): DataFrame =
+      side.join(d.filter(col("status").isin(statuses: _*))
+        .select(col("doc_id").as(idCol)), Seq(idCol), "left_semi")
+    if (classes.isEmpty) None
+    else Some(Delta(rows(prev, "removed", "changed"),
+      rows(cur, "added", "changed"), classes == Set("added")))
   }
 }

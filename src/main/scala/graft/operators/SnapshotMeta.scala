@@ -27,9 +27,7 @@ object SnapshotMeta {
     * the sanitizer alone would collide distinct paths differing only in
     * punctuation, and ensure() would serve the wrong snapshot's table
     * (the round-10 review finding). One definition so a future change to
-    * the collision rule lands everywhere at once. ([[IvfIndex]] predates
-    * the hash suffix and keeps its unsuffixed names — renaming would
-    * orphan existing warehouse tables.) */
+    * the collision rule lands everywhere at once. */
   def indexStem(prefix: String, dir: String): String = {
     val h = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(dir))
     prefix + dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + h
@@ -40,24 +38,6 @@ object SnapshotMeta {
     val r = df.agg(count(lit(1)), sum(col(idCol))).head()
     (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L))
   }
-
-  /** Write the fingerprint into `metaTable` (overwriting any previous
-    * stamp). */
-  def stamp(spark: SparkSession, metaTable: String, fp: (Long, Long)): Unit = {
-    import spark.implicits._
-    dropOrphanLocation(spark, metaTable)
-    Seq(fp).toDF("n_rows", "id_sum").write.mode("overwrite").saveAsTable(metaTable)
-  }
-
-  /** True when no stamp exists (an unverifiable index is treated as
-    * stale) or the stamp differs from `current`. */
-  def stale(spark: SparkSession, metaTable: String,
-            current: (Long, Long)): Boolean =
-    if (!exists(spark, metaTable)) true
-    else {
-      val r = spark.table(metaTable).head()
-      (r.getLong(0), r.getLong(1)) != current
-    }
 
   // ------------------------------------------------------------------
   // BATCHED LEDGER — the crash-idempotent maintenance contract (round-11
@@ -76,46 +56,11 @@ object SnapshotMeta {
   // ------------------------------------------------------------------
 
   /** The base build's ledger partition, shared by every batched-ledger
-    * index ([[InvertedIndex]], [[ComponentIndex]]). foreachBatch batch
-    * ids start at 0, so the base sits below every legitimate maintenance
-    * batch; derived ids ([[derivedBatchId]]) sit strictly below it. */
+    * index. Maintenance batches carry durable ids from 0 up
+    * (foreachBatch's batchId, or the caller's own counter), so the base
+    * sits below every one of them and a tombstone always outranks the
+    * base rows it hides. */
   val BaseBatchId: Long = -1L
-
-  /** A content-derived batch id for maintenance callers without an
-    * external one: a 64-bit mix of the batch's content fingerprint,
-    * forced into [Long.MinValue, -2] — strictly below [[BaseBatchId]] and
-    * disjoint from foreachBatch's small non-negative ids, so a derived id
-    * can never silently no-op a distinct external batch via the ledger
-    * check. Replaying the SAME batch content reuses the same slot —
-    * idempotent by construction. Callers with a durable batch identity
-    * (foreachBatch's batchId) should pass it instead. */
-  private[operators] def derivedBatchId(fp: (Long, Long)): Long = {
-    val h = (java.lang.Long.rotateLeft(fp._1 * 0x9E3779B97F4A7C15L, 31) ^
-      (fp._2 * 0xC2B2AE3D27D4EB4FL)) | Long.MinValue
-    if (h == BaseBatchId) Long.MinValue else h
-  }
-
-  /** The derived-id fingerprint over a (doc_id, text) batch:
-    * content-sensitive, unlike the ledger stamp's (count, id-sum) — a
-    * batch with the same ids but different text takes a different slot.
-    * XOR, not SUM, of the per-row hashes: order-independent like sum but
-    * overflow-free under ANSI arithmetic (the hashes span the full 64-bit
-    * range), and cancellation needs duplicate (doc_id, text) rows, which
-    * the append contract (new doc ids) excludes. */
-  private[operators] def contentFingerprint(batch: DataFrame): (Long, Long) =
-    contentFingerprintCols(batch, Seq("doc_id", "text"))
-
-  /** [[contentFingerprint]] generalized to any column set — the ANN
-    * family keys its derived batch ids on (vec_id, embedding)
-    * (xxhash64 hashes array columns element-wise, so vector content
-    * participates, not just ids). */
-  private[operators] def contentFingerprintCols(batch: DataFrame,
-                                                cols: Seq[String]): (Long, Long) = {
-    val colList = cols.map(c => s"`$c`").mkString(", ")
-    val r = batch.agg(count(lit(1)),
-      coalesce(expr(s"bit_xor(xxhash64($colList))"), lit(0L))).head()
-    (r.getLong(0), r.getLong(1))
-  }
 
   /** Stamp `batchId`'s fingerprint into the batched ledger — the commit
     * point of an idempotent maintenance sequence; itself idempotent
@@ -137,34 +82,15 @@ object SnapshotMeta {
     stampBatch(spark, metaTable, batchId, (fa._1 - fr._1, fa._2 - fr._2))
   }
 
-  /** Append and merge ids: any id but the base build's partition. */
+  /** The one guard of every maintenance verb (append, merge, edit,
+    * delete, maintain): a durable, non-negative batch id. Tombstone
+    * visibility orders on batch id, and [[BaseBatchId]] is the base
+    * build's. */
   def requireBatchId(batchId: Long): Unit =
-    require(batchId != BaseBatchId, s"batch_id $BaseBatchId is the base build")
-
-  /** Edit and delete ids: explicit and non-negative. */
-  def requireEditId(batchId: Long): Unit =
     require(batchId >= 0,
-      "edit/delete need an explicit non-negative batch id: tombstone " +
-        "visibility orders on batch id, and derived ids sit below the " +
-        "base partition")
-
-  /** The body of every content-derived-id overload: derive the batch id
-    * from the batch's `contentCols`, refuse a GENUINELY NEW batch whose
-    * ids are tombstoned ([[requireNoTombstonedIds]] — its rows would land
-    * below the tombstone and never serve), then apply. A committed batch
-    * skips the refusal and still reaches `apply`, whose own ledger check
-    * no-ops it even when a later edit tombstoned its ids (the crash-replay
-    * contract wins). `batchIdCol` is the batch's id column, `idCol` the
-    * family's. */
-  def withDerivedId[T](spark: SparkSession, metaTable: String, tombTable: String,
-                       idCol: String, batch: DataFrame, batchIdCol: String,
-                       contentCols: Seq[String])(apply: Long => T): T = {
-    val id = derivedBatchId(contentFingerprintCols(batch, contentCols))
-    if (!appliedBatch(spark, metaTable, id))
-      requireNoTombstonedIds(spark, tombTable,
-        batch.select(col(batchIdCol).as(idCol)), idCol)
-    apply(id)
-  }
+      "batch id must be a durable non-negative id (foreachBatch's batchId " +
+        s"or the caller's own counter), got $batchId: tombstone visibility " +
+        s"orders on batch id, and $BaseBatchId is the base build")
 
   /** True when `batchId` is committed in the ledger — the maintenance
     * replay check (a foreachBatch retry, a restarted job re-running its
@@ -198,86 +124,21 @@ object SnapshotMeta {
   def exists(spark: SparkSession, t: String): Boolean =
     spark.sessionState.catalog.tableExists(ident(spark, t))
 
-  /** The ledger's minimum batch id, None on an EMPTY ledger (manually
-    * truncated debris) — min over zero rows is SQL null, and a bare
-    * getLong would NPE with an opaque message instead of the callers'
-    * intended verdicts (an empty ledger holds no derived batches). */
-  private def minBatchId(spark: SparkSession, metaTable: String): Option[Long] = {
-    val r = spark.table(metaTable).agg(min("batch_id")).head()
-    if (r.isNullAt(0)) None else Some(r.getLong(0))
-  }
-
-  /** Guard shared by every family's public `compact()`: refuse to fold a
-    * ledger holding content-derived batch ids (strictly below
-    * [[BaseBatchId]]). The fold rewrites every table into
-    * `max(batch_id)` and resets the ledger to one stamp there — erasing
-    * the derived batches' ledger slots — so a replayed content batch
-    * would lose its no-op guard and re-apply BESIDE the folded rows,
-    * duplicating them. (With only derived-id appends, max is even the
-    * base id itself.) The maintain() housekeeping paths pre-check
-    * [[hasDerivedBatches]] and SKIP an ineligible family — this throw is
-    * the DIRECT caller's loud refusal, never reached post-commit. */
-  private[operators] def requireNoDerivedBatches(spark: SparkSession,
-                                                 metaTable: String): Unit = {
-    val minId = minBatchId(spark, metaTable).getOrElse(BaseBatchId)
-    require(minId >= BaseBatchId,
-      s"compact cannot fold content-derived batch ids (min ledger id " +
-        s"$minId < base $BaseBatchId): the fold would erase their ledger " +
-        "slots and a replayed content batch would re-apply beside the " +
-        "folded rows. Re-ingest via durable non-negative batch ids first.")
-  }
-
-  /** True when the ledger holds any content-derived stamp (id strictly
-    * below [[BaseBatchId]]) — the [[requireNoDerivedBatches]] predicate,
-    * exposed so HOUSEKEEPING can skip an ineligible family gracefully
-    * instead of throwing after a batch already committed (a post-commit
-    * throw would wedge a maintenance loop: every later batch re-triggers
-    * the fold and dies on the same ledger). */
-  private[operators] def hasDerivedBatches(spark: SparkSession,
-                                           metaTable: String): Boolean =
-    exists(spark, metaTable) &&
-      minBatchId(spark, metaTable).exists(_ < BaseBatchId)
-
-  /** Guard for content-derived-id APPENDS on a family that has absorbed
-    * edits: derived ids sit strictly below every tombstone, so a batch
-    * row whose id a tombstone names would land permanently hidden from
-    * serving despite a "successful" append. Only the actually-unsafe
-    * case is refused — batch ids the tombstone table names; brand-new
-    * ids are safe (no tombstone can hide them). Cost: one broadcast
-    * semi-join over the batch, only when a tombstone table exists. */
-  private[operators] def requireNoTombstonedIds(spark: SparkSession,
-                                                tomb: String, batch: DataFrame,
-                                                idCol: String): Unit = {
-    if (!exists(spark, tomb)) return
-    val hidden = batch.select(col(idCol))
-      .join(broadcast(spark.table(tomb).select(col(idCol))),
-        Seq(idCol), "left_semi")
-      .count()
-    require(hidden == 0L,
-      s"$hidden batch ids are tombstoned in this family: a content-derived " +
-        "batch id sits below every tombstone, so their rows would land " +
-        "permanently hidden from serving. Re-add them with a durable " +
-        "non-negative batch id (above the tombstones) instead.")
-  }
-
-  /** The compact fold's target: the HIGHEST committed batch id, after
-    * [[requireNoDerivedBatches]]. Tombstones hide rows strictly BELOW
-    * their own id, so rows folded to the maximum stay live through every
-    * crash-intermediate state (a table folded, tombstones not yet
-    * dropped), and the latest batch's replay guard survives (its stamp
-    * IS the fold row). Folding to the base partition would let a
+  /** The compact fold's target: the HIGHEST committed batch id.
+    * Tombstones hide rows strictly BELOW their own id, so rows folded to
+    * the maximum stay live through every crash-intermediate state (a
+    * table folded, tombstones not yet dropped), and the latest batch's
+    * replay guard survives (its stamp IS the fold row). Folding to the base partition would let a
     * surviving tombstone hide the rewrite rows an edit admitted. */
-  def foldId(spark: SparkSession, metaTable: String): Long = {
-    requireNoDerivedBatches(spark, metaTable)
+  def foldId(spark: SparkSession, metaTable: String): Long =
     spark.table(metaTable).agg(max("batch_id")).head().getLong(0)
-  }
 
   /** The compact fold shared by every ledgered family: refuse a stale
     * index (each fold is a drop-and-recreate, so a crash mid-compact
     * recovers by wholesale rebuild from the dir — which must reproduce
-    * the same index) and a derived-id ledger, run the family's
-    * `rewrite` of its tables into [[foldId]] (tombstones applied
-    * physically), retire the tombstone table, and reset the ledger to
+    * the same index), run the family's `rewrite` of its tables into
+    * [[foldId]] (tombstones applied physically), retire the tombstone
+    * table, and reset the ledger to
     * one stamp at the fold id carrying the summed fingerprint — the dir
     * still fingerprints to the same sum, so freshness is preserved. */
   def fold(spark: SparkSession, metaTable: String, tombTable: String,
@@ -316,7 +177,8 @@ object SnapshotMeta {
       loc.getFileSystem(spark.sessionState.newHadoopConf()).delete(loc, true)
     }
 
-  /** [[stale]] against the batched ledger's summed fingerprint. */
+  /** True when no ledger exists (an unverifiable index is treated as
+    * stale) or the ledger's summed fingerprint differs from `current`. */
   def staleBatched(spark: SparkSession, metaTable: String,
                    current: (Long, Long)): Boolean =
     !exists(spark, metaTable) ||

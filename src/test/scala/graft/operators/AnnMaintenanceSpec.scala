@@ -95,8 +95,7 @@ class AnnMaintenanceSpec extends SparkSpec {
         == "edited+compacted")
       assert(s.table(IvfIndex.metaTable(dir)).count() == 1,
         "the coarse ledger must fold to one stamp")
-      assert(!s.catalog.tableExists(
-        "ivf_index_" + dir.replaceAll("[^A-Za-z0-9]", "_") + "_tomb"),
+      assert(!s.catalog.tableExists(IvfIndex.tombTable(dir)),
         "the fold must retire the tombstone table")
       val liveNow = IvfIndex.cellsFor(s, dir).select("vec_id", "cell")
         .collect().map(r => (r.getLong(0), r.getInt(1))).toSet

@@ -138,7 +138,7 @@ class ComponentIndexSpec extends SparkSpec {
         "landed batch must read as stale before merge")
 
       ConnectedComponents.lastRounds = -1
-      ComponentIndex.merge(s, dir, batch)
+      ComponentIndex.merge(s, dir, batch, 1L)
       assert(ConnectedComponents.lastRounds >= 1, "merge must run the clustering")
       assert(!ComponentIndex.snapshotStale(s, dir),
         "merge must re-stamp the snapshot fingerprint")

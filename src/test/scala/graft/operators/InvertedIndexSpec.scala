@@ -9,14 +9,6 @@ import graft.SparkSpec
   * that makes a term lookup an index read instead of a corpus scan. */
 class InvertedIndexSpec extends SparkSpec {
 
-  private def rm(path: String): Unit = {
-    def loop(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(loop)
-      f.delete()
-    }
-    loop(new java.io.File(path))
-  }
-
   test("search equals the live replay from the raw corpus") {
     val s = spark
     val terms = Seq("join", "hash", "scan")
@@ -69,38 +61,36 @@ class InvertedIndexSpec extends SparkSpec {
       (4L, "alpha zeta"),
       (5L, "delta delta delta")
     )).toDF("doc_id", "text")
-    val dir = "/tmp/graft_inv_append_fixture"
-    rm(dir)
-    base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    InvertedIndex.drop(s, dir)
-    try {
-      val t = InvertedIndex.ensure(s, dir)
-      InvertedIndex.append(s, dir, batch)
-      val appended = s.table(t)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      val rebuilt = InvertedIndex.postings(base.unionByName(batch))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      assert(appended == rebuilt && rebuilt.nonEmpty)
-    } finally { InvertedIndex.drop(s, dir); rm(dir) }
+    withScratch("inv-append") { dir =>
+      base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      try {
+        val t = InvertedIndex.ensure(s, dir)
+        InvertedIndex.append(s, dir, batch, 1L)
+        val appended = s.table(t)
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+        val rebuilt = InvertedIndex.postings(base.unionByName(batch))
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+        assert(appended == rebuilt && rebuilt.nonEmpty)
+      } finally InvertedIndex.drop(s, dir)
+    }
   }
 
   test("snapshot staleness: regenerated fixture detected, appended corpus reads fresh") {
     val s = spark
     import s.implicits._
-    val dir = "/tmp/graft_inv_stale_fixture"
-    rm(dir)
-    Seq((1L, "a b"), (2L, "b c")).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    InvertedIndex.drop(s, dir)
-    try {
-      InvertedIndex.ensure(s, dir)
-      assert(!InvertedIndex.snapshotStale(s, dir))
-      // regenerate the fixture with different content at the same path
-      Seq((1L, "a b"), (7L, "x y")).toDF("doc_id", "text")
+    withScratch("inv-stale") { dir =>
+      Seq((1L, "a b"), (2L, "b c")).toDF("doc_id", "text")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      assert(InvertedIndex.snapshotStale(s, dir),
-        "a regenerated fixture must read stale")
-    } finally { InvertedIndex.drop(s, dir); rm(dir) }
+      try {
+        InvertedIndex.ensure(s, dir)
+        assert(!InvertedIndex.snapshotStale(s, dir))
+        // regenerate the fixture with different content at the same path
+        Seq((1L, "a b"), (7L, "x y")).toDF("doc_id", "text")
+          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        assert(InvertedIndex.snapshotStale(s, dir),
+          "a regenerated fixture must read stale")
+      } finally InvertedIndex.drop(s, dir)
+    }
   }
 
   test("BM25 search equals the live replay from the raw corpus") {
@@ -164,25 +154,24 @@ class InvertedIndexSpec extends SparkSpec {
       (4L, "alpha zeta"),
       (5L, "delta delta delta")
     ).toDF("doc_id", "text")
-    val dir = "/tmp/graft_inv_bm25_append_fixture"
-    rm(dir)
-    base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    InvertedIndex.drop(s, dir)
-    try {
-      InvertedIndex.ensure(s, dir)
-      InvertedIndex.append(s, dir, batch)
-      val terms = Seq("alpha", "delta", "gamma")
-      val served = InvertedIndex.searchBm25(s, dir, terms, k = 10)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).toSet
-      val union = base.unionByName(batch)
-      val replay = InvertedIndex.bm25FromPostings(
-        InvertedIndex.postings(union).filter(col("term").isin(terms: _*)),
-        InvertedIndex.corpusStats(union), k = 10)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).toSet
-      assert(served == replay && served.nonEmpty)
-    } finally { InvertedIndex.drop(s, dir); rm(dir) }
+    withScratch("inv-bm25-append") { dir =>
+      base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      try {
+        InvertedIndex.ensure(s, dir)
+        InvertedIndex.append(s, dir, batch, 1L)
+        val terms = Seq("alpha", "delta", "gamma")
+        val served = InvertedIndex.searchBm25(s, dir, terms, k = 10)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3))).toSet
+        val union = base.unionByName(batch)
+        val replay = InvertedIndex.bm25FromPostings(
+          InvertedIndex.postings(union).filter(col("term").isin(terms: _*)),
+          InvertedIndex.corpusStats(union), k = 10)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3))).toSet
+        assert(served == replay && served.nonEmpty)
+      } finally InvertedIndex.drop(s, dir)
+    }
   }
 
   test("append is crash-idempotent: kill between writes replays clean; committed batch no-ops") {
@@ -197,67 +186,66 @@ class InvertedIndexSpec extends SparkSpec {
       (4L, "alpha zeta"),
       (5L, "delta delta delta")
     ).toDF("doc_id", "text")
-    val dir = "/tmp/graft_inv_crash_fixture"
-    rm(dir)
-    base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    InvertedIndex.drop(s, dir)
-    try {
-      val t = InvertedIndex.ensure(s, dir)
-      val batchId = 42L
-      // --- KILL BETWEEN WRITES: step 1 ran PARTIALLY (a torn postings
-      // partition holding only part of the batch), steps 2 (stats) and 3
-      // (ledger stamp) never ran — the worst recoverable state
-      SnapshotMeta.overwritePartition(s, t, batchId,
-        InvertedIndex.postings(batch.limit(1)))
-      assert(!SnapshotMeta.appliedBatch(s, InvertedIndex.metaTable(dir), batchId),
-        "a torn append must leave NO commit record")
-      // the re-run from the top must REPLACE the torn partition, land the
-      // stats row, and stamp — converging on the clean single application
-      InvertedIndex.append(s, dir, batch, batchId)
-      val union = base.unionByName(batch)
-      val appended = s.table(t)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      val rebuilt = InvertedIndex.postings(union)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      assert(appended == rebuilt && rebuilt.nonEmpty,
-        "replay after a torn postings write must equal the clean application")
-      // --- KILL AFTER STATS, BEFORE THE STAMP: postings + stats partitions
-      // committed for a second batch, ledger stamp missing
-      val batch2 = Seq((6L, "zeta zeta eta")).toDF("doc_id", "text")
-      val batchId2 = 43L
-      SnapshotMeta.overwritePartition(s, t, batchId2,
-        InvertedIndex.postings(batch2))
-      SnapshotMeta.overwritePartition(s, InvertedIndex.statsTable(dir), batchId2,
-        InvertedIndex.corpusStats(batch2))
-      InvertedIndex.append(s, dir, batch2, batchId2)
-      val union2 = union.unionByName(batch2)
-      val stats = InvertedIndex.statsFor(s, dir).head()
-      val expect = InvertedIndex.corpusStats(union2).head()
-      assert((stats.getLong(0), stats.getLong(1)) ==
-        (expect.getLong(0), expect.getLong(1)),
-        "stats must stay additive (no doubled batch row) after the replay")
-      assert(SnapshotMeta.appliedBatch(s, InvertedIndex.metaTable(dir), batchId2))
-      // --- COMMITTED BATCH REPLAYS AS A NO-OP (the ledger check): even a
-      // different frame under the same committed id must not change state
-      InvertedIndex.append(s, dir,
-        Seq((9L, "phantom rows")).toDF("doc_id", "text"), batchId)
-      val after = s.table(t)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      assert(after == InvertedIndex.postings(union2)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet,
-        "a committed batch id must replay as a no-op")
-      // and BM25 over the recovered index equals the from-scratch replay
-      val terms = Seq("alpha", "delta", "zeta")
-      val served = InvertedIndex.searchBm25(s, dir, terms, k = 10)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).toSet
-      val replay = InvertedIndex.bm25FromPostings(
-        InvertedIndex.postings(union2).filter(col("term").isin(terms: _*)),
-        InvertedIndex.corpusStats(union2), k = 10)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).toSet
-      assert(served == replay && served.nonEmpty)
-    } finally { InvertedIndex.drop(s, dir); rm(dir) }
+    withScratch("inv-crash") { dir =>
+      base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      try {
+        val t = InvertedIndex.ensure(s, dir)
+        val batchId = 42L
+        // --- KILL BETWEEN WRITES: step 1 ran PARTIALLY (a torn postings
+        // partition holding only part of the batch), steps 2 (stats) and 3
+        // (ledger stamp) never ran — the worst recoverable state
+        SnapshotMeta.overwritePartition(s, t, batchId,
+          InvertedIndex.postings(batch.limit(1)))
+        assert(!SnapshotMeta.appliedBatch(s, InvertedIndex.metaTable(dir), batchId),
+          "a torn append must leave NO commit record")
+        // the re-run from the top must REPLACE the torn partition, land the
+        // stats row, and stamp — converging on the clean single application
+        InvertedIndex.append(s, dir, batch, batchId)
+        val union = base.unionByName(batch)
+        val appended = s.table(t)
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+        val rebuilt = InvertedIndex.postings(union)
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+        assert(appended == rebuilt && rebuilt.nonEmpty,
+          "replay after a torn postings write must equal the clean application")
+        // --- KILL AFTER STATS, BEFORE THE STAMP: postings + stats partitions
+        // committed for a second batch, ledger stamp missing
+        val batch2 = Seq((6L, "zeta zeta eta")).toDF("doc_id", "text")
+        val batchId2 = 43L
+        SnapshotMeta.overwritePartition(s, t, batchId2,
+          InvertedIndex.postings(batch2))
+        SnapshotMeta.overwritePartition(s, InvertedIndex.statsTable(dir), batchId2,
+          InvertedIndex.corpusStats(batch2))
+        InvertedIndex.append(s, dir, batch2, batchId2)
+        val union2 = union.unionByName(batch2)
+        val stats = InvertedIndex.statsFor(s, dir).head()
+        val expect = InvertedIndex.corpusStats(union2).head()
+        assert((stats.getLong(0), stats.getLong(1)) ==
+          (expect.getLong(0), expect.getLong(1)),
+          "stats must stay additive (no doubled batch row) after the replay")
+        assert(SnapshotMeta.appliedBatch(s, InvertedIndex.metaTable(dir), batchId2))
+        // --- COMMITTED BATCH REPLAYS AS A NO-OP (the ledger check): even a
+        // different frame under the same committed id must not change state
+        InvertedIndex.append(s, dir,
+          Seq((9L, "phantom rows")).toDF("doc_id", "text"), batchId)
+        val after = s.table(t)
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+        assert(after == InvertedIndex.postings(union2)
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet,
+          "a committed batch id must replay as a no-op")
+        // and BM25 over the recovered index equals the from-scratch replay
+        val terms = Seq("alpha", "delta", "zeta")
+        val served = InvertedIndex.searchBm25(s, dir, terms, k = 10)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3))).toSet
+        val replay = InvertedIndex.bm25FromPostings(
+          InvertedIndex.postings(union2).filter(col("term").isin(terms: _*)),
+          InvertedIndex.corpusStats(union2), k = 10)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3))).toSet
+        assert(served == replay && served.nonEmpty)
+      } finally InvertedIndex.drop(s, dir)
+    }
   }
 
   test("canonical tokenization: 'Hash' finds 'hash' (case/punctuation-insensitive index)") {
@@ -268,60 +256,42 @@ class InvertedIndexSpec extends SparkSpec {
       (2L, "the HASH, the merge"),        // canonical: the hash the merge
       (3L, "no match here")
     ).toDF("doc_id", "text")
-    val dir = "/tmp/graft_inv_canon_fixture"
-    rm(dir)
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    InvertedIndex.drop(s, dir)
-    try {
-      // the index stores canonical terms: a cased/punctuated query term
-      // reaches them through the same canonicalization
-      val hits = InvertedIndex.search(s, dir, Seq("Hash,"), k = 10)
-        .select("doc_id", "tf").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(hits == Map(1L -> 2L, 2L -> 1L), s"got $hits")
-      // dl is the canonical token count (doc 1: 4 canonical tokens)
-      val dl = InvertedIndex.postings(docs)
-        .filter(col("doc_id") === 1L).select("dl").head().getLong(0)
-      assert(dl == 4L, s"canonical dl expected 4, got $dl")
-      // phrase positions live in the canonical stream: "Hash join" is
-      // consecutive in doc 1 despite the punctuation in the raw text
-      val phrase = InvertedIndex.searchPhrase(s, dir, Seq("Hash", "JOIN!"), k = 10)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(phrase == Set(1L), s"got $phrase")
-      // BM25 agrees with the from-scratch replay over the same currency
-      val served = InvertedIndex.searchBm25(s, dir, Seq("HASH", "merge"), k = 10)
-        .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-      val replay = InvertedIndex.bm25FromPostings(
-        InvertedIndex.postings(docs).filter(col("term").isin("hash", "merge")),
-        InvertedIndex.corpusStats(docs), k = 10)
-        .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-      assert(served == replay && served.nonEmpty)
-      // a punctuation-only term canonicalizes away: search drops it,
-      // phrase rejects it
-      assert(InvertedIndex.search(s, dir, Seq("!!!", "hash"), k = 10)
-        .select("term").distinct().collect().map(_.getString(0)).toSet ==
-        Set("hash"))
-      intercept[IllegalArgumentException] {
-        InvertedIndex.searchPhrase(s, dir, Seq("hash", "!!!"), k = 10)
-      }
-    } finally { InvertedIndex.drop(s, dir); rm(dir) }
-  }
-
-  test("derived batch ids live below the base id and key on content, not ids alone") {
-    val s = spark
-    import s.implicits._
-    val a = Seq((1L, "alpha beta"), (2L, "gamma")).toDF("doc_id", "text")
-    val b = Seq((1L, "alpha DIFFERENT"), (2L, "gamma")).toDF("doc_id", "text")
-    def fp(df: org.apache.spark.sql.DataFrame) =
-      SnapshotMeta.contentFingerprint(df)
-    val ia = SnapshotMeta.derivedBatchId(fp(a))
-    val ib = SnapshotMeta.derivedBatchId(fp(b))
-    assert(ia < SnapshotMeta.BaseBatchId && ib < SnapshotMeta.BaseBatchId,
-      "derived ids must be reserved strictly below the base batch id")
-    assert(ia != ib,
-      "same doc_ids with different text must take different ledger slots")
-    assert(ia == SnapshotMeta.derivedBatchId(fp(a)),
-      "the same content must reuse its slot (idempotence key)")
+    withScratch("inv-canon") { dir =>
+      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      try {
+        // the index stores canonical terms: a cased/punctuated query term
+        // reaches them through the same canonicalization
+        val hits = InvertedIndex.search(s, dir, Seq("Hash,"), k = 10)
+          .select("doc_id", "tf").collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(hits == Map(1L -> 2L, 2L -> 1L), s"got $hits")
+        // dl is the canonical token count (doc 1: 4 canonical tokens)
+        val dl = InvertedIndex.postings(docs)
+          .filter(col("doc_id") === 1L).select("dl").head().getLong(0)
+        assert(dl == 4L, s"canonical dl expected 4, got $dl")
+        // phrase positions live in the canonical stream: "Hash join" is
+        // consecutive in doc 1 despite the punctuation in the raw text
+        val phrase = InvertedIndex.searchPhrase(s, dir, Seq("Hash", "JOIN!"), k = 10)
+          .select("doc_id").collect().map(_.getLong(0)).toSet
+        assert(phrase == Set(1L), s"got $phrase")
+        // BM25 agrees with the from-scratch replay over the same currency
+        val served = InvertedIndex.searchBm25(s, dir, Seq("HASH", "merge"), k = 10)
+          .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+        val replay = InvertedIndex.bm25FromPostings(
+          InvertedIndex.postings(docs).filter(col("term").isin("hash", "merge")),
+          InvertedIndex.corpusStats(docs), k = 10)
+          .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+        assert(served == replay && served.nonEmpty)
+        // a punctuation-only term canonicalizes away: search drops it,
+        // phrase rejects it
+        assert(InvertedIndex.search(s, dir, Seq("!!!", "hash"), k = 10)
+          .select("term").distinct().collect().map(_.getString(0)).toSet ==
+          Set("hash"))
+        intercept[IllegalArgumentException] {
+          InvertedIndex.searchPhrase(s, dir, Seq("hash", "!!!"), k = 10)
+        }
+      } finally InvertedIndex.drop(s, dir)
+    }
   }
 
   test("phrase search equals the live replay; known occurrences on a synthetic corpus") {
@@ -371,28 +341,27 @@ class InvertedIndexSpec extends SparkSpec {
     val base = Seq((1L, "alpha beta gamma"), (2L, "beta alpha beta"))
       .toDF("doc_id", "text")
     val batch = Seq((3L, "alpha beta alpha")).toDF("doc_id", "text")
-    val dir = "/tmp/graft_inv_pos_append_fixture"
-    rm(dir)
-    base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    InvertedIndex.drop(s, dir)
-    try {
-      val t = InvertedIndex.ensurePositions(s, dir)
-      InvertedIndex.append(s, dir, batch)
-      InvertedIndex.appendPositions(s, dir, batch)
-      val appended = s.table(t)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      val rebuilt = InvertedIndex.positions(base.unionByName(batch))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      assert(appended == rebuilt && rebuilt.nonEmpty)
-      // post-append phrase result equals the union replay
-      val served = InvertedIndex.searchPhrase(s, dir, Seq("alpha", "beta"), k = 10)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val replay = InvertedIndex.phraseFromPositions(
-        InvertedIndex.positions(base.unionByName(batch)),
-        Seq("alpha", "beta"), k = 10)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(served == replay && served.nonEmpty)
-    } finally { InvertedIndex.drop(s, dir); rm(dir) }
+    withScratch("inv-pos-append") { dir =>
+      base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      try {
+        val t = InvertedIndex.ensurePositions(s, dir)
+        InvertedIndex.append(s, dir, batch, 1L)
+        InvertedIndex.appendPositions(s, dir, batch, 1L)
+        val appended = s.table(t)
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+        val rebuilt = InvertedIndex.positions(base.unionByName(batch))
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+        assert(appended == rebuilt && rebuilt.nonEmpty)
+        // post-append phrase result equals the union replay
+        val served = InvertedIndex.searchPhrase(s, dir, Seq("alpha", "beta"), k = 10)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        val replay = InvertedIndex.phraseFromPositions(
+          InvertedIndex.positions(base.unionByName(batch)),
+          Seq("alpha", "beta"), k = 10)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        assert(served == replay && served.nonEmpty)
+      } finally InvertedIndex.drop(s, dir)
+    }
   }
 
   test("proximity search: window edges on a synthetic corpus; slop=1 equals phrase") {
@@ -437,15 +406,14 @@ class InvertedIndexSpec extends SparkSpec {
       (3L, "c b a c"),   // all three, tf_total 4 (tie -> doc_id order)
       (4L, "a a a")      // missing b, c
     ).toDF("doc_id", "text")
-    val dir = "/tmp/graft_inv_conj_fixture"
-    rm(dir)
-    syn.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    InvertedIndex.drop(s, dir)
-    try {
-      val out = InvertedIndex.searchAll(s, dir, Seq("a", "b", "c"), k = 10)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      assert(out.toSeq == Seq((1L, 4L, 1L), (3L, 4L, 2L)), s"got ${out.toSeq}")
-    } finally { InvertedIndex.drop(s, dir); rm(dir) }
+    withScratch("inv-conj") { dir =>
+      syn.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      try {
+        val out = InvertedIndex.searchAll(s, dir, Seq("a", "b", "c"), k = 10)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        assert(out.toSeq == Seq((1L, 4L, 1L), (3L, 4L, 2L)), s"got ${out.toSeq}")
+      } finally InvertedIndex.drop(s, dir)
+    }
     // fixture: every returned doc truly contains all three terms, and the
     // declared query equals the index-free replay
     val served = graft.SparkEntry.queries("q_search_conjunctive")(s, sfDir)
@@ -478,28 +446,27 @@ class InvertedIndexSpec extends SparkSpec {
       (3L, "a c"),
       (4L, "x b")
     ).toDF("doc_id", "text")
-    val dir = "/tmp/graft_inv_not_fixture"
-    rm(dir)
-    syn.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    InvertedIndex.drop(s, dir)
-    try {
-      val out = InvertedIndex.searchExcluding(s, dir, Seq("a"), Seq("x"), k = 10)
-        .collect().map(r => r.getLong(0))
-      assert(out.toSeq == Seq(1L, 3L), s"got ${out.toSeq}")
-      // the replay over the hand-filtered corpus (docs without 'x')
-      // agrees bit-for-bit: same df, same corpus-global stats
-      val docs = graft.sources.Tables.documents(s, dir)
-      val banned = docs.filter(array_contains(split(col("text"), " "), "x"))
-        .select("doc_id")
-      val live = InvertedIndex.bm25FromPostings(
-        InvertedIndex.postings(docs).filter(col("term") === "a")
-          .join(banned, Seq("doc_id"), "left_anti"),
-        InvertedIndex.corpusStats(docs), k = 10)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val servedFull = InvertedIndex.searchExcluding(s, dir, Seq("a"), Seq("x"), k = 10)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(servedFull == live)
-    } finally { InvertedIndex.drop(s, dir); rm(dir) }
+    withScratch("inv-not") { dir =>
+      syn.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      try {
+        val out = InvertedIndex.searchExcluding(s, dir, Seq("a"), Seq("x"), k = 10)
+          .collect().map(r => r.getLong(0))
+        assert(out.toSeq == Seq(1L, 3L), s"got ${out.toSeq}")
+        // the replay over the hand-filtered corpus (docs without 'x')
+        // agrees bit-for-bit: same df, same corpus-global stats
+        val docs = graft.sources.Tables.documents(s, dir)
+        val banned = docs.filter(array_contains(split(col("text"), " "), "x"))
+          .select("doc_id")
+        val live = InvertedIndex.bm25FromPostings(
+          InvertedIndex.postings(docs).filter(col("term") === "a")
+            .join(banned, Seq("doc_id"), "left_anti"),
+          InvertedIndex.corpusStats(docs), k = 10)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        val servedFull = InvertedIndex.searchExcluding(s, dir, Seq("a"), Seq("x"), k = 10)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        assert(servedFull == live)
+      } finally InvertedIndex.drop(s, dir)
+    }
     // the declared query: no hit contains the excluded term, and the
     // result equals the index-free replay from the raw corpus
     val served = graft.SparkEntry.queries("q_search_not")(s, sfDir)
@@ -607,102 +574,101 @@ class InvertedIndexSpec extends SparkSpec {
       (2L, "beta delta"),
       (3L, "gamma gamma epsilon")
     ).toDF("doc_id", "text")
-    val dir = "/tmp/graft_inv_edit_fixture"
-    rm(dir)
-    base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    InvertedIndex.drop(s, dir)
-    try {
-      InvertedIndex.ensure(s, dir)
-      InvertedIndex.ensurePositions(s, dir)
-      // the edit: doc 2 removed, doc 1 REWRITTEN (same id, new text),
-      // doc 6 added — the diff classes that used to force a rebuild
-      val removed = Seq(
-        (1L, "alpha beta gamma alpha"), (2L, "beta delta")
-      ).toDF("doc_id", "text")
-      val added = Seq(
-        (1L, "delta delta alpha"), (6L, "zeta alpha zeta")
-      ).toDF("doc_id", "text")
-      val edited = Seq(
-        (1L, "delta delta alpha"),
-        (3L, "gamma gamma epsilon"),
-        (6L, "zeta alpha zeta")
-      ).toDF("doc_id", "text")
-      // derived ids cannot order a tombstone — must refuse
-      assertThrows[IllegalArgumentException](
-        InvertedIndex.edit(s, dir, removed, added, -5L))
-      // --- KILL BETWEEN WRITES: a torn tombstone partition (only one of
-      // the two removed ids landed), no stamp
-      removed.limit(1).select(col("doc_id"))
-        .withColumn("batch_id", lit(7L))
-        .write.partitionBy("batch_id")
-        .saveAsTable(InvertedIndex.tombTable(dir))
-      assert(!SnapshotMeta.appliedBatch(s, InvertedIndex.metaTable(dir), 7L))
-      // re-run from the top (positions first, edit = commit owner)
-      InvertedIndex.appendPositions(s, dir, added, 7L)
-      InvertedIndex.edit(s, dir, removed, added, 7L)
-      // every serving path equals the from-scratch replay over the
-      // edited corpus — removals gone, rewrites current, adds present
-      val terms = Seq("alpha", "beta", "delta", "zeta", "gamma")
-      def canon(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.toSeq).toSet
-      assert(canon(InvertedIndex.searchBm25(s, dir, terms, k = 10)) ==
-        canon(InvertedIndex.bm25FromPostings(
-          InvertedIndex.postings(edited).filter(col("term").isin(terms: _*)),
-          InvertedIndex.corpusStats(edited), k = 10)))
-      assert(canon(InvertedIndex.search(s, dir, Seq("alpha", "beta"), k = 10)) ==
-        canon(InvertedIndex.rankedFromPostings(
-          InvertedIndex.postings(edited)
-            .filter(col("term").isin("alpha", "beta")),
-          InvertedIndex.corpusStats(edited).select("n"), k = 10)))
-      assert(canon(InvertedIndex.searchPhrase(s, dir, Seq("delta", "delta"), k = 10)) ==
-        canon(InvertedIndex.phraseFromPositions(
-          InvertedIndex.positions(edited)
-            .filter(col("term") === "delta"), Seq("delta", "delta"), k = 10)))
-      // "beta" lives only in removed docs now — zero hits
-      assert(InvertedIndex.search(s, dir, Seq("beta"), k = 10).count() == 0)
-      // the summed stats equal the edited corpus's, exactly
-      val st = InvertedIndex.statsFor(s, dir).head()
-      val ex = InvertedIndex.corpusStats(edited).head()
-      assert((st.getLong(0), st.getLong(1)) == (ex.getLong(0), ex.getLong(1)),
-        "net stats row did not keep (n, dltot) exact")
-      // hygiene reports the edit's dead weight exactly: resident = base
-      // rows + the edit batch's added rows, tombstoned = the removed
-      // docs' base rows (strictly below the tombstone batch), live the
-      // rest — for BOTH stores, from the single postings/positions
-      // definitions
-      val hyg = InvertedIndex.hygiene(s, dir)
-        .collect().map(r => r.getString(0) ->
-          (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-      def expHyg(rel: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
-        val resident = rel(base).count() + rel(added).count()
-        val dead = rel(base).filter(col("doc_id").isin(1L, 2L)).count()
-        (resident, resident - dead, dead)
-      }
-      assert(hyg("postings") == expHyg(InvertedIndex.postings),
-        s"postings hygiene diverged: ${hyg("postings")}")
-      assert(hyg("positions") == expHyg(InvertedIndex.positions),
-        s"positions hygiene diverged: ${hyg("positions")}")
-      // a committed edit replays as a no-op, even with different frames
-      InvertedIndex.edit(s, dir,
-        Seq((3L, "gamma gamma epsilon")).toDF("doc_id", "text"),
-        Seq((9L, "phantom")).toDF("doc_id", "text"), 7L)
-      assert(InvertedIndex.search(s, dir, Seq("gamma"), k = 10).count() > 0)
-      // freshness handshake: stale until the dir holds the edited corpus
-      assert(InvertedIndex.snapshotStale(s, dir))
-      edited.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      assert(!InvertedIndex.snapshotStale(s, dir))
-      // compaction applies tombstones physically and retires them
-      val answers = canon(InvertedIndex.searchBm25(s, dir, terms, k = 10))
-      InvertedIndex.compact(s, dir)
-      assert(!s.catalog.tableExists(InvertedIndex.tombTable(dir)),
-        "compaction must retire the tombstone table")
-      assert(s.table(InvertedIndex.metaTable(dir)).count() == 1)
-      assert(canon(InvertedIndex.searchBm25(s, dir, terms, k = 10)) == answers)
-      // and the folded postings physically exclude the dead rows
-      assert(s.table(InvertedIndex.table(dir))
-        .filter(col("doc_id") === 2L).count() == 0,
-        "doc 2's rows survived the compaction fold")
-    } finally { InvertedIndex.drop(s, dir); rm(dir) }
+    withScratch("inv-edit") { dir =>
+      base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      try {
+        InvertedIndex.ensure(s, dir)
+        InvertedIndex.ensurePositions(s, dir)
+        // the edit: doc 2 removed, doc 1 REWRITTEN (same id, new text),
+        // doc 6 added — the diff classes that used to force a rebuild
+        val removed = Seq(
+          (1L, "alpha beta gamma alpha"), (2L, "beta delta")
+        ).toDF("doc_id", "text")
+        val added = Seq(
+          (1L, "delta delta alpha"), (6L, "zeta alpha zeta")
+        ).toDF("doc_id", "text")
+        val edited = Seq(
+          (1L, "delta delta alpha"),
+          (3L, "gamma gamma epsilon"),
+          (6L, "zeta alpha zeta")
+        ).toDF("doc_id", "text")
+        // derived ids cannot order a tombstone — must refuse
+        assertThrows[IllegalArgumentException](
+          InvertedIndex.edit(s, dir, removed, added, -5L))
+        // --- KILL BETWEEN WRITES: a torn tombstone partition (only one of
+        // the two removed ids landed), no stamp
+        removed.limit(1).select(col("doc_id"))
+          .withColumn("batch_id", lit(7L))
+          .write.partitionBy("batch_id")
+          .saveAsTable(InvertedIndex.tombTable(dir))
+        assert(!SnapshotMeta.appliedBatch(s, InvertedIndex.metaTable(dir), 7L))
+        // re-run from the top (positions first, edit = commit owner)
+        InvertedIndex.appendPositions(s, dir, added, 7L)
+        InvertedIndex.edit(s, dir, removed, added, 7L)
+        // every serving path equals the from-scratch replay over the
+        // edited corpus — removals gone, rewrites current, adds present
+        val terms = Seq("alpha", "beta", "delta", "zeta", "gamma")
+        def canon(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(_.toSeq).toSet
+        assert(canon(InvertedIndex.searchBm25(s, dir, terms, k = 10)) ==
+          canon(InvertedIndex.bm25FromPostings(
+            InvertedIndex.postings(edited).filter(col("term").isin(terms: _*)),
+            InvertedIndex.corpusStats(edited), k = 10)))
+        assert(canon(InvertedIndex.search(s, dir, Seq("alpha", "beta"), k = 10)) ==
+          canon(InvertedIndex.rankedFromPostings(
+            InvertedIndex.postings(edited)
+              .filter(col("term").isin("alpha", "beta")),
+            InvertedIndex.corpusStats(edited).select("n"), k = 10)))
+        assert(canon(InvertedIndex.searchPhrase(s, dir, Seq("delta", "delta"), k = 10)) ==
+          canon(InvertedIndex.phraseFromPositions(
+            InvertedIndex.positions(edited)
+              .filter(col("term") === "delta"), Seq("delta", "delta"), k = 10)))
+        // "beta" lives only in removed docs now — zero hits
+        assert(InvertedIndex.search(s, dir, Seq("beta"), k = 10).count() == 0)
+        // the summed stats equal the edited corpus's, exactly
+        val st = InvertedIndex.statsFor(s, dir).head()
+        val ex = InvertedIndex.corpusStats(edited).head()
+        assert((st.getLong(0), st.getLong(1)) == (ex.getLong(0), ex.getLong(1)),
+          "net stats row did not keep (n, dltot) exact")
+        // hygiene reports the edit's dead weight exactly: resident = base
+        // rows + the edit batch's added rows, tombstoned = the removed
+        // docs' base rows (strictly below the tombstone batch), live the
+        // rest — for BOTH stores, from the single postings/positions
+        // definitions
+        val hyg = InvertedIndex.hygiene(s, dir)
+          .collect().map(r => r.getString(0) ->
+            (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+        def expHyg(rel: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
+          val resident = rel(base).count() + rel(added).count()
+          val dead = rel(base).filter(col("doc_id").isin(1L, 2L)).count()
+          (resident, resident - dead, dead)
+        }
+        assert(hyg("postings") == expHyg(InvertedIndex.postings),
+          s"postings hygiene diverged: ${hyg("postings")}")
+        assert(hyg("positions") == expHyg(InvertedIndex.positions),
+          s"positions hygiene diverged: ${hyg("positions")}")
+        // a committed edit replays as a no-op, even with different frames
+        InvertedIndex.edit(s, dir,
+          Seq((3L, "gamma gamma epsilon")).toDF("doc_id", "text"),
+          Seq((9L, "phantom")).toDF("doc_id", "text"), 7L)
+        assert(InvertedIndex.search(s, dir, Seq("gamma"), k = 10).count() > 0)
+        // freshness handshake: stale until the dir holds the edited corpus
+        assert(InvertedIndex.snapshotStale(s, dir))
+        edited.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        assert(!InvertedIndex.snapshotStale(s, dir))
+        // compaction applies tombstones physically and retires them
+        val answers = canon(InvertedIndex.searchBm25(s, dir, terms, k = 10))
+        InvertedIndex.compact(s, dir)
+        assert(!s.catalog.tableExists(InvertedIndex.tombTable(dir)),
+          "compaction must retire the tombstone table")
+        assert(s.table(InvertedIndex.metaTable(dir)).count() == 1)
+        assert(canon(InvertedIndex.searchBm25(s, dir, terms, k = 10)) == answers)
+        // and the folded postings physically exclude the dead rows
+        assert(s.table(InvertedIndex.table(dir))
+          .filter(col("doc_id") === 2L).count() == 0,
+          "doc 2's rows survived the compaction fold")
+      } finally InvertedIndex.drop(s, dir)
+    }
   }
 
   test("random maintenance histories equal the rebuild (model-based)") {
@@ -722,74 +688,71 @@ class InvertedIndexSpec extends SparkSpec {
       val model = scala.collection.mutable.Map[Long, String](
         (1L to 12L).map(i => i -> text()): _*)
       var nextId = 13L
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"invrand$seed").toString
-      def corpus() = model.toSeq.map { case (id, t) => (id, t) }
-        .toDF("doc_id", "text")
-      try {
-        corpus().write.mode("overwrite").parquet(s"$dir/documents.parquet")
-        InvertedIndex.ensure(s, dir)
-        InvertedIndex.ensurePositions(s, dir)
-        for (batch <- 1 to 5) {
-          val ids = model.keys.toVector.sorted
-          val nRem = rnd.nextInt(3)
-          val nRew = rnd.nextInt(3)
-          val removedIds = rnd.shuffle(ids).take(nRem)
-          val rewriteIds = rnd.shuffle(ids.diff(removedIds)).take(nRew)
-          val addedIds = (0 until rnd.nextInt(3)).map { _ =>
-            val id = nextId; nextId += 1; id
+      withScratch(s"inv-rand$seed") { dir =>
+        def corpus() = model.toSeq.map { case (id, t) => (id, t) }
+          .toDF("doc_id", "text")
+        try {
+          corpus().write.mode("overwrite").parquet(s"$dir/documents.parquet")
+          InvertedIndex.ensure(s, dir)
+          InvertedIndex.ensurePositions(s, dir)
+          for (batch <- 1 to 5) {
+            val ids = model.keys.toVector.sorted
+            val nRem = rnd.nextInt(3)
+            val nRew = rnd.nextInt(3)
+            val removedIds = rnd.shuffle(ids).take(nRem)
+            val rewriteIds = rnd.shuffle(ids.diff(removedIds)).take(nRew)
+            val addedIds = (0 until rnd.nextInt(3)).map { _ =>
+              val id = nextId; nextId += 1; id
+            }
+            val rewrites = rewriteIds.map(id => (id, text()))
+            val adds = addedIds.map(id => (id, text()))
+            val removedDocs = (removedIds ++ rewriteIds)
+              .map(id => (id, model(id))).toDF("doc_id", "text")
+            val addedDocs = (rewrites ++ adds).toDF("doc_id", "text")
+            if (removedIds.isEmpty && rewriteIds.isEmpty && adds.nonEmpty) {
+              InvertedIndex.appendPositions(s, dir, addedDocs, batch.toLong)
+              InvertedIndex.append(s, dir, addedDocs, batch.toLong)
+            } else if (removedDocs.count() + addedDocs.count() > 0) {
+              InvertedIndex.appendPositions(s, dir, addedDocs, batch.toLong)
+              InvertedIndex.edit(s, dir, removedDocs, addedDocs, batch.toLong)
+            }
+            removedIds.foreach(model.remove)
+            (rewrites ++ adds).foreach { case (id, t) => model(id) = t }
           }
-          val rewrites = rewriteIds.map(id => (id, text()))
-          val adds = addedIds.map(id => (id, text()))
-          val removedDocs = (removedIds ++ rewriteIds)
-            .map(id => (id, model(id))).toDF("doc_id", "text")
-          val addedDocs = (rewrites ++ adds).toDF("doc_id", "text")
-          if (removedIds.isEmpty && rewriteIds.isEmpty && adds.nonEmpty) {
-            InvertedIndex.appendPositions(s, dir, addedDocs, batch.toLong)
-            InvertedIndex.append(s, dir, addedDocs, batch.toLong)
-          } else if (removedDocs.count() + addedDocs.count() > 0) {
-            InvertedIndex.appendPositions(s, dir, addedDocs, batch.toLong)
-            InvertedIndex.edit(s, dir, removedDocs, addedDocs, batch.toLong)
-          }
-          removedIds.foreach(model.remove)
-          (rewrites ++ adds).foreach { case (id, t) => model(id) = t }
-        }
-        val fin = corpus().localCheckpoint(true)
-        val live = InvertedIndex.postingsFor(s, dir)
-          .select("term", "doc_id", "tf", "dl")
-          .collect().map(_.toSeq).toSet
-        val fresh = InvertedIndex.postings(fin)
-          .select("term", "doc_id", "tf", "dl")
-          .collect().map(_.toSeq).toSet
-        assert(live == fresh, s"seed $seed: live postings != rebuild")
-        val livePos = InvertedIndex.positionsFor(s, dir)
-          .select("term", "doc_id", "pos")
-          .collect().map(_.toSeq).toSet
-        val freshPos = InvertedIndex.positions(fin)
-          .select("term", "doc_id", "pos")
-          .collect().map(_.toSeq).toSet
-        assert(livePos == freshPos, s"seed $seed: live positions != rebuild")
-        val st = InvertedIndex.statsFor(s, dir).head()
-        val ex = InvertedIndex.corpusStats(fin).head()
-        assert((st.getLong(0), st.getLong(1)) == (ex.getLong(0), ex.getLong(1)),
-          s"seed $seed: summed stats != corpus stats")
-        val liveDel = InvertedIndex.deletesFor(s, dir)
-          .collect().map(_.toSeq).toSet
-        val freshDel = InvertedIndex.deletes(InvertedIndex.vocab(fin))
-          .collect().map(_.toSeq).toSet
-        assert(liveDel == freshDel, s"seed $seed: live deletes != rebuild")
-        val served = InvertedIndex.searchBm25(s, dir,
-          Seq("alpha", "gamma"), k = 10)
-          .collect().map(_.toSeq).toSet
-        val replay = InvertedIndex.bm25FromPostings(
-          InvertedIndex.postings(fin)
-            .filter(col("term").isin("alpha", "gamma")),
-          InvertedIndex.corpusStats(fin), k = 10)
-          .collect().map(_.toSeq).toSet
-        assert(served == replay, s"seed $seed: BM25 != rebuild replay")
-      } finally {
-        InvertedIndex.drop(s, dir)
-        rm(dir)
+          val fin = corpus().localCheckpoint(true)
+          val live = InvertedIndex.postingsFor(s, dir)
+            .select("term", "doc_id", "tf", "dl")
+            .collect().map(_.toSeq).toSet
+          val fresh = InvertedIndex.postings(fin)
+            .select("term", "doc_id", "tf", "dl")
+            .collect().map(_.toSeq).toSet
+          assert(live == fresh, s"seed $seed: live postings != rebuild")
+          val livePos = InvertedIndex.positionsFor(s, dir)
+            .select("term", "doc_id", "pos")
+            .collect().map(_.toSeq).toSet
+          val freshPos = InvertedIndex.positions(fin)
+            .select("term", "doc_id", "pos")
+            .collect().map(_.toSeq).toSet
+          assert(livePos == freshPos, s"seed $seed: live positions != rebuild")
+          val st = InvertedIndex.statsFor(s, dir).head()
+          val ex = InvertedIndex.corpusStats(fin).head()
+          assert((st.getLong(0), st.getLong(1)) == (ex.getLong(0), ex.getLong(1)),
+            s"seed $seed: summed stats != corpus stats")
+          val liveDel = InvertedIndex.deletesFor(s, dir)
+            .collect().map(_.toSeq).toSet
+          val freshDel = InvertedIndex.deletes(InvertedIndex.vocab(fin))
+            .collect().map(_.toSeq).toSet
+          assert(liveDel == freshDel, s"seed $seed: live deletes != rebuild")
+          val served = InvertedIndex.searchBm25(s, dir,
+            Seq("alpha", "gamma"), k = 10)
+            .collect().map(_.toSeq).toSet
+          val replay = InvertedIndex.bm25FromPostings(
+            InvertedIndex.postings(fin)
+              .filter(col("term").isin("alpha", "gamma")),
+            InvertedIndex.corpusStats(fin), k = 10)
+            .collect().map(_.toSeq).toSet
+          assert(served == replay, s"seed $seed: BM25 != rebuild replay")
+        } finally InvertedIndex.drop(s, dir)
       }
     }
   }
@@ -809,54 +772,53 @@ class InvertedIndexSpec extends SparkSpec {
       (2L, "beta delta alpha"),
       (3L, "gamma epsilon")
     ).toDF("doc_id", "text")
-    val dir = "/tmp/graft_inv_compact_crash"
-    rm(dir)
-    base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    InvertedIndex.drop(s, dir)
-    try {
-      val t = InvertedIndex.ensure(s, dir)
-      InvertedIndex.ensurePositions(s, dir)
-      // an edit batch: doc 2 removed, doc 4 added — leaves a tombstone
-      val add4 = Seq((4L, "alpha zeta alpha")).toDF("doc_id", "text")
-      InvertedIndex.appendPositions(s, dir, add4, 3L)
-      InvertedIndex.edit(s, dir, base.filter(col("doc_id") === 2L), add4, 3L)
-      Seq((1L, "alpha beta gamma"), (3L, "gamma epsilon"),
-          (4L, "alpha zeta alpha")).toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      def answers() = (
-        InvertedIndex.searchBm25(s, dir, Seq("alpha", "gamma"), k = 10)
-          .collect().map(_.toSeq).toSet,
-        InvertedIndex.searchPhrase(s, dir, Seq("alpha", "zeta"), k = 10)
-          .collect().map(_.toSeq).toSet,
-        InvertedIndex.statsFor(s, dir).collect().map(_.toSeq).toSet)
-      val before = answers()
-      // SIMULATED KILL MID-FOLD: replicate compact's first write only —
-      // the postings table folds to the max committed id (tombstones
-      // applied physically, compact's live fold), then the "crash":
-      // stats, positions, tombstones, and the ledger are all untouched
-      val foldId = s.table(InvertedIndex.metaTable(dir))
-        .agg(max("batch_id")).head().getLong(0)
-      val rows = InvertedIndex.postingsFor(s, dir)
-        .drop("batch_id").localCheckpoint(true)
-      rows.withColumn("batch_id", lit(foldId))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .bucketBy(SnapshotMeta.bucketsOf(s, t), "term").sortBy("term", "doc_id")
-        .saveAsTable(t)
-      s.catalog.refreshTable(t)
-      // the torn state still serves every answer exactly: folded rows
-      // sit AT the max id, the leftover tombstone (batch 3) only hides
-      // rows strictly below 3, stats still sum additively
-      assert(answers() == before,
-        "a mid-fold crash state must keep serving exact answers")
-      assert(s.catalog.tableExists(InvertedIndex.tombTable(dir)),
-        "fixture error: the tombstone must still be present mid-fold")
-      // recovery: the re-run converges to the clean fold
-      InvertedIndex.compact(s, dir)
-      assert(answers() == before, "the re-run fold changed answers")
-      assert(!s.catalog.tableExists(InvertedIndex.tombTable(dir)))
-      assert(s.table(InvertedIndex.metaTable(dir)).count() == 1)
-      assert(!InvertedIndex.snapshotStale(s, dir))
-    } finally { InvertedIndex.drop(s, dir); rm(dir) }
+    withScratch("inv-compact-crash") { dir =>
+      base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      try {
+        val t = InvertedIndex.ensure(s, dir)
+        InvertedIndex.ensurePositions(s, dir)
+        // an edit batch: doc 2 removed, doc 4 added — leaves a tombstone
+        val add4 = Seq((4L, "alpha zeta alpha")).toDF("doc_id", "text")
+        InvertedIndex.appendPositions(s, dir, add4, 3L)
+        InvertedIndex.edit(s, dir, base.filter(col("doc_id") === 2L), add4, 3L)
+        Seq((1L, "alpha beta gamma"), (3L, "gamma epsilon"),
+            (4L, "alpha zeta alpha")).toDF("doc_id", "text")
+          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        def answers() = (
+          InvertedIndex.searchBm25(s, dir, Seq("alpha", "gamma"), k = 10)
+            .collect().map(_.toSeq).toSet,
+          InvertedIndex.searchPhrase(s, dir, Seq("alpha", "zeta"), k = 10)
+            .collect().map(_.toSeq).toSet,
+          InvertedIndex.statsFor(s, dir).collect().map(_.toSeq).toSet)
+        val before = answers()
+        // SIMULATED KILL MID-FOLD: replicate compact's first write only —
+        // the postings table folds to the max committed id (tombstones
+        // applied physically, compact's live fold), then the "crash":
+        // stats, positions, tombstones, and the ledger are all untouched
+        val foldId = s.table(InvertedIndex.metaTable(dir))
+          .agg(max("batch_id")).head().getLong(0)
+        val rows = InvertedIndex.postingsFor(s, dir)
+          .drop("batch_id").localCheckpoint(true)
+        rows.withColumn("batch_id", lit(foldId))
+          .write.mode("overwrite").partitionBy("batch_id")
+          .bucketBy(SnapshotMeta.bucketsOf(s, t), "term").sortBy("term", "doc_id")
+          .saveAsTable(t)
+        s.catalog.refreshTable(t)
+        // the torn state still serves every answer exactly: folded rows
+        // sit AT the max id, the leftover tombstone (batch 3) only hides
+        // rows strictly below 3, stats still sum additively
+        assert(answers() == before,
+          "a mid-fold crash state must keep serving exact answers")
+        assert(s.catalog.tableExists(InvertedIndex.tombTable(dir)),
+          "fixture error: the tombstone must still be present mid-fold")
+        // recovery: the re-run converges to the clean fold
+        InvertedIndex.compact(s, dir)
+        assert(answers() == before, "the re-run fold changed answers")
+        assert(!s.catalog.tableExists(InvertedIndex.tombTable(dir)))
+        assert(s.table(InvertedIndex.metaTable(dir)).count() == 1)
+        assert(!InvertedIndex.snapshotStale(s, dir))
+      } finally InvertedIndex.drop(s, dir)
+    }
   }
 
   test("three successive appends equal the one-shot rebuild (associativity)") {
@@ -876,44 +838,43 @@ class InvertedIndexSpec extends SparkSpec {
       Seq((4L, "alpha zeta"), (5L, "delta delta delta")),
       Seq((6L, "zeta epsilon alpha gamma"))
     ).map(_.toDF("doc_id", "text"))
-    val dir = "/tmp/graft_inv_chain_fixture"
-    rm(dir)
-    base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    InvertedIndex.drop(s, dir)
-    try {
-      val t = InvertedIndex.ensure(s, dir)
-      InvertedIndex.ensurePositions(s, dir)
-      batches.zipWithIndex.foreach { case (b, i) =>
-        InvertedIndex.appendPositions(s, dir, b, i + 1L)
-        InvertedIndex.append(s, dir, b, i + 1L)
-      }
-      val full = batches.foldLeft(base)(_ unionByName _)
-      def canon(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.toSeq).toSet
-      // stored postings rows == one-shot derivation, bit-exact
-      assert(canon(s.table(t).select("term", "doc_id", "tf", "dl")) ==
-        canon(InvertedIndex.postings(full)))
-      // summed stats == one-shot corpus stats
-      val st = InvertedIndex.statsFor(s, dir).head()
-      val ex = InvertedIndex.corpusStats(full).head()
-      assert((st.getLong(0), st.getLong(1)) == (ex.getLong(0), ex.getLong(1)))
-      // every serving surface equals the from-scratch replay
-      val terms = Seq("alpha", "delta", "gamma", "zeta")
-      assert(canon(InvertedIndex.searchBm25(s, dir, terms, k = 10)) ==
-        canon(InvertedIndex.bm25FromPostings(
-          InvertedIndex.postings(full).filter(col("term").isin(terms: _*)),
-          InvertedIndex.corpusStats(full), k = 10)))
-      assert(canon(InvertedIndex.search(s, dir, terms, k = 10)) ==
-        canon(InvertedIndex.rankedFromPostings(
-          InvertedIndex.postings(full).filter(col("term").isin(terms: _*)),
-          InvertedIndex.corpusStats(full).select("n"), k = 10)))
-      assert(canon(InvertedIndex.searchPhrase(s, dir, Seq("delta", "delta"), k = 10)) ==
-        canon(InvertedIndex.phraseFromPositions(
-          InvertedIndex.positions(full).filter(col("term") === "delta"),
-          Seq("delta", "delta"), k = 10)))
-      // and the ledger recorded each cycle (base + 3 batches)
-      assert(s.table(InvertedIndex.metaTable(dir)).count() == 4)
-    } finally { InvertedIndex.drop(s, dir); rm(dir) }
+    withScratch("inv-chain") { dir =>
+      base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      try {
+        val t = InvertedIndex.ensure(s, dir)
+        InvertedIndex.ensurePositions(s, dir)
+        batches.zipWithIndex.foreach { case (b, i) =>
+          InvertedIndex.appendPositions(s, dir, b, i + 1L)
+          InvertedIndex.append(s, dir, b, i + 1L)
+        }
+        val full = batches.foldLeft(base)(_ unionByName _)
+        def canon(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(_.toSeq).toSet
+        // stored postings rows == one-shot derivation, bit-exact
+        assert(canon(s.table(t).select("term", "doc_id", "tf", "dl")) ==
+          canon(InvertedIndex.postings(full)))
+        // summed stats == one-shot corpus stats
+        val st = InvertedIndex.statsFor(s, dir).head()
+        val ex = InvertedIndex.corpusStats(full).head()
+        assert((st.getLong(0), st.getLong(1)) == (ex.getLong(0), ex.getLong(1)))
+        // every serving surface equals the from-scratch replay
+        val terms = Seq("alpha", "delta", "gamma", "zeta")
+        assert(canon(InvertedIndex.searchBm25(s, dir, terms, k = 10)) ==
+          canon(InvertedIndex.bm25FromPostings(
+            InvertedIndex.postings(full).filter(col("term").isin(terms: _*)),
+            InvertedIndex.corpusStats(full), k = 10)))
+        assert(canon(InvertedIndex.search(s, dir, terms, k = 10)) ==
+          canon(InvertedIndex.rankedFromPostings(
+            InvertedIndex.postings(full).filter(col("term").isin(terms: _*)),
+            InvertedIndex.corpusStats(full).select("n"), k = 10)))
+        assert(canon(InvertedIndex.searchPhrase(s, dir, Seq("delta", "delta"), k = 10)) ==
+          canon(InvertedIndex.phraseFromPositions(
+            InvertedIndex.positions(full).filter(col("term") === "delta"),
+            Seq("delta", "delta"), k = 10)))
+        // and the ledger recorded each cycle (base + 3 batches)
+        assert(s.table(InvertedIndex.metaTable(dir)).count() == 4)
+      } finally InvertedIndex.drop(s, dir)
+    }
   }
 
   test("compact folds batch partitions into the base and preserves every answer") {
@@ -928,63 +889,62 @@ class InvertedIndexSpec extends SparkSpec {
       (4L, "alpha zeta"),
       (5L, "delta delta delta gamma alpha")
     ).toDF("doc_id", "text")
-    val dir = "/tmp/graft_inv_compact_fixture"
-    rm(dir)
-    base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    InvertedIndex.drop(s, dir)
-    try {
-      val t = InvertedIndex.ensure(s, dir)
-      InvertedIndex.ensurePositions(s, dir)
-      // a stale index (append committed, batch files not landed) must
-      // refuse compaction — recovery-by-rebuild could not reproduce it
-      InvertedIndex.appendPositions(s, dir, batch, 5L)
-      InvertedIndex.append(s, dir, batch, 5L)
-      assertThrows[IllegalArgumentException](InvertedIndex.compact(s, dir))
-      batch.write.mode("append").parquet(s"$dir/documents.parquet")
-      def answers() = (
-        InvertedIndex.searchBm25(s, dir, Seq("alpha", "delta", "gamma"), k = 10)
-          .collect().map(_.toSeq).toSet,
-        InvertedIndex.search(s, dir, Seq("alpha", "delta"), k = 10)
-          .collect().map(_.toSeq).toSet,
-        InvertedIndex.searchPhrase(s, dir, Seq("delta", "delta"), k = 10)
-          .collect().map(_.toSeq).toSet)
-      val before = answers()
-      assert(s.table(InvertedIndex.metaTable(dir)).count() == 2)
-      InvertedIndex.compact(s, dir)
-      // one ledger row, one partition per table, identical answers
-      assert(s.table(InvertedIndex.metaTable(dir)).count() == 1)
-      // everything folds into ONE partition — the highest committed id,
-      // not the base: tombstones only hide strictly-older rows, so the
-      // max-id fold keeps every crash-intermediate state servable
-      Seq(t, InvertedIndex.statsTable(dir), InvertedIndex.posTable(dir))
-        .foreach { x =>
-          val parts = s.table(x).select("batch_id").distinct()
-            .collect().map(_.getLong(0)).toSet
-          assert(parts == Set(5L),
-            s"$x did not fold to the single max-id partition: $parts")
-        }
-      assert(answers() == before)
-      assert(!InvertedIndex.snapshotStale(s, dir),
-        "compaction must preserve the freshness handshake")
-      // the pruned serving plan survives the relayout
-      val plan = InvertedIndex.searchBm25(s, dir, Seq("alpha"), k = 10)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("SelectedBucketsCount"),
-        s"compacted postings scan lost bucket pruning:\n$plan")
-      // and the index keeps accepting appends after compaction
-      val batch2 = Seq((6L, "zeta zeta alpha")).toDF("doc_id", "text")
-      InvertedIndex.append(s, dir, batch2, 9L)
-      batch2.write.mode("append").parquet(s"$dir/documents.parquet")
-      val union = base.unionByName(batch).unionByName(batch2)
-      val served = InvertedIndex.searchBm25(s, dir, Seq("alpha", "zeta"), k = 10)
-        .collect().map(_.toSeq).toSet
-      val replay = InvertedIndex.bm25FromPostings(
-        InvertedIndex.postings(union)
-          .filter(col("term").isin("alpha", "zeta")),
-        InvertedIndex.corpusStats(union), k = 10)
-        .collect().map(_.toSeq).toSet
-      assert(served == replay && served.nonEmpty)
-    } finally { InvertedIndex.drop(s, dir); rm(dir) }
+    withScratch("inv-compact") { dir =>
+      base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      try {
+        val t = InvertedIndex.ensure(s, dir)
+        InvertedIndex.ensurePositions(s, dir)
+        // a stale index (append committed, batch files not landed) must
+        // refuse compaction — recovery-by-rebuild could not reproduce it
+        InvertedIndex.appendPositions(s, dir, batch, 5L)
+        InvertedIndex.append(s, dir, batch, 5L)
+        assertThrows[IllegalArgumentException](InvertedIndex.compact(s, dir))
+        batch.write.mode("append").parquet(s"$dir/documents.parquet")
+        def answers() = (
+          InvertedIndex.searchBm25(s, dir, Seq("alpha", "delta", "gamma"), k = 10)
+            .collect().map(_.toSeq).toSet,
+          InvertedIndex.search(s, dir, Seq("alpha", "delta"), k = 10)
+            .collect().map(_.toSeq).toSet,
+          InvertedIndex.searchPhrase(s, dir, Seq("delta", "delta"), k = 10)
+            .collect().map(_.toSeq).toSet)
+        val before = answers()
+        assert(s.table(InvertedIndex.metaTable(dir)).count() == 2)
+        InvertedIndex.compact(s, dir)
+        // one ledger row, one partition per table, identical answers
+        assert(s.table(InvertedIndex.metaTable(dir)).count() == 1)
+        // everything folds into ONE partition — the highest committed id,
+        // not the base: tombstones only hide strictly-older rows, so the
+        // max-id fold keeps every crash-intermediate state servable
+        Seq(t, InvertedIndex.statsTable(dir), InvertedIndex.posTable(dir))
+          .foreach { x =>
+            val parts = s.table(x).select("batch_id").distinct()
+              .collect().map(_.getLong(0)).toSet
+            assert(parts == Set(5L),
+              s"$x did not fold to the single max-id partition: $parts")
+          }
+        assert(answers() == before)
+        assert(!InvertedIndex.snapshotStale(s, dir),
+          "compaction must preserve the freshness handshake")
+        // the pruned serving plan survives the relayout
+        val plan = InvertedIndex.searchBm25(s, dir, Seq("alpha"), k = 10)
+          .queryExecution.executedPlan.toString
+        assert(plan.contains("SelectedBucketsCount"),
+          s"compacted postings scan lost bucket pruning:\n$plan")
+        // and the index keeps accepting appends after compaction
+        val batch2 = Seq((6L, "zeta zeta alpha")).toDF("doc_id", "text")
+        InvertedIndex.append(s, dir, batch2, 9L)
+        batch2.write.mode("append").parquet(s"$dir/documents.parquet")
+        val union = base.unionByName(batch).unionByName(batch2)
+        val served = InvertedIndex.searchBm25(s, dir, Seq("alpha", "zeta"), k = 10)
+          .collect().map(_.toSeq).toSet
+        val replay = InvertedIndex.bm25FromPostings(
+          InvertedIndex.postings(union)
+            .filter(col("term").isin("alpha", "zeta")),
+          InvertedIndex.corpusStats(union), k = 10)
+          .collect().map(_.toSeq).toSet
+        assert(served == replay && served.nonEmpty)
+      } finally InvertedIndex.drop(s, dir)
+    }
   }
 
   test("prefix search: capped expansion by df, equals the replay over the " +
@@ -1062,59 +1022,48 @@ class InvertedIndexSpec extends SparkSpec {
       InvertedIndex.searchFuzzy(s, sfDir, "sow", maxDistance = 3))
   }
 
-  test("guards: compact refuses derived-id ledgers; derived-id appends are " +
-       "refused once the family has absorbed an edit") {
+  test("a tombstoned id re-added at a later batch id serves; a committed batch " +
+       "whose ids were later tombstoned replays as a no-op") {
     val s = spark
     import s.implicits._
     val base = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
-    val dir = "/tmp/graft_inv_guard_fixture"
-    rm(dir)
-    base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    InvertedIndex.drop(s, dir)
-    try {
-      InvertedIndex.ensure(s, dir)
-      InvertedIndex.ensurePositions(s, dir)
-      // a derived-id append on an edit-free family is the legal ingest
-      // path — land the extended snapshot first so the ledger sum equals
-      // the dir (compact's freshness precondition)
-      val b1 = Seq((3L, "delta epsilon")).toDF("doc_id", "text")
-      base.unionByName(b1).localCheckpoint(true)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      InvertedIndex.appendPositions(s, dir, b1)
-      InvertedIndex.append(s, dir, b1)
-      assert(!InvertedIndex.snapshotStale(s, dir))
-      // the derived stamp sits below the base id, so compact must refuse:
-      // the fold would erase its ledger slot and a replayed content batch
-      // would re-apply beside the folded rows
-      val ex = intercept[IllegalArgumentException](InvertedIndex.compact(s, dir))
-      assert(ex.getMessage.contains("content-derived"))
-      // an edit (durable id) brings the tombstone table into existence...
-      val removed = Seq((2L, "beta gamma")).toDF("doc_id", "text")
-      val added = Seq((4L, "zeta eta")).toDF("doc_id", "text")
-      InvertedIndex.appendPositions(s, dir, added, 1L)
-      InvertedIndex.edit(s, dir, removed, added, 1L)
-      // ...after which the derived-id guard is PRECISE: a brand-new id
-      // is safe (no tombstone can name it) and still appends fine...
-      val b2 = Seq((5L, "theta iota")).toDF("doc_id", "text")
-      InvertedIndex.appendPositions(s, dir, b2)
-      InvertedIndex.append(s, dir, b2)
-      val hits = InvertedIndex.search(s, dir, Seq("theta"), k = 5)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(hits == Set(5L),
-        "a new-id derived append on an edited family must serve")
-      // ...but RE-ADDING a tombstoned id is refused: its rows would land
-      // strictly below the tombstone and be permanently hidden
-      val readd = Seq((2L, "beta reborn")).toDF("doc_id", "text")
-      assertThrows[IllegalArgumentException](InvertedIndex.append(s, dir, readd))
-      assertThrows[IllegalArgumentException](
-        InvertedIndex.appendPositions(s, dir, readd))
-      // the durable-id overloads remain the sanctioned re-add path
-      InvertedIndex.appendPositions(s, dir, readd, 2L)
-      InvertedIndex.append(s, dir, readd, 2L)
-      val reborn = InvertedIndex.search(s, dir, Seq("reborn"), k = 5)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(reborn == Set(2L), "the durable-id re-add must serve")
-    } finally { InvertedIndex.drop(s, dir); rm(dir) }
+    withScratch("inv-readd") { dir =>
+      base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      try {
+        InvertedIndex.ensurePositions(s, dir)
+        def hits(term: String): Set[Long] =
+          InvertedIndex.search(s, dir, Seq(term), k = 5)
+            .select("doc_id").collect().map(_.getLong(0)).toSet
+        // doc 3 lands as batch 0, then batch 1 deletes docs 2 and 3
+        val b0 = Seq((3L, "delta epsilon")).toDF("doc_id", "text")
+        InvertedIndex.appendPositions(s, dir, b0, 0L)
+        InvertedIndex.append(s, dir, b0, 0L)
+        InvertedIndex.delete(s, dir,
+          base.filter(col("doc_id") === 2L).unionByName(b0), batchId = 1L)
+        assert(hits("delta").isEmpty && hits("gamma").isEmpty)
+        // a restarted caller re-running batch 0 no-ops through the ledger
+        // check, and the tombstone keeps hiding its rows
+        val before = s.table(InvertedIndex.table(dir)).count()
+        InvertedIndex.appendPositions(s, dir, b0, 0L)
+        InvertedIndex.append(s, dir, b0, 0L)
+        assert(s.table(InvertedIndex.table(dir)).count() == before,
+          "the committed batch's replay must change nothing")
+        assert(hits("delta").isEmpty,
+          "the tombstone must keep hiding the batch after the replay")
+        // doc 2 re-added at a later id lands above its tombstone and
+        // serves; its old generation stays dead
+        val readd = Seq((2L, "beta reborn")).toDF("doc_id", "text")
+        InvertedIndex.appendPositions(s, dir, readd, 2L)
+        InvertedIndex.append(s, dir, readd, 2L)
+        assert(hits("reborn") == Set(2L), "the re-added id must serve")
+        assert(hits("gamma").isEmpty, "the re-added id's old rows must stay dead")
+        // a brand-new id appends on the edited family and serves
+        val b3 = Seq((5L, "theta iota")).toDF("doc_id", "text")
+        InvertedIndex.appendPositions(s, dir, b3, 3L)
+        InvertedIndex.append(s, dir, b3, 3L)
+        assert(hits("theta") == Set(5L))
+      } finally InvertedIndex.drop(s, dir)
+    }
   }
 
   test("vocab companion: live (term, df) tracks append/edit/compact exactly; " +
@@ -1143,94 +1092,93 @@ class InvertedIndexSpec extends SparkSpec {
       (1L, "alpha beta gamma alpha"),
       (2L, "beta delta"),
       (3L, "gamma gamma epsilon")).toDF("doc_id", "text")
-    val dir = "/tmp/graft_inv_vocab_fixture"
-    rm(dir)
-    base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    InvertedIndex.drop(s, dir)
-    try {
-      InvertedIndex.ensure(s, dir)
-      InvertedIndex.ensurePositions(s, dir)
-      assert(liveVocab(dir) == expect(base) && liveVocab(dir).nonEmpty,
-        "the base build's vocab must equal the corpus dfs")
-      checkDeletes(dir, base,
-        "the base build's deletes must equal the exploded corpus vocab")
-      // TORN WRITE: a partial vocab partition lands at batch 7 with no
-      // commit stamp — the append re-run must REPLACE it, not add beside
-      SnapshotMeta.overwritePartition(s, InvertedIndex.vocabTable(dir), 7L,
-        Seq(("bogus", 999L)).toDF("term", "df"))
-      // ... and a torn DELETES partition for the same uncommitted batch
-      SnapshotMeta.overwritePartition(s, InvertedIndex.deletesTable(dir), 7L,
-        Seq(("ogus", "bogus", 999L)).toDF("variant", "term", "df"))
-      val batch = Seq((4L, "alpha zeta"), (5L, "delta delta")).toDF("doc_id", "text")
-      InvertedIndex.appendPositions(s, dir, batch, 7L)
-      InvertedIndex.append(s, dir, batch, 7L)
-      assert(liveVocab(dir) == expect(base.unionByName(batch)),
-        "append must land the batch's df contributions (replacing the torn rows)")
-      checkDeletes(dir, base.unionByName(batch),
-        "append must land the batch's variant contributions (replacing the torn rows)")
-      // EDIT: doc 2 removed, doc 1 rewritten (alpha dropped, eta gained) —
-      // net rows must telescope to the edited corpus's dfs
-      val removed = base.filter(col("doc_id").isin(1L, 2L))
-      val added = Seq((1L, "beta eta")).toDF("doc_id", "text")
-      InvertedIndex.appendPositions(s, dir, added, 8L)
-      InvertedIndex.edit(s, dir, removed, added, 8L)
-      val edited = Seq(
-        (1L, "beta eta"),
-        (3L, "gamma gamma epsilon"),
-        (4L, "alpha zeta"),
-        (5L, "delta delta")).toDF("doc_id", "text")
-      assert(liveVocab(dir) == expect(edited),
-        "edit's net vocab rows must telescope to the edited corpus dfs")
-      checkDeletes(dir, edited,
-        "edit's net deletes rows must telescope to the edited corpus's " +
-          "exploded vocab (dead terms' variants gone)")
-      // the tombstoned term ("delta" lost doc 2, kept doc 5) and the
-      // fully-dead term path: nothing of doc 2's unique contribution stays
-      assert(liveVocab(dir)("beta") == 1L, "doc 2's beta df must be gone")
-      // fuzzy/prefix EXPANSIONS read the vocab table, never postings —
-      // the round-14 weak-plan fix, pinned on the expansion's own plan
-      val expPlan = InvertedIndex.vocabFor(s, dir)
-        .filter(levenshtein(col("term"), lit("bita")) <= 1)
-        .queryExecution.executedPlan.toString
-      assert(expPlan.contains("_vocab"),
-        s"the expansion input must be the persisted vocab:\n$expPlan")
-      assert(!expPlan.contains("_postings"),
-        s"the expansion must NOT read the postings store:\n$expPlan")
-      // the PREFIX expansion's StartsWith pushes into the vocab scan
-      // (term-sorted bucket files prune by row-group min/max)
-      val prefixPlan = InvertedIndex.vocabFor(s, dir)
-        .filter(col("term").startsWith("be"))
-        .queryExecution.executedPlan.toString
-      assert(prefixPlan.contains("StringStartsWith") &&
-        prefixPlan.contains("_vocab") && !prefixPlan.contains("_postings"),
-        s"the prefix expansion must push StartsWith into the vocab scan:\n$prefixPlan")
-      // and the served fuzzy answer over the maintained family is exact
-      val fuzzy = InvertedIndex.searchFuzzy(s, dir, "bita", k = 5)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      val betaDocs = InvertedIndex.postings(edited)
-        .filter(col("term") === "beta")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(fuzzy == betaDocs && fuzzy.nonEmpty)
-      // COMPACT: land the edited corpus (freshness), fold, re-check
-      edited.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      assert(!InvertedIndex.snapshotStale(s, dir))
-      InvertedIndex.compact(s, dir)
-      assert(liveVocab(dir) == expect(edited),
-        "compaction must fold vocab to the live per-term sums")
-      checkDeletes(dir, edited,
-        "compaction must fold deletes to the live per-(variant, term) sums")
-      assert(s.table(InvertedIndex.deletesTable(dir))
-        .select("batch_id").distinct().count() == 1 &&
-        s.table(InvertedIndex.deletesTable(dir))
+    withScratch("inv-vocab") { dir =>
+      base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      try {
+        InvertedIndex.ensure(s, dir)
+        InvertedIndex.ensurePositions(s, dir)
+        assert(liveVocab(dir) == expect(base) && liveVocab(dir).nonEmpty,
+          "the base build's vocab must equal the corpus dfs")
+        checkDeletes(dir, base,
+          "the base build's deletes must equal the exploded corpus vocab")
+        // TORN WRITE: a partial vocab partition lands at batch 7 with no
+        // commit stamp — the append re-run must REPLACE it, not add beside
+        SnapshotMeta.overwritePartition(s, InvertedIndex.vocabTable(dir), 7L,
+          Seq(("bogus", 999L)).toDF("term", "df"))
+        // ... and a torn DELETES partition for the same uncommitted batch
+        SnapshotMeta.overwritePartition(s, InvertedIndex.deletesTable(dir), 7L,
+          Seq(("ogus", "bogus", 999L)).toDF("variant", "term", "df"))
+        val batch = Seq((4L, "alpha zeta"), (5L, "delta delta")).toDF("doc_id", "text")
+        InvertedIndex.appendPositions(s, dir, batch, 7L)
+        InvertedIndex.append(s, dir, batch, 7L)
+        assert(liveVocab(dir) == expect(base.unionByName(batch)),
+          "append must land the batch's df contributions (replacing the torn rows)")
+        checkDeletes(dir, base.unionByName(batch),
+          "append must land the batch's variant contributions (replacing the torn rows)")
+        // EDIT: doc 2 removed, doc 1 rewritten (alpha dropped, eta gained) —
+        // net rows must telescope to the edited corpus's dfs
+        val removed = base.filter(col("doc_id").isin(1L, 2L))
+        val added = Seq((1L, "beta eta")).toDF("doc_id", "text")
+        InvertedIndex.appendPositions(s, dir, added, 8L)
+        InvertedIndex.edit(s, dir, removed, added, 8L)
+        val edited = Seq(
+          (1L, "beta eta"),
+          (3L, "gamma gamma epsilon"),
+          (4L, "alpha zeta"),
+          (5L, "delta delta")).toDF("doc_id", "text")
+        assert(liveVocab(dir) == expect(edited),
+          "edit's net vocab rows must telescope to the edited corpus dfs")
+        checkDeletes(dir, edited,
+          "edit's net deletes rows must telescope to the edited corpus's " +
+            "exploded vocab (dead terms' variants gone)")
+        // the tombstoned term ("delta" lost doc 2, kept doc 5) and the
+        // fully-dead term path: nothing of doc 2's unique contribution stays
+        assert(liveVocab(dir)("beta") == 1L, "doc 2's beta df must be gone")
+        // fuzzy/prefix EXPANSIONS read the vocab table, never postings —
+        // the round-14 weak-plan fix, pinned on the expansion's own plan
+        val expPlan = InvertedIndex.vocabFor(s, dir)
+          .filter(levenshtein(col("term"), lit("bita")) <= 1)
+          .queryExecution.executedPlan.toString
+        assert(expPlan.contains("_vocab"),
+          s"the expansion input must be the persisted vocab:\n$expPlan")
+        assert(!expPlan.contains("_postings"),
+          s"the expansion must NOT read the postings store:\n$expPlan")
+        // the PREFIX expansion's StartsWith pushes into the vocab scan
+        // (term-sorted bucket files prune by row-group min/max)
+        val prefixPlan = InvertedIndex.vocabFor(s, dir)
+          .filter(col("term").startsWith("be"))
+          .queryExecution.executedPlan.toString
+        assert(prefixPlan.contains("StringStartsWith") &&
+          prefixPlan.contains("_vocab") && !prefixPlan.contains("_postings"),
+          s"the prefix expansion must push StartsWith into the vocab scan:\n$prefixPlan")
+        // and the served fuzzy answer over the maintained family is exact
+        val fuzzy = InvertedIndex.searchFuzzy(s, dir, "bita", k = 5)
+          .select("doc_id").collect().map(_.getLong(0)).toSet
+        val betaDocs = InvertedIndex.postings(edited)
+          .filter(col("term") === "beta")
+          .select("doc_id").collect().map(_.getLong(0)).toSet
+        assert(fuzzy == betaDocs && fuzzy.nonEmpty)
+        // COMPACT: land the edited corpus (freshness), fold, re-check
+        edited.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        assert(!InvertedIndex.snapshotStale(s, dir))
+        InvertedIndex.compact(s, dir)
+        assert(liveVocab(dir) == expect(edited),
+          "compaction must fold vocab to the live per-term sums")
+        checkDeletes(dir, edited,
+          "compaction must fold deletes to the live per-(variant, term) sums")
+        assert(s.table(InvertedIndex.deletesTable(dir))
+          .select("batch_id").distinct().count() == 1 &&
+          s.table(InvertedIndex.deletesTable(dir))
+            .filter(col("df") <= 0).count() == 0,
+          "the deletes fold must leave one partition with no dead rows")
+        assert(s.table(InvertedIndex.vocabTable(dir))
+          .select("batch_id").distinct().count() == 1,
+          "the vocab fold must leave one partition")
+        assert(s.table(InvertedIndex.vocabTable(dir))
           .filter(col("df") <= 0).count() == 0,
-        "the deletes fold must leave one partition with no dead rows")
-      assert(s.table(InvertedIndex.vocabTable(dir))
-        .select("batch_id").distinct().count() == 1,
-        "the vocab fold must leave one partition")
-      assert(s.table(InvertedIndex.vocabTable(dir))
-        .filter(col("df") <= 0).count() == 0,
-        "dead terms must drop at the fold")
-    } finally { InvertedIndex.drop(s, dir); rm(dir) }
+          "dead terms must drop at the fold")
+      } finally InvertedIndex.drop(s, dir)
+    }
   }
 
   test("fuzzy batch (SymSpell) equals the per-query loop at d=1 and d=2; " +
@@ -1379,37 +1327,6 @@ class InvertedIndexSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(candPlan2.contains("_vocab") && !candPlan2.contains("_postings"),
       s"d=2 candidates derive inline from _vocab (never postings):\n$candPlan2")
-  }
-
-  test("a committed derived-id batch whose ids were later tombstoned " +
-       "replays as a no-op (not a refusal)") {
-    val s = spark
-    import s.implicits._
-    val base = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
-    val dir = "/tmp/graft_inv_replay_tomb_fixture"
-    rm(dir)
-    base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    InvertedIndex.drop(s, dir)
-    try {
-      InvertedIndex.ensure(s, dir)
-      InvertedIndex.ensurePositions(s, dir)
-      // derived-id ingest of doc 3, then a DURABLE edit tombstones it
-      val b1 = Seq((3L, "delta epsilon")).toDF("doc_id", "text")
-      InvertedIndex.appendPositions(s, dir, b1)
-      InvertedIndex.append(s, dir, b1)
-      InvertedIndex.delete(s, dir, b1, batchId = 1L)
-      assert(InvertedIndex.search(s, dir, Seq("delta"), k = 5).count() == 0)
-      val before = s.table(InvertedIndex.table(dir)).count()
-      // the replay (a restarted caller re-running its landed batch) must
-      // NO-OP via the ledger check — refusing it would regress the
-      // committed-batch replay contract (round-14 ADVICE)
-      InvertedIndex.appendPositions(s, dir, b1)
-      InvertedIndex.append(s, dir, b1)
-      assert(s.table(InvertedIndex.table(dir)).count() == before,
-        "the committed batch's replay must change nothing")
-      assert(InvertedIndex.search(s, dir, Seq("delta"), k = 5).count() == 0,
-        "the tombstone must keep hiding the batch after the replay")
-    } finally { InvertedIndex.drop(s, dir); rm(dir) }
   }
 
   test("bucket sizing: the bytes formula floors at 16 and grows in powers of two; " +

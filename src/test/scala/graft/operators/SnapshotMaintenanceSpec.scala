@@ -23,29 +23,6 @@ class SnapshotMaintenanceSpec extends SparkSpec {
     ComponentIndex.drop(spark, dir)
   }
 
-  test("plan: no delta → NoChange; added-only → Append with exactly the new docs; " +
-       "removed/changed → RebuildRequired") {
-    val s = spark
-    import s.implicits._
-    val prev = Seq((1L, "a b c"), (2L, "d e f")).toDF("doc_id", "text")
-    assert(SnapshotMaintenance.plan(prev, prev) == SnapshotMaintenance.NoChange)
-    val appended = prev.unionByName(Seq((3L, "g h i")).toDF("doc_id", "text"))
-    SnapshotMaintenance.plan(prev, appended) match {
-      case SnapshotMaintenance.Append(batch) =>
-        assert(batch.select("doc_id").collect().map(_.getLong(0)).toSet == Set(3L))
-      case other => fail(s"expected Append, got $other")
-    }
-    // a changed doc poisons the cheap path even when docs were also added
-    val changed = appended
-      .withColumn("text", when(col("doc_id") === 1L, lit("a b CHANGED"))
-        .otherwise(col("text")))
-    assert(SnapshotMaintenance.plan(prev, changed) ==
-      SnapshotMaintenance.RebuildRequired)
-    // so does a removal
-    assert(SnapshotMaintenance.plan(prev, prev.filter(col("doc_id") =!= 2L)) ==
-      SnapshotMaintenance.RebuildRequired)
-  }
-
   test("maintain: append path advances the whole family; rebuild path repairs a rewrite") {
     val s = spark
     import s.implicits._
@@ -64,14 +41,14 @@ class SnapshotMaintenanceSpec extends SparkSpec {
 
       // --- NO-CHANGE: nothing re-derives
       ConnectedComponents.lastRounds = -1
-      assert(SnapshotMaintenance.maintain(s, dir, base) == "no_change")
+      assert(SnapshotMaintenance.maintain(s, dir, base, batchId = 0L) == "no_change")
       assert(ConnectedComponents.lastRounds == -1)
 
       // --- APPEND path: land a batch (4 dups doc 3's text), maintain
       val batch = Seq(doc(4, t2), doc(5, (1 to 30).map(i => s"three$i")))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
       batch.write.mode("append").parquet(s"$dir/documents.parquet")
-      assert(SnapshotMaintenance.maintain(s, dir, base) == "appended")
+      assert(SnapshotMaintenance.maintain(s, dir, base, batchId = 1L) == "appended")
       val docsNow = graft.sources.Tables.documents(s, dir)
       // every family member equals a fresh derivation over the dir
       assert(!InvertedIndex.snapshotStale(s, dir))
@@ -93,20 +70,25 @@ class SnapshotMaintenanceSpec extends SparkSpec {
         s"component map diverges after diff-driven append: $servedComp vs $freshComp")
       assert(servedComp.toMap.get(4L) == servedComp.toMap.get(3L),
         "the appended duplicate must cluster with its base twin")
-      // maintain is idempotent: replaying against the now-covered
-      // snapshot no-ops. MATERIALIZE prev here — a lazy frame over the
-      // dir would re-read whatever the dir holds later
+      // maintain is idempotent: replaying the committed batch, or a new
+      // id against the now-covered snapshot, no-ops. MATERIALIZE prev
+      // here — a lazy frame over the dir would re-read whatever the dir
+      // holds later
       val prevNow = docsNow.localCheckpoint(true)
-      assert(SnapshotMaintenance.maintain(s, dir, prevNow) == "no_change")
+      assert(SnapshotMaintenance.maintain(s, dir, base, batchId = 1L) == "no_change")
+      assert(SnapshotMaintenance.maintain(s, dir, prevNow, batchId = 2L) == "no_change")
 
-      // --- REBUILD path: rewrite a doc's content in place
+      // --- REBUILD path: rewrite a doc's content in place and hand
+      // maintain a prev the family does not cover (the snapshot before
+      // the append): the incremental paths would apply the wrong delta,
+      // so the whole family rebuilds from the dir
       val rewritten = graft.sources.Tables.documents(s, dir)
         .withColumn("text", when(col("doc_id") === 1L,
           lit((1 to 30).map(i => s"four$i").mkString(" ")))
           .otherwise(col("text")))
         .localCheckpoint(true)
       rewritten.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      assert(SnapshotMaintenance.maintain(s, dir, prevNow) == "rebuilt")
+      assert(SnapshotMaintenance.maintain(s, dir, base, batchId = 3L) == "rebuilt")
       assert(!InvertedIndex.snapshotStale(s, dir))
       assert(!ComponentIndex.snapshotStale(s, dir))
       val afterRebuild = s.table(InvertedIndex.table(dir))
@@ -202,64 +184,6 @@ class SnapshotMaintenanceSpec extends SparkSpec {
       assert(SnapshotMaintenance.maintain(s, dir, prev, batchId = 4L) == "no_change",
         "a rebuilt batch must replay as a no-op")
     } finally {
-      dropAll(dir)
-      rm(dir)
-    }
-  }
-
-  test("housekeeping skips a derived-stamp ledger instead of throwing " +
-       "after the batch committed") {
-    // a family whose ledger holds content-derived stamps cannot fold
-    // (the fold would erase their replay guards) — but a post-commit
-    // throw would wedge the loop: every later durable batch re-triggers
-    // the fold and dies on the same ledger. The housekeeping must SKIP;
-    // only the direct compact() call stays a loud refusal.
-    val s = spark
-    import s.implicits._
-    def doc(id: Long, words: Seq[String]) =
-      (id, words.mkString(" "), "en", "s0", 200)
-    def words(stem: String) = (1 to 30).map(i => s"$stem$i")
-    def land(rows: Seq[(Long, String, String, String, Int)], dir: String) =
-      rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-        .localCheckpoint(true)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("derivedskip").toString
-    val saved = sys.props.get("graft.index.compactAfter")
-    try {
-      sys.props("graft.index.compactAfter") = "2"
-      val v0 = Seq(doc(1, words("one")), doc(2, words("two")))
-      land(v0, dir)
-      InvertedIndex.ensurePositions(s, dir)
-      ComponentIndex.ensureBanded(s, dir)
-      // a legal content-derived append (the 3-arg maintain) puts a
-      // derived stamp in both ledgers
-      val prev0 = graft.sources.Tables.documents(s, dir).localCheckpoint(true)
-      val v1 = v0 :+ doc(3, words("three"))
-      land(v1, dir)
-      assert(SnapshotMaintenance.maintain(s, dir, prev0) == "appended")
-      // the durable batch crosses the stamp-count threshold, but the
-      // family is ineligible — the fold is SKIPPED, the batch commits,
-      // nothing throws
-      val prev1 = graft.sources.Tables.documents(s, dir).localCheckpoint(true)
-      val v2 = v1 :+ doc(4, words("four"))
-      land(v2, dir)
-      assert(SnapshotMaintenance.maintain(s, dir, prev1, batchId = 1L)
-        == "appended",
-        "an ineligible family must commit without folding (and without throwing)")
-      // the direct call remains the loud refusal
-      val ex = intercept[IllegalArgumentException](InvertedIndex.compact(s, dir))
-      assert(ex.getMessage.contains("content-derived"))
-      // and everything still serves the landed corpus
-      val cur = graft.sources.Tables.documents(s, dir)
-      assert(InvertedIndex.postingsFor(s, dir)
-        .select("term", "doc_id", "tf").collect().map(_.toSeq).toSet ==
-        InvertedIndex.postings(cur)
-          .select("term", "doc_id", "tf").collect().map(_.toSeq).toSet)
-    } finally {
-      saved match {
-        case Some(v) => sys.props("graft.index.compactAfter") = v
-        case None => sys.props.remove("graft.index.compactAfter")
-      }
       dropAll(dir)
       rm(dir)
     }
@@ -696,19 +620,68 @@ class SnapshotMaintenanceSpec extends SparkSpec {
       "dead_frac must not be null on an empty store")
     assert(row.getDouble(row.fieldIndex("dead_frac")) == 0.0)
     assert(row.getLong(row.fieldIndex("resident_rows")) == 0L)
-    // an EMPTY ledger (manually truncated debris) holds no derived
-    // batches: the guard must say so, not NPE on a null min
+    // an EMPTY ledger (manually truncated debris) sums to (0, 0) and
+    // holds no committed batch: the sums over zero rows must not NPE
     val meta = "graft_test_empty_ledger_meta"
     s.sql(s"DROP TABLE IF EXISTS $meta")
     SnapshotMeta.dropOrphanLocation(s, meta)
     try {
       Seq.empty[(Long, Long, Long)].toDF("n_rows", "id_sum", "batch_id")
         .write.partitionBy("batch_id").saveAsTable(meta)
-      assert(!SnapshotMeta.hasDerivedBatches(s, meta))
-      SnapshotMeta.requireNoDerivedBatches(s, meta) // must not throw
+      assert(SnapshotMeta.summedFingerprint(s, meta) == ((0L, 0L)))
+      assert(!SnapshotMeta.staleBatched(s, meta, (0L, 0L)))
+      assert(!SnapshotMeta.appliedBatch(s, meta, 0L))
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $meta")
       SnapshotMeta.dropOrphanLocation(s, meta)
+    }
+  }
+
+  test("every append, merge, edit, delete and maintain verb refuses the base " +
+       "id and a negative id, and commits nothing") {
+    val s = spark
+    import s.implicits._
+    withScratch("batch-id-guard") { dir =>
+      val docs = Seq((1L, "alpha beta gamma"), (2L, "beta delta"))
+        .toDF("doc_id", "text")
+      docs.write.parquet(s"$dir/documents.parquet")
+      val vecs = (0L until 30L).map(id => (id,
+          Array.tabulate(64)(d => (((id * 47 + d * 13) % 31) - 15) / 15.0f), id % 10))
+        .toDF("vec_id", "embedding", "label")
+      vecs.write.parquet(s"$dir/embeddings.parquet")
+      val ids = vecs.select("vec_id")
+      try {
+        val verbs: Seq[(String, Long => Any)] = Seq(
+          "InvertedIndex.append" -> (InvertedIndex.append(s, dir, docs, _)),
+          "InvertedIndex.appendPositions" -> (InvertedIndex.appendPositions(s, dir, docs, _)),
+          "InvertedIndex.edit" -> (InvertedIndex.edit(s, dir, docs, docs, _)),
+          "InvertedIndex.delete" -> (InvertedIndex.delete(s, dir, docs, _)),
+          "ComponentIndex.merge" -> (ComponentIndex.merge(s, dir, docs, _)),
+          "ComponentIndex.edit" -> (ComponentIndex.edit(s, dir, docs, docs, _)),
+          "ComponentIndex.delete" -> (ComponentIndex.delete(s, dir, docs, _)),
+          "SnapshotMaintenance.maintain" -> (SnapshotMaintenance.maintain(s, dir, docs, _)),
+          "IvfIndex.append" -> (IvfIndex.append(s, dir, vecs, _)),
+          "IvfIndex.edit" -> (IvfIndex.edit(s, dir, ids, vecs, _)),
+          "IvfIndex.delete" -> (IvfIndex.delete(s, dir, ids, _)),
+          "PqIndex.append" -> (PqIndex.append(s, dir, vecs, _)),
+          "PqIndex.edit" -> (PqIndex.edit(s, dir, ids, vecs, _)),
+          "PqIndex.delete" -> (PqIndex.delete(s, dir, ids, _)),
+          "AnnMaintenance.maintain" -> (AnnMaintenance.maintain(s, dir, vecs, _)))
+        for ((name, verb) <- verbs; id <- Seq(-1L, -5L)) {
+          val ex = intercept[IllegalArgumentException](verb(id))
+          assert(ex.getMessage.contains("non-negative"), s"$name($id): ${ex.getMessage}")
+        }
+        // a family the refused calls built holds its base stamp alone
+        Seq(InvertedIndex.metaTable(dir), ComponentIndex.metaTable(dir),
+            IvfIndex.metaTable(dir)).filter(SnapshotMeta.exists(s, _)).foreach { m =>
+          assert(s.table(m).select("batch_id").collect().map(_.getLong(0)).toSeq ==
+            Seq(SnapshotMeta.BaseBatchId), s"$m committed a refused batch")
+        }
+      } finally {
+        InvertedIndex.drop(s, dir); ComponentIndex.drop(s, dir)
+        IvfIndex.drop(s, dir); PqIndex.drop(s, dir)
+        KMeans.clearModel(dir); Pq.clearModel(dir)
+      }
     }
   }
 }

@@ -52,8 +52,8 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
       def run() = s.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(src)
         .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          if (!b.isEmpty) graft.operators.IvfIndex.append(s, idxDir, b)
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, batchId: Long) =>
+          if (!b.isEmpty) graft.operators.IvfIndex.append(s, idxDir, b, batchId)
         }
         .option("checkpointLocation", ckpt)
         .start()
@@ -272,12 +272,12 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
       def run() = s.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(src)
         .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, batchId: Long) =>
           if (!b.isEmpty) {
             val batch = b.persist()
             batch.write.mode("append").parquet(s"$dir/documents.parquet")
-            InvertedIndex.append(s, dir, batch)
-            InvertedIndex.appendPositions(s, dir, batch)
+            InvertedIndex.append(s, dir, batch, batchId)
+            InvertedIndex.appendPositions(s, dir, batch, batchId)
             batch.unpersist()
             ()
           }
@@ -696,11 +696,11 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
       def run() = s.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(src)
         .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, batchId: Long) =>
           if (!b.isEmpty) {
             val batch = b.persist()
             batch.write.mode("append").parquet(s"$dir/documents.parquet")
-            ComponentIndex.merge(s, dir, batch)
+            ComponentIndex.merge(s, dir, batch, batchId)
             batch.unpersist()
             ()
           }

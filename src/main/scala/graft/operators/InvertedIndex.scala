@@ -1,8 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Persisted INVERTED INDEX over the corpus — term → (doc_id, tf) postings
   * as a first-class table, the [[IvfIndex]]/[[ComponentIndex]] economics
@@ -26,8 +31,8 @@ import org.apache.spark.sql.functions._
   * change any existing row, so a bucketed APPEND of the batch's postings
   * is exact ([[append]]; spec pins append == rebuild). Per-term document
   * frequency for a TERM LOOKUP is derived from the pruned postings at
-  * query time (one tiny aggregate over exactly the rows the search
-  * already reads); the corpus-wide df RANKING that prefix/fuzzy
+  * query time (a window count over exactly the rows the search already
+  * reads, in the same pass); the corpus-wide df RANKING that prefix/fuzzy
   * expansion needs is materialized in the `_vocab` companion
   * ([[vocab]]/[[vocabFor]]) — per-batch additive rows, the `_stats`
   * lifecycle — because deriving it live would scan the whole postings
@@ -324,6 +329,39 @@ object InvertedIndex {
   def postingsFor(spark: SparkSession, dir: String): DataFrame =
     live(spark, dir, spark.table(ensure(spark, dir)))
 
+  /** The SERVED HITS of a request: the live postings ([[postingsFor]]) of
+    * the canonical `terms`, read through the literal IN on the bucket
+    * column, which prunes the scan to the terms' buckets. When those
+    * buckets are worth one task ([[oneTask]]) the hits come as one
+    * partition, which satisfies every distribution the scoring tails
+    * ask for (a per-term window, a per-doc aggregate, the top-k): the
+    * request plans no Exchange and runs as one job of one task whatever
+    * the table's bucket count. Otherwise the scan keeps one task per
+    * bucket, so the buckets are read in parallel, and its hash
+    * partitioning on `term` still serves the per-term df window without
+    * an Exchange. SCALE.md ("Serving reads") has the measurements. */
+  def hits(spark: SparkSession, dir: String, terms: Seq[String]): DataFrame = {
+    val rows = postingsFor(spark, dir).filter(col("term").isin(terms: _*))
+    if (oneTask(spark, table(dir), terms)) rows.coalesce(1) else rows
+  }
+
+  /** Whether the buckets of the bucketed-by-`term` table `t` that hold
+    * `terms` are read as one task: they are one bucket (the scan would
+    * run one non-empty task anyway), or their files hold together no
+    * more than adaptive execution's minimum partition size
+    * (`spark.sql.adaptive.coalescePartitions.minPartitionSize`, 1 MB by
+    * default: the input below which Spark itself merges shuffle
+    * partitions into one task). The bucket of a term is Spark's own,
+    * the one its bucket pruning applies. */
+  private def oneTask(spark: SparkSession, t: String, terms: Seq[String]): Boolean = {
+    val n = SnapshotMeta.bucketsOf(spark, t)
+    val term = AttributeReference("term", StringType)()
+    val buckets = terms.map(x =>
+      BucketingUtils.getBucketIdFromValue(term, n, UTF8String.fromString(x))).toSet
+    buckets.size == 1 || SnapshotMeta.bucketBytes(spark, t, buckets) <=
+      spark.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+  }
+
   /** The live positional relation ([[postingsFor]]'s twin). */
   def positionsFor(spark: SparkSession, dir: String): DataFrame =
     live(spark, dir, spark.table(ensurePositions(spark, dir)))
@@ -591,7 +629,7 @@ object InvertedIndex {
     }
 
   /** Top-k documents per query term by the exact tf-idf proxy, served
-    * from the pruned postings scan: the IN filter on the bucket column
+    * from the request's [[hits]]: the IN filter on the bucket column
     * prunes to the matching buckets; per-term df is the count of exactly
     * those rows; ranking windows over tiny per-term groups. N comes from
     * the ledger-backed [[statsFor]] — O(#batches) rows, never a
@@ -602,9 +640,7 @@ object InvertedIndex {
              k: Int = 10): DataFrame = {
     val canon = terms.map(canonicalTerm).filter(_.nonEmpty)
     require(canon.nonEmpty, "search needs at least one non-empty term")
-    tfidfRanked(
-      postingsFor(spark, dir).filter(col("term").isin(canon: _*)),
-      Consts.live(spark, dir), k)
+    tfidfRanked(hits(spark, dir, canon), Consts.live(spark, dir), k)
   }
 
   /** The corpus constants as a scoring tail reads them: the `n`/`dltot`
@@ -627,20 +663,29 @@ object InvertedIndex {
 
   /** THE scoring/ranking tail — one definition shared by [[search]] and
     * any index-free replay (the ScaleProbe A/B times the identical
-    * computation on both sides by construction): per-term df from the
-    * given postings rows, score = tf × floor(N·2^20/df), top-k per term
-    * with doc_id ties. `nDocs` is a 1-row (n BIGINT) scalar frame. */
+    * computation on both sides by construction): per-term df counted
+    * over the given postings rows ([[termDf]]), score = tf ×
+    * floor(N·2^20/df), top-k per term with doc_id ties. `nDocs` is a
+    * 1-row (n BIGINT) scalar frame. */
   def rankedFromPostings(post: DataFrame, nDocs: DataFrame, k: Int): DataFrame =
     tfidfRanked(post, Consts.of(nDocs), k)
 
   private def tfidfScore(c: Consts): Column =
     col("tf") * floor((c.n.cast("double") * 1048576.0) / col("df_")).cast("long")
 
+  /** Per-term df as a column beside each hit row: the number of rows
+    * of `post` carrying the row's term ([[postings]] holds one row per
+    * (term, doc), so that is the document frequency among them). A
+    * window, so the rows are read once, and it needs no Exchange over
+    * the rows [[hits]] serves: one partition, or the bucketed scan's
+    * hash partitioning on `term`. */
+  private def termDf(post: DataFrame): DataFrame =
+    post.withColumn("df_", count(lit(1)).over(Window.partitionBy("term")))
+
   private def tfidfRanked(post: DataFrame, c: Consts, k: Int): DataFrame = {
-    val dfq = post.groupBy("term").agg(count(lit(1)).as("df_"))
     val w = Window.partitionBy("term")
       .orderBy(col("score").desc, col("doc_id").asc)
-    c.beside(post.join(dfq, "term"))
+    c.beside(termDf(post))
       .withColumn("score", tfidfScore(c))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
@@ -648,21 +693,22 @@ object InvertedIndex {
   }
 
   /** Top-k DOCUMENTS for a multi-term query under rational fixed-point
-    * BM25, served from the pruned postings scan: dl rides in the hit
-    * rows (no corpus join), N and total token count come from
-    * [[statsFor]] — the per-batch `_stats` rows summed, O(#batches), no
-    * corpus scan, entered as plan literals — per-term df from exactly
-    * the pruned rows. The doc-level top-k is an orderBy+limit —
-    * TakeOrderedAndProject, the distributed per-partition-heap top-k —
-    * NOT a single-partition rank window; the rank column is attached
-    * after the limit, over ≤ k rows. */
+    * BM25, served from the request's [[hits]]: dl rides in the hit rows
+    * (no corpus join), N and total token count come from [[statsFor]] —
+    * the per-batch `_stats` rows summed, O(#batches), no corpus scan,
+    * entered as plan literals — and per-term df is a window count over
+    * the same pruned rows ([[termDf]]), so the postings are read once.
+    * The doc-level top-k is an orderBy+limit (TakeOrderedAndProject);
+    * the rank column is attached after the limit, over ≤ k rows. When
+    * the terms' buckets are worth one task the whole request is one job
+    * of one task: the hits arrive as one partition, which every operator above
+    * them accepts as is (spec-pinned: one `_postings` scan,
+    * bucket-pruned, no Exchange). */
   def searchBm25(spark: SparkSession, dir: String, terms: Seq[String],
                  k: Int = 10): DataFrame = {
     val canon = terms.map(canonicalTerm).filter(_.nonEmpty)
     require(canon.nonEmpty, "searchBm25 needs at least one non-empty term")
-    bm25Ranked(
-      postingsFor(spark, dir).filter(col("term").isin(canon: _*)),
-      Consts.live(spark, dir), k)
+    bm25Ranked(hits(spark, dir, canon), Consts.live(spark, dir), k)
   }
 
   /** Top-k documents for a PREFIX query (`pre*`), served from the
@@ -825,7 +871,7 @@ object InvertedIndex {
     * (df DESC, term ASC) over tiny candidate groups, and ONE pruned
     * postings read (literal IN over the union of expansions — the
     * bounded driver-side collect of the single path, ≤ #queries × m
-    * rows) serves every query's BM25 tail. Output adds a `qterm`
+    * rows, [[hits]]) serves every query's BM25 tail. Output adds a `qterm`
     * column; per-query results equal [[searchFuzzy]] run in a loop
     * (spec-pinned).
     *
@@ -863,29 +909,28 @@ object InvertedIndex {
     else {
       val allTerms = exp.map(_._2).distinct
       val mapping = broadcast(exp.toDF("qterm", "term"))
-      bm25PerQueryRanked(
-        postingsFor(spark, dir).filter(col("term").isin(allTerms: _*)),
-        mapping, Consts.live(spark, dir), k)
+      bm25PerQueryRanked(hits(spark, dir, allTerms), mapping,
+        Consts.live(spark, dir), k)
     }
   }
 
   /** The PER-QUERY BM25 tail — [[bm25FromPostings]] keyed by `qterm`:
-    * per-term df comes from the (query-agnostic) pruned postings rows,
-    * the tiny (qterm, term) `mapping` fans each hit row out to the
-    * queries whose expansion contains its term, scores group per
-    * (qterm, doc), and ranking windows per qterm — partitions
-    * multiply with the batch size, which is exactly when the batch
-    * path is chosen. */
+    * per-term df is counted over the (query-agnostic) postings rows
+    * ([[termDf]]), the tiny (qterm, term) `mapping` fans each hit row
+    * out to the queries whose expansion contains its term, scores group
+    * per (qterm, doc), and ranking windows per qterm. Served from
+    * [[hits]] over the postings of ≤ #queries × m terms, which span
+    * several buckets and beyond a small index are read one task per
+    * bucket. */
   def bm25PerQueryFromPostings(post: DataFrame, mapping: DataFrame,
                                stats: DataFrame, k: Int): DataFrame =
     bm25PerQueryRanked(post, mapping, Consts.of(stats), k)
 
   private def bm25PerQueryRanked(post: DataFrame, mapping: DataFrame,
                                  c: Consts, k: Int): DataFrame = {
-    val dfq = post.groupBy("term").agg(count(lit(1)).as("df_"))
     val w = Window.partitionBy("qterm")
       .orderBy(col("score").desc, col("doc_id").asc)
-    c.beside(post.join(dfq, "term").join(mapping, Seq("term")))
+    c.beside(termDf(post).join(mapping, Seq("term")))
       .withColumn("s", bm25Score(c))
       .groupBy("qterm", "doc_id")
       .agg(count(lit(1)).cast("long").as("n_terms"), sum("s").as("score"))
@@ -896,7 +941,8 @@ object InvertedIndex {
 
   /** THE BM25 scoring/ranking tail — shared by [[searchBm25]] and the
     * index-free replay. `stats` is a 1-row (n, dltot) frame
-    * ([[corpusStats]] shape). Per-(term, doc) score, ×2^20 fixed point,
+    * ([[corpusStats]] shape); per-term df is a window count over `post`
+    * itself ([[termDf]]). Per-(term, doc) score, ×2^20 fixed point,
     * k1 = 6/5, b = 3/4 (see the object doc for the exact-rational
     * derivation; `22·tf·dltot / (10·tf·dltot + 3·dltot + 9·dl·n)` IS
     * tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl)) with avgdl = dltot/n):
@@ -924,8 +970,7 @@ object InvertedIndex {
   }
 
   private def bm25Ranked(post: DataFrame, c: Consts, k: Int): DataFrame = {
-    val dfq = post.groupBy("term").agg(count(lit(1)).as("df_"))
-    val ranked = c.beside(post.join(dfq, "term"))
+    val ranked = c.beside(termDf(post))
       .withColumn("s", bm25Score(c))
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("long").as("n_terms"), sum("s").as("score"))
@@ -948,9 +993,7 @@ object InvertedIndex {
                 k: Int = 10): DataFrame = {
     val canon = terms.map(canonicalTerm).filter(_.nonEmpty).distinct
     require(canon.nonEmpty, "searchAll needs at least one non-empty term")
-    conjunctiveFromPostings(
-      postingsFor(spark, dir).filter(col("term").isin(canon: _*)),
-      canon.size, k)
+    conjunctiveFromPostings(hits(spark, dir, canon), canon.size, k)
   }
 
   /** THE conjunctive-match tail — shared by [[searchAll]] and the
@@ -985,9 +1028,7 @@ object InvertedIndex {
     require(canon.nonEmpty, "searchFiltered needs at least one query term")
     val eligible = graft.sources.Tables.documents(spark, dir)
       .filter(facet).select("doc_id")
-    bm25Ranked(
-      postingsFor(spark, dir).filter(col("term").isin(canon: _*))
-        .join(eligible, Seq("doc_id"), "left_semi"),
+    bm25Ranked(hits(spark, dir, canon).join(eligible, Seq("doc_id"), "left_semi"),
       Consts.live(spark, dir), k)
   }
 
@@ -1008,12 +1049,8 @@ object InvertedIndex {
     require(canon.nonEmpty, "searchExcluding needs at least one query term")
     require(canonNot.nonEmpty,
       "searchExcluding needs at least one excluded term (use searchBm25)")
-    val post = postingsFor(spark, dir)
-    val banned = broadcast(
-      post.filter(col("term").isin(canonNot: _*)).select("doc_id").distinct())
-    bm25Ranked(
-      post.filter(col("term").isin(canon: _*))
-        .join(banned, Seq("doc_id"), "left_anti"),
+    val banned = broadcast(hits(spark, dir, canonNot).select("doc_id").distinct())
+    bm25Ranked(hits(spark, dir, canon).join(banned, Seq("doc_id"), "left_anti"),
       Consts.live(spark, dir), k)
   }
 

@@ -248,9 +248,12 @@ object IvfIndex {
   }
 
   def delete(spark: SparkSession, dir: String, removed: DataFrame,
-             batchId: Long, idCol: String = "vec_id"): Unit =
+             batchId: Long, idCol: String = "vec_id"): Unit = {
+    // before emptyAdds: a refused id must not first build the family
+    SnapshotMeta.requireBatchId(batchId)
     edit(spark, dir, removed.select(col(idCol).as("vec_id")),
       emptyAdds(spark, dir), batchId)
+  }
 
   /** CENTROID-PRESERVING compaction ([[InvertedIndex.compact]]'s ANN
     * twin): folds every batch partition of the cells table into the

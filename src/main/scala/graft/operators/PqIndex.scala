@@ -224,6 +224,8 @@ object PqIndex {
   private def withCodes(spark: SparkSession, dir: String, batchId: Long,
                         rows: DataFrame, idCol: String, vecCol: String)(
                         coarse: => Unit): Unit = {
+    // before ensure: a refused id must not first train the family
+    SnapshotMeta.requireBatchId(batchId)
     val (codesT, cellsT, cents, cb) = ensure(spark, dir)
     val committed =
       SnapshotMeta.appliedBatch(spark, IvfIndex.metaTable(dir), batchId)
@@ -253,9 +255,12 @@ object PqIndex {
 
   /** Pure removal — [[edit]] with an empty add side. */
   def delete(spark: SparkSession, dir: String, removed: DataFrame,
-             batchId: Long, idCol: String = "vec_id"): Unit =
+             batchId: Long, idCol: String = "vec_id"): Unit = {
+    // before emptyAdds, which builds the coarse family
+    SnapshotMeta.requireBatchId(batchId)
     edit(spark, dir, removed.select(col(idCol).as("vec_id")),
       IvfIndex.emptyAdds(spark, dir), batchId)
+  }
 
   /** ADC top-k from the STORED codes: the candidate side is a scan of the
     * bucketed codes table — no residual, no encode, no vector anywhere on

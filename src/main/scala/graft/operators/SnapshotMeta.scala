@@ -357,6 +357,21 @@ object SnapshotMeta {
       .getContentSummary(loc).getLength
   }
 
+  /** The bytes of the files of bucketed table `t` that belong to
+    * `buckets`, from the table's file listing: the listing its scans
+    * plan from, cached by the session. No job, no data read. */
+  def bucketBytes(spark: SparkSession, t: String, buckets: Set[Int]): Long = {
+    import org.apache.spark.sql.execution.datasources.{BucketingUtils, HadoopFsRelation,
+      LogicalRelation}
+    spark.table(t).queryExecution.analyzed
+      .collectFirst { case lr: LogicalRelation => lr.relation }
+      .collect { case fs: HadoopFsRelation => fs.location.listFiles(Nil, Nil) }
+      .getOrElse(throw new IllegalStateException(s"$t is not a file-backed table"))
+      .flatMap(_.files)
+      .filter(f => BucketingUtils.getBucketId(f.getPath.getName).exists(buckets))
+      .map(_.getLen).sum
+  }
+
   /** The PERSISTED choice, read back from the table's catalog bucket
     * spec. */
   def bucketsOf(spark: SparkSession, t: String): Int =

@@ -684,4 +684,37 @@ class SnapshotMaintenanceSpec extends SparkSpec {
       }
     }
   }
+
+  test("a refused IVF or PQ verb on a fresh directory builds nothing: no table " +
+       "in the catalog, no table directory on disk") {
+    val s = spark
+    import s.implicits._
+    withScratch("ann-refused") { dir =>
+      val vecs = (0L until 30L).map(id => (id,
+          Array.tabulate(64)(d => (((id * 47 + d * 13) % 31) - 15) / 15.0f)))
+        .toDF("vec_id", "embedding")
+      vecs.write.parquet(s"$dir/embeddings.parquet")
+      val ids = vecs.select("vec_id")
+      val stem = IvfIndex.tableStem(dir).toLowerCase
+      try {
+        val verbs: Seq[(String, () => Any)] = Seq(
+          "IvfIndex.delete" -> (() => IvfIndex.delete(s, dir, ids, -1L)),
+          "PqIndex.delete" -> (() => PqIndex.delete(s, dir, ids, -1L)),
+          "PqIndex.append" -> (() => PqIndex.append(s, dir, vecs, -1L)),
+          "PqIndex.edit" -> (() => PqIndex.edit(s, dir, ids, vecs, -1L)))
+        for ((name, verb) <- verbs) {
+          intercept[IllegalArgumentException](verb())
+          assert(s.catalog.listTables().collect().map(_.name.toLowerCase)
+            .filter(_.startsWith(stem)).isEmpty, s"$name created an index table")
+          val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
+          val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
+          assert(!fs.exists(wh) || fs.listStatus(wh).map(_.getPath.getName.toLowerCase)
+            .filter(_.startsWith(stem)).isEmpty, s"$name wrote a table directory")
+        }
+      } finally {
+        IvfIndex.drop(s, dir); PqIndex.drop(s, dir)
+        KMeans.clearModel(dir); Pq.clearModel(dir)
+      }
+    }
+  }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -20,6 +19,18 @@ import graft.sources.Tables
   * semantics, and exactly why the gate stages one file.
   */
 class StreamGateSpec extends SparkSpec {
+
+  /** The single part file of a one-partition parquet write at `dir`. */
+  private def partFile(dir: String): Path =
+    graft.Fixtures.fs(spark, dir).listStatus(new Path(dir)).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+
+  /** Copies `f` into the directory `dir` as `name` (same file system). */
+  private def copyInto(f: Path, dir: Path, name: String): Unit = {
+    val fs = graft.Fixtures.fs(spark, dir.toString)
+    FileUtil.copy(fs, f, fs, new Path(dir, name), false, true,
+      spark.sparkContext.hadoopConfiguration)
+  }
 
   private def hourlyBatchFired(wmMs: Long): Set[(java.sql.Timestamp, String, Long)] =
     Tables.events(spark, sfDir)
@@ -56,63 +67,65 @@ class StreamGateSpec extends SparkSpec {
     val s = spark
     val ev = Tables.events(s, sfDir)
     val mid = java.sql.Timestamp.valueOf("2024-01-16 00:00:00")
-
-    // two single-file halves of the fixture, split on event time
-    def writeHalf(pred: org.apache.spark.sql.Column): java.nio.file.Path = {
-      val d = Files.createTempDirectory("graft-gate-half")
-      ev.filter(pred).repartition(1).write.mode("overwrite").parquet(d.toString)
-      scala.util.Using.resource(Files.list(d))(
-        _.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get())
-    }
-    val earlyFile = writeHalf(col("ts") < mid)
-    val lateFile = writeHalf(col("ts") >= mid)
-
-    // Guaranteed batch separation: two sequential AvailableNow runs over
-    // one checkpoint (the production cron-cadence shape, AvailableNowSpec)
-    // — run 2 resumes the state store and confronts the watermark run 1
-    // left behind. A parquet sink accumulates the append output across
-    // runs; the memory sink cannot survive a restart.
-    def run(first: java.nio.file.Path, second: java.nio.file.Path)
-      : Set[(java.sql.Timestamp, String, Long)] = {
-      val dir = Files.createTempDirectory("graft-gate-order")
-      val ckpt = Files.createTempDirectory("graft-gate-order-ckpt").toString
-      val outDir = Files.createTempDirectory("graft-gate-order-out").toString
-      def step(f: java.nio.file.Path, name: String): Unit = {
-        Files.copy(f, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
-        val stream = Tables.normalizeEventTs(
-            s.readStream.schema(ev.schema).parquet(dir.toString))
-          .withWatermark("ts", "0 seconds")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("cnt"))
-          .select(col("window.start").as("window_start"),
-                  col("window.end").as("window_end"),
-                  col("event_type"), col("cnt"))
-        val q = stream.writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .outputMode("append").format("parquet")
-          .option("checkpointLocation", ckpt)
-          .option("path", outDir)
-          .start()
-        try assert(q.awaitTermination(120000L)) finally q.stop()
+    withScratch("graft-gate") { root =>
+      // two single-file halves of the fixture, split on event time
+      def writeHalf(pred: org.apache.spark.sql.Column, name: String): Path = {
+        val d = s"$root/$name"
+        ev.filter(pred).repartition(1).write.mode("overwrite").parquet(d)
+        partFile(d)
       }
-      step(first, "a.parquet")
-      step(second, "b.parquet")
-      s.read.schema("window_start timestamp, window_end timestamp, " +
-          "event_type string, cnt long") // empty-dir-safe, same schema
-        .parquet(outDir)
-        .collect().map(r => (r.getTimestamp(0), r.getString(2), r.getLong(3))).toSet
+      val earlyFile = writeHalf(col("ts") < mid, "half-early")
+      val lateFile = writeHalf(col("ts") >= mid, "half-late")
+
+      // Guaranteed batch separation: two sequential AvailableNow runs over
+      // one checkpoint (the production cron-cadence shape, AvailableNowSpec)
+      // — run 2 resumes the state store and confronts the watermark run 1
+      // left behind. A parquet sink accumulates the append output across
+      // runs; the memory sink cannot survive a restart.
+      def run(first: Path, second: Path, leg: String)
+        : Set[(java.sql.Timestamp, String, Long)] = {
+        val dir = new Path(s"$root/$leg/src")
+        val ckpt = s"$root/$leg/ckpt"
+        val outDir = s"$root/$leg/out"
+        Seq(dir, new Path(ckpt), new Path(outDir))
+          .foreach(graft.Fixtures.fs(s, root).mkdirs(_))
+        def step(f: Path, name: String): Unit = {
+          copyInto(f, dir, name)
+          val stream = Tables.normalizeEventTs(
+              s.readStream.schema(ev.schema).parquet(dir.toString))
+            .withWatermark("ts", "0 seconds")
+            .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+            .agg(count(lit(1)).as("cnt"))
+            .select(col("window.start").as("window_start"),
+                    col("window.end").as("window_end"),
+                    col("event_type"), col("cnt"))
+          val q = stream.writeStream
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .outputMode("append").format("parquet")
+            .option("checkpointLocation", ckpt)
+            .option("path", outDir)
+            .start()
+          try assert(q.awaitTermination(120000L)) finally q.stop()
+        }
+        step(first, "a.parquet")
+        step(second, "b.parquet")
+        s.read.schema("window_start timestamp, window_end timestamp, " +
+            "event_type string, cnt long") // empty-dir-safe, same schema
+          .parquet(outDir)
+          .collect().map(r => (r.getTimestamp(0), r.getString(2), r.getLong(3))).toSet
+      }
+
+      val wm = ev.agg(max("ts")).head().getTimestamp(0).getTime
+      val expected = hourlyBatchFired(wm)
+
+      assert(run(earlyFile, lateFile, "ordered") == expected,
+        "time-ordered ingest: watermark always trails unseen data — no drops")
+
+      val adversarial = run(lateFile, earlyFile, "adversarial")
+      assert(adversarial != expected && adversarial.nonEmpty,
+        "late-first ingest must drop rows behind the raised watermark " +
+          "(the reason the gate stages exactly one file)")
     }
-
-    val wm = ev.agg(max("ts")).head().getTimestamp(0).getTime
-    val expected = hourlyBatchFired(wm)
-
-    assert(run(earlyFile, lateFile) == expected,
-      "time-ordered ingest: watermark always trails unseen data — no drops")
-
-    val adversarial = run(lateFile, earlyFile)
-    assert(adversarial != expected && adversarial.nonEmpty,
-      "late-first ingest must drop rows behind the raised watermark " +
-        "(the reason the gate stages exactly one file)")
   }
 
   test("q_stream_join_hourly: join->window pipeline fires by the propagated min watermark") {
@@ -160,52 +173,54 @@ class StreamGateSpec extends SparkSpec {
     // session rule across the micro-batch boundary (a session straddling
     // `mid` keeps its id; a new user starting in batch 2 starts at 1)
     val mid = java.sql.Timestamp.valueOf("2024-01-16 00:00:00")
-    val srcDir = Files.createTempDirectory("graft-sess-src")
-    val ckpt = Files.createTempDirectory("graft-sess-ckpt").toString
-    val outDir = Files.createTempDirectory("graft-sess-out").toString
-    def step(pred: org.apache.spark.sql.Column, name: String): Unit = {
-      val half = Files.createTempDirectory("graft-sess-half")
-      ev.filter(pred).repartition(1).write.mode("overwrite").parquet(half.toString)
-      val f = scala.util.Using.resource(Files.list(half))(
-        _.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get())
-      Files.copy(f, srcDir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
-      import s.implicits._
-      import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
-      def micros(t: java.sql.Timestamp): Long =
-        t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-      val stream = Tables.normalizeEventTs(
-          s.readStream.schema(ev.schema).parquet(srcDir.toString))
-        .select("event_id", "user_id", "ts")
-        .as[(Long, Long, java.sql.Timestamp)]
-        .groupByKey(_._2)
-        .flatMapGroupsWithState[(Long, Long), (Long, Long, java.sql.Timestamp, Long)](
-            OutputMode.Append, GroupStateTimeout.NoTimeout) { (user, it, state) =>
-          var (lastUs, sid) = state.getOption.getOrElse((Long.MinValue, 0L))
-          val rows = it.toVector.sortBy(e => (micros(e._3), e._1)).map { e =>
-            val us = micros(e._3)
-            if (lastUs == Long.MinValue || us - lastUs > 1800000000L) sid += 1
-            lastUs = us
-            (e._1, user, e._3, sid)
+    withScratch("graft-sess") { root =>
+      val srcDir = new Path(s"$root/src")
+      val ckpt = s"$root/ckpt"
+      val outDir = s"$root/out"
+      Seq(srcDir, new Path(ckpt), new Path(outDir))
+        .foreach(graft.Fixtures.fs(s, root).mkdirs(_))
+      def step(pred: org.apache.spark.sql.Column, name: String): Unit = {
+        val half = s"$root/half-$name"
+        ev.filter(pred).repartition(1).write.mode("overwrite").parquet(half)
+        copyInto(partFile(half), srcDir, name)
+        import s.implicits._
+        import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+        def micros(t: java.sql.Timestamp): Long =
+          t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
+        val stream = Tables.normalizeEventTs(
+            s.readStream.schema(ev.schema).parquet(srcDir.toString))
+          .select("event_id", "user_id", "ts")
+          .as[(Long, Long, java.sql.Timestamp)]
+          .groupByKey(_._2)
+          .flatMapGroupsWithState[(Long, Long), (Long, Long, java.sql.Timestamp, Long)](
+              OutputMode.Append, GroupStateTimeout.NoTimeout) { (user, it, state) =>
+            var (lastUs, sid) = state.getOption.getOrElse((Long.MinValue, 0L))
+            val rows = it.toVector.sortBy(e => (micros(e._3), e._1)).map { e =>
+              val us = micros(e._3)
+              if (lastUs == Long.MinValue || us - lastUs > 1800000000L) sid += 1
+              lastUs = us
+              (e._1, user, e._3, sid)
+            }
+            state.update((lastUs, sid))
+            rows.iterator
           }
-          state.update((lastUs, sid))
-          rows.iterator
-        }
-        .toDF("event_id", "user_id", "ts", "session_id")
-      val q = stream.writeStream
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append").format("parquet")
-        .option("checkpointLocation", ckpt)
-        .option("path", outDir)
-        .start()
-      try assert(q.awaitTermination(120000L)) finally q.stop()
+          .toDF("event_id", "user_id", "ts", "session_id")
+        val q = stream.writeStream
+          .trigger(Trigger.AvailableNow())
+          .outputMode("append").format("parquet")
+          .option("checkpointLocation", ckpt)
+          .option("path", outDir)
+          .start()
+        try assert(q.awaitTermination(120000L)) finally q.stop()
+      }
+      step(col("ts") < mid, "a.parquet")
+      step(col("ts") >= mid, "b.parquet")
+      val twoBatch = toSet(s.read
+        .schema("event_id long, user_id long, ts timestamp, session_id long")
+        .parquet(outDir))
+      assert(twoBatch == batch,
+        s"unexpected=${twoBatch.diff(batch).take(3)} missing=${batch.diff(twoBatch).take(3)}")
     }
-    step(col("ts") < mid, "a.parquet")
-    step(col("ts") >= mid, "b.parquet")
-    val twoBatch = toSet(s.read
-      .schema("event_id long, user_id long, ts timestamp, session_id long")
-      .parquet(outDir))
-    assert(twoBatch == batch,
-      s"unexpected=${twoBatch.diff(batch).take(3)} missing=${batch.diff(twoBatch).take(3)}")
   }
 
   test("dropDuplicatesWithinWatermark: in-horizon duplicates drop, evicted keys re-emit") {
@@ -216,32 +231,33 @@ class StreamGateSpec extends SparkSpec {
 
     def t(hhmm: String) = java.sql.Timestamp.valueOf(s"2024-01-01 $hhmm:00")
     val ms = MemoryStream[(Long, java.sql.Timestamp)]
-    val q = ms.toDF().toDF("id", "ts")
-      .withWatermark("ts", "30 minutes")
-      .dropDuplicatesWithinWatermark(Seq("id"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ddww_out")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-ddww-ckpt").toString)
-      .start()
-    try {
-      ms.addData((1L, t("10:00")), (2L, t("10:05")))
-      q.processAllAvailable() // both first occurrences emit; wm -> 09:35
-      // duplicate of id 1 WITHIN its horizon (state expires 10:30 > wm):
-      // dropped; id 3 advances the watermark to 11:30
-      ms.addData((1L, t("10:01")), (3L, t("12:00")))
-      q.processAllAvailable()
-      // id 1's state (expiry 10:30) is now behind the 11:30 watermark —
-      // evicted, so a fresh occurrence RE-EMITS (the documented bounded-
-      // state caveat; state is O(keys per horizon), not O(keys ever))
-      ms.addData((1L, t("12:01")))
-      q.processAllAvailable()
-      val emitted = s.table("ddww_out").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1))).toSeq.sorted
-      assert(emitted == Seq((1L, t("10:00")), (1L, t("12:01")),
-          (2L, t("10:05")), (3L, t("12:00"))),
-        s"got $emitted")
-    } finally { q.stop(); s.catalog.dropTempView("ddww_out") }
+    withScratch("graft-ddww") { root =>
+      val q = ms.toDF().toDF("id", "ts")
+        .withWatermark("ts", "30 minutes")
+        .dropDuplicatesWithinWatermark(Seq("id"))
+        .writeStream.outputMode("append").format("memory")
+        .queryName("ddww_out")
+        .option("checkpointLocation", s"$root/ckpt")
+        .start()
+      try {
+        ms.addData((1L, t("10:00")), (2L, t("10:05")))
+        q.processAllAvailable() // both first occurrences emit; wm -> 09:35
+        // duplicate of id 1 WITHIN its horizon (state expires 10:30 > wm):
+        // dropped; id 3 advances the watermark to 11:30
+        ms.addData((1L, t("10:01")), (3L, t("12:00")))
+        q.processAllAvailable()
+        // id 1's state (expiry 10:30) is now behind the 11:30 watermark —
+        // evicted, so a fresh occurrence RE-EMITS (the documented bounded-
+        // state caveat; state is O(keys per horizon), not O(keys ever))
+        ms.addData((1L, t("12:01")))
+        q.processAllAvailable()
+        val emitted = s.table("ddww_out").collect()
+          .map(r => (r.getLong(0), r.getTimestamp(1))).toSeq.sorted
+        assert(emitted == Seq((1L, t("10:00")), (1L, t("12:01")),
+            (2L, t("10:05")), (3L, t("12:00"))),
+          s"got $emitted")
+      } finally { q.stop(); s.catalog.dropTempView("ddww_out") }
+    }
   }
 
   test("q_stream_agg_sum_resume == q_stream_agg_sum: two batches, one checkpoint, same set") {
@@ -426,31 +442,31 @@ class StreamGateSpec extends SparkSpec {
 
     def t(hhmmss: String) = java.sql.Timestamp.valueOf(s"2024-01-01 $hhmmss")
     val ms = MemoryStream[java.sql.Timestamp]
-    val ckpt = Files.createTempDirectory("graft-boundary-ckpt").toString
-    val q = ms.toDF().toDF("ts")
-      .withWatermark("ts", "0 seconds")
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("ws"), col("cnt"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("boundary_out")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try {
-      ms.addData(t("10:15:00"), t("10:45:00"), t("11:00:00"))
-      q.processAllAvailable()
-      // eviction happens against the PREVIOUS batch's watermark — feed an
-      // empty-progress batch so the 11:00:00 watermark is the one applied
-      ms.addData(t("11:00:00"))
-      q.processAllAvailable()
-      val fired = s.table("boundary_out").collect()
-        .map(r => (r.getTimestamp(0), r.getLong(1))).toSet
-      assert(fired == Set((t("10:00:00"), 2L)),
-        s"window end == watermark must fire (<=, not <); got $fired")
-    } finally {
-      q.stop()
-      s.catalog.dropTempView("boundary_out")
-      graft.Fixtures.delete(s, ckpt)
+    withScratch("graft-boundary") { root =>
+      val q = ms.toDF().toDF("ts")
+        .withWatermark("ts", "0 seconds")
+        .groupBy(window(col("ts"), "1 hour"))
+        .agg(count(lit(1)).as("cnt"))
+        .select(col("window.start").as("ws"), col("cnt"))
+        .writeStream.outputMode("append").format("memory")
+        .queryName("boundary_out")
+        .option("checkpointLocation", s"$root/ckpt")
+        .start()
+      try {
+        ms.addData(t("10:15:00"), t("10:45:00"), t("11:00:00"))
+        q.processAllAvailable()
+        // eviction happens against the PREVIOUS batch's watermark — feed an
+        // empty-progress batch so the 11:00:00 watermark is the one applied
+        ms.addData(t("11:00:00"))
+        q.processAllAvailable()
+        val fired = s.table("boundary_out").collect()
+          .map(r => (r.getTimestamp(0), r.getLong(1))).toSet
+        assert(fired == Set((t("10:00:00"), 2L)),
+          s"window end == watermark must fire (<=, not <); got $fired")
+      } finally {
+        q.stop()
+        s.catalog.dropTempView("boundary_out")
+      }
     }
   }
 
@@ -461,12 +477,11 @@ class StreamGateSpec extends SparkSpec {
     // batch), and the windowed queries must evict through
     // StateStoreSave in append mode. q.explain() is the stable public
     // surface for a streaming query's executed plan.
-    def explained(out: org.apache.spark.sql.DataFrame): String = {
+    def explained(out: org.apache.spark.sql.DataFrame): String = withScratch("graft-pin") { root =>
       val q = out.writeStream
         .outputMode("append").format("memory")
         .queryName("gate_plan_pin")
-        .option("checkpointLocation",
-          Files.createTempDirectory("graft-pin-ckpt").toString)
+        .option("checkpointLocation", s"$root/ckpt")
         .start()
       try {
         q.processAllAvailable()

@@ -145,17 +145,13 @@ object DedupQueries {
     Fixtures.scratch(s, "index-stream") { t =>
       slices.zipWithIndex.foreach { case (slice, i) =>
         Fixtures.publishFile(slice, s"$t/src", s"slice-$i.parquet")
-        val q = s.readStream.schema(slices.head.schema).parquet(s"$t/src")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            if (!b.isEmpty) onBatch(b, id)
-          }
-          .option("checkpointLocation", s"$t/ckpt")
-          .start()
-        try require(q.awaitTermination(600000L),
-          s"$what: the bounded stream must self-stop under AvailableNow")
-        finally q.stop()
+        graft.streaming.StreamGate.runAvailableNow(s"$what: the bounded stream",
+          s.readStream.schema(slices.head.schema).parquet(s"$t/src")
+            .writeStream
+            .foreachBatch { (b: DataFrame, id: Long) =>
+              if (!b.isEmpty) onBatch(b, id)
+            }
+            .option("checkpointLocation", s"$t/ckpt"))
       }
     }
   }

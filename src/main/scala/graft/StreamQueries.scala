@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Exact
+import graft.operators.EventTimeOps
 import graft.sources.Tables
-import graft.streaming.StreamGate
+import graft.streaming.{StreamGate, WatermarkPipeline}
 
 /** The reference's STREAMING pipeline inside the oracle gate.
   *
@@ -13,7 +13,7 @@ import graft.streaming.StreamGate
   * equivalence specs; these queries put the live Structured Streaming
   * dataflow itself — file source → per-input watermark → keyed
   * event-time window → fold → fire-once append emission — through the
-  * driver's DuckDB hash compare. Each runs bounded (Trigger.AvailableNow
+  * DuckDB oracle's hash compare. Each runs bounded (an AvailableNow run
   * over a single staged file: one micro-batch, zero late drops — see
   * [[graft.streaming.StreamGate]] for the determinism contract). The
   * windowed queries' oracles replay the firing rule in SQL — the batch
@@ -47,31 +47,21 @@ object StreamQueries {
     // otherwise by runBounded's watermark guard — counted per event_type per 1h
     // tumbling window (O4-O7), emitted fire-once in append mode (O8).
     // The slower input's max ts gates every window — the README's thesis.
+    // The body is q_window_count_hourly's, over the min-of-inputs union.
     "q_stream_window_hourly" -> ((s, dir) => {
       val src = streamedEvents(s, dir)
-      val even = src.filter(evenUsers).withWatermark("ts", "0 seconds")
-      val odd = src.filter(!evenUsers).withWatermark("ts", "0 seconds")
-      StreamGate.runBounded(s,
-        even.unionByName(odd)
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("cnt"))
-          .select(col("window.start").as("window_start"),
-                  col("window.end").as("window_end"),
-                  col("event_type"), col("cnt")))
+      StreamGate.runBounded(s, CoreQueries.hourlyCounts(
+        WatermarkPipeline.minOfInputs(Seq(src.filter(evenUsers), src.filter(!evenUsers)))))
     }),
 
     // O6 with a non-count fold, streaming: exact-decimal sum per window —
     // the same deterministic-summation contract as the batch surface
     // (partial aggregates in the state store stay exact at any
     // partitioning, which is what makes a streaming float oracle possible).
+    // The body is q_window_agg_sum's, over the watermarked stream.
     "q_stream_agg_sum" -> ((s, dir) =>
-      StreamGate.runBounded(s,
-        streamedEvents(s, dir).withWatermark("ts", "0 seconds")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(Exact.sum2(col("value")).as("sum_value"), count(lit(1)).as("cnt"))
-          .select(col("window.start").as("window_start"),
-                  col("window.end").as("window_end"),
-                  col("event_type"), col("sum_value"), col("cnt")))),
+      StreamGate.runBounded(s, CoreQueries.hourlySum(
+        streamedEvents(s, dir).withWatermark("ts", "0 seconds")))),
 
     // INCREMENTAL RESUME under the gate (round-16 verdict item 6): the
     // exact q_stream_agg_sum dataflow run as TWO sequential AvailableNow
@@ -84,28 +74,17 @@ object StreamQueries {
     // checkpointed state — and the accumulated output equals the
     // single-batch run's. Oracle: IDENTICAL to q_stream_agg_sum.
     "q_stream_agg_sum_resume" -> ((s, dir) =>
-      StreamGate.runBoundedResume(s, dir, srcDir =>
-        Tables.streamEvents(s, dir, srcDir)
-          .withWatermark("ts", "0 seconds")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(Exact.sum2(col("value")).as("sum_value"), count(lit(1)).as("cnt"))
-          .select(col("window.start").as("window_start"),
-                  col("window.end").as("window_end"),
-                  col("event_type"), col("sum_value"), col("cnt")))),
+      StreamGate.runBoundedResume(s, dir, srcDir => CoreQueries.hourlySum(
+        Tables.streamEvents(s, dir, srcDir).withWatermark("ts", "0 seconds")))),
 
     // Session windows under the same fire-once rule: a session fires only
     // when the watermark passes ITS end (last event + gap) — the state
     // store merges sessions, append mode emits each exactly once. The
     // trailing sessions of every user pend forever, like the reference's
-    // day-3 windows.
+    // day-3 windows. The body is q_window_session's.
     "q_stream_session" -> ((s, dir) =>
-      StreamGate.runBounded(s,
-        streamedEvents(s, dir).withWatermark("ts", "0 seconds")
-          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-          .agg(count(lit(1)).as("cnt"))
-          .select(col("session_window.start").as("session_start"),
-                  col("session_window.end").as("session_end"),
-                  col("user_id"), col("cnt")))),
+      StreamGate.runBounded(s, WindowQueries.userSessions(
+        streamedEvents(s, dir).withWatermark("ts", "0 seconds")))),
 
     // MULTI-stateful-operator pipeline: stream-stream interval join →
     // windowed count, one streaming query (Spark's watermark propagation
@@ -124,15 +103,12 @@ object StreamQueries {
       val v = src.filter(col("event_type") === "view")
         .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
         .withWatermark("v_ts", "0 seconds")
-      StreamGate.runBounded(s,
-        p.join(v,
-            col("user_id") === col("v_user") &&
-              col("v_ts") <= col("p_ts") &&
-              col("v_ts") >= col("p_ts") - expr("INTERVAL 30 minutes"))
-          .groupBy(window(col("p_ts"), "1 hour"))
-          .agg(count(lit(1)).as("n_pairs"))
-          .select(col("window.start").as("window_start"),
-                  col("window.end").as("window_end"), col("n_pairs")))
+      val pairs = p.join(v,
+        col("user_id") === col("v_user") &&
+          col("v_ts") <= col("p_ts") &&
+          col("v_ts") >= col("p_ts") - expr("INTERVAL 30 minutes"))
+      StreamGate.runBounded(s, EventTimeOps.windowAgg(pairs,
+        window(col("p_ts"), "1 hour"), Nil, count(lit(1)).as("n_pairs")))
     }),
 
     // ARBITRARY keyed state in the gate — the API class the reference's

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.EventTimeOps
 import graft.sources.Tables
 
 /** Window-operator generality beyond the reference's single tumbling case
@@ -17,27 +18,24 @@ import graft.sources.Tables
   */
 object WindowQueries {
 
+  /** Count per user per 30-minute-gap session window: q_window_session
+    * over the table, q_stream_session over the watermarked stream. */
+  private[graft] def userSessions(events: DataFrame): DataFrame =
+    EventTimeOps.windowAgg(events, session_window(col("ts"), "30 minutes"),
+      Seq("user_id"), count(lit(1)).as("cnt"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Sliding event-time window: 1h width, 30m slide — every event lands in
     // exactly 2 epoch-aligned windows.
     "q_window_sliding" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-        .select(col("window.start").as("window_start"),
-                col("window.end").as("window_end"),
-                col("event_type"), col("cnt"))),
+      EventTimeOps.windowAgg(Tables.events(s, dir),
+        window(col("ts"), "1 hour", "30 minutes"), Seq("event_type"),
+        count(lit(1)).as("cnt"))),
 
     // Session event-time window per user: a session extends while
     // consecutive events are < 30m apart; end = last event + gap.
-    "q_window_session" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("cnt"))
-        .select(col("session_window.start").as("session_start"),
-                col("session_window.end").as("session_end"),
-                col("user_id"), col("cnt"))),
+    "q_window_session" -> ((s, dir) => userSessions(Tables.events(s, dir))),
 
     // The same flagship aggregation through the SQL API — proves the SQL
     // surface compiles to the identical plan as the DataFrame API.

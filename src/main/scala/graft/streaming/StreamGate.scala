@@ -3,7 +3,7 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Bounded streaming execution for the ORACLE GATE: run a Structured
   * Streaming dataflow with `Trigger.AvailableNow` to completion and hand
@@ -171,12 +171,17 @@ object StreamGate {
     }
   }
 
-  /** Run `out` (a streaming DataFrame) to completion under
-    * `Trigger.AvailableNow` in append mode and return the complete
-    * output as a batch frame. Fresh checkpoint + unique sink table per
-    * call: the gate wants a full deterministic replay, never an
-    * incremental resume (resuming into a NEW memory sink would emit
-    * nothing and silently pass an empty result to the oracle). */
+  /** The one bounded run: start `writer` under `Trigger.AvailableNow`
+    * (through `around`, which the gate runs use to scope their confs to
+    * the start), wait for the query to stop by itself once it has drained
+    * what was available when it started, and stop it whatever happens. */
+  private[graft] def runAvailableNow(what: String, writer: DataStreamWriter[_],
+      around: (=> StreamingQuery) => StreamingQuery = q => q): Unit = {
+    val q = around(writer.trigger(Trigger.AvailableNow()).start())
+    try require(q.awaitTermination(600000L), s"$what must self-stop under AvailableNow")
+    finally q.stop()
+  }
+
   /** Memory-sink table names created by earlier [[runBounded]] calls and
     * not yet dropped — tracked directly so gate hygiene is two map ops,
     * not a catalog-wide `listTables().collect()` per run (which scans
@@ -185,6 +190,12 @@ object StreamGate {
   private val liveSinkTables =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
+  /** Run `out` (a streaming DataFrame) to completion under
+    * `Trigger.AvailableNow` in append mode and return the complete
+    * output as a batch frame. Fresh checkpoint + unique sink table per
+    * call: the gate wants a full deterministic replay, never an
+    * incremental resume (resuming into a NEW memory sink would emit
+    * nothing and silently pass an empty result to the oracle). */
   def runBounded(spark: SparkSession, out: DataFrame): DataFrame = {
     WatermarkPipeline.requireMinWatermarkPolicy(out)
     // Gate hygiene: memory-sink tables from EARLIER bounded runs are
@@ -205,18 +216,10 @@ object StreamGate {
       // read once at query start; gate queries run one at a time, so the
       // session value is restored immediately after. Results are
       // partition-count-invariant (hash aggregation / join semantics).
-      val q = withGateConfs(spark) {
-        out.writeStream
-          .trigger(Trigger.AvailableNow())
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-      }
-      try require(q.awaitTermination(600000L),
-        s"bounded stream $name must self-stop under AvailableNow")
-      finally q.stop()
+      runAvailableNow(s"bounded stream $name",
+        out.writeStream.outputMode("append").format("memory").queryName(name)
+          .option("checkpointLocation", ckpt),
+        withGateConfs(spark))
     }
     spark.table(name)
   }
@@ -249,18 +252,10 @@ object StreamGate {
         graft.Fixtures.copy(spark, f, s"$srcDir/$name")
         // same scoped gate confs as runBounded; run 2 reuses the
         // partitioning fixed at the checkpoint's creation either way
-        val q = withGateConfs(spark) {
-          build(srcDir).writeStream
-            .trigger(Trigger.AvailableNow())
-            .outputMode("append")
-            .format("parquet")
-            .option("checkpointLocation", ckpt)
-            .option("path", outDir)
-            .start()
-        }
-        try require(q.awaitTermination(600000L),
-          s"bounded resume run over $name must self-stop under AvailableNow")
-        finally q.stop()
+        runAvailableNow(s"bounded resume run over $name",
+          build(srcDir).writeStream.outputMode("append").format("parquet")
+            .option("checkpointLocation", ckpt).option("path", outDir),
+          withGateConfs(spark))
       }
       step(a, "a.parquet")
       step(b, "b.parquet")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.model.Pageview
+import graft.operators.EventTimeOps
 
 /** The reference program's streaming dataflow, Spark-native.
   *
@@ -27,6 +28,16 @@ import graft.model.Pageview
   * at micro-batch granularity instead of Flink's
   * in-band watermark records. Append output mode emits each window once and
   * evicts its state — the EventTimeTrigger + FoldingState eviction pair.
+  * An input with no rows yet holds the min at the epoch, as in Flink:
+  * Spark 4.1.2 keeps a slot at 0 for every watermark node until its input
+  * has rows, so nothing fires before each input has reported. The
+  * watermark and the late drops the engine reports for these plans are
+  * pinned in WatermarkProgressSpec.
+  *
+  * Each streaming builder is its `*Batch` body applied to watermarked
+  * inputs ([[minOfInputs]] for the window builders): the batch form is
+  * the replay the specs compare the engine's incremental run against,
+  * and the two cannot drift apart.
   *
   * Scale: state per (url, hour) is one long (Spark's streaming HashAggregate
   * keeps partial counts in the state store, not event buffers) — identical
@@ -58,67 +69,55 @@ object WatermarkPipeline {
     df
   }
 
+  /** The min-of-inputs union: watermark each input on its event-time
+    * column `ts` with `delay`, then union the results by name. Under the
+    * `min` policy ([[requireMinWatermarkPolicy]]) the union's watermark is
+    * the min over the inputs of each one's max event time seen so far,
+    * minus `delay`. */
+  def minOfInputs[T](inputs: Seq[Dataset[T]], delay: String = "0 seconds"): Dataset[T] =
+    inputs.map(_.withWatermark("ts", delay)).reduce(_ unionByName _)
+
   /** Union N independently-watermarked pageview streams and count per url
-    * per tumbling window. `delay` = 0 seconds reproduces the reference's
+    * per tumbling window: [[windowedCountsBatch]] over the min-of-inputs
+    * union. `delay` = 0 seconds reproduces the reference's
     * `lastTimestamp - 1` (effectively zero-lateness) watermark. */
   def windowedCounts(streams: Seq[Dataset[Pageview]],
                      width: String = "1 hour",
-                     delay: String = "0 seconds"): DataFrame = {
-    val watermarked = streams.map(_.withWatermark("ts", delay))
-    requireMinWatermarkPolicy(watermarked.reduce(_ unionByName _)
-      .groupBy(window(col("ts"), width), col("url"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(
-        col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("url"), col("cnt")))
-  }
+                     delay: String = "0 seconds"): DataFrame =
+    requireMinWatermarkPolicy(
+      windowedCountsBatch(minOfInputs(streams, delay).toDF(), width))
 
-  /** Batch replay of the same pipeline — must produce the same rows as the
-    * streaming run's complete output (tested property, SURVEY.md §5.4). */
+  /** Count per url per tumbling window — the one body of
+    * [[windowedCounts]]: over a batch frame it is the replay the specs
+    * compare the engine's incremental run against (SURVEY.md §5.4). */
   def windowedCountsBatch(all: DataFrame, width: String = "1 hour"): DataFrame =
-    all
-      .groupBy(window(col("ts"), width), col("url"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(
-        col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("url"), col("cnt"))
+    EventTimeOps.windowAgg(all, window(col("ts"), width), Seq("url"),
+      count(lit(1)).as("cnt"))
 
   /** The reference's O3b semantics on a NON-tumbling window: N
     * independently-watermarked streams, min-of-inputs gating, session
-    * windows per url. A session fires (append mode) only once the MIN
+    * windows per url ([[sessionCountsBatch]] over the min-of-inputs
+    * union). A session fires (append mode) only once the MIN
     * watermark passes its end — a lagging input holds every key's
     * sessions back exactly as it holds tumbling windows back. State per
     * open session is one count; merges happen in the state store. */
   def sessionCounts(streams: Seq[Dataset[Pageview]],
                     gap: String = "10 minutes",
-                    delay: String = "0 seconds"): DataFrame = {
-    val watermarked = streams.map(_.withWatermark("ts", delay))
-    requireMinWatermarkPolicy(watermarked.reduce(_ unionByName _)
-      .groupBy(session_window(col("ts"), gap), col("url"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("url"), col("cnt")))
-  }
+                    delay: String = "0 seconds"): DataFrame =
+    requireMinWatermarkPolicy(
+      sessionCountsBatch(minOfInputs(streams, delay).toDF(), gap))
 
-  /** Batch replay of [[sessionCounts]] — the same `session_window`
-    * aggregate without watermarks; the streaming run's complete output
-    * must equal these rows (SessionWindowStreamingSpec). */
+  /** Count per url per session window — the one body of [[sessionCounts]];
+    * over a batch frame it is the replay SessionWindowStreamingSpec
+    * compares the streaming run against. */
   def sessionCountsBatch(all: DataFrame, gap: String = "10 minutes"): DataFrame =
-    all
-      .groupBy(session_window(col("ts"), gap), col("url"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("url"), col("cnt"))
+    EventTimeOps.windowAgg(all, session_window(col("ts"), gap), Seq("url"),
+      count(lit(1)).as("cnt"))
 
   /** The reference's O3b semantics on OVERLAPPING windows: N
     * independently-watermarked streams, min-of-inputs gating, sliding
-    * windows (width/slide) per url. Every event lands in width/slide
+    * windows (width/slide) per url ([[slidingCountsBatch]] over the
+    * min-of-inputs union). Every event lands in width/slide
     * windows; each of those windows fires (append mode) only once the
     * MIN watermark passes ITS end — so a lagging input holds back every
     * window that overlaps its horizon, not just the one containing its
@@ -128,36 +127,26 @@ object WatermarkPipeline {
   def slidingCounts(streams: Seq[Dataset[Pageview]],
                     width: String = "1 hour",
                     slide: String = "30 minutes",
-                    delay: String = "0 seconds"): DataFrame = {
-    val watermarked = streams.map(_.withWatermark("ts", delay))
-    requireMinWatermarkPolicy(watermarked.reduce(_ unionByName _)
-      .groupBy(window(col("ts"), width, slide), col("url"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(
-        col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("url"), col("cnt")))
-  }
+                    delay: String = "0 seconds"): DataFrame =
+    requireMinWatermarkPolicy(
+      slidingCountsBatch(minOfInputs(streams, delay).toDF(), width, slide))
 
-  /** Batch replay of [[slidingCounts]] — the same sliding-window
-    * aggregate without watermarks; the streaming run's complete output
-    * must equal these rows (SlidingWindowStreamingSpec). */
+  /** Count per url per sliding window — the one body of [[slidingCounts]];
+    * over a batch frame it is the replay SlidingWindowStreamingSpec
+    * compares the streaming run against. */
   def slidingCountsBatch(all: DataFrame,
                          width: String = "1 hour",
                          slide: String = "30 minutes"): DataFrame =
-    all
-      .groupBy(window(col("ts"), width, slide), col("url"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(
-        col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("url"), col("cnt"))
+    EventTimeOps.windowAgg(all, window(col("ts"), width, slide), Seq("url"),
+      count(lit(1)).as("cnt"))
 
   /** Watermark-bounded stream-stream INTERVAL join — the two-input
     * stateful operator class the single-pipeline reference never needed:
     * pair each event of `probes` with the same-url `views` events in the
     * preceding `lookbackSec` seconds (q_interval_join's batch shape, made
-    * streaming). Both sides carry their own watermark and the join
+    * streaming): [[intervalJoinedBatch]] over the two inputs, each
+    * watermarked on `ts` before the join renames it. Both sides carry
+    * their own watermark and the join
     * predicate bounds v_ts to a CLOSED interval around p_ts — exactly
     * what lets Spark evict buffered rows from the state store once the
     * other side's watermark passes their joinable range; an unbounded
@@ -167,24 +156,14 @@ object WatermarkPipeline {
     * it gates window firing (min-of-inputs over the two join inputs). */
   def intervalJoined(probes: Dataset[Pageview], views: Dataset[Pageview],
                      lookbackSec: Long = 1800,
-                     delay: String = "0 seconds"): DataFrame = {
-    val p = probes.withWatermark("ts", delay)
-      .select(col("url").as("url"), col("ts").as("p_ts"),
-              col("eventId").as("probe_id"))
-    val v = views.withWatermark("ts", delay)
-      .select(col("url").as("v_url"), col("ts").as("v_ts"),
-              col("eventId").as("view_id"))
-    requireMinWatermarkPolicy(p.join(v,
-      col("url") === col("v_url") &&
-        col("v_ts") <= col("p_ts") &&
-        col("v_ts") >= col("p_ts") - expr(s"INTERVAL $lookbackSec seconds"))
-      .select(col("probe_id"), col("view_id"), col("url"),
-              col("p_ts"), col("v_ts")))
-  }
+                     delay: String = "0 seconds"): DataFrame =
+    requireMinWatermarkPolicy(intervalJoinedBatch(
+      probes.withWatermark("ts", delay).toDF(),
+      views.withWatermark("ts", delay).toDF(), lookbackSec))
 
-  /** Batch replay of [[intervalJoined]] — same predicate, no watermarks;
-    * the streaming run's complete output must equal these rows
-    * (IntervalJoinStreamingSpec). */
+  /** Same-url pairs with `v_ts` in `[p_ts - lookbackSec, p_ts]` — the one
+    * body of [[intervalJoined]]; over batch frames it is the replay
+    * IntervalJoinStreamingSpec compares the streaming run against. */
   def intervalJoinedBatch(probes: DataFrame, views: DataFrame,
                           lookbackSec: Long = 1800): DataFrame =
     probes.select(col("url"), col("ts").as("p_ts"), col("eventId").as("probe_id"))

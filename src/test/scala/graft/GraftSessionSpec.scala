@@ -6,7 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** The one session policy ([[GraftSession]]): its environment parsing,
   * the settings every main and spec inherit from it, and that no main
-  * builds a session of its own again. */
+  * builds a session of its own again — nor starts a bounded stream
+  * outside [[graft.streaming.StreamGate]] or flattens a window outside
+  * [[graft.operators.EventTimeOps]]. */
 class GraftSessionSpec extends SparkSpec {
 
   test("SPARK_GRAFT_CPUS accepts a positive integer and refuses anything else") {
@@ -32,17 +34,33 @@ class GraftSessionSpec extends SparkSpec {
       "GraftExtensions' SQL functions are registered")
   }
 
-  test("SparkSession.builder appears under src/main/scala only in GraftSession.scala") {
+  /** The main sources, relative to src/main/scala, whose text contains
+    * `needle`. */
+  private def mainSourcesWith(needle: String): List[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root (cwd ${Paths.get("").toAbsolutePath})")
-    val hits = scala.util.Using.resource(Files.walk(root)) { paths =>
+    scala.util.Using.resource(Files.walk(root)) { paths =>
       paths.iterator().asScala
         .filter(p => p.toString.endsWith(".scala"))
-        .filter(p => Files.readString(p).contains("SparkSession.builder"))
+        .filter(p => Files.readString(p).contains(needle))
         .map(p => root.relativize(p).toString)
         .toList
     }
-    assert(hits == List("graft/GraftSession.scala"))
+  }
+
+  test("SparkSession.builder appears under src/main/scala only in GraftSession.scala") {
+    assert(mainSourcesWith("SparkSession.builder") == List("graft/GraftSession.scala"))
+  }
+
+  test("Trigger.AvailableNow appears under src/main/scala only in StreamGate.scala") {
+    assert(mainSourcesWith("Trigger.AvailableNow") == List("graft/streaming/StreamGate.scala"))
+  }
+
+  test("window and session_window bounds are flattened only in EventTimeOps.scala") {
+    Seq("window.start", "window.end", "session_window.start", "session_window.end")
+      .foreach { c =>
+        assert(mainSourcesWith("\"" + c + "\"") == List("graft/operators/EventTimeOps.scala"), c)
+      }
   }
 
   test("no /tmp literal in main code; fixture code reaches files only through the Hadoop FileSystem") {

@@ -2,17 +2,11 @@ package graft.operators
 
 import graft.SparkSpec
 
-/** The round-19 scan-spreading + footer-metadata contracts:
-  *
-  *  - [[Spread]] must widen a narrow (single-row-group) scan to the
-  *    cluster's parallelism WITHOUT changing its rows, and must be a
-  *    NO-OP on a frame that is already at least half as wide as the
-  *    cluster — the condition that keeps it from injecting a
-  *    full-corpus shuffle at production scan widths;
-  *  - [[ParquetFooter.rowCount]] must agree with `df.count()` for both
-  *    layouts the fixture state machines read (a single parquet file
-  *    and a Spark-written directory of part files, flat or partitioned),
-  *    since the state machines' entry decisions now ride on it. */
+/** The round-19 scan-spreading contract: [[Spread]] must widen a narrow
+  * (single-row-group) scan to the cluster's parallelism WITHOUT changing
+  * its rows, and must be a NO-OP on a frame that is already at least half
+  * as wide as the cluster — the condition that keeps it from injecting a
+  * full-corpus shuffle at production scan widths. */
 class SpreadSpec extends SparkSpec {
   import spark.implicits._
 
@@ -89,32 +83,5 @@ class SpreadSpec extends SparkSpec {
       assert(Spread.byKey(wide, "doc_id") eq wide)
       assert(Spread.any(wide) eq wide)
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
-  test("ParquetFooter.rowCount matches df.count for file and directory layouts") {
-    val file = s"$sfDir/documents.parquet"
-    val expected = spark.read.parquet(file).count()
-    assert(ParquetFooter.rowCount(file) == expected)
-    val dir = java.nio.file.Files.createTempDirectory("footer-spec")
-    try {
-      // Spark-written dir: several part files plus a _SUCCESS marker
-      spark.read.parquet(file).repartition(3)
-        .write.mode("overwrite").parquet(dir.toString)
-      assert(ParquetFooter.rowCount(dir.toString) == expected)
-      // append lands more part files — the count must track them (the
-      // ingest fixtures' staleness handshake rides on this)
-      spark.read.parquet(file).limit(7)
-        .write.mode("append").parquet(dir.toString)
-      assert(ParquetFooter.rowCount(dir.toString) == expected + 7)
-      // a partitioned layout nests part files one level down, and a
-      // hidden directory's files are not part of the table
-      val parted = s"$dir/parted"
-      spark.read.parquet(file).withColumn("k", $"doc_id" % 3)
-        .write.mode("overwrite").partitionBy("k").parquet(parted)
-      spark.read.parquet(file).limit(5)
-        .write.mode("overwrite").parquet(s"$parted/_hidden")
-      assert(ParquetFooter.rowCount(parted) == spark.read.parquet(parted).count())
-      assert(ParquetFooter.rowCount(parted) == expected)
-    } finally graft.Fixtures.delete(spark, dir.toString)
   }
 }
